@@ -25,6 +25,10 @@ from solarpos_spark.operators import graph as _graph
 from solarpos_spark.operators.position import position
 from solarpos_spark.operators.sunrise import sunrise
 from solarpos_spark.sources import inputs, tokens
+from solarpos_spark.streaming import pipeline as sp
+from solarpos_spark.streaming import stateful
+from solarpos_spark.streaming.replay import (
+    commit_available_now, ordered_file_stream, time_slices)
 
 # --------------------------------------------------------------------------
 # shared input derivations (must match the SQL constants below exactly)
@@ -2525,7 +2529,7 @@ def _q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 10)
-    return similarity.brute_force_topk(emb, q, k=3, dim=64)
+    return similarity.brute_force_topk(emb, q, k=3)
 
 
 def _q_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3339,7 +3343,7 @@ def _q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qvec = emb.filter(F.col("vec_id") == 3).select("embedding")
     return search.hybrid_topk_rrf(docs, emb, _BM25_QUERY, qvec,
-                                  k=20, depth=50, dim=64)
+                                  k=20, depth=50)
 
 
 def _hybrid_rrf_oracle(k: int = 20, depth: int = 50,
@@ -3870,19 +3874,12 @@ def _q_stream_position_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: generated NREL SPA SQL over the codec-quantized inputs
     (round-half-up at 1e-5, mirroring codec._round_scaled exactly).
     """
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-    from solarpos_spark.streaming import pipeline as sp
-
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streampos_")
     _astro_token_df(spark, sf_dir).repartition(8) \
         .write.mode("overwrite").parquet(in_dir)
     stream = tokens.read_token_stream(spark, in_dir, max_files_per_trigger=2)
     pos = sp.position_stream(sp.decoded_stream(stream, watermark="1 hour"))
-    q = exactly_once_parquet_sink(pos, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
-    committed = spark.read.parquet(out_dir)
-    return committed.select(
+    return commit_available_now(pos, out_dir, ckpt).select(
         F.col("doc_id").cast("long").alias("event_id"),
         F.round("latitude", 5).alias("lat"),
         F.round("longitude", 5).alias("lon"),
@@ -3900,9 +3897,6 @@ def _q_stream_dedup_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of which micro-batch delivers it — the committed set is
     batch-boundary-independent (deterministic under any file ordering).
     """
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-    from solarpos_spark.streaming import pipeline as sp
-
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamdedup_")
     tok = _astro_token_df(spark, sf_dir).repartition(4)
     tok.write.mode("overwrite").parquet(in_dir)
@@ -3911,11 +3905,7 @@ def _q_stream_dedup_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ded = sp.deduped_stream(sp.decoded_stream(stream, watermark="3650 days"))
     out = ded.select("doc_id", "seq_index", "lat", "lon", "unix_sec",
                      "delta_t", "pressure")
-    q = exactly_once_parquet_sink(out, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
-    committed = spark.read.parquet(out_dir)
-    return committed.select(
+    return commit_available_now(out, out_dir, ckpt).select(
         F.col("doc_id").cast("long").alias("event_id"),
         F.round("lat", 5).alias("lat"), F.round("lon", 5).alias("lon"),
         F.col("unix_sec").alias("usec"),
@@ -3933,9 +3923,6 @@ def _q_stream_window_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest batch (no intermediate watermark => no order-dependent late
     drops); the availableNow flush batch then emits deterministically.
     """
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-    from solarpos_spark.streaming import pipeline as sp
-
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamwin_")
     _astro_token_df(spark, sf_dir).repartition(8) \
         .write.mode("overwrite").parquet(in_dir)
@@ -3943,10 +3930,7 @@ def _q_stream_window_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
                                       max_files_per_trigger=1000)
     win = sp.hourly_window_counts(
         sp.decoded_stream(stream, watermark="1 hour"))
-    q = exactly_once_parquet_sink(win, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
-    committed = spark.read.parquet(out_dir)
+    committed = commit_available_now(win, out_dir, ckpt)
     # round(min(q(x))) == min(round(q(x))): rounding is monotone, so the
     # oracle's min-over-rounded form matches
     return committed.select(
@@ -3968,9 +3952,6 @@ def _q_stream_hll_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut is the same watermark release as stream_window_committed, and the
     oracle re-derives registers + estimate from the raw events under that
     cut. Key: user = event_id % 500, so windows genuinely repeat users."""
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-    from solarpos_spark.streaming import pipeline as sp
-
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamhll_")
     _astro_token_df(spark, sf_dir).repartition(8) \
         .write.mode("overwrite").parquet(in_dir)
@@ -3979,10 +3960,7 @@ def _q_stream_hll_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = sp.decoded_stream(stream, watermark="1 hour")
     keyed = dec.withColumn("user", F.col("doc_id").cast("long") % 500)
     regs = sp.hourly_distinct_registers(keyed, "user", p=10)
-    q = exactly_once_parquet_sink(regs, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
-    committed = spark.read.parquet(out_dir).select(
+    committed = commit_available_now(regs, out_dir, ckpt).select(
         F.unix_timestamp("window_start").alias("ws"), "bucket", "register")
     return sketches.hll_estimate(committed, p=10, group_cols=("ws",))
 
@@ -4004,9 +3982,7 @@ def _q_stream_cms_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-side over the committed counters (min over depth rows, absent
     coordinate = 0). Same watermark release as the other windowed
     entries; the oracle replays counters + probes under that cut."""
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
     from solarpos_spark.operators.sketches import _cms_coords
-    from solarpos_spark.streaming import pipeline as sp
 
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamcms_")
     _astro_token_df(spark, sf_dir).repartition(8) \
@@ -4016,10 +3992,7 @@ def _q_stream_cms_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = sp.decoded_stream(stream, watermark="1 hour")
     keyed = dec.withColumn("user", F.col("doc_id").cast("long") % 500)
     cms = sp.windowed_cms_counts(keyed, "user", depth=4, width=64)
-    q = exactly_once_parquet_sink(cms, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
-    tbl = spark.read.parquet(out_dir).select(
+    tbl = commit_available_now(cms, out_dir, ckpt).select(
         F.unix_timestamp("window_start").alias("ws"), "row", "bucket",
         "cnt")
     probes = spark.range(10).select(F.col("id").alias("user"))
@@ -4082,42 +4055,21 @@ def _q_stream_window_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the SAME batch — counted once, no duplicate window rows. Anchor:
     north_rule 'matches output rows for the same input stream + watermark'.
     """
-    import glob
-    import os
-
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-    from solarpos_spark.streaming import pipeline as sp
-
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamwinmb_")
     meta = _astro_df(spark, sf_dir).filter(F.col("event_id") < 20000) \
         .select("event_id", "usec")
-    bounds = meta.agg(F.min("usec"), F.max("usec")).collect()[0]
-    tmin, tmax = int(bounds[0]), int(bounds[1])
-    width = (tmax - tmin) // 4 + 1
     tok = _astro_token_df(spark, sf_dir).withColumn(
         "_eid", F.col("doc_id").cast("long"))
-    routed = tok.join(meta, tok["_eid"] == meta["event_id"]).withColumn(
-        "_f",
-        F.when(F.col("_eid") % 97 == 0, F.lit(3)).otherwise(
-            F.least(F.lit(3), F.expr(f"(usec - {tmin}) div {width}"))),
-    )
-    written: set[str] = set()
-    for i in range(4):
-        routed.filter(F.col("_f") == i) \
-            .select("doc_id", "tokens", "n_tok", "source") \
-            .coalesce(1).write.mode("append").parquet(in_dir)
-        new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-        for p in new:  # pin arrival order: FileStreamSource sorts by mtime
-            os.utime(p, (1_000_000_000 + 10 * i, 1_000_000_000 + 10 * i))
-        written.update(new)
-    stream = tokens.read_token_stream(spark, in_dir, max_files_per_trigger=1)
+    joined = tok.join(meta, tok["_eid"] == meta["event_id"])
+    planted = F.col("_eid") % 97 == 0
+    parts = [sl.filter(~planted) for sl in time_slices(joined, "usec", 4)]
+    parts[3] = parts[3].unionByName(joined.filter(planted))
+    stream = ordered_file_stream(
+        [p.select("doc_id", "tokens", "n_tok", "source") for p in parts],
+        in_dir)
     win = sp.hourly_window_counts(
         sp.decoded_stream(stream, watermark="1 hour"))
-    q = exactly_once_parquet_sink(win, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
-    committed = spark.read.parquet(out_dir)
-    return committed.select(
+    return commit_available_now(win, out_dir, ckpt).select(
         F.unix_timestamp("window_start").alias("ws"),
         "n_rows",
         F.round("min_lat", 5).alias("min_lat"),
@@ -4170,20 +4122,13 @@ def _q_stream_join_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated SPA and A.2-sunrise SQLs joined on event_id over the
     codec-quantized base, including the is_daylight classification.
     """
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-    from solarpos_spark.streaming import pipeline as sp
-
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamjoin_")
     _astro_token_df(spark, sf_dir, limit=4000).repartition(8) \
         .write.mode("overwrite").parquet(in_dir)
     stream = tokens.read_token_stream(spark, in_dir, max_files_per_trigger=2)
     joined = sp.position_sunrise_join(
         sp.decoded_stream(stream, watermark="4000 days"))
-    q = exactly_once_parquet_sink(joined, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
-    committed = spark.read.parquet(out_dir)
-    return committed.select(
+    return commit_available_now(joined, out_dir, ckpt).select(
         F.col("doc_id").cast("long").alias("event_id"),
         F.round("azimuth", 5).alias("azimuth"),
         F.round("zenith", 5).alias("zenith"),
@@ -4204,9 +4149,6 @@ def _q_stream_funnel_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (watermark still 0 => no state eviction can precede any match), so
     the committed set equals the batch fixpoint the SQL oracle states —
     batch-boundary-independent by construction."""
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-    from solarpos_spark.streaming import pipeline as sp
-
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamfunnel_")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
         .filter(F.col("event_id") < 10000) \
@@ -4218,10 +4160,7 @@ def _q_stream_funnel_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = spark.readStream.schema(schema).parquet(f"{in_dir}/error")
     b = spark.readStream.schema(schema).parquet(f"{in_dir}/purchase")
     pairs = sp.funnel_stream(a, b, within_seconds=600, watermark="1 hour")
-    q = exactly_once_parquet_sink(pairs, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
-    return spark.read.parquet(out_dir) \
+    return commit_available_now(pairs, out_dir, ckpt) \
         .select("user_id", "a_event_id", "b_event_id", "gap_usec")
 
 
@@ -4251,42 +4190,20 @@ def _q_stream_funnel_first_committed(spark: SparkSession,
     the final watermark: only windows whose deadline the watermark passed
     have emitted. The oracle states the same cut (Spark tracks event
     times in ms, hence the //1000 truncations)."""
-    import glob
-    import os
-
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-    from solarpos_spark.streaming.stateful import funnel_first_match
-
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamfunnel1_")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
         .filter((F.col("event_id") < 10000)
                 & F.col("event_type").isin("error", "purchase")) \
         .select("event_id",
                 F.col("ts").cast("timestamp").alias("ts"),  # NTZ -> TS,
-                "user_id", "event_type") \
-        .withColumn("_us", F.unix_micros(F.col("ts")))
-    bounds = ev.agg(F.min("_us"), F.max("_us")).collect()[0]
-    tmin, tmax = int(bounds[0]), int(bounds[1])
-    width = (tmax - tmin) // 4 + 1
-    written: set[str] = set()
-    for i in range(4):
-        ev.filter((F.col("_us") - tmin) / width >= i) \
-          .filter((F.col("_us") - tmin) / width < i + 1) \
-          .drop("_us").coalesce(1).write.mode("append").parquet(in_dir)
-        new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-        for p in new:
-            os.utime(p, (1_500_000_000 + 10 * i, 1_500_000_000 + 10 * i))
-        written.update(new)
-    schema = ev.drop("_us").schema
-    stream = spark.readStream.schema(schema) \
-        .option("maxFilesPerTrigger", "1").parquet(in_dir) \
+                "user_id", "event_type")
+    parts = time_slices(ev, F.unix_micros("ts"), 4)
+    stream = ordered_file_stream(parts, in_dir) \
         .withWatermark("ts", "1 hour")
-    out = funnel_first_match(stream, first_type="error",
-                             then_type="purchase", within_seconds=600)
-    q = exactly_once_parquet_sink(out, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
-    return spark.read.parquet(out_dir) \
+    out = stateful.funnel_first_match(stream, first_type="error",
+                                      then_type="purchase",
+                                      within_seconds=600)
+    return commit_available_now(out, out_dir, ckpt) \
         .select("user_id", "a_event_id", "b_event_id", "gap_usec")
 
 
@@ -4323,42 +4240,20 @@ def _q_stream_absence_committed(spark: SparkSession,
     stream_funnel_first_committed; the committed set is the batch
     sequence_pattern_absent fixpoint (id columns only — a stream cannot
     know the late B at deadline) CUT at the final watermark."""
-    import glob
-    import os
-
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-    from solarpos_spark.streaming.stateful import funnel_absence
-
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamabs_")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
         .filter((F.col("event_id") < 10000)
                 & F.col("event_type").isin("error", "purchase")) \
         .select("event_id",
                 F.col("ts").cast("timestamp").alias("ts"),
-                "user_id", "event_type") \
-        .withColumn("_us", F.unix_micros(F.col("ts")))
-    bounds = ev.agg(F.min("_us"), F.max("_us")).collect()[0]
-    tmin, tmax = int(bounds[0]), int(bounds[1])
-    width = (tmax - tmin) // 4 + 1
-    written: set[str] = set()
-    for i in range(4):
-        ev.filter((F.col("_us") - tmin) / width >= i) \
-          .filter((F.col("_us") - tmin) / width < i + 1) \
-          .drop("_us").coalesce(1).write.mode("append").parquet(in_dir)
-        new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-        for p in new:
-            os.utime(p, (1_560_000_000 + 10 * i, 1_560_000_000 + 10 * i))
-        written.update(new)
-    schema = ev.drop("_us").schema
-    stream = spark.readStream.schema(schema) \
-        .option("maxFilesPerTrigger", "1").parquet(in_dir) \
+                "user_id", "event_type")
+    parts = time_slices(ev, F.unix_micros("ts"), 4)
+    stream = ordered_file_stream(parts, in_dir) \
         .withWatermark("ts", "1 hour")
-    out = funnel_absence(stream, first_type="error",
-                         then_type="purchase", within_seconds=600)
-    q = exactly_once_parquet_sink(out, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).select("user_id", "a_event_id")
+    out = stateful.funnel_absence(stream, first_type="error",
+                                  then_type="purchase", within_seconds=600)
+    return commit_available_now(out, out_dir, ckpt) \
+        .select("user_id", "a_event_id")
 
 
 _STREAM_ABSENCE_ORACLE = """
@@ -4395,33 +4290,14 @@ def _q_stream_session_committed(spark: SparkSession,
     fixpoint CUT at the final watermark; the oracle states that cut
     (Spark tracks event time in ms — the //1000 truncations). The money
     column folds to integer cents so the hash is float-free."""
-    import glob
-    import os
-
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamsess_")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
         .filter(F.col("event_id") < 10000) \
         .select("event_id",
                 F.col("ts").cast("timestamp").alias("ts"),
-                "user_id", "value") \
-        .withColumn("_us", F.unix_micros(F.col("ts")))
-    bounds = ev.agg(F.min("_us"), F.max("_us")).collect()[0]
-    tmin, tmax = int(bounds[0]), int(bounds[1])
-    width = (tmax - tmin) // 4 + 1
-    written: set[str] = set()
-    for i in range(4):
-        ev.filter((F.col("_us") - tmin) / width >= i) \
-          .filter((F.col("_us") - tmin) / width < i + 1) \
-          .drop("_us").coalesce(1).write.mode("append").parquet(in_dir)
-        new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-        for p in new:
-            os.utime(p, (1_540_000_000 + 10 * i, 1_540_000_000 + 10 * i))
-        written.update(new)
-    schema = ev.drop("_us").schema
-    stream = spark.readStream.schema(schema) \
-        .option("maxFilesPerTrigger", "1").parquet(in_dir) \
+                "user_id", "value")
+    parts = time_slices(ev, F.unix_micros("ts"), 4)
+    stream = ordered_file_stream(parts, in_dir) \
         .withWatermark("ts", "1 hour")
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     sess = (stream.groupBy(
@@ -4435,10 +4311,7 @@ def _q_stream_session_committed(spark: SparkSession,
                     "n_events",
                     F.col("value_cents").cast("long")
                      .alias("value_cents")))
-    q = exactly_once_parquet_sink(sess, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).select(
+    return commit_available_now(sess, out_dir, ckpt).select(
         "user_id", "session_start", "session_end", "n_events",
         "value_cents")
 
@@ -4488,42 +4361,19 @@ def _q_stream_funnel3_committed(spark: SparkSession,
     horizon. In-order quartiles mean no late drops, so the committed
     set is the batch sequence_pattern_chain fixpoint CUT at the final
     watermark — the oracle states exactly that."""
-    import glob
-    import os
-
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-    from solarpos_spark.streaming.stateful import funnel_chain_first
-
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamfunnel3_")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
         .filter((F.col("event_id") < 10000)
                 & F.col("event_type").isin(*_CHAIN_TYPES)) \
         .select("event_id",
                 F.col("ts").cast("timestamp").alias("ts"),
-                "user_id", "event_type") \
-        .withColumn("_us", F.unix_micros(F.col("ts")))
-    bounds = ev.agg(F.min("_us"), F.max("_us")).collect()[0]
-    tmin, tmax = int(bounds[0]), int(bounds[1])
-    width = (tmax - tmin) // 4 + 1
-    written: set[str] = set()
-    for i in range(4):
-        ev.filter((F.col("_us") - tmin) / width >= i) \
-          .filter((F.col("_us") - tmin) / width < i + 1) \
-          .drop("_us").coalesce(1).write.mode("append").parquet(in_dir)
-        new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-        for p in new:
-            os.utime(p, (1_520_000_000 + 10 * i, 1_520_000_000 + 10 * i))
-        written.update(new)
-    schema = ev.drop("_us").schema
-    stream = spark.readStream.schema(schema) \
-        .option("maxFilesPerTrigger", "1").parquet(in_dir) \
+                "user_id", "event_type")
+    parts = time_slices(ev, F.unix_micros("ts"), 4)
+    stream = ordered_file_stream(parts, in_dir) \
         .withWatermark("ts", "1 hour")
-    out = funnel_chain_first(stream, list(_CHAIN_TYPES),
-                             within_seconds=_CHAIN_WITHIN)
-    q = exactly_once_parquet_sink(out, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).select(
+    out = stateful.funnel_chain_first(stream, list(_CHAIN_TYPES),
+                                      within_seconds=_CHAIN_WITHIN)
+    return commit_available_now(out, out_dir, ckpt).select(
         "user_id", "step1_id", "step2_id", "step3_id", "gap_usec")
 
 
@@ -4540,40 +4390,17 @@ def _q_stream_quota_committed(spark: SparkSession,
     row is late-dropped; the committed set is the per-key (ts, id) rank
     cut at the final watermark (Spark tracks event time in ms, hence the
     //1000 truncations in the oracle)."""
-    import glob
-    import os
-
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-    from solarpos_spark.streaming.stateful import first_n_per_key
-
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamquota_")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
         .filter(F.col("event_id") < 10000) \
         .select("event_id",
                 F.col("ts").cast("timestamp").alias("ts"),
-                "user_id") \
-        .withColumn("_us", F.unix_micros(F.col("ts")))
-    bounds = ev.agg(F.min("_us"), F.max("_us")).collect()[0]
-    tmin, tmax = int(bounds[0]), int(bounds[1])
-    width = (tmax - tmin) // 4 + 1
-    written: set[str] = set()
-    for i in range(4):
-        ev.filter((F.col("_us") - tmin) / width >= i) \
-          .filter((F.col("_us") - tmin) / width < i + 1) \
-          .drop("_us").coalesce(1).write.mode("append").parquet(in_dir)
-        new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-        for p in new:
-            os.utime(p, (1_500_000_000 + 10 * i, 1_500_000_000 + 10 * i))
-        written.update(new)
-    schema = ev.drop("_us").schema
-    stream = spark.readStream.schema(schema) \
-        .option("maxFilesPerTrigger", "1").parquet(in_dir) \
+                "user_id")
+    parts = time_slices(ev, F.unix_micros("ts"), 4)
+    stream = ordered_file_stream(parts, in_dir) \
         .withWatermark("ts", "1 hour")
-    out = first_n_per_key(stream, 5)
-    q = exactly_once_parquet_sink(out, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
-    return spark.read.parquet(out_dir) \
+    out = stateful.first_n_per_key(stream, 5)
+    return commit_available_now(out, out_dir, ckpt) \
         .select("user_id", "event_id", "event_usec", "rank")
 
 
@@ -4609,12 +4436,7 @@ def _q_stream_priority_sample_committed(spark: SparkSession,
     (maxFilesPerTrigger=1); closed-window eviction is final per the
     two-watermark argument (eviction at wm(<=f-1) == the late filter
     of f+1)."""
-    import glob
-    import os
-
     from solarpos_spark.operators.curate import priority_expr
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-    from solarpos_spark.streaming.stateful import windowed_priority_sample
 
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamwsample_")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
@@ -4622,35 +4444,17 @@ def _q_stream_priority_sample_committed(spark: SparkSession,
         .select("event_id",
                 F.col("ts").cast("timestamp").alias("ts"),
                 F.floor(F.col("value")).cast("long").alias("w")) \
-        .filter(F.col("w") > 0) \
-        .withColumn("_us", F.unix_micros(F.col("ts")))
-    bounds = ev.agg(F.min("_us"), F.max("_us")).collect()[0]
-    tmin, tmax = int(bounds[0]), int(bounds[1])
-    width = (tmax - tmin) // 4 + 1
-    written: set[str] = set()
-    for i in range(4):
-        ev.filter((F.col("_us") - tmin) / width >= i) \
-          .filter((F.col("_us") - tmin) / width < i + 1) \
-          .drop("_us").coalesce(1).write.mode("append").parquet(in_dir)
-        new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-        for p in new:
-            os.utime(p, (1_500_000_000 + 10 * i, 1_500_000_000 + 10 * i))
-        written.update(new)
-    schema = ev.drop("_us").schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(in_dir)
-              .withColumn("_pri", priority_expr(F.col("event_id"),
-                                                F.col("w"))))
+        .filter(F.col("w") > 0)
+    parts = time_slices(ev, F.unix_micros("ts"), 4)
+    stream = ordered_file_stream(parts, in_dir).withColumn(
+        "_pri", priority_expr(F.col("event_id"), F.col("w")))
     # watermark_delay routes the watermark THROUGH the operator so its
     # per-partition candidate combiner sits below it: the groupBy(ws)
     # stateful task sees O(k) survivors per partition, state holds k
     # slots (r6 — VERDICT r5 #1), committed set provably unchanged
-    out = windowed_priority_sample(stream, k=5, window_s=900,
-                                   watermark_delay="1 hour")
-    q = exactly_once_parquet_sink(out, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
-    return spark.read.parquet(out_dir) \
+    out = stateful.windowed_priority_sample(stream, k=5, window_s=900,
+                                            watermark_delay="1 hour")
+    return commit_available_now(out, out_dir, ckpt) \
         .select("ws", "event_id", "rank")
 
 
@@ -4696,12 +4500,6 @@ def _q_stream_anomalies_committed(spark: SparkSession,
     var = (SS - S*S/n)/(n-1)), so the batch SQL oracle reproduces every
     z bit-for-bit; the committed set is the batch rolling window cut at
     the final watermark."""
-    import glob
-    import os
-
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-    from solarpos_spark.streaming.stateful import streaming_zscore_anomalies
-
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamz_")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet") \
         .filter(F.col("event_id") < 10000) \
@@ -4709,30 +4507,14 @@ def _q_stream_anomalies_committed(spark: SparkSession,
                 F.col("ts").cast("timestamp").alias("ts"),
                 "user_id",
                 F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-                .alias("_vc")) \
-        .withColumn("_us", F.unix_micros(F.col("ts")))
-    bounds = ev.agg(F.min("_us"), F.max("_us")).collect()[0]
-    tmin, tmax = int(bounds[0]), int(bounds[1])
-    width = (tmax - tmin) // 4 + 1
-    written: set[str] = set()
-    for i in range(4):
-        ev.filter((F.col("_us") - tmin) / width >= i) \
-          .filter((F.col("_us") - tmin) / width < i + 1) \
-          .drop("_us").coalesce(1).write.mode("append").parquet(in_dir)
-        new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-        for p in new:
-            os.utime(p, (1_500_000_000 + 10 * i, 1_500_000_000 + 10 * i))
-        written.update(new)
-    schema = ev.drop("_us").schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(in_dir)
-              .withWatermark("ts", "1 hour"))
-    out = streaming_zscore_anomalies(stream, window_rows=20,
-                                     min_history=5, z_threshold=2.0)
-    q = exactly_once_parquet_sink(out, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
-    return spark.read.parquet(out_dir) \
+                .alias("_vc"))
+    parts = time_slices(ev, F.unix_micros("ts"), 4)
+    stream = ordered_file_stream(parts, in_dir) \
+        .withWatermark("ts", "1 hour")
+    out = stateful.streaming_zscore_anomalies(stream, window_rows=20,
+                                              min_history=5,
+                                              z_threshold=2.0)
+    return commit_available_now(out, out_dir, ckpt) \
         .select("user_id", "event_id", "event_usec", "value_c", "z")
 
 
@@ -4785,8 +4567,6 @@ def _q_stream_url_blocklist_committed(spark: SparkSession,
     broadcast equi-join shape a stream supports statelessly); host-level
     suffix semantics need the batch operator's suffix explode + distinct,
     which is a stateful aggregation under streaming."""
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamurl_")
     _docs(spark, sf_dir).repartition(8).write.mode("overwrite") \
         .parquet(in_dir)
@@ -4802,11 +4582,9 @@ def _q_stream_url_blocklist_committed(spark: SparkSession,
         F.broadcast(blocked),
         parsed["registered_domain"] == blocked["blocked_domain"],
         "left_anti")
-    q = exactly_once_parquet_sink(
+    return commit_available_now(
         surv.select("doc_id", "host", "registered_domain", "url_norm"),
-        out_dir, ckpt, trigger_available_now=True)
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).select(
+        out_dir, ckpt).select(
         "doc_id", "host", "registered_domain", "url_norm")
 
 
@@ -4830,8 +4608,6 @@ def _q_stream_token_screen_committed(spark: SparkSession,
     independent and the oracle is the batch decontaminate SQL verbatim —
     hash-equality ALSO proves the Arrow path == the relational path on
     the gate corpus."""
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamtok_")
     _token_rel_df(spark, sf_dir).repartition(8).write.mode("overwrite") \
         .parquet(in_dir)
@@ -4842,10 +4618,7 @@ def _q_stream_token_screen_committed(spark: SparkSession,
     ev_grams = {tuple(range(100000 + i, 100000 + i + 13))
                 for i in range(8)}
     out = tokenops.token_screen_arrow(stream, ev_grams, n=13)
-    q = exactly_once_parquet_sink(out, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).select(
+    return commit_available_now(out, out_dir, ckpt).select(
         "doc_id", "n_hits", "contaminated")
 
 
@@ -4858,9 +4631,6 @@ def _q_stream_curate_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc's verdict is a pure function of the doc, so the committed rows are
     file- and batch-order independent; the oracle is the identical batch
     SQL over the same table."""
-    from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-    from solarpos_spark.streaming import pipeline as sp
-
     in_dir, out_dir, ckpt = _stream_dirs("solarpos_gate_streamcurate_")
     _docs(spark, sf_dir).repartition(8).write.mode("overwrite") \
         .parquet(in_dir)
@@ -4870,12 +4640,9 @@ def _q_stream_curate_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
               .option("maxFilesPerTrigger", 2)
               .parquet(in_dir))
     kept = sp.curated_doc_stream(stream, _STREAM_CURATE_RATES)
-    q = exactly_once_parquet_sink(kept, out_dir, ckpt,
-                                  trigger_available_now=True)
-    q.awaitTermination()
     # drop the sink's batch_id partition column: the gate compares VALUES,
     # and which micro-batch committed a row is scheduling, not semantics
-    return spark.read.parquet(out_dir).select(
+    return commit_available_now(kept, out_dir, ckpt).select(
         "doc_id", "lang", "n_chars", "n_words", "stopword_ratio",
         "est_bpe_tokens")
 
@@ -5643,8 +5410,7 @@ def _q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qvec = emb.filter(F.col("vec_id") == 3).select("embedding")
-    return mmr_rerank(emb, qvec, k=10, depth=50, lam=0.75,
-                      dim=64)
+    return mmr_rerank(emb, qvec, k=10, depth=50, lam=0.75)
 
 
 def _mmr_oracle(k: int = 10, depth: int = 50, lam: float = 0.75) -> str:

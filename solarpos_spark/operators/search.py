@@ -23,6 +23,9 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import spread_input
+from .similarity import _dot, _norm
+
 
 def doc_length_stats(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
     """(doc_id, dl) token counts — the reusable per-corpus statistic."""
@@ -151,7 +154,6 @@ def hybrid_topk_rrf(
     text_col: str = "text",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Hybrid lexical + dense retrieval fused by Reciprocal Rank Fusion
     (Cormack et al. 2009, the standard RAG retrieval stack):
@@ -174,23 +176,14 @@ def hybrid_topk_rrf(
     Output: (rank, doc_id, rrf, lex_rank, dense_rank) — run ranks are
     null for docs the other run alone surfaced.
     """
-    from .similarity import _dot, _dot_u, _norm, _norm_u
-
-    # known dim -> unrolled codegen folds (bit-identical, see _dot_u)
-    dt = (_dot if dim is None
-          else (lambda a, b: _dot_u(a, b, dim)))
-    nm = (_norm if dim is None
-          else (lambda a: _norm_u(a, dim)))
     lex = bm25_topk(docs, query_terms, k=depth, text_col=text_col) \
         .select("doc_id", F.col("rank").alias("lex_rank"))
     q = query_vec.select(F.col(vec_col).alias("_qv")) \
-        .withColumn("_qn", nm(F.col("_qv")))
-    from .dedup import spread_input
-
+        .withColumn("_qn", _norm(F.col("_qv")))
     scored = (spread_input(embeddings, key=id_col).crossJoin(F.broadcast(q))
               .select(F.col(id_col).alias("doc_id"),
-                      F.round(dt(F.col(vec_col), F.col("_qv"))
-                              / (F.col("_qn") * nm(F.col(vec_col))), 6)
+                      F.round(_dot(F.col(vec_col), F.col("_qv"))
+                              / (F.col("_qn") * _norm(F.col(vec_col))), 6)
                       .alias("_s")))
     dtop = scored.orderBy(F.col("_s").desc(), F.col("doc_id").asc()) \
         .limit(depth)
@@ -219,7 +212,6 @@ def mmr_rerank(
     lam: float = 0.75,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein
     1998) — the diversity pass a RAG stack runs over its dense
@@ -247,26 +239,17 @@ def mmr_rerank(
 
     Output: (rank, vec_id, rel, mmr), rank 1..k.
     """
-    from .similarity import _dot, _dot_u, _norm, _norm_u
-
-    # known dim -> unrolled codegen folds (bit-identical, see _dot_u)
-    dt = (_dot if dim is None
-          else (lambda a, b: _dot_u(a, b, dim)))
-    nm = (_norm if dim is None
-          else (lambda a: _norm_u(a, dim)))
     q = query_vec.select(F.col(vec_col).alias("_qv")) \
-        .withColumn("_qn", nm(F.col("_qv")))
-    from .dedup import spread_input
-
+        .withColumn("_qn", _norm(F.col("_qv")))
     scored = (spread_input(embeddings, key=id_col).crossJoin(F.broadcast(q))
               .select(F.col(id_col).alias("vec_id"),
                       F.col(vec_col).alias("_v"),
-                      F.round(dt(F.col(vec_col), F.col("_qv"))
-                              / (F.col("_qn") * nm(F.col(vec_col))), 6)
+                      F.round(_dot(F.col(vec_col), F.col("_qv"))
+                              / (F.col("_qn") * _norm(F.col(vec_col))), 6)
                       .alias("rel")))
     sl = (scored.orderBy(F.col("rel").desc(), F.col("vec_id").asc())
           .limit(depth)
-          .withColumn("_n", nm(F.col("_v")))
+          .withColumn("_n", _norm(F.col("_v")))
           .localCheckpoint(eager=True))
     pw = (sl.select(F.col("vec_id").alias("a"), F.col("_v").alias("_va"),
                     F.col("_n").alias("_na"))
@@ -275,7 +258,7 @@ def mmr_rerank(
                                       F.col("_n").alias("_nb"))),
                 F.col("a") != F.col("b"))
           .select("a", "b",
-                  F.round(dt(F.col("_va"), F.col("_vb"))
+                  F.round(_dot(F.col("_va"), F.col("_vb"))
                           / (F.col("_na") * F.col("_nb")), 6).alias("sim"))
           .localCheckpoint(eager=True))
     c_lam = float(lam)

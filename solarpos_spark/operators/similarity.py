@@ -15,18 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Fan an under-parallel scan out to defaultParallelism (the
-    dedup.spread_input discipline, keyed by the vector id). The corpus
-    parquet at bench scale is 1-2 splits, and a broadcast join binds its
-    whole pair-enumeration stage to those splits — 2 of 32 cores busy
-    (r6 measurement: the bucketed near-dup pair stage ran (1+1)/2 tasks).
-    No-op when the input already has enough splits, so at 100 TB this
-    costs nothing."""
-    from .dedup import spread_input
-
-    return spread_input(df, key=key)
+from .dedup import spread_input
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -37,49 +26,12 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _dot_u(a: Column, b: Column, dim: int) -> Column:
-    """Dot for arrays of KNOWN length ``dim`` — delegates to the fold.
-
-    An unrolled 64-term expression chain was tried here (r6): bit-identical
-    doubles (same 0.0 anchor, left-to-right IEEE adds, per-element casts),
-    but MEASURED SLOWER than the interpreted fold at every scale probed —
-    fresh-process A/B, 3 reps each, sf0.1 AND a 10x-tiled corpus:
-    similarity_topk warm 0.85 s (fold) vs 2.67 s (unrolled), mmr_rerank
-    2.71 vs 4.67 at 10x. The per-query pair volume at these call sites is
-    modest (corpus x ~30 broadcast queries), so the dominant cost of the
-    64-term tree is Catalyst planning + janino compilation per invocation
-    (three gate queries overflowed codegen into interpreted fallback
-    outright: ann_topk, ann_topk_multiprobe, rp_project). The truly
-    quadratic pair stages don't score per-pair in SQL at all any more —
-    they use the grouped numpy scorer (guide SS8). Signature kept so call
-    sites stay dim-annotated for any future revisit.
-    """
-    del dim
-    return _dot(a, b)
-
-
 def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(
         F.transform(a, lambda x: x.cast("double") * x.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
     ))
-
-
-def _norm_u(a: Column, dim: int) -> Column:
-    """Norm for arrays of KNOWN length ``dim`` — delegates to the fold
-    (same left-fold order and casts; unrolled form measured slower, see
-    ``_dot_u``)."""
-    del dim
-    return _norm(a)
-
-
-def _dot_lit_u(a: Column, vec: list[float]) -> Column:
-    """Dot of a column array against a PYTHON literal vector — the fold
-    over an array literal; bit-identical to the unrolled chain (literals
-    are already double, so only the column side is cast; identical IEEE
-    order), which measured slower (see ``_dot_u``)."""
-    return _dot(a, F.array(*[F.lit(float(v)) for v in vec]))
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -100,27 +52,21 @@ def brute_force_topk(
     k: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact top-k neighbors per query (broadcast the query side).
 
     Output: (query_id, rank, neighbor_id, score). Deterministic: ordered by
     rounded score desc, neighbor id asc — FP-tie stable across engines.
-    ``dim``: when the embedding length is known, the per-pair cosine uses
-    the unrolled codegen fold (_dot_u/_norm_u — bit-identical doubles).
     """
-    nrm = ((lambda c: _norm(c)) if dim is None
-           else (lambda c: _norm_u(c, dim)))
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        nrm(F.col(vec_col)).alias("_qn"),
+        _norm(F.col(vec_col)).alias("_qn"),
     )
-    c = _spread(corpus, id_col).select(
+    c = spread_input(corpus, key=id_col).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"),
-        nrm(F.col(vec_col)).alias("_cn"),
+        _norm(F.col(vec_col)).alias("_cn"),
     )
-    dot = (_dot(F.col("qvec"), F.col("cvec")) if dim is None
-           else _dot_u(F.col("qvec"), F.col("cvec"), dim))
+    dot = _dot(F.col("qvec"), F.col("cvec"))
     scored = (
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .select(
@@ -206,14 +152,13 @@ def quantized_topk(
     Both cuts are total orders (rounded score desc, neighbor id asc).
     """
     codes, scale = _quant_exprs(F.col(vec_col), dim)
-    corpus = _spread(corpus, id_col)
+    corpus = spread_input(corpus, key=id_col)
     c1 = corpus.select(F.col(id_col).alias("neighbor_id"),
                        codes.alias("c_codes"), scale.alias("_cs"))
     q1 = queries.select(F.col(id_col).alias("query_id"),
                         codes.alias("q_codes"), scale.alias("_qs"))
-    # unrolled integer dot — exact int64 arithmetic, any order identical;
-    # kept in the fold's left-to-right order anyway (codegen vs the
-    # interpreted HOF evaluator, see _dot_u)
+    # unrolled integer dot: exact int64 arithmetic, so the sum does not
+    # depend on the add order
     idot = F.lit(0).cast("long")
     for _i in range(1, dim + 1):
         idot = idot + (F.element_at(F.col("q_codes"), _i)
@@ -230,15 +175,15 @@ def quantized_topk(
              .select("query_id", "neighbor_id"))
     cvecs = corpus.select(F.col(id_col).alias("neighbor_id"),
                           F.col(vec_col).alias("cvec"),
-                          _norm_u(F.col(vec_col), dim).alias("_cn"))
+                          _norm(F.col(vec_col)).alias("_cn"))
     qvecs = queries.select(F.col(id_col).alias("query_id"),
                            F.col(vec_col).alias("qvec2"),
-                           _norm_u(F.col(vec_col), dim).alias("_qn"))
+                           _norm(F.col(vec_col)).alias("_qn"))
     exact = (
         cvecs.join(F.broadcast(short), "neighbor_id")
         .join(F.broadcast(qvecs), "query_id")
         .select("query_id", "neighbor_id",
-                F.round(_dot_u(F.col("qvec2"), F.col("cvec"), dim)
+                F.round(_dot(F.col("qvec2"), F.col("cvec"))
                         / (F.col("_qn") * F.col("_cn")), 6).alias("score"))
     )
     wk = Window.partitionBy("query_id").orderBy(
@@ -266,10 +211,8 @@ def hyperplane_buckets(
     planes = rng.standard_normal((n_planes, dim))
     bucket = F.lit(0).cast("long")
     for p in range(n_planes):
-        # unrolled literal dot (_dot_lit_u): same 0.0 anchor and add order
-        # as the previous zip_with/aggregate fold — bit-identical signs,
-        # but codegen instead of the interpreted HOF evaluator
-        proj = _dot_lit_u(F.col(vec_col), [float(v) for v in planes[p]])
+        proj = _dot(F.col(vec_col),
+                    F.array(*[F.lit(float(v)) for v in planes[p]]))
         bucket = bucket.bitwiseOR(
             F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0)).cast("long")
         )
@@ -302,15 +245,15 @@ def ann_topk(
     """
     if not (0 <= multiprobe <= n_planes):
         raise ValueError(f"multiprobe must be in [0, {n_planes}]")
-    cb = hyperplane_buckets(_spread(corpus, id_col), dim=dim,
+    cb = hyperplane_buckets(spread_input(corpus, key=id_col), dim=dim,
                             n_planes=n_planes, seed=seed,
                             vec_col=vec_col).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"),
-        _norm_u(F.col(vec_col), dim).alias("_cn"), "bucket")
+        _norm(F.col(vec_col)).alias("_cn"), "bucket")
     qb = hyperplane_buckets(queries, dim=dim, n_planes=n_planes, seed=seed,
                             vec_col=vec_col).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        _norm_u(F.col(vec_col), dim).alias("_qn"), "bucket")
+        _norm(F.col(vec_col)).alias("_qn"), "bucket")
     if multiprobe:
         probes = F.array(
             F.col("bucket"),
@@ -322,7 +265,7 @@ def ann_topk(
         cb.join(F.broadcast(qb), (cb.bucket == qb.bucket)
                 & (F.col("neighbor_id") != F.col("query_id")))
         .select("query_id", "neighbor_id",
-                F.round(_dot_u(F.col("qvec"), F.col("cvec"), dim)
+                F.round(_dot(F.col("qvec"), F.col("cvec"))
                         / (F.col("_qn") * F.col("_cn")), 6).alias("score"))
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -499,13 +442,11 @@ def embedding_near_duplicates(
     for recall studies and tests, never the 100 TB path.
     """
     if exact:
-        nrm = ((lambda c: _norm(c)) if dim is None
-               else (lambda c: _norm_u(c, dim)))
-        a = _spread(df, id_col).select(
+        a = spread_input(df, key=id_col).select(
             F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-            nrm(F.col(vec_col)).alias("_na"))
+            _norm(F.col(vec_col)).alias("_na"))
         b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-                      nrm(F.col(vec_col)).alias("_nb"))
+                      _norm(F.col(vec_col)).alias("_nb"))
         pairs = a.join(b, F.col("id_a") < F.col("id_b"))
         dot = _dot(F.col("va"), F.col("vb"))
         return (
@@ -608,7 +549,7 @@ def ivf_train_centroids(
     # iterative reuse: n_iter+1 full passes hit the same relation — persist
     # once, release on exit (the standard Lloyd's shape; at corpus scale
     # the caller passes a training SAMPLE, faiss-style, so this is bounded)
-    corpus = _spread(corpus.select(id_col, vec_col), id_col).persist()
+    corpus = spread_input(corpus.select(id_col, vec_col), key=id_col).persist()
     seeds = (corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
              .withColumn("_r", hash_bucket(F.col("_id"), seed=seed,
                                            denom=2**32))
@@ -692,15 +633,14 @@ def ivf_centroids(
 
 
 def _pinned_scores(df: DataFrame, cents, vec_col: str, keep) -> DataFrame:
-    """``df.select(*keep, explode(array(scores)) AS _sc)`` — the K unrolled
-    codebook-score chains PINNED below a Generate. The argmax consumer
+    """``df.select(*keep, explode(array(scores)) AS _sc)`` — the K
+    codebook-score folds PINNED below a Generate. The argmax consumer
     (``array_position(sc, array_max(sc))``) references the scores array
-    twice; without the Generate, CollapseProject inlines the K*dim-term
-    chain into both references and the fused WholeStageCodegen method
-    blows janino's 64 KB limit (observed: 21k-line processNext -> ERROR +
-    interpreted fallback). Generate blocks CollapseProject (the
-    shingle_rows discipline), so the chains evaluate once per row in
-    their own compiled projection and the argmax reads a bound column."""
+    twice; without the Generate, CollapseProject inlines the K folds into
+    both references, and interpreted lambdas get no common-subexpression
+    elimination. Generate blocks CollapseProject (the shingle_rows
+    discipline), so the folds evaluate once per row and the argmax reads
+    a bound column."""
     scores = _centroid_scores(F.col(vec_col), cents)
     return df.select(*keep, F.explode(F.array(scores)).alias("_sc"))
 
@@ -752,7 +692,7 @@ def ivf_topk(
 
     Output: (query_id, rank, neighbor_id, score), deterministic ties.
     """
-    corpus = _spread(corpus, id_col)
+    corpus = spread_input(corpus, key=id_col)
     if centroids is None:
         centroids = ivf_centroids(corpus, n_centroids=n_centroids,
                                   id_col=id_col, vec_col=vec_col)
@@ -762,7 +702,6 @@ def ivf_topk(
         assigned = ivf_assign_arrow(corpus, centroids,
                                     id_col=id_col, vec_col=vec_col)
     else:
-        dim = len(centroids[0][1])
         pinned = _pinned_scores(
             corpus, centroids, vec_col,
             [F.col(id_col).alias("neighbor_id"),
@@ -770,10 +709,9 @@ def ivf_topk(
         # 1-based argmax, first occurrence on ties (matches list_indexof)
         assigned = pinned.select(
             "neighbor_id", "cvec",
-            _norm_u(F.col("cvec"), dim).alias("_cn"),
+            _norm(F.col("cvec")).alias("_cn"),
             _argmax_sc().alias("list_id"),
         )
-    dim = len(centroids[0][1])
     # query probe sets: rank the codebook relationally (tiny side)
     import pandas as pd
 
@@ -784,11 +722,11 @@ def ivf_topk(
          "cn_c": [c[2] for c in centroids]}))
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        _norm_u(F.col(vec_col), dim).alias("_qn"),
+        _norm(F.col(vec_col)).alias("_qn"),
     )
     qscored = q.crossJoin(F.broadcast(cdf)).select(
         "query_id", "qvec", "_qn", "cid",
-        (_dot_u(F.col("qvec"), F.col("cvec_c"), dim)
+        (_dot(F.col("qvec"), F.col("cvec_c"))
          / F.col("cn_c")).alias("_cs"),
     )
     wq = Window.partitionBy("query_id").orderBy(
@@ -802,7 +740,7 @@ def ivf_topk(
                       (assigned.list_id == probes.list_id)
                       & (F.col("neighbor_id") != F.col("query_id")))
         .select("query_id", "neighbor_id",
-                F.round(_dot_u(F.col("qvec"), F.col("cvec"), dim)
+                F.round(_dot(F.col("qvec"), F.col("cvec"))
                         / (F.col("_qn") * F.col("_cn")), 6).alias("score"))
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -916,14 +854,13 @@ def _pq_assign(subs: DataFrame,
     Lloyd round (guide §2.3). ``_v`` is constant within the group
     (first() is deterministic here)."""
     spark = subs.sparkSession
-    d_sub = len(books[0][0][1])
     cb = spark.createDataFrame(
         [(s, cid, [float(x) for x in c], float(cn))
          for s, book in enumerate(books) for (cid, c, cn) in book],
         "sub int, cid int, c array<double>, cn double")
     scored = subs.join(F.broadcast(cb), "sub").select(
         "sub", "_id", "_v", "cid",
-        (_dot_u(F.col("_v"), F.col("c"), d_sub) / F.col("cn")).alias("_sc"))
+        (_dot(F.col("_v"), F.col("c")) / F.col("cn")).alias("_sc"))
     best = scored.groupBy("sub", "_id").agg(
         F.first("_v").alias("_v"),
         F.max(F.struct(F.col("_sc").alias("_s"),
@@ -1012,11 +949,11 @@ def pq_topk(
         "sub int, code int, c array<double>, cn double")
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        _norm_u(F.col(vec_col), dim).alias("_qn"))
+        _norm(F.col(vec_col)).alias("_qn"))
     parts = q.crossJoin(F.broadcast(cb)).select(
         "query_id", "_qn", "sub", "code",
-        _dot_u(F.expr(f"slice(qvec, sub * {d_sub} + 1, {d_sub})"),
-               F.col("c"), d_sub).alias("partial"),
+        _dot(F.expr(f"slice(qvec, sub * {d_sub} + 1, {d_sub})"),
+             F.col("c")).alias("partial"),
         (F.col("cn") * F.col("cn")).alias("cn_sq"))
     joined = codes.join(F.broadcast(parts), ["sub", "code"]) \
         .filter(F.col(id_col) != F.col("query_id"))
@@ -1040,13 +977,13 @@ def pq_topk(
              .select("query_id", "neighbor_id"))
     cvecs = corpus.select(F.col(id_col).alias("neighbor_id"),
                           F.col(vec_col).alias("cvec"),
-                          _norm_u(F.col(vec_col), dim).alias("_cn"))
+                          _norm(F.col(vec_col)).alias("_cn"))
     qvecs = q.select("query_id", F.col("qvec").alias("qvec2"), "_qn")
     exact = (
         cvecs.join(F.broadcast(short), "neighbor_id")
         .join(F.broadcast(qvecs), "query_id")
         .select("query_id", "neighbor_id",
-                F.round(_dot_u(F.col("qvec2"), F.col("cvec"), dim)
+                F.round(_dot(F.col("qvec2"), F.col("cvec"))
                         / (F.col("_qn") * F.col("_cn")), 6).alias("score"))
     )
     wk = Window.partitionBy("query_id").orderBy(
@@ -1090,7 +1027,7 @@ def semdedup(
 
     Output: (vec_id, list_id, kept) — kept=false marks removed near-dups.
     """
-    corpus = _spread(corpus, id_col)
+    corpus = spread_input(corpus, key=id_col)
     if centroids is None:
         centroids = ivf_train_centroids(
             corpus, n_centroids=n_centroids, n_iter=n_iter, seed=seed,
@@ -1099,14 +1036,13 @@ def semdedup(
         assigned = ivf_assign_arrow(corpus, centroids,
                                     id_col=id_col, vec_col=vec_col)
     else:
-        dim = len(centroids[0][1])
         pinned = _pinned_scores(
             corpus, centroids, vec_col,
             [F.col(id_col).alias("neighbor_id"),
              F.col(vec_col).alias("cvec")])
         assigned = pinned.select(
             "neighbor_id", "cvec",
-            _norm_u(F.col("cvec"), dim).alias("_cn"),
+            _norm(F.col("cvec")).alias("_cn"),
             _argmax_sc().alias("list_id"),
         )
     # GROUPED within-list pairwise (r6 — the embedding_near_duplicates
@@ -1293,7 +1229,7 @@ def ivfpq_index(
     from pq_encode; one id-keyed join glues them — the only shuffle here,
     paid at index-build time, never per query."""
     assigned = _pinned_scores(
-        _spread(corpus, id_col), centroids, vec_col,
+        spread_input(corpus, key=id_col), centroids, vec_col,
         [F.col(id_col).alias("_aid")]).select(
         "_aid", _argmax_sc().alias("list_id"))
     return (pq_encode(corpus, books, dim=dim, id_col=id_col,
@@ -1367,10 +1303,10 @@ def ivfpq_topk(
          "cn_c": [c[2] for c in centroids]}))
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        _norm_u(F.col(vec_col), dim).alias("_qn"))
+        _norm(F.col(vec_col)).alias("_qn"))
     qscored = q.crossJoin(F.broadcast(cdf)).select(
         "query_id", "cid",
-        (_dot_u(F.col("qvec"), F.col("cvec_c"), dim)
+        (_dot(F.col("qvec"), F.col("cvec_c"))
          / F.col("cn_c")).alias("_cs"))
     wq = Window.partitionBy("query_id").orderBy(
         F.col("_cs").desc(), F.col("cid").asc())
@@ -1384,8 +1320,8 @@ def ivfpq_topk(
         "sub int, code int, c array<double>, cn double")
     parts = q.crossJoin(F.broadcast(cb)).select(
         "query_id", "_qn", "sub", "code",
-        _dot_u(F.expr(f"slice(qvec, sub * {d_sub} + 1, {d_sub})"),
-               F.col("c"), d_sub).alias("partial"),
+        _dot(F.expr(f"slice(qvec, sub * {d_sub} + 1, {d_sub})"),
+             F.col("c")).alias("partial"),
         (F.col("cn") * F.col("cn")).alias("cn_sq"))
 
     cand = (codes.join(F.broadcast(probes), "list_id")
@@ -1411,13 +1347,13 @@ def ivfpq_topk(
              .select("query_id", "neighbor_id"))
     cvecs = corpus.select(F.col(id_col).alias("neighbor_id"),
                           F.col(vec_col).alias("cvec"),
-                          _norm_u(F.col(vec_col), dim).alias("_cn"))
+                          _norm(F.col(vec_col)).alias("_cn"))
     qvecs = q.select("query_id", F.col("qvec").alias("qvec2"), "_qn")
     exact = (
         cvecs.join(F.broadcast(short), "neighbor_id")
         .join(F.broadcast(qvecs), "query_id")
         .select("query_id", "neighbor_id",
-                F.round(_dot_u(F.col("qvec2"), F.col("cvec"), dim)
+                F.round(_dot(F.col("qvec2"), F.col("cvec"))
                         / (F.col("_qn") * F.col("_cn")), 6).alias("score"))
     )
     wk = Window.partitionBy("query_id").orderBy(
@@ -1565,21 +1501,21 @@ def rp_topk(
     # chains run exactly once per row and the join stage codegen stays
     # small. Norms are hoisted below the join (one per vector, not per
     # pair) with the multiplication order preserved — bit-identical.
-    pc = random_project(_spread(corpus, id_col), in_dim=in_dim,
+    pc = random_project(spread_input(corpus, key=id_col), in_dim=in_dim,
                         out_dim=out_dim,
                         seed=seed, id_col=id_col, vec_col=vec_col) \
         .select(F.col(id_col).alias("neighbor_id"),
                 F.explode(F.array("proj")).alias("_cp")) \
         .select("neighbor_id", "_cp",
-                _norm_u(F.col("_cp"), out_dim).alias("_cpn"))
+                _norm(F.col("_cp")).alias("_cpn"))
     pq = random_project(queries, in_dim=in_dim, out_dim=out_dim,
                         seed=seed, id_col=id_col, vec_col=vec_col) \
         .select(F.col(id_col).alias("query_id"),
                 F.explode(F.array("proj")).alias("_qp")) \
         .select("query_id", "_qp",
-                _norm_u(F.col("_qp"), out_dim).alias("_qpn"))
+                _norm(F.col("_qp")).alias("_qpn"))
     approx = F.round(
-        _dot_u(F.col("_qp"), F.col("_cp"), out_dim)
+        _dot(F.col("_qp"), F.col("_cp"))
         / (F.col("_qpn") * F.col("_cpn")), 6)
     scored = (
         pc.join(F.broadcast(pq), F.col("neighbor_id") != F.col("query_id"))
@@ -1592,15 +1528,15 @@ def rp_topk(
              .select("query_id", "neighbor_id"))
     cvecs = corpus.select(F.col(id_col).alias("neighbor_id"),
                           F.col(vec_col).alias("cvec"),
-                          _norm_u(F.col(vec_col), in_dim).alias("_cn"))
+                          _norm(F.col(vec_col)).alias("_cn"))
     qvecs = queries.select(F.col(id_col).alias("query_id"),
                            F.col(vec_col).alias("qvec2"),
-                           _norm_u(F.col(vec_col), in_dim).alias("_qn"))
+                           _norm(F.col(vec_col)).alias("_qn"))
     exact = (
         cvecs.join(F.broadcast(short), "neighbor_id")
         .join(F.broadcast(qvecs), "query_id")
         .select("query_id", "neighbor_id",
-                F.round(_dot_u(F.col("qvec2"), F.col("cvec"), in_dim)
+                F.round(_dot(F.col("qvec2"), F.col("cvec"))
                         / (F.col("_qn") * F.col("_cn")), 6).alias("score"))
     )
     wk = Window.partitionBy("query_id").orderBy(
@@ -1646,7 +1582,7 @@ def nearest_centroid_confusion(
     Output: (label, pred_label, n) integer confusion counts.
     """
     xq = F.explode(F.sequence(F.lit(0), F.lit(dim - 1))).alias("d")
-    base = _spread(embeddings, id_col).select(
+    base = spread_input(embeddings, key=id_col).select(
         F.col(id_col).alias("vid"), F.col(label_col).alias("label"),
         F.col(vec_col).alias("_v")
     ).select(

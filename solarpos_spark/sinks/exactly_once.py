@@ -10,8 +10,6 @@ streaming sink (same epoch-atomic semantics) when runtime jars exist.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
@@ -22,31 +20,21 @@ def exactly_once_parquet_sink(
     output_path: str,
     checkpoint_path: str,
     *,
-    extra_partition_cols: list[str] | None = None,
-    on_batch: Callable[[int, int], None] | None = None,
     trigger_available_now: bool = False,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Start an exactly-once parquet sink for ``stream_df``.
 
-    Each micro-batch lands in ``batch_id=<epoch>`` partitions via dynamic
-    partition overwrite — idempotent under Structured Streaming's batch-id
-    replay. ``on_batch(batch_id, row_count)`` is invoked post-commit (driver
-    side) for lineage/metrics hooks.
+    Each micro-batch lands in its ``batch_id=<epoch>`` partition via a
+    per-write dynamic partition overwrite — idempotent under Structured
+    Streaming's batch-id replay, and invisible to other queries in the
+    session (the session's ``partitionOverwriteMode`` is never touched).
     """
-    parts = ["batch_id", *(extra_partition_cols or [])]
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out = batch_df.withColumn("batch_id", F.lit(batch_id))
-            out.write.mode("overwrite").partitionBy(*parts).parquet(output_path)
-            if on_batch is not None:
-                on_batch(batch_id, -1)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (batch_df.withColumn("batch_id", F.lit(batch_id))
+         .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("batch_id").parquet(output_path))
 
     writer: DataStreamWriter = (
         stream_df.writeStream.outputMode("append")

@@ -111,6 +111,32 @@ def _u01(x: np.ndarray) -> np.ndarray:
     return (x >> np.uint64(11)).astype(np.float64) / float(1 << 53)
 
 
+def _record_slab(batch: pa.RecordBatch
+                 ) -> tuple[np.ndarray, pa.Array, np.ndarray] | None:
+    """Token batch -> ``(n_records, 10)`` int64 token slab, the doc_id of
+    each record and its ``seq_index`` within the doc; ``None`` when the
+    batch holds no record. One reshape + np.repeat, zero per-row work."""
+    if batch.num_rows == 0:
+        return None
+    names = batch.schema.names
+    toks = batch.column(names.index("tokens"))
+    if isinstance(toks, pa.ChunkedArray):
+        toks = toks.combine_chunks()
+    offsets = toks.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    counts = np.diff(offsets) // codec.TOKENS_PER_RECORD
+    total = int(counts.sum())
+    if total == 0:
+        return None
+    flat = (toks.values.to_numpy(zero_copy_only=False)[offsets[0]:offsets[-1]]
+            .astype(np.int64).reshape(-1, codec.TOKENS_PER_RECORD))
+    doc_idx = np.repeat(np.arange(batch.num_rows), counts)
+    doc_ids = batch.column(names.index("doc_id")).take(pa.array(doc_idx))
+    ends = np.cumsum(counts)
+    seq_index = (np.arange(total)
+                 - np.repeat(ends - counts, counts)).astype(np.int32)
+    return flat, doc_ids, seq_index
+
+
 def decode_tokens(df: DataFrame,
                   fields: tuple[str, ...] | None = None) -> DataFrame:
     """tokens array<int32> -> one row per encoded record (S5 paired scan).
@@ -141,25 +167,10 @@ def decode_tokens(df: DataFrame,
 
     def explode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            if batch.num_rows == 0:
+            slab = _record_slab(batch)
+            if slab is None:
                 continue
-            names = batch.schema.names
-            toks = batch.column(names.index("tokens"))
-            if isinstance(toks, pa.ChunkedArray):
-                toks = toks.combine_chunks()
-            offsets = toks.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat_vals = toks.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            # token slab -> (n_records, 10) with zero per-row work
-            lens = np.diff(offsets)
-            counts = lens // codec.TOKENS_PER_RECORD
-            total = int(counts.sum())
-            if total == 0:
-                continue
-            flat = flat_vals[offsets[0]:offsets[-1]].reshape(-1, codec.TOKENS_PER_RECORD)
-            doc_idx = np.repeat(np.arange(batch.num_rows), counts)
-            doc_ids = batch.column(names.index("doc_id")).take(pa.array(doc_idx))
-            ends = np.cumsum(counts)
-            seq_index = (np.arange(total) - np.repeat(ends - counts, counts)).astype(np.int32)
+            flat, doc_ids, seq_index = slab
             decoded = codec.decode_records(flat)
             cols = {
                 "doc_id": lambda: doc_ids,
@@ -210,20 +221,10 @@ def decode_position_arrow(df: DataFrame, *, algorithm: str = "spa",
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            if batch.num_rows == 0:
+            slab = _record_slab(batch)
+            if slab is None:
                 continue
-            names = batch.schema.names
-            toks = batch.column(names.index("tokens"))
-            if isinstance(toks, pa.ChunkedArray):
-                toks = toks.combine_chunks()
-            offsets = toks.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat_vals = toks.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            lens = np.diff(offsets)
-            counts = lens // codec.TOKENS_PER_RECORD
-            total = int(counts.sum())
-            if total == 0:
-                continue
-            flat = flat_vals[offsets[0]:offsets[-1]].reshape(-1, codec.TOKENS_PER_RECORD)
+            flat, doc_ids, seq_index = slab
             f = codec.decode_records(flat)
             press = f["pressure"] if refraction else None
             temp = f["temperature"] if refraction else None
@@ -235,11 +236,6 @@ def decode_position_arrow(df: DataFrame, *, algorithm: str = "spa",
                 az, zen = spa_kernel.solar_position(
                     f["unix_sec"].astype(np.float64), f["lat"], f["lon"],
                     f["elevation"], f["delta_t"], press, temp)
-            doc_idx = np.repeat(np.arange(batch.num_rows), counts)
-            doc_ids = batch.column(names.index("doc_id")).take(pa.array(doc_idx))
-            ends = np.cumsum(counts)
-            seq_index = (np.arange(total)
-                         - np.repeat(ends - counts, counts)).astype(np.int32)
             yield pa.RecordBatch.from_arrays(
                 [doc_ids, pa.array(seq_index), pa.array(f["lat"]),
                  pa.array(f["lon"]), pa.array(f["unix_sec"]),

@@ -2290,37 +2290,6 @@ class TestR6OptimizationEquivalence:
                          grams2.filter(F.col("_full")).collect())
         assert got_ng == want_ng
 
-    def test_unrolled_dot_norm_parity(self, spark):
-        """_dot_u/_norm_u/_dot_lit_u are bit-identical to the interpreted
-        higher-order folds for known-length arrays (same IEEE order)."""
-        import random
-
-        from pyspark.sql import functions as F
-
-        from solarpos_spark.operators.similarity import (
-            _dot, _dot_lit_u, _dot_u, _norm, _norm_u)
-
-        rng = random.Random(3)
-        dim = 17
-        rows = [([rng.uniform(-2, 2) for _ in range(dim)],
-                 [rng.uniform(-2, 2) for _ in range(dim)])
-                for _ in range(50)]
-        df = spark.createDataFrame(
-            rows, f"a array<double>, b array<double>")
-        lit_vec = [rng.uniform(-1, 1) for _ in range(dim)]
-        out = df.select(
-            _dot(F.col("a"), F.col("b")).alias("d0"),
-            _dot_u(F.col("a"), F.col("b"), dim).alias("d1"),
-            _norm(F.col("a")).alias("n0"),
-            _norm_u(F.col("a"), dim).alias("n1"),
-            _dot(F.col("a"),
-                 F.array(*[F.lit(v) for v in lit_vec])).alias("l0"),
-            _dot_lit_u(F.col("a"), lit_vec).alias("l1")).collect()
-        for r in out:
-            assert r["d0"] == r["d1"]          # bitwise double equality
-            assert r["n0"] == r["n1"]
-            assert r["l0"] == r["l1"]
-
     def test_round6_boundary_equivalence(self, spark):
         """_round6_boundary's raw-value cut must equal Spark's
         filter(round(x, 6) >= lit(t)) for boundary-adjacent doubles."""

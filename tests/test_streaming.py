@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +19,8 @@ from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
 from solarpos_spark.sources import tokens
 from solarpos_spark.streaming import pipeline
 from solarpos_spark.streaming.lineage import attach_lineage, with_observed_metrics
+from solarpos_spark.streaming.replay import (
+    commit_available_now, ordered_file_stream)
 
 
 T0 = 1704067200  # 2024-01-01T00:00:00Z
@@ -44,10 +47,20 @@ def make_token_files(spark, path: str, n_docs: int = 60, files: int = 6,
 
 
 def drain(q, timeout=300):
-    q.awaitTermination(timeout)
-    if q.isActive:
+    """Wait for an availableNow query to finish; stop it and fail if it
+    does not."""
+    if not q.awaitTermination(timeout):
         q.stop()
-        q.awaitTermination(60)
+        pytest.fail(f"streaming query did not finish in {timeout} s")
+
+
+def shuffled_parts(ev, sentinel_id):
+    """Shuffled delivery: route rows to 3 parts by event_id % 3; the
+    sentinel row rides the LAST part."""
+    eid = F.col("event_id")
+    return [ev.filter(((eid % 3 == f) & (eid != sentinel_id))
+                      | (F.lit(f == 2) & (eid == sentinel_id)))
+            for f in range(3)]
 
 
 class TestExactlyOnceSink:
@@ -60,10 +73,7 @@ class TestExactlyOnceSink:
         stream = tokens.read_token_stream(spark, src, max_files_per_trigger=2)
         dec = pipeline.decoded_stream(stream)
         pos = pipeline.position_stream(dec)
-        q = exactly_once_parquet_sink(pos, out, ckpt, trigger_available_now=True)
-        drain(q)
-
-        got = spark.read.parquet(out)
+        got = commit_available_now(pos, out, ckpt)
         batch_dec = tokens.decode_tokens(batch_input)
         from solarpos_spark.operators.position import position
         want = position(batch_dec, ts_col="unix_sec", time_is_unix=True,
@@ -87,7 +97,6 @@ class TestExactlyOnceSink:
 
         # phase 1: process a couple of micro-batches, then kill the query
         q = exactly_once_parquet_sink(pos, out, ckpt)
-        import time
         seen, deadline = 0, time.monotonic() + 120
         while seen < 2 and time.monotonic() < deadline:
             time.sleep(1.0)
@@ -101,10 +110,7 @@ class TestExactlyOnceSink:
         # phase 2: restart from the same checkpoint, drain everything
         stream2 = tokens.read_token_stream(spark, src, max_files_per_trigger=1)
         pos2 = pipeline.position_stream(pipeline.decoded_stream(stream2))
-        q2 = exactly_once_parquet_sink(pos2, out, ckpt, trigger_available_now=True)
-        drain(q2)
-
-        got = spark.read.parquet(out)
+        got = commit_available_now(pos2, out, ckpt)
         assert got.count() == 240  # 60 docs x 4 records, exactly once
         dupes = (got.groupBy("doc_id", "seq_index").count()
                  .filter(F.col("count") > 1).count())
@@ -114,14 +120,63 @@ class TestExactlyOnceSink:
         # simulate a batch replay: writing batch_id=7 twice leaves one copy
         out = str(tmp_path / "out")
         df = spark.range(10).select(F.col("id"), F.lit(7).alias("batch_id"))
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            df.write.mode("overwrite").partitionBy("batch_id").parquet(out)
-            df.write.mode("overwrite").partitionBy("batch_id").parquet(out)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        for _ in range(2):
+            df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+                .partitionBy("batch_id").parquet(out)
         assert spark.read.parquet(out).count() == 10
+
+
+class TestReplayContract:
+    def test_committed_batch_i_holds_exactly_part_i(self, spark, tmp_path):
+        """ordered_file_stream replays its parts in list order, one per
+        trigger, and a later call's parts follow the earlier ones: the
+        committed batch_id = i holds exactly part i. Every ordered-delivery
+        test relies on this."""
+        parts = [spark.range(10 * i, 10 * i + 3 + i).toDF("v")
+                 for i in range(3)]
+        in_dir = str(tmp_path / "in")
+        ordered_file_stream(parts[:2], in_dir)
+        stream = ordered_file_stream(parts[2:], in_dir)
+        got = commit_available_now(stream, str(tmp_path / "out"),
+                                   str(tmp_path / "ckpt"))
+        by_batch: dict[int, set[int]] = {}
+        for r in got.collect():
+            by_batch.setdefault(r.batch_id, set()).add(r.v)
+        assert by_batch == {i: {r.v for r in part.collect()}
+                            for i, part in enumerate(parts)}
+
+    def test_two_sinks_at_once_keep_session_conf(self, spark, tmp_path):
+        """Two exactly-once sinks running at once in one session each
+        commit every row exactly once, and partitionOverwriteMode keeps
+        its value throughout, both in the session and in each query's
+        own (cloned) session that its batches run on: the sink sets the
+        mode per write, never on a session."""
+        key = "spark.sql.sources.partitionOverwriteMode"
+        before = spark.conf.get(key)
+        src = str(tmp_path / "tok")
+        make_token_files(spark, src, n_docs=40, files=8)
+        queries = [
+            exactly_once_parquet_sink(
+                tokens.read_token_stream(spark, src, max_files_per_trigger=1),
+                str(tmp_path / f"out_{tag}"), str(tmp_path / f"ckpt_{tag}"),
+                trigger_available_now=True)
+            for tag in ("a", "b")]
+        sessions = [spark._jsparkSession] + [
+            q._jsq.streamingQuery().sparkSessionForStream() for q in queries]
+        seen = set()
+        deadline = time.monotonic() + 300
+        while (any(q.isActive for q in queries)
+               and time.monotonic() < deadline):
+            seen.update(js.conf().get(key) for js in sessions)
+            time.sleep(0.01)
+        for q in queries:
+            drain(q, 60)
+        assert seen == {before}
+        for tag in ("a", "b"):
+            got = spark.read.parquet(str(tmp_path / f"out_{tag}"))
+            assert got.count() == 40
+            assert got.select("doc_id").distinct().count() == 40
+            assert got.select("batch_id").distinct().count() == 8
 
 
 class TestWindowsAndLateData:
@@ -130,20 +185,6 @@ class TestWindowsAndLateData:
         windows (late arrivals bounded by the watermark)."""
         src = str(tmp_path / "tok")
         make_token_files(spark, src, n_docs=80, files=8)
-
-        def run(trigger_files: int, tag: str):
-            out = str(tmp_path / f"out_{tag}")
-            ckpt = str(tmp_path / f"ckpt_{tag}")
-            stream = tokens.read_token_stream(spark, src,
-                                              max_files_per_trigger=trigger_files)
-            dec = pipeline.decoded_stream(stream, watermark="10 years")
-            agg = pipeline.hourly_window_counts(dec)
-            q = (agg.writeStream.outputMode("append")
-                 .option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True)
-                 .format("parquet").option("path", out).start())
-            drain(q)
-            return spark.read.parquet(out) if os.path.isdir(out) else None
 
         # watermark "10 years" covers the 2020-2030 synthetic event spread,
         # so no window is ever finalized early -> nothing emits in append
@@ -182,38 +223,26 @@ class TestWindowsAndLateData:
                  .cache())
         keyed.count()
 
-        def arrange(src_dir: str, shift_sec: int):
+        def run(shift_sec: int, tag: str):
             # file index = floor((ts - T0 + shift)/3600): shift 0 = in
             # order; shift 1800 pushes each hour's last 30 min one file
             # later (arrives after the watermark has advanced past its
             # hour, but within the 1 h bound)
-            for k in range(span_h + 1):
-                part = keyed.filter(
-                    F.floor((F.col("unix_sec") - T0 + shift_sec) / 3600)
-                    == k).drop("unix_sec")
-                if part.count():
-                    part.coalesce(1).write.mode("append").parquet(src_dir)
-
-        def run(src_dir: str, tag: str):
-            out = str(tmp_path / f"out_{tag}")
-            ckpt = str(tmp_path / f"ckpt_{tag}")
-            stream = tokens.read_token_stream(spark, src_dir,
-                                              max_files_per_trigger=1)
+            parts = [keyed.filter(
+                F.floor((F.col("unix_sec") - T0 + shift_sec) / 3600)
+                == k).drop("unix_sec") for k in range(span_h + 1)]
+            stream = ordered_file_stream([p for p in parts if p.count()],
+                                         str(tmp_path / f"in_{tag}"))
             agg = pipeline.hourly_window_counts(
                 pipeline.decoded_stream(stream, watermark="1 hour"))
-            q = exactly_once_parquet_sink(agg, out, ckpt,
-                                          trigger_available_now=True)
-            drain(q)
             return sorted(
                 (r["window_start"], r["n_rows"], r["min_lat"], r["max_lat"])
-                for r in spark.read.parquet(out).collect())
+                for r in commit_available_now(
+                    agg, str(tmp_path / f"out_{tag}"),
+                    str(tmp_path / f"ckpt_{tag}")).collect())
 
-        src_a = str(tmp_path / "ordered")
-        src_b = str(tmp_path / "late")
-        arrange(src_a, 0)
-        arrange(src_b, 1800)
-        a = run(src_a, "a")
-        b = run(src_b, "b")
+        a = run(0, "a")
+        b = run(1800, "b")
         keyed.unpersist()
         assert a == b
         # windows actually committed, and the tail is withheld by the
@@ -259,39 +288,25 @@ class TestWindowsAndLateData:
           u4: T0+43199 (file 2) — the max event; watermark = 43199-3600
               = 39599, so u3/u4 are withheld. Committed = exactly u1+u2.
         """
-        import glob
-
-        in_dir = str(tmp_path / "in")
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
         rows_by_file = [
             [("u1", 13800), ("u2", 100), ("u2", 200)],
             [("u1", 15000)],
             [("u3", 39600), ("u4", 43199)],
         ]
-        written: set[str] = set()
-        for i, rows in enumerate(rows_by_file):
-            df = spark.createDataFrame(
-                [(u, T0 + off) for u, off in rows], "user string, sec long"
-            ).select("user", F.timestamp_seconds("sec").alias("ts"))
-            df.coalesce(1).write.mode("append").parquet(in_dir)
-            new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-            for p in new:
-                os.utime(p, (1_540_000_000 + 10 * i,) * 2)
-            written.update(new)
-        stream = (spark.readStream.schema("user string, ts timestamp")
-                  .option("maxFilesPerTrigger", "1").parquet(in_dir)
-                  .withWatermark("ts", "1 hour"))
+        parts = [spark.createDataFrame(
+            [(u, T0 + off) for u, off in rows], "user string, sec long"
+        ).select("user", F.timestamp_seconds("sec").alias("ts"))
+            for rows in rows_by_file]
+        stream = ordered_file_stream(parts, str(tmp_path / "in")) \
+            .withWatermark("ts", "1 hour")
         sess = (stream.groupBy(
                     F.session_window("ts", "30 minutes").alias("w"), "user")
                 .agg(F.count(F.lit(1)).alias("n"))
                 .select("user", F.unix_timestamp("w.start").alias("s"),
                         F.unix_timestamp("w.end").alias("e"), "n"))
-        q = exactly_once_parquet_sink(sess, out, ckpt,
-                                      trigger_available_now=True)
-        drain(q)
-        got = sorted(tuple(r) for r in spark.read.parquet(out)
-                     .select("user", "s", "e", "n").collect())
+        got = sorted(tuple(r) for r in commit_available_now(
+            sess, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+            .select("user", "s", "e", "n").collect())
         assert got == [
             ("u1", T0 + 13800, T0 + 15000 + 1800, 2),  # straddles files 0/1
             ("u2", T0 + 100, T0 + 200 + 1800, 2),
@@ -307,8 +322,7 @@ class TestStreamStreamJoin:
         stream = tokens.read_token_stream(spark, src, max_files_per_trigger=1)
         dec = pipeline.decoded_stream(stream, watermark="1 hour")
         joined = pipeline.position_sunrise_join(dec)
-        q = exactly_once_parquet_sink(joined, out, ckpt, trigger_available_now=True)
-        drain(q)
+        commit_available_now(joined, out, ckpt)
         # join results within the time bound are held in state until the
         # watermark passes; append a far-future sentinel doc to advance it,
         # then drain again from the same checkpoint (exactly-once resume).
@@ -319,9 +333,8 @@ class TestStreamStreamJoin:
         stream2 = tokens.read_token_stream(spark, src, max_files_per_trigger=1)
         joined2 = pipeline.position_sunrise_join(
             pipeline.decoded_stream(stream2, watermark="1 hour"))
-        q2 = exactly_once_parquet_sink(joined2, out, ckpt, trigger_available_now=True)
-        drain(q2)
-        got = spark.read.parquet(out).filter(~F.col("doc_id").startswith("sentinel"))
+        got = commit_available_now(joined2, out, ckpt).filter(
+            ~F.col("doc_id").startswith("sentinel"))
         assert got.count() == 120  # one joined row per decoded record
         assert got.filter(F.col("is_daylight").isNull()).count() == 0
         # daylight flag consistent with zenith where the UT-day event window
@@ -347,9 +360,7 @@ class TestStreamStreamJoin:
         stream = tokens.read_token_stream(spark, src, max_files_per_trigger=1)
         joined = pipeline.position_sunrise_join(
             pipeline.decoded_stream(stream, watermark="1 hour"), twilight=True)
-        q = exactly_once_parquet_sink(joined, out, ckpt,
-                                      trigger_available_now=True)
-        drain(q)
+        commit_available_now(joined, out, ckpt)
         # advance the watermark past the join range bound so held state flushes
         tokens.generate_token_sequences(
             spark, 1, records_per_doc=1, doc_prefix="sentinel-",
@@ -358,13 +369,12 @@ class TestStreamStreamJoin:
         stream2 = tokens.read_token_stream(spark, src, max_files_per_trigger=1)
         joined2 = pipeline.position_sunrise_join(
             pipeline.decoded_stream(stream2, watermark="1 hour"), twilight=True)
-        drain(exactly_once_parquet_sink(joined2, out, ckpt,
-                                        trigger_available_now=True))
+        committed = commit_available_now(joined2, out, ckpt)
 
         tw_cols = ["astronomical_start", "nautical_start", "civil_start",
                    "sunrise", "transit", "sunset",
                    "civil_end", "nautical_end", "astronomical_end"]
-        got = (spark.read.parquet(out)
+        got = (committed
                .filter(~F.col("doc_id").startswith("sentinel"))
                .select("doc_id", "seq_index", *tw_cols))
         assert got.count() == 96  # one row per decoded record
@@ -390,10 +400,8 @@ class TestLineage:
             stream = tokens.read_token_stream(spark, src, max_files_per_trigger=2)
             dec = with_observed_metrics(pipeline.decoded_stream(stream))
             pos = pipeline.position_stream(dec)
-            q = exactly_once_parquet_sink(pos, out, ckpt, trigger_available_now=True)
-            drain(q)
+            commit_available_now(pos, out, ckpt)
             # listener delivery is async: poll for both batch records
-            import time
             deadline = time.monotonic() + 30
             recs = []
             while time.monotonic() < deadline:
@@ -430,13 +438,13 @@ class TestCustomStatefulOperator:
         # availableNow does NOT self-terminate under processing-time
         # timeouts (the query idles waiting for potential timeout fires);
         # poll the sink for completeness, then stop.
-        import time
         deadline = time.monotonic() + 120
         while time.monotonic() < deadline:
             if spark.table("sweeps").count() >= 24:
                 break
             time.sleep(1.0)
-        drain(q, 5)
+        q.stop()
+        q.awaitTermination(60)
         got = spark.table("sweeps").collect()
         complete = [r for r in got if r["status"] == "COMPLETE"]
         assert len(complete) == 24
@@ -466,11 +474,7 @@ class TestStreamingDedup:
 
         stream = tokens.read_token_stream(spark, src, max_files_per_trigger=2)
         ded = pipeline.deduped_stream(pipeline.decoded_stream(stream))
-        q = exactly_once_parquet_sink(ded, out, ckpt,
-                                      trigger_available_now=True)
-        drain(q)
-
-        got = spark.read.parquet(out)
+        got = commit_available_now(ded, out, ckpt)
         assert got.count() == n_unique  # doubled input, each record once
         assert got.select("doc_id", "seq_index").distinct().count() == n_unique
 
@@ -480,9 +484,6 @@ class TestStreamingCurate:
         """curated_doc_stream is stateless: committed rows must be identical
         whether the docs arrive in 1 micro-batch or 8, and must equal the
         same expressions applied in one batch plan."""
-        from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
-        from solarpos_spark.streaming import pipeline
-
         docs = spark.read.parquet(
             "/root/testdata/sf0.001/documents.parquet")
         src = str(tmp_path / "docs")
@@ -497,12 +498,9 @@ class TestStreamingCurate:
             ckpt = str(tmp_path / f"ckpt_{tag}")
             stream = (spark.readStream.schema(schema)
                       .option("maxFilesPerTrigger", mfpt).parquet(src))
-            q = exactly_once_parquet_sink(
-                pipeline.curated_doc_stream(stream, rates), out, ckpt,
-                trigger_available_now=True)
-            drain(q)
-            outs.append({tuple(r) for r in spark.read.parquet(out)
-                         .drop("batch_id").collect()})
+            kept = commit_available_now(
+                pipeline.curated_doc_stream(stream, rates), out, ckpt)
+            outs.append({tuple(r) for r in kept.drop("batch_id").collect()})
         assert outs[0] == outs[1] and outs[0]
         batch = {tuple(r) for r in
                  pipeline.curated_doc_stream(docs, rates).collect()}
@@ -518,7 +516,6 @@ class TestFunnelStream:
         from pyspark.sql import Window
 
         from solarpos_spark.operators.relational import sequence_pattern
-        from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
         from solarpos_spark.streaming.pipeline import funnel_stream
 
         t0 = datetime(2024, 5, 1, 9, 0, 0)
@@ -539,11 +536,8 @@ class TestFunnelStream:
         b = spark.readStream.schema(ev.schema).parquet(
             str(tmp_path / "purchase"))
         pairs = funnel_stream(a, b, within_seconds=120, watermark="1 hour")
-        q = exactly_once_parquet_sink(pairs, str(tmp_path / "out"),
-                                      str(tmp_path / "ckpt"),
-                                      trigger_available_now=True)
-        q.awaitTermination()
-        got = spark.read.parquet(str(tmp_path / "out"))
+        got = commit_available_now(pairs, str(tmp_path / "out"),
+                                   str(tmp_path / "ckpt"))
         # every user has BOTH purchases within 120 s of the first error
         assert got.count() == 6 * 2
         # rank-1 cut == batch first-match operator
@@ -566,12 +560,9 @@ class TestFunnelFirstMatch:
         close only when the watermark passes, so arrival order cannot
         change the answer. A far-future sentinel event drives the final
         watermark past every deadline."""
-        import glob
-        import os
         from datetime import datetime, timedelta
 
         from solarpos_spark.operators.relational import sequence_pattern
-        from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
         from solarpos_spark.streaming.stateful import funnel_first_match
 
         t0 = datetime(2024, 7, 1, 8, 0, 0)
@@ -604,30 +595,15 @@ class TestFunnelFirstMatch:
 
         ev = spark.createDataFrame(
             rows, "event_id long, user_id long, event_type string, ts timestamp")
-        in_dir = str(tmp_path / "in")
-        written: set = set()
-        for f in range(3):  # shuffled delivery: route by id mod 3; the
-            # sentinel rides the LAST file (mtimes pin true write order)
-            part = ev.filter(
-                ((F.col("event_id") % 3 == f)
-                 & (F.col("event_id") != sentinel_id))
-                | (F.lit(f == 2) & (F.col("event_id") == sentinel_id)))
-            part.coalesce(1).write.mode("append").parquet(in_dir)
-            new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-            for p in new:
-                os.utime(p, (2_000_000_000 + 10 * f, 2_000_000_000 + 10 * f))
-            written.update(new)
-        stream = spark.readStream.schema(ev.schema) \
-            .option("maxFilesPerTrigger", "1").parquet(in_dir) \
+        parts = shuffled_parts(ev, sentinel_id)
+        stream = ordered_file_stream(parts, str(tmp_path / "in")) \
             .withWatermark("ts", "2 hours")
         out = funnel_first_match(stream, first_type="error",
                                  then_type="purchase", within_seconds=120)
-        q = exactly_once_parquet_sink(out, str(tmp_path / "out"),
-                                      str(tmp_path / "ckpt"),
-                                      trigger_available_now=True)
-        q.awaitTermination()
-        got = spark.read.parquet(str(tmp_path / "out")) \
-            .select("user_id", "a_event_id", "b_event_id", "gap_usec")
+        committed = commit_available_now(out, str(tmp_path / "out"),
+                                         str(tmp_path / "ckpt"))
+        got = committed.select("user_id", "a_event_id", "b_event_id",
+                               "gap_usec")
         want = sequence_pattern(ev, first_type="error",
                                 then_type="purchase", within_seconds=120)
         assert got.count() > 0
@@ -640,13 +616,10 @@ class TestFunnelFirstMatch:
         under multi-batch shuffled delivery, and together with
         funnel_first_match PARTITION the closed A set — same windows,
         flipped emission predicate."""
-        import glob
-        import os
         from datetime import datetime, timedelta
 
         from solarpos_spark.operators.relational import (
             sequence_pattern, sequence_pattern_absent)
-        from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
         from solarpos_spark.streaming.stateful import funnel_absence
 
         t0 = datetime(2024, 7, 2, 8, 0, 0)
@@ -672,29 +645,14 @@ class TestFunnelFirstMatch:
         ev = spark.createDataFrame(
             rows,
             "event_id long, user_id long, event_type string, ts timestamp")
-        in_dir = str(tmp_path / "in")
-        written: set = set()
-        for f in range(3):
-            part = ev.filter(
-                ((F.col("event_id") % 3 == f)
-                 & (F.col("event_id") != sentinel_id))
-                | (F.lit(f == 2) & (F.col("event_id") == sentinel_id)))
-            part.coalesce(1).write.mode("append").parquet(in_dir)
-            new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-            for p in new:
-                os.utime(p, (2_000_000_000 + 10 * f, 2_000_000_000 + 10 * f))
-            written.update(new)
-        stream = spark.readStream.schema(ev.schema) \
-            .option("maxFilesPerTrigger", "1").parquet(in_dir) \
+        parts = shuffled_parts(ev, sentinel_id)
+        stream = ordered_file_stream(parts, str(tmp_path / "in")) \
             .withWatermark("ts", "2 hours")
         out = funnel_absence(stream, first_type="error",
                              then_type="purchase", within_seconds=120)
-        q = exactly_once_parquet_sink(out, str(tmp_path / "out"),
-                                      str(tmp_path / "ckpt"),
-                                      trigger_available_now=True)
-        q.awaitTermination()
-        got = spark.read.parquet(str(tmp_path / "out")) \
-            .select("user_id", "a_event_id")
+        committed = commit_available_now(out, str(tmp_path / "out"),
+                                         str(tmp_path / "ckpt"))
+        got = committed.select("user_id", "a_event_id")
         want = sequence_pattern_absent(
             ev, first_type="error", then_type="purchase",
             within_seconds=120).select("user_id", "a_event_id")
@@ -721,12 +679,9 @@ class TestFunnelFirstMatch:
         below the gap and PROVING eviction ran), the gap A's arrive in
         batch 3 after their matches, and the sentinel closes windows.
         Committed rows must equal the batch fixpoint exactly."""
-        import glob
-        import os
         from datetime import datetime, timedelta
 
         from solarpos_spark.operators.relational import sequence_pattern
-        from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
         from solarpos_spark.streaming.stateful import funnel_first_match
 
         t0 = datetime(2024, 7, 3, 8, 0, 0)
@@ -757,27 +712,16 @@ class TestFunnelFirstMatch:
         ev = spark.createDataFrame(
             rows,
             "event_id long, user_id long, event_type string, ts timestamp")
-        in_dir = str(tmp_path / "in")
-        written: set = set()
-        for f, batch in enumerate(files):
-            ids = [r[0] for r in batch]
-            ev.filter(F.col("event_id").isin(ids)) \
-                .coalesce(1).write.mode("append").parquet(in_dir)
-            new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-            for p in new:
-                os.utime(p, (2_200_000_000 + 10 * f,) * 2)
-            written.update(new)
-        stream = spark.readStream.schema(ev.schema) \
-            .option("maxFilesPerTrigger", "1").parquet(in_dir) \
+        parts = [ev.filter(F.col("event_id").isin([r[0] for r in batch]))
+                 for batch in files]
+        stream = ordered_file_stream(parts, str(tmp_path / "in")) \
             .withWatermark("ts", "60 seconds")
         out = funnel_first_match(stream, first_type="error",
                                  then_type="purchase", within_seconds=120)
-        q = exactly_once_parquet_sink(out, str(tmp_path / "out"),
-                                      str(tmp_path / "ckpt"),
-                                      trigger_available_now=True)
-        q.awaitTermination()
-        got = spark.read.parquet(str(tmp_path / "out")) \
-            .select("user_id", "a_event_id", "b_event_id", "gap_usec")
+        committed = commit_available_now(out, str(tmp_path / "out"),
+                                         str(tmp_path / "ckpt"))
+        got = committed.select("user_id", "a_event_id", "b_event_id",
+                               "gap_usec")
         want = sequence_pattern(ev, first_type="error",
                                 then_type="purchase", within_seconds=120)
         assert got.count() == 2  # both gap A's found their true first B
@@ -789,13 +733,9 @@ class TestFunnelFirstMatch:
         checkpoint: pending-window state (array-encoded in the state
         store) must survive the restart — the final committed rows still
         equal the batch first-match, with no duplicates."""
-        import glob
-        import os
-        import time
         from datetime import datetime, timedelta
 
         from solarpos_spark.operators.relational import sequence_pattern
-        from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
         from solarpos_spark.streaming.stateful import funnel_first_match
 
         t0 = datetime(2024, 7, 2, 8, 0, 0)
@@ -811,7 +751,6 @@ class TestFunnelFirstMatch:
         ev = spark.createDataFrame(
             rows, "event_id long, user_id long, event_type string, ts timestamp")
         in_dir = str(tmp_path / "in")
-        written: set = set()
         # file 0: all errors; file 1: all purchases — every pending-A
         # state must cross the file-0/1 boundary. The sentinel file is
         # written only AFTER the phase-1 kill: if it were present during
@@ -825,29 +764,17 @@ class TestFunnelFirstMatch:
                  ev.filter((F.col("event_type") == "purchase")
                            & (F.col("event_id") != sentinel_id))]
 
-        def write_part(part, f):
-            nonlocal written
-            part.coalesce(1).write.mode("append").parquet(in_dir)
-            new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-            for p in new:
-                os.utime(p, (2_100_000_000 + 10 * f, 2_100_000_000 + 10 * f))
-            written.update(new)
-
-        for f, part in enumerate(parts):
-            write_part(part, f)
-
-        def build_stream():
-            return spark.readStream.schema(ev.schema) \
-                .option("maxFilesPerTrigger", "1").parquet(in_dir) \
+        def funnel(parts):
+            stream = ordered_file_stream(parts, in_dir) \
                 .withWatermark("ts", "2 hours")
+            return funnel_first_match(stream, first_type="error",
+                                      then_type="purchase",
+                                      within_seconds=120)
 
         out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
         # phase 1: let >= 2 micro-batches commit (errors + purchases in
         # state), then kill before the sentinel closes the windows
-        q = exactly_once_parquet_sink(
-            funnel_first_match(build_stream(), first_type="error",
-                               then_type="purchase", within_seconds=120),
-            out_dir, ckpt)
+        q = exactly_once_parquet_sink(funnel(parts), out_dir, ckpt)
         # generous deadline: only binds when micro-batch scheduling is
         # pathologically slow (shared-host tenant load); quiet wall ~5 s
         deadline = time.monotonic() + 420
@@ -861,16 +788,13 @@ class TestFunnelFirstMatch:
         assert seen >= 2, "no micro-batch committed before kill"
         q.stop()
         q.awaitTermination(60)
-        write_part(ev.filter(F.col("event_id") == sentinel_id), 2)
 
-        # phase 2: resume from the checkpoint and drain
-        q2 = exactly_once_parquet_sink(
-            funnel_first_match(build_stream(), first_type="error",
-                               then_type="purchase", within_seconds=120),
-            out_dir, ckpt, trigger_available_now=True)
-        q2.awaitTermination()
-        got = spark.read.parquet(out_dir) \
-            .select("user_id", "a_event_id", "b_event_id", "gap_usec")
+        # phase 2: deliver the sentinel after the first two files, resume
+        # from the checkpoint and drain
+        got = commit_available_now(
+            funnel([ev.filter(F.col("event_id") == sentinel_id)]),
+            out_dir, ckpt).select("user_id", "a_event_id", "b_event_id",
+                                  "gap_usec")
         want = sequence_pattern(ev, first_type="error",
                                 then_type="purchase", within_seconds=120)
         assert got.count() == 6  # one funnel per user, exactly once
@@ -887,14 +811,10 @@ class TestFunnelChain:
         when the watermark passes the head's full horizon. Includes the
         committed-semantics trap: a head whose FIRST successor has no
         onward match must fail (no backtracking to the second)."""
-        import glob
-        import os
         from datetime import datetime, timedelta
 
         from solarpos_spark.operators.relational import (
             sequence_pattern_chain)
-        from solarpos_spark.sinks.exactly_once import (
-            exactly_once_parquet_sink)
         from solarpos_spark.streaming.stateful import funnel_chain_first
 
         t0 = datetime(2024, 7, 4, 8, 0, 0)
@@ -930,30 +850,15 @@ class TestFunnelChain:
         ev = spark.createDataFrame(
             rows,
             "event_id long, user_id long, event_type string, ts timestamp")
-        in_dir = str(tmp_path / "in")
-        written: set = set()
-        for f in range(3):  # shuffled delivery by id mod 3, sentinel last
-            part = ev.filter(
-                ((F.col("event_id") % 3 == f)
-                 & (F.col("event_id") != sentinel_id))
-                | (F.lit(f == 2) & (F.col("event_id") == sentinel_id)))
-            part.coalesce(1).write.mode("append").parquet(in_dir)
-            new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-            for p in new:
-                os.utime(p, (2_300_000_000 + 10 * f,) * 2)
-            written.update(new)
-        stream = spark.readStream.schema(ev.schema) \
-            .option("maxFilesPerTrigger", "1").parquet(in_dir) \
+        parts = shuffled_parts(ev, sentinel_id)
+        stream = ordered_file_stream(parts, str(tmp_path / "in")) \
             .withWatermark("ts", "2 hours")
         out = funnel_chain_first(stream, ["view", "click", "purchase"],
                                  within_seconds=120)
-        q = exactly_once_parquet_sink(out, str(tmp_path / "out"),
-                                      str(tmp_path / "ckpt"),
-                                      trigger_available_now=True)
-        q.awaitTermination()
-        got = spark.read.parquet(str(tmp_path / "out")) \
-            .select("user_id", "step1_id", "step2_id", "step3_id",
-                    "gap_usec")
+        committed = commit_available_now(out, str(tmp_path / "out"),
+                                         str(tmp_path / "ckpt"))
+        got = committed.select("user_id", "step1_id", "step2_id",
+                               "step3_id", "gap_usec")
         want = sequence_pattern_chain(ev, ["view", "click", "purchase"],
                                       within_seconds=120)
         gd = {r["user_id"]: r for r in got.collect()}
@@ -1061,11 +966,8 @@ class TestFirstNPerKey:
         key in (ts, id) order, under shuffled multi-batch delivery —
         rows buffer until the watermark passes them, so arrival order
         cannot steal a slot from an earlier-timed row."""
-        import glob
-        import os
         from datetime import datetime, timedelta
 
-        from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
         from solarpos_spark.streaming.stateful import first_n_per_key
 
         t0 = datetime(2024, 7, 1, 8, 0, 0)
@@ -1084,28 +986,13 @@ class TestFirstNPerKey:
 
         ev = spark.createDataFrame(rows,
                                    "event_id long, user_id long, ts timestamp")
-        in_dir = str(tmp_path / "in")
-        written: set = set()
-        for f in range(3):  # shuffled delivery; sentinel rides last
-            part = ev.filter(
-                ((F.col("event_id") % 3 == f)
-                 & (F.col("event_id") != sentinel_id))
-                | (F.lit(f == 2) & (F.col("event_id") == sentinel_id)))
-            part.coalesce(1).write.mode("append").parquet(in_dir)
-            new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-            for p in new:
-                os.utime(p, (2_000_000_000 + 10 * f,) * 2)
-            written.update(new)
-        stream = spark.readStream.schema(ev.schema) \
-            .option("maxFilesPerTrigger", "1").parquet(in_dir) \
+        parts = shuffled_parts(ev, sentinel_id)
+        stream = ordered_file_stream(parts, str(tmp_path / "in")) \
             .withWatermark("ts", "2 hours")
         out = first_n_per_key(stream, 3)
-        q = exactly_once_parquet_sink(out, str(tmp_path / "out"),
-                                      str(tmp_path / "ckpt"),
-                                      trigger_available_now=True)
-        q.awaitTermination()
-        got = {(r.user_id, r.event_id, r.rank)
-               for r in spark.read.parquet(str(tmp_path / "out")).collect()}
+        committed = commit_available_now(out, str(tmp_path / "out"),
+                                         str(tmp_path / "ckpt"))
+        got = {(r.user_id, r.event_id, r.rank) for r in committed.collect()}
         # batch expectation: rank over (ts, id) per user, rank <= 3,
         # sentinel unreleased (watermark never passes its own time)
         from pyspark.sql import Window
@@ -1128,12 +1015,9 @@ class TestWindowedPrioritySample:
         final watermark closed, under shuffled multi-batch delivery —
         rows buffer per window until the watermark passes the window
         END, so arrival order cannot change the selection."""
-        import glob
-        import os
         from datetime import datetime, timedelta
 
         from solarpos_spark.operators.curate import priority_expr
-        from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
         from solarpos_spark.streaming.stateful import windowed_priority_sample
 
         t0 = datetime(2024, 7, 1, 8, 0, 0)
@@ -1145,29 +1029,15 @@ class TestWindowedPrioritySample:
         rows.append((99, t0 + timedelta(hours=10), 1))
         ev = spark.createDataFrame(rows,
                                    "event_id long, ts timestamp, w long")
-        in_dir = str(tmp_path / "in")
-        written: set = set()
-        for f in range(3):  # shuffled (id mod 3) delivery; straggler last
-            part = ev.filter(
-                ((F.col("event_id") % 3 == f) & (F.col("event_id") != 99))
-                | (F.lit(f == 2) & (F.col("event_id") == 99)))
-            part.coalesce(1).write.mode("append").parquet(in_dir)
-            new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-            for p in new:
-                os.utime(p, (2_000_000_000 + 10 * f,) * 2)
-            written.update(new)
-        stream = (spark.readStream.schema(ev.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(in_dir)
+        parts = shuffled_parts(ev, 99)
+        stream = (ordered_file_stream(parts, str(tmp_path / "in"))
                   .withColumn("_pri", priority_expr(F.col("event_id"),
                                                     F.col("w")))
                   .withWatermark("ts", "10 minutes"))
         out = windowed_priority_sample(stream, k=3, window_s=60)
-        q = exactly_once_parquet_sink(out, str(tmp_path / "out"),
-                                      str(tmp_path / "ckpt"),
-                                      trigger_available_now=True)
-        q.awaitTermination()
-        got = {(r.ws, r.event_id, r.rank) for r in
-               spark.read.parquet(str(tmp_path / "out")).collect()}
+        committed = commit_available_now(out, str(tmp_path / "out"),
+                                         str(tmp_path / "ckpt"))
+        got = {(r.ws, r.event_id, r.rank) for r in committed.collect()}
         # batch expectation: per-60s-window rank over (priority, id),
         # rank <= 3, only windows the final watermark closed (the
         # straggler's own window stays open and the straggler itself
@@ -1190,12 +1060,9 @@ class TestWindowedPrioritySample:
         suffix-top-k combiner below the operator-assigned watermark)
         must commit the IDENTICAL selection as the pre-r6 single-stage
         shape under shuffled multi-batch delivery."""
-        import glob
-        import os
         from datetime import datetime, timedelta
 
         from solarpos_spark.operators.curate import priority_expr
-        from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
         from solarpos_spark.streaming.stateful import windowed_priority_sample
 
         t0 = datetime(2024, 7, 1, 8, 0, 0)
@@ -1205,29 +1072,15 @@ class TestWindowedPrioritySample:
         rows.append((99, t0 + timedelta(hours=10), 1))
         ev = spark.createDataFrame(rows,
                                    "event_id long, ts timestamp, w long")
-        in_dir = str(tmp_path / "in")
-        written: set = set()
-        for f in range(3):
-            part = ev.filter(
-                ((F.col("event_id") % 3 == f) & (F.col("event_id") != 99))
-                | (F.lit(f == 2) & (F.col("event_id") == 99)))
-            part.coalesce(1).write.mode("append").parquet(in_dir)
-            new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-            for p in new:
-                os.utime(p, (2_000_000_000 + 10 * f,) * 2)
-            written.update(new)
-        stream = (spark.readStream.schema(ev.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(in_dir)
+        parts = shuffled_parts(ev, 99)
+        stream = (ordered_file_stream(parts, str(tmp_path / "in"))
                   .withColumn("_pri", priority_expr(F.col("event_id"),
                                                     F.col("w"))))
         out = windowed_priority_sample(stream, k=3, window_s=60,
                                        watermark_delay="10 minutes")
-        q = exactly_once_parquet_sink(out, str(tmp_path / "out"),
-                                      str(tmp_path / "ckpt"),
-                                      trigger_available_now=True)
-        q.awaitTermination()
-        got = {(r.ws, r.event_id, r.rank) for r in
-               spark.read.parquet(str(tmp_path / "out")).collect()}
+        committed = commit_available_now(out, str(tmp_path / "out"),
+                                         str(tmp_path / "ckpt"))
+        got = {(r.ws, r.event_id, r.rank) for r in committed.collect()}
         from pyspark.sql import Window
         w = Window.partitionBy("ws").orderBy("_pri", "event_id")
         batch = (ev.filter(F.col("event_id") != 99)
@@ -1347,29 +1200,19 @@ class TestWindowedPrioritySample:
         from datetime import datetime
 
         from solarpos_spark.operators.curate import priority_expr
-        from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
         from solarpos_spark.streaming.stateful import windowed_priority_sample
 
         ev = spark.createDataFrame(
             [(1, datetime(2024, 7, 1, 8, 0, 0), 5)],
             "event_id long, ts timestamp, w long")
-        in_dir = str(tmp_path / "in")
-        ev.coalesce(1).write.parquet(in_dir)
-        stream = (spark.readStream.schema(ev.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(in_dir)
+        stream = (ordered_file_stream([ev], str(tmp_path / "in"))
                   .withColumn("_pri", priority_expr(F.col("event_id"),
                                                     F.col("w")))
                   .withWatermark("ts", "10 minutes"))
         out = windowed_priority_sample(stream, k=3, window_s=60)
-        q = exactly_once_parquet_sink(out, str(tmp_path / "out"),
-                                      str(tmp_path / "ckpt"),
-                                      trigger_available_now=True)
-        q.awaitTermination()
-        import glob
-        files = glob.glob(str(tmp_path / "out") + "/*.parquet") + \
-            glob.glob(str(tmp_path / "out") + "/*/*.parquet")
-        if files:
-            assert spark.read.parquet(str(tmp_path / "out")).count() == 0
+        committed = commit_available_now(out, str(tmp_path / "out"),
+                                         str(tmp_path / "ckpt"))
+        assert committed.count() == 0
 
 
 class TestStreamingZscoreAnomalies:
@@ -1377,11 +1220,8 @@ class TestStreamingZscoreAnomalies:
         """streaming_zscore_anomalies must flag EXACTLY the rows the
         batch rolling-frame formula flags among watermark-released
         rows, under shuffled multi-batch delivery."""
-        import glob
-        import os
         from datetime import datetime, timedelta
 
-        from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
         from solarpos_spark.streaming.stateful import (
             streaming_zscore_anomalies)
 
@@ -1393,34 +1233,20 @@ class TestStreamingZscoreAnomalies:
         rows.append((99, 1, t0 + timedelta(hours=10), 1000))  # wm source
         ev = spark.createDataFrame(
             rows, "event_id long, user_id long, ts timestamp, _vc long")
-        in_dir = str(tmp_path / "in")
-        written: set = set()
-        for f in range(3):
-            part = ev.filter(
-                ((F.col("event_id") % 3 == f) & (F.col("event_id") != 99))
-                | (F.lit(f == 2) & (F.col("event_id") == 99)))
-            part.coalesce(1).write.mode("append").parquet(in_dir)
-            new = sorted(set(glob.glob(f"{in_dir}/part-*")) - written)
-            for p in new:
-                os.utime(p, (2_000_000_000 + 10 * f,) * 2)
-            written.update(new)
+        parts = shuffled_parts(ev, 99)
         # delay exceeds the data span so nothing releases until the
         # far-future sentinel's batch — rows from ALL batches must then
         # fold into state and release in (ts, id) order regardless of
         # the shuffled arrival (a tight delay here would instead
         # late-drop out-of-order rows: in-order delivery is the gate
         # entry's documented precondition, not this test's subject)
-        stream = spark.readStream.schema(ev.schema) \
-            .option("maxFilesPerTrigger", "1").parquet(in_dir) \
+        stream = ordered_file_stream(parts, str(tmp_path / "in")) \
             .withWatermark("ts", "1 hour")
         out = streaming_zscore_anomalies(stream, window_rows=10,
                                          min_history=5, z_threshold=2.0)
-        q = exactly_once_parquet_sink(out, str(tmp_path / "out"),
-                                      str(tmp_path / "ckpt"),
-                                      trigger_available_now=True)
-        q.awaitTermination()
-        got = {(r.event_id, r.z) for r in
-               spark.read.parquet(str(tmp_path / "out")).collect()}
+        committed = commit_available_now(out, str(tmp_path / "out"),
+                                         str(tmp_path / "ckpt"))
+        got = {(r.event_id, r.z) for r in committed.collect()}
         # Python reference: rolling formula over the released rows
         # (everything but the far-future watermark source)
         want = set()

@@ -2,18 +2,22 @@
 
 Runs every __spark_entry__ query at the given sf_dir on Spark AND its DuckDB
 oracle, comparing row count, column names, and an order-insensitive value
-hash. Usage:  python tools/check_correctness.py [sf_dir] [query ...]
+hash. Each line ends with the Spark side's value hash, so the output of two
+checkouts can be diffed line by line. The session uses build_session()'s
+default cores (SPARK_GRAFT_CPUS, else every CPU).
+Usage:  python tools/check_correctness.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
 import hashlib
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
@@ -49,7 +53,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from solarpos_spark.plans.session import build_session
 
-    spark = build_session(cores=8, shuffle_partitions=16)
+    spark = build_session(shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
@@ -71,7 +75,8 @@ def main() -> int:
             failures += 1
             continue
         if name not in oracles:
-            print(f"{name}: rows={len(sdf)} (rows-only, no oracle)")
+            print(f"{name}: rows={len(sdf)} (rows-only, no oracle) "
+                  f"value={value_hash(normalize(sdf))}")
             continue
         try:
             odf = con.sql(oracles[name]).df()
@@ -82,11 +87,13 @@ def main() -> int:
         s_n, o_n = normalize(sdf), normalize(odf)
         ok_rows = len(s_n) == len(o_n)
         ok_cols = sorted(s_n.columns) == sorted(o_n.columns)
-        ok_hash = ok_rows and ok_cols and value_hash(s_n) == value_hash(o_n)
+        s_hash = value_hash(s_n)
+        ok_hash = ok_rows and ok_cols and s_hash == value_hash(o_n)
         status = "OK" if (ok_rows and ok_cols and ok_hash) else "FAIL"
         if status == "FAIL":
             failures += 1
-        print(f"{name}: {status} rows={len(s_n)}/{len(o_n)} cols={ok_cols} hash={ok_hash}")
+        print(f"{name}: {status} rows={len(s_n)}/{len(o_n)} cols={ok_cols} "
+              f"hash={ok_hash} value={s_hash}")
         if not ok_hash and ok_rows and ok_cols and len(s_n) > 0:
             key = sorted(s_n.columns)
             a = s_n[key].astype(str).agg("|".join, axis=1).sort_values().reset_index(drop=True)
