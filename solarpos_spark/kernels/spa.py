@@ -10,8 +10,10 @@ Structure mirrors the reference's key physical optimization
 (PositionCommand.java:228-257): the expensive *time-dependent* terms
 (heliocentric L/B/R series, nutation, obliquity, apparent sidereal time,
 geocentric right ascension/declination) are computed once per unique
-timestamp and broadcast across all coordinates — here via
-``np.unique(..., return_inverse=True)`` inside one Arrow batch.
+(timestamp, deltaT) pair and broadcast across all coordinates — here via
+``_unique_pairs``, a 1-D ``lexsort`` over one Arrow batch (``np.unique``
+with ``axis=0`` would sort a structured-dtype view, which costs more than
+the location half it feeds).
 
 All angles in degrees unless suffixed ``_rad``. All functions accept and
 return numpy float64 arrays and are free of Python-level per-row loops.
@@ -545,30 +547,33 @@ def position_from_time_dependent(
     elevation = np.broadcast_to(np.asarray(elevation, dtype=np.float64), lat.shape)
 
     phi = lat * DEG
+    sin_phi = np.sin(phi)
+    cos_phi = np.cos(phi)
     delta_rad = td.delta * DEG
+    cos_delta = np.cos(delta_rad)
 
     h = limit_degrees(td.nu + lon - td.alpha)  # observer local hour angle, eq. 32
     h_rad = h * DEG
+    cos_h = np.cos(h_rad)
 
     xi = 8.794 / (3600.0 * td.r)  # equatorial horizontal parallax, eq. 33
-    xi_rad = xi * DEG
+    sin_xi = np.sin(xi * DEG)
     u = np.arctan(0.99664719 * np.tan(phi))
-    x = np.cos(u) + elevation / 6378140.0 * np.cos(phi)
-    y = 0.99664719 * np.sin(u) + elevation / 6378140.0 * np.sin(phi)
+    elev_ratio = elevation / 6378140.0
+    x = np.cos(u) + elev_ratio * cos_phi
+    y = 0.99664719 * np.sin(u) + elev_ratio * sin_phi
+    x_sin_xi = x * sin_xi
+    denom = cos_delta - x_sin_xi * cos_h  # shared by eq. 37 and 39
 
-    dalpha_rad = np.arctan2(
-        -x * np.sin(xi_rad) * np.sin(h_rad),
-        np.cos(delta_rad) - x * np.sin(xi_rad) * np.cos(h_rad),
-    )  # parallax in RA, eq. 37
+    dalpha_rad = np.arctan2(-x_sin_xi * np.sin(h_rad), denom)  # parallax in RA, eq. 37
     delta_prime = np.arctan2(
-        (np.sin(delta_rad) - y * np.sin(xi_rad)) * np.cos(dalpha_rad),
-        np.cos(delta_rad) - x * np.sin(xi_rad) * np.cos(h_rad),
+        (np.sin(delta_rad) - y * sin_xi) * np.cos(dalpha_rad), denom,
     )  # topocentric declination, eq. 39
     h_prime_rad = h_rad - dalpha_rad  # topocentric local hour angle, eq. 40
+    cos_h_prime = np.cos(h_prime_rad)
 
     e0_rad = np.arcsin(
-        np.sin(phi) * np.sin(delta_prime)
-        + np.cos(phi) * np.cos(delta_prime) * np.cos(h_prime_rad)
+        sin_phi * np.sin(delta_prime) + cos_phi * np.cos(delta_prime) * cos_h_prime
     )  # topocentric elevation w/o refraction, eq. 41
     e0 = e0_rad / DEG
 
@@ -593,12 +598,33 @@ def position_from_time_dependent(
     gamma = limit_degrees(
         np.arctan2(
             np.sin(h_prime_rad),
-            np.cos(h_prime_rad) * np.sin(phi) - np.tan(delta_prime) * np.cos(phi),
+            cos_h_prime * sin_phi - np.tan(delta_prime) * cos_phi,
         )
         / DEG
     )  # topocentric astronomers azimuth, eq. 45
     azimuth = limit_degrees(gamma + 180.0)  # eq. 46, measured from north
     return azimuth, zenith
+
+
+def _unique_pairs(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Sorted unique (a, b) pairs and the inverse that maps rows onto them.
+
+    Returns ``(ua, ub, inverse)``, equal to ``uniq[:, 0], uniq[:, 1],
+    inverse`` of ``np.unique(np.stack([a, b], 1), axis=0,
+    return_inverse=True)``, but with a 1-D ``lexsort`` instead of a sort
+    over a structured-dtype view: at 64k rows ~50x cheaper on a sweep
+    batch (few instants, already in order), ~5x with every pair distinct.
+    -0.0 and 0.0 are one key, as in ``np.unique``.
+    """
+    order = np.lexsort((b, a))
+    sa = a[order]
+    sb = b[order]
+    starts = np.empty(sa.shape[0], dtype=bool)
+    starts[:1] = True
+    starts[1:] = (sa[1:] != sa[:-1]) | (sb[1:] != sb[:-1])
+    inverse = np.empty(sa.shape[0], dtype=np.intp)
+    inverse[order] = np.cumsum(starts) - 1
+    return sa[starts], sb[starts], inverse
 
 
 def solar_position(
@@ -618,9 +644,8 @@ def solar_position(
     unix_sec = np.asarray(unix_sec, dtype=np.float64)
     n = unix_sec.shape[0]
     delta_t = np.broadcast_to(np.asarray(delta_t, dtype=np.float64), (n,))
-    key = np.stack([unix_sec, delta_t], axis=1)
-    uniq, inverse = np.unique(key, axis=0, return_inverse=True)
-    td_u = time_dependent_parts(uniq[:, 0], uniq[:, 1])
+    u_ts, u_dt, inverse = _unique_pairs(unix_sec, delta_t)
+    td_u = time_dependent_parts(u_ts, u_dt)
     td = SpaTimeDependent(
         alpha=td_u.alpha[inverse],
         delta=td_u.delta[inverse],

@@ -32,7 +32,7 @@ from typing import NamedTuple
 import numpy as np
 
 from .julian import limit_degrees, limit_degrees180pm, limit_zero_to_one
-from .spa import time_dependent_parts
+from .spa import _unique_pairs, time_dependent_parts
 
 DEG = np.pi / 180.0
 
@@ -91,10 +91,7 @@ def sunrise_transit_set(
     k = horizons.shape[0]
 
     # --- per-unique-day time-dependent terms (hoisted, as in the position path)
-    key = np.stack([day0_unix, delta_t], axis=1)
-    uniq, inverse = np.unique(key, axis=0, return_inverse=True)
-    u_day = uniq[:, 0]
-    u_dt = uniq[:, 1]
+    u_day, u_dt, inverse = _unique_pairs(day0_unix, delta_t)
 
     # nu at 0h UT of the day, computed WITH deltaT (NREL A.2 step 1)
     td_day = time_dependent_parts(u_day, u_dt)

@@ -7,8 +7,9 @@ a 1:1 row map (R3/R5) computing ``struct(azimuth, zenith)`` from
 
 The reference's key physical optimization — computing SPA time-dependent
 terms once per unique timestamp (PositionCommand.java:228-257) — happens
-*inside* the UDF via ``np.unique`` over the Arrow batch, so it needs no
-shuffle and survives any partitioning. Batches are sized by
+*inside* the UDF, in the kernel's 1-D lexsort grouping of the Arrow batch's
+(timestamp, deltaT) pairs, so it needs no shuffle and survives any
+partitioning. Batches are sized by
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` (plans/session.py).
 """
 
@@ -50,7 +51,11 @@ def _compute_position(
     delta_t: np.ndarray,
     flags: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Dispatch on per-row flags; each algorithm subset is one vector call."""
+    """Dispatch on per-row flags; each algorithm subset is one vector call.
+
+    A subset that is the whole batch (always so for the sweep and the
+    stream) takes the columns as they are instead of boolean-indexed copies.
+    """
     az = np.empty_like(lat)
     zen = np.empty_like(lat)
     grena_mask = (flags & FLAG_GRENA3) != 0
@@ -60,6 +65,8 @@ def _compute_position(
             m = alg_mask & (norefr_mask != refr)
             if not np.any(m):
                 continue
+            if np.all(m):
+                m = slice(None)
             a, z = fn(unix_sec[m], lat[m], lon[m], elevation[m],
                       pressure[m] if refr else None,
                       temperature[m] if refr else None, delta_t[m])

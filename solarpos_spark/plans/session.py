@@ -14,7 +14,7 @@ import os
 from pyspark.sql import SparkSession
 
 #: Arrow batch size for the vectorized UDF hot path. Large batches maximize
-#: reuse of per-timestamp SPA terms inside one batch (np.unique grouping) and
+#: reuse of per-timestamp SPA terms inside one batch (lexsort grouping) and
 #: amortize Arrow IPC overhead; 64k rows x ~80 B/row keeps a batch well under
 #: executor memory pressure even with 32 concurrent tasks.
 ARROW_MAX_RECORDS_PER_BATCH = 65536

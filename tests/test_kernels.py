@@ -7,6 +7,7 @@ No Spark involved: these run in milliseconds and gate the UDF layer.
 
 from __future__ import annotations
 
+import hashlib
 from datetime import datetime, timezone
 
 import numpy as np
@@ -85,6 +86,120 @@ class TestSpaPosition:
             az2, zen2 = spa.solar_position(arr(t0), arr(lats[i]), arr(lons[i]),
                                            0.0, 69.0, 1013.0, 15.0)
             assert az1[i] == az2[0] and zen1[i] == zen2[0]
+
+
+def _pairs_case(name: str):
+    rng = np.random.default_rng(31)
+    if name == "empty":
+        return np.empty(0), np.empty(0)
+    if name == "one_row":
+        return arr(1.7e9), arr(69.0)
+    if name == "all_equal":
+        return np.full(1000, 1.7e9), np.full(1000, 69.0)
+    if name == "signed_zero_delta_t":
+        ts_ = 1.7e9 + 3600.0 * rng.integers(0, 40, 5000)
+        return ts_, rng.choice(arr(0.0, -0.0, 69.0), 5000)
+    if name == "heavy_repeats_70k":
+        ts_ = 1.7e9 + 3600.0 * rng.integers(0, 37, 70_000)
+        return ts_, rng.choice(arr(64.5, 69.0, 0.0), 70_000)
+    if name == "all_distinct_70k":
+        return rng.uniform(-1e10, 1e10, 70_000), rng.uniform(-10.0, 200.0, 70_000)
+    raise ValueError(name)
+
+
+def _digest(*arrays) -> str:
+    h = hashlib.sha256()
+    for a in arrays:
+        h.update(np.ascontiguousarray(a).tobytes())
+    return h.hexdigest()
+
+
+def _seeded_batch(n: int = 10_000, seed: int = 20261017):
+    rng = np.random.default_rng(seed)
+    t = 1_600_000_000.0 + 3600.0 * rng.integers(0, 500, n)
+    dt = rng.choice(arr(0.0, 64.5, 69.0), n)
+    lat = rng.uniform(-89.0, 89.0, n)
+    lon = rng.uniform(-180.0, 180.0, n)
+    elev = rng.uniform(0.0, 4000.0, n)
+    press = rng.uniform(600.0, 1050.0, n)
+    temp = rng.uniform(-30.0, 45.0, n)
+    return t, dt, lat, lon, elev, press, temp
+
+
+class TestHoist:
+    """The per-instant hoist (one lexsort over (ts, deltaT)) and the kernels'
+    output bits. The digests are sha256 of the raw float64 bytes, recorded
+    before the hoist moved off ``np.unique(axis=0)`` and the SPA location
+    half stopped recomputing its trig terms: a change to either kernel
+    that is meant to be a pure speed-up must keep them."""
+
+    @pytest.mark.parametrize("case", [
+        "empty", "one_row", "all_equal", "signed_zero_delta_t",
+        "heavy_repeats_70k", "all_distinct_70k"])
+    def test_unique_pairs_matches_np_unique(self, case):
+        a, b = _pairs_case(case)
+        uniq, inverse = np.unique(np.stack([a, b], 1), axis=0, return_inverse=True)
+        ua, ub, inv = spa._unique_pairs(a, b)
+        # -0.0 and 0.0 are one key in both; which sign stands for it is
+        # the sort's choice, so compare values, not bytes
+        assert np.array_equal(ua, uniq[:, 0]) and np.array_equal(ub, uniq[:, 1])
+        assert inv.dtype == inverse.dtype and np.array_equal(inv, inverse)
+
+    def test_solar_position_digests(self):
+        t, dt, lat, lon, elev, press, temp = _seeded_batch()
+        assert _digest(*spa.solar_position(t, lat, lon, elev, dt, press, temp)) == (
+            "c1fdfd1aac18d48e062db2ce7b0755cfcb48f3deea455d0c5d3ea2257cca1e38")
+        assert _digest(*spa.solar_position(t, lat, lon, elev, dt)) == (
+            "00b7f2b6cf10b64242588a686bdfcc71bf36b60bf6fd29a2caeded06e0ad7abc")
+
+    def test_sunrise_digests(self):
+        t, dt, lat, lon, _, _, _ = _seeded_batch()
+        day0 = (t // 86400.0) * 86400.0
+        r = sunrise.sunrise_transit_set(day0, lat, lon, dt)
+        assert _digest(r.kind, r.transit, r.sunrise, r.sunset) == (
+            "43934590771117f549b93bae26318a565034c926c2f914ccd2cc494015040699")
+        hz = np.array([sunrise.HORIZON_SUNRISE_SUNSET, sunrise.HORIZON_CIVIL,
+                       sunrise.HORIZON_NAUTICAL, sunrise.HORIZON_ASTRONOMICAL])
+        r = sunrise.sunrise_transit_set(day0, lat, lon, dt, hz)
+        assert _digest(r.kind, r.transit, r.sunrise, r.sunset) == (
+            "11cb5bf8e62c711c7e8b9502795ddb8070f9e6e4ffc88a215c6efcad9b915bf5")
+
+    @pytest.mark.parametrize("refraction", [True, False])
+    def test_hoisted_equals_per_row(self, refraction):
+        # shuffled rows, 300 instants x 3 deltaT values (signed zeros too),
+        # so the hoist's inverse has to undo both the grouping and the order
+        rng = np.random.default_rng(97)
+        n = 20_000
+        t = 1.7e9 + 1800.0 * rng.integers(0, 300, n)
+        dt = rng.choice(arr(0.0, -0.0, 69.0), n)
+        lat = rng.uniform(-89.0, 89.0, n)
+        lon = rng.uniform(-180.0, 180.0, n)
+        elev = rng.uniform(0.0, 3000.0, n)
+        press, temp = (rng.uniform(700.0, 1050.0, n), rng.uniform(-20.0, 40.0, n)) \
+            if refraction else (None, None)
+        az, zen = spa.solar_position(t, lat, lon, elev, dt, press, temp)
+
+        # reference: the time-dependent terms of each row's own instant,
+        # looked up row by row. They come from one call over the distinct
+        # instants because the periodic-term sums are BLAS products whose
+        # last bit depends on the rows batched with them
+        uniq = np.unique(np.stack([t, dt], 1), axis=0)
+        td_u = spa.time_dependent_parts(uniq[:, 0], uniq[:, 1])
+        row_of = {(a, b): i for i, (a, b) in enumerate(uniq.tolist())}
+        idx = np.array([row_of[(a, b)] for a, b in zip(t.tolist(), dt.tolist())])
+        td_rows = spa.SpaTimeDependent(*(f[idx] for f in td_u))
+        az_r, zen_r = spa.position_from_time_dependent(
+            td_rows, lat, lon, elev, press, temp)
+        assert az.tobytes() == az_r.tobytes() and zen.tobytes() == zen_r.tobytes()
+
+        # and the hoist is blind to row order
+        perm = rng.permutation(n)
+        az_p, zen_p = spa.solar_position(
+            t[perm], lat[perm], lon[perm], elev[perm], dt[perm],
+            None if press is None else press[perm],
+            None if temp is None else temp[perm])
+        assert az_p.tobytes() == az[perm].tobytes()
+        assert zen_p.tobytes() == zen[perm].tobytes()
 
 
 class TestGrena3:

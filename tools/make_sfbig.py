@@ -65,18 +65,21 @@ def perturb_emb(tt: pa.Table, c: int) -> pa.Table:
     return tt.set_column(idx, "embedding", new)
 
 
-def main() -> None:
-    docs = pq.ParquetFile(f"{SRC}/documents.parquet").metadata.num_rows
-    emb = pq.ParquetFile(f"{SRC}/embeddings.parquet").metadata.num_rows
-    ords = pq.read_table(f"{SRC}/orders.parquet", columns=["o_orderkey"])
-    okey_span = int(pa.compute.max(ords.column("o_orderkey")).as_py()) + 1
-    ev = pq.read_table(f"{SRC}/events.parquet", columns=["event_id"])
-    ev_span = int(pa.compute.max(ev.column("event_id")).as_py()) + 1
-    cust = pq.read_table(f"{SRC}/customer.parquet", columns=["c_custkey"])
-    c_span = int(pa.compute.max(cust.column("c_custkey")).as_py()) + 1
+def id_span(name: str, col: str) -> int:
+    """max(id) + 1: a per-copy offset under which sparse ids cannot collide."""
+    t = pq.read_table(f"{SRC}/{name}.parquet", columns=[col])
+    return int(pa.compute.max(t.column(col)).as_py()) + 1
 
-    tile("documents", {"doc_id": docs}, perturb_docs)
-    tile("embeddings", {"vec_id": emb}, perturb_emb)
+
+def main() -> None:
+    doc_span = id_span("documents", "doc_id")
+    vec_span = id_span("embeddings", "vec_id")
+    okey_span = id_span("orders", "o_orderkey")
+    ev_span = id_span("events", "event_id")
+    c_span = id_span("customer", "c_custkey")
+
+    tile("documents", {"doc_id": doc_span}, perturb_docs)
+    tile("embeddings", {"vec_id": vec_span}, perturb_emb)
     tile("lineitem", {"l_orderkey": okey_span})
     tile("orders", {"o_orderkey": okey_span, "o_custkey": c_span})
     tile("customer", {"c_custkey": c_span})
