@@ -7,7 +7,8 @@ Two complementary mechanisms, both pure Spark:
   PerformanceTracker.java:16-26), surfaced per micro-batch.
 * ``LineageListener`` (StreamingQueryListener) — captures batch id, source
   offsets (the per-partition lineage: which files/offsets fed each epoch),
-  rows/sec, and the observed metrics; appends one JSON line per batch to a
+  rows/sec, batch phase durations, per-operator state sizes and commit
+  times, and the observed metrics; appends one JSON line per batch to a
   sidecar log next to the sink.
 """
 
@@ -43,7 +44,15 @@ def with_observed_metrics(df: DataFrame,
 class LineageListener(StreamingQueryListener):
     """Writes one JSON line per completed micro-batch:
     {batchId, sources:[{description, startOffset, endOffset, numInputRows}],
-     inputRowsPerSecond, observedMetrics, watermark}."""
+     inputRowsPerSecond, observedMetrics, watermark,
+     durationMs:{addBatch, queryPlanning, walCommit, commitOffsets, ...},
+     stateOperators:[{operatorName, numRowsTotal, numRowsUpdated,
+                      numRowsRemoved, memoryUsedBytes,
+                      numRowsDroppedByWatermark, commitTimeMs}]}."""
+
+    STATE_FIELDS = ("operatorName", "numRowsTotal", "numRowsUpdated",
+                    "numRowsRemoved", "memoryUsedBytes",
+                    "numRowsDroppedByWatermark", "commitTimeMs")
 
     def __init__(self, log_path: str):
         self.log_path = log_path
@@ -76,6 +85,11 @@ class LineageListener(StreamingQueryListener):
                 for s in p.sources
             ],
             "observedMetrics": {k: str(v) for k, v in obs.items()},
+            "durationMs": dict(p.durationMs or {}),
+            "stateOperators": [
+                {f: getattr(s, f) for f in self.STATE_FIELDS}
+                for s in p.stateOperators
+            ],
         }
         with self._lock:
             os.makedirs(os.path.dirname(self.log_path), exist_ok=True)

@@ -13,6 +13,7 @@ import os
 import time
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from solarpos_spark.sinks.exactly_once import exactly_once_parquet_sink
@@ -61,6 +62,59 @@ def shuffled_parts(ev, sentinel_id):
     return [ev.filter(((eid % 3 == f) & (eid != sentinel_id))
                       | (F.lit(f == 2) & (eid == sentinel_id)))
             for f in range(3)]
+
+
+STATE_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming.state."
+                    "RocksDBStateStoreProvider")
+
+
+def hadoop_path(spark, path):
+    return spark._jvm.org.apache.hadoop.fs.Path(str(path))
+
+
+def checkpoint_manager(spark, path):
+    """The CheckpointFileManager this session's streaming queries resolve
+    for ``path`` (what the offset and commit logs and the state stores'
+    checksum wrapper are built on)."""
+    return spark._jvm.org.apache.spark.sql.execution.streaming \
+        .checkpointing.CheckpointFileManager.create(
+            hadoop_path(spark, path),
+            spark._jsparkSession.sessionState().newHadoopConf())
+
+
+def temp_files(root) -> list[str]:
+    """Every file under ``root`` left by an unfinished atomic create."""
+    return sorted(os.path.join(d, f) for d, _, files in os.walk(root)
+                  for f in files if ".tmp" in f)
+
+
+def join_drain_and_resume(spark, root, *, n_docs, files, twilight=False):
+    """Drain the stream-stream join over ``files`` time-ordered token
+    files, then append a far-future sentinel doc and drain again from the
+    same checkpoint (exactly-once resume). Join results within the time
+    bound are held in state until the watermark passes; the sentinel
+    advances it so held state flushes. Returns the token input and the
+    committed rows without the sentinel, after checking that the
+    checkpoint tree holds no temp-file leftovers."""
+    src, out, ckpt = (str(root / d) for d in ("tok", "out", "ckpt"))
+    tok = make_token_files(spark, src, n_docs=n_docs, files=files)
+
+    def drain_join():
+        stream = tokens.read_token_stream(spark, src, max_files_per_trigger=1)
+        joined = pipeline.position_sunrise_join(
+            pipeline.decoded_stream(stream, watermark="1 hour"),
+            twilight=twilight)
+        return commit_available_now(joined, out, ckpt)
+
+    drain_join()
+    tokens.generate_token_sequences(
+        spark, 1, records_per_doc=1, doc_prefix="sentinel-",
+        ts_lo=1930000000, ts_hi=1930000001,
+    ).write.mode("append").parquet(src)
+    got = drain_join().filter(~F.col("doc_id").startswith("sentinel"))
+    assert temp_files(ckpt) == []
+    return tok, got
 
 
 class TestExactlyOnceSink:
@@ -177,6 +231,39 @@ class TestReplayContract:
             assert got.count() == 40
             assert got.select("doc_id").distinct().count() == 40
             assert got.select("batch_id").distinct().count() == 8
+
+
+class TestCheckpointFiles:
+    """The session writes checkpoint and state-store files through Hadoop's
+    FileSystem API (no forked `readlink` per rename on a host without
+    libhadoop), with the same atomic-create contract as the FileContext
+    manager it replaces."""
+
+    def test_session_resolves_filesystem_manager(self, spark, tmp_path):
+        mgr = checkpoint_manager(spark, tmp_path)
+        assert mgr.getClass().getName() == (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager")
+        assert spark.conf.get(
+            "spark.sql.streaming.checkpoint.fileChecksum.enabled") != "false"
+
+    def test_create_atomic_never_overwrites(self, spark, tmp_path):
+        target = tmp_path / "7"
+        target.write_bytes(b"committed")
+        out = checkpoint_manager(spark, tmp_path).createAtomic(
+            hadoop_path(spark, target), False)
+        out.write(bytearray(b"replayed"))
+        with pytest.raises(Py4JJavaError, match="FileAlreadyExists"):
+            out.close()
+        assert target.read_bytes() == b"committed"
+
+    def test_cancelled_create_atomic_leaves_no_temp_file(self, spark,
+                                                          tmp_path):
+        out = checkpoint_manager(spark, tmp_path).createAtomic(
+            hadoop_path(spark, tmp_path / "8"), False)
+        out.write(bytearray(b"partial"))
+        out.cancel()
+        assert os.listdir(tmp_path) == []
 
 
 class TestWindowsAndLateData:
@@ -315,26 +402,7 @@ class TestWindowsAndLateData:
 
 class TestStreamStreamJoin:
     def test_join_emits_one_row_per_record(self, spark, tmp_path):
-        src = str(tmp_path / "tok")
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        make_token_files(spark, src, n_docs=30, files=3)
-        stream = tokens.read_token_stream(spark, src, max_files_per_trigger=1)
-        dec = pipeline.decoded_stream(stream, watermark="1 hour")
-        joined = pipeline.position_sunrise_join(dec)
-        commit_available_now(joined, out, ckpt)
-        # join results within the time bound are held in state until the
-        # watermark passes; append a far-future sentinel doc to advance it,
-        # then drain again from the same checkpoint (exactly-once resume).
-        tokens.generate_token_sequences(
-            spark, 1, records_per_doc=1, doc_prefix="sentinel-",
-            ts_lo=1930000000, ts_hi=1930000001,
-        ).write.mode("append").parquet(src)
-        stream2 = tokens.read_token_stream(spark, src, max_files_per_trigger=1)
-        joined2 = pipeline.position_sunrise_join(
-            pipeline.decoded_stream(stream2, watermark="1 hour"))
-        got = commit_available_now(joined2, out, ckpt).filter(
-            ~F.col("doc_id").startswith("sentinel"))
+        _, got = join_drain_and_resume(spark, tmp_path, n_docs=30, files=3)
         assert got.count() == 120  # one joined row per decoded record
         assert got.filter(F.col("is_daylight").isNull()).count() == 0
         # daylight flag consistent with zenith where the UT-day event window
@@ -347,36 +415,39 @@ class TestStreamStreamJoin:
         ).count()
         assert bad == 0
 
+    def test_rocksdb_provider_commits_same_rows(self, spark, tmp_path):
+        """The same drain-and-resume under RocksDBStateStoreProvider commits
+        exactly the rows (and batch ids) of the default HDFS-backed provider.
+        RocksDB's state files go through the session's checkpoint manager
+        too, and leave no temp files behind."""
+        _, hdfs = join_drain_and_resume(spark, tmp_path / "hdfs",
+                                        n_docs=30, files=3)
+        before = spark.conf.get(STATE_PROVIDER_KEY)
+        spark.conf.set(STATE_PROVIDER_KEY, ROCKSDB_PROVIDER)
+        try:
+            _, rocks = join_drain_and_resume(spark, tmp_path / "rocksdb",
+                                             n_docs=30, files=3)
+        finally:
+            spark.conf.set(STATE_PROVIDER_KEY, before)
+        # RocksDB checkpoints each state-store version as <version>.zip
+        state = tmp_path / "rocksdb" / "ckpt" / "state"
+        assert list(state.rglob("*.zip"))
+        assert not list((tmp_path / "hdfs" / "ckpt" / "state").rglob("*.zip"))
+        assert rocks.count() == hdfs.count() == 120
+        assert rocks.exceptAll(hdfs).count() == 0
+        assert hdfs.exceptAll(rocks).count() == 0
+
     def test_twilight_join_matches_batch(self, spark, tmp_path):
         """The six twilight horizons ride through the stateful join and are
         value-equal to the batch sunrise operator over the same input."""
         from solarpos_spark.operators.sunrise import sunrise
 
-        src = str(tmp_path / "tok")
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        tok = make_token_files(spark, src, n_docs=24, files=2)
-
-        stream = tokens.read_token_stream(spark, src, max_files_per_trigger=1)
-        joined = pipeline.position_sunrise_join(
-            pipeline.decoded_stream(stream, watermark="1 hour"), twilight=True)
-        commit_available_now(joined, out, ckpt)
-        # advance the watermark past the join range bound so held state flushes
-        tokens.generate_token_sequences(
-            spark, 1, records_per_doc=1, doc_prefix="sentinel-",
-            ts_lo=1930000000, ts_hi=1930000001,
-        ).write.mode("append").parquet(src)
-        stream2 = tokens.read_token_stream(spark, src, max_files_per_trigger=1)
-        joined2 = pipeline.position_sunrise_join(
-            pipeline.decoded_stream(stream2, watermark="1 hour"), twilight=True)
-        committed = commit_available_now(joined2, out, ckpt)
-
+        tok, committed = join_drain_and_resume(spark, tmp_path, n_docs=24,
+                                               files=2, twilight=True)
         tw_cols = ["astronomical_start", "nautical_start", "civil_start",
                    "sunrise", "transit", "sunset",
                    "civil_end", "nautical_end", "astronomical_end"]
-        got = (committed
-               .filter(~F.col("doc_id").startswith("sentinel"))
-               .select("doc_id", "seq_index", *tw_cols))
+        got = committed.select("doc_id", "seq_index", *tw_cols)
         assert got.count() == 96  # one row per decoded record
 
         batch = sunrise(
@@ -390,6 +461,9 @@ class TestStreamStreamJoin:
 
 class TestLineage:
     def test_lineage_log_written(self, spark, tmp_path):
+        """Per-batch lineage of the stateful join: source offsets, phase
+        durations and the join's state rows, bytes, drops and commit time,
+        all read back from the JSON log."""
         src = str(tmp_path / "tok")
         out = str(tmp_path / "out")
         ckpt = str(tmp_path / "ckpt")
@@ -398,9 +472,9 @@ class TestLineage:
         listener = attach_lineage(spark, log)
         try:
             stream = tokens.read_token_stream(spark, src, max_files_per_trigger=2)
-            dec = with_observed_metrics(pipeline.decoded_stream(stream))
-            pos = pipeline.position_stream(dec)
-            commit_available_now(pos, out, ckpt)
+            dec = with_observed_metrics(
+                pipeline.decoded_stream(stream, watermark="1 hour"))
+            commit_available_now(pipeline.position_sunrise_join(dec), out, ckpt)
             # listener delivery is async: poll for both batch records
             deadline = time.monotonic() + 30
             recs = []
@@ -418,6 +492,21 @@ class TestLineage:
         assert any(r["numInputRows"] > 0 for r in recs)
         # per-partition lineage: file-source offsets recorded per batch
         assert all(r["sources"][0]["endOffset"] is not None for r in recs)
+        data = [r for r in recs if r["numInputRows"] > 0]
+        for r in data:
+            assert {"addBatch", "queryPlanning", "walCommit",
+                    "commitOffsets", "triggerExecution"} <= set(r["durationMs"])
+            (join,) = r["stateOperators"]
+            assert join["operatorName"] == "symmetricHashJoin"
+            assert join["commitTimeMs"] >= 0
+            assert join["numRowsDroppedByWatermark"] == 0
+        # the 4 h of input never pass the join's 1-day bound: every one of
+        # the 80 decoded records stays in the state of both join sides
+        totals = [r["stateOperators"][0]["numRowsTotal"] for r in data]
+        assert totals[-1] == 2 * 80
+        assert all(r["stateOperators"][0]["memoryUsedBytes"] > 0 for r in data)
+        assert sum(r["stateOperators"][0]["numRowsUpdated"] for r in data) \
+            == totals[-1]
 
 
 class TestCustomStatefulOperator:
