@@ -131,29 +131,3 @@ def flatten_sequences(records: np.ndarray, seq_lengths: np.ndarray) -> list[np.n
     bounds = np.cumsum(seq_lengths * TOKENS_PER_RECORD)
     return np.split(flat, bounds[:-1])
 
-
-# --- output-row token encoding (the "token-array equality" contract) -------
-
-def encode_position_output(
-    lat, lon, elevation, pressure, temperature, unix_sec, offset_sec,
-    delta_t, azimuth, zenith,
-) -> np.ndarray:
-    """Encode a position result row (the --show-inputs CSV column set,
-    PositionCommand.java:184-201) at exactly the K1 precision table.
-    Two result rows are equal iff their formatted CSV rows are equal."""
-    n = np.asarray(lat).shape[0]
-    out = np.empty((n, 11), dtype=np.int64)
-    out[:, 0] = _round_scaled(lat, SCALE_COORD)
-    out[:, 1] = _round_scaled(lon, SCALE_COORD)
-    out[:, 2] = _round_scaled(elevation, SCALE_MILLI)
-    out[:, 3] = _round_scaled(pressure, SCALE_MILLI)
-    out[:, 4] = _round_scaled(temperature, SCALE_MILLI)
-    unix_sec = np.asarray(unix_sec, dtype=np.int64)
-    out[:, 5] = unix_sec >> 32
-    lo = unix_sec & np.int64(0xFFFFFFFF)
-    out[:, 6] = np.where(lo >= np.int64(1) << 31, lo - (np.int64(1) << 32), lo)
-    out[:, 7] = np.broadcast_to(np.asarray(offset_sec, np.int64), (n,))
-    out[:, 8] = _round_scaled(delta_t, SCALE_MILLI)
-    out[:, 9] = _round_scaled(azimuth, SCALE_COORD)
-    out[:, 10] = _round_scaled(zenith, SCALE_COORD)
-    return out.astype(np.int32)

@@ -36,19 +36,6 @@ def julian_ephemeris_millennium(jce: np.ndarray) -> np.ndarray:
     return jce / 10.0
 
 
-def day_start_unix_sec(unix_sec: np.ndarray, zone_offset_sec: np.ndarray | int = 0) -> np.ndarray:
-    """Unix seconds of 00:00 *local calendar date* expressed as 0h UT of that date.
-
-    The reference resolves a zoned datetime to its local calendar date and the
-    sunrise solver then works on that date's 0h-UT Julian day (NREL SPA A.2).
-    """
-    u = np.asarray(unix_sec, dtype=np.int64)
-    off = np.asarray(zone_offset_sec, dtype=np.int64)
-    local = u + off
-    local_day = np.floor_divide(local, 86400)
-    return local_day * 86400  # 0h UT of that calendar date
-
-
 def limit_degrees(deg: np.ndarray) -> np.ndarray:
     """Normalize degrees to [0, 360)."""
     return np.mod(deg, 360.0)

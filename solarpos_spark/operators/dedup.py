@@ -70,12 +70,6 @@ def shingles_from_words(words: Column, n: int = 3) -> Column:
             .otherwise(F.array_distinct(F.transform(idx, gram)))
 
 
-def shingles_col(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles straight from a text column (convenience; the
-    operators use shingle_rows — see shingles_from_words for the caveat)."""
-    return shingles_from_words(words_col(text), n)
-
-
 def shingle_rows(df: DataFrame, *, n: int = 3,
                  text_col: str = "text") -> DataFrame:
     """Distinct (doc_id, shingle) rows — the NARROW n-gram construction.

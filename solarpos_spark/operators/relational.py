@@ -390,6 +390,32 @@ def global_row_number(
             .drop("_bin", "_off"))
 
 
+def _next_b(events: DataFrame, first_type: str, then_type: str, by: str,
+            ts_col: str, type_col: str, id_col: str) -> DataFrame:
+    """The ``first_type`` rows of ``events``, each with ``_us`` (its event
+    time in microseconds) and ``_nb`` = struct(us, id) of the first
+    ``then_type`` row by the same key strictly after it in (us, id) order,
+    null when there is none — the one window pass behind
+    :func:`sequence_pattern` and :func:`sequence_pattern_absent`."""
+    # cast covers TIMESTAMP_NTZ sources (UTC session => identity wall
+    # clock); only differences and ordering are used, so any constant
+    # zone offset cancels
+    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    # only A/B rows influence the result — the restriction pushes into the
+    # parquet scan and shrinks the one shuffle to the two event types
+    e = events.filter(F.col(type_col).isin(first_type, then_type)).select(
+        F.col(by), F.col(id_col), F.col(type_col), us.alias("_us"))
+    w = (Window.partitionBy(by)
+         .orderBy(F.col("_us").asc(), F.col(id_col).asc())
+         .rowsBetween(1, Window.unboundedFollowing))
+    nxt = F.min(
+        F.when(F.col(type_col) == then_type,
+               F.struct(F.col("_us").alias("us"),
+                        F.col(id_col).alias("id")))).over(w)
+    return (e.withColumn("_nb", nxt)
+            .filter(F.col(type_col) == first_type))
+
+
 def sequence_pattern(
     events: DataFrame,
     *,
@@ -417,25 +443,9 @@ def sequence_pattern(
     Output: (``by``, a_event_id, b_event_id, gap_usec) with gap_usec the
     exact microsecond distance (integer — engine-portable, no float).
     """
-    # cast covers TIMESTAMP_NTZ sources (UTC session => identity wall
-    # clock); only differences and ordering are used, so any constant
-    # zone offset cancels
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    # only A/B rows influence the result — the restriction pushes into the
-    # parquet scan and shrinks the one shuffle to the two event types
-    e = events.filter(F.col(type_col).isin(first_type, then_type)).select(
-        F.col(by), F.col(id_col), F.col(type_col), us.alias("_us"))
-    w = (Window.partitionBy(by)
-         .orderBy(F.col("_us").asc(), F.col(id_col).asc())
-         .rowsBetween(1, Window.unboundedFollowing))
-    nxt = F.min(
-        F.when(F.col(type_col) == then_type,
-               F.struct(F.col("_us").alias("us"),
-                        F.col(id_col).alias("id")))).over(w)
     return (
-        e.withColumn("_nb", nxt)
-        .filter((F.col(type_col) == first_type)
-                & F.col("_nb").isNotNull()
+        _next_b(events, first_type, then_type, by, ts_col, type_col, id_col)
+        .filter(F.col("_nb").isNotNull()
                 & (F.col("_nb.us")
                    <= F.col("_us") + F.lit(int(within_seconds) * 1_000_000)))
         .select(
@@ -472,21 +482,10 @@ def sequence_pattern_absent(
 
     Output: (``by``, a_event_id, late_b_event_id, late_gap_usec).
     """
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    e = events.filter(F.col(type_col).isin(first_type, then_type)).select(
-        F.col(by), F.col(id_col), F.col(type_col), us.alias("_us"))
-    w = (Window.partitionBy(by)
-         .orderBy(F.col("_us").asc(), F.col(id_col).asc())
-         .rowsBetween(1, Window.unboundedFollowing))
-    nxt = F.min(
-        F.when(F.col(type_col) == then_type,
-               F.struct(F.col("_us").alias("us"),
-                        F.col(id_col).alias("id")))).over(w)
     horizon = F.col("_us") + F.lit(int(within_seconds) * 1_000_000)
     return (
-        e.withColumn("_nb", nxt)
-        .filter((F.col(type_col) == first_type)
-                & (F.col("_nb").isNull() | (F.col("_nb.us") > horizon)))
+        _next_b(events, first_type, then_type, by, ts_col, type_col, id_col)
+        .filter(F.col("_nb").isNull() | (F.col("_nb.us") > horizon))
         .select(
             F.col(by),
             F.col(id_col).alias("a_event_id"),

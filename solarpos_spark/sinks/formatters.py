@@ -177,47 +177,6 @@ def json_lines(df: DataFrame, all_fields: list[FieldSpec],
     return df.select(F.concat(*parts).alias("line"))
 
 
-def write_csv(df: DataFrame, all_fields: list[FieldSpec], path: str,
-              *, headers: bool = True, subset: list[str] | None = None,
-              offset_col: str | None = None) -> None:
-    """Materialize a byte-exact CSV (CRLF, optional header) as text files.
-
-    With ``headers=True`` the header row is written as its own part file,
-    named so it sorts lexicographically before every Spark-written
-    ``part-00000-<uuid>`` data file ('-' < any hex digit) — so
-    ``cat path/part-*`` reproduces the reference's header-first byte stream
-    (CsvFormatter.java:22-31). Single-file export: ``to_csv_string``.
-    """
-    lines = csv_lines(df, all_fields, subset, offset_col)
-    lines.select(F.concat(F.col("line"), F.lit("\r")).alias("value")) \
-        .write.mode("overwrite").text(path)
-    if headers:
-        fields = select_fields(all_fields, df, subset)
-        payload = (csv_header(fields) + "\r\n").encode()
-        spark = df.sparkSession
-        try:
-            # write through the Hadoop FileSystem of `path` so the header
-            # lands next to the data files on HDFS/S3/ABFS too, not on the
-            # driver's local disk
-            jvm = spark.sparkContext._jvm
-            hconf = spark.sparkContext._jsc.hadoopConfiguration()
-            hpath = jvm.org.apache.hadoop.fs.Path(
-                path, "part-00000--header.txt")
-            fs = hpath.getFileSystem(hconf)
-            stream = fs.create(hpath, True)
-            try:
-                stream.write(bytearray(payload))
-            finally:
-                stream.close()
-        except AttributeError:
-            # Spark Connect: no JVM gateway — local filesystem fallback
-            import os
-
-            with open(os.path.join(path, "part-00000--header.txt"),
-                      "wb") as f:
-                f.write(payload)
-
-
 def to_csv_string(df: DataFrame, all_fields: list[FieldSpec],
                   *, headers: bool = True, subset: list[str] | None = None,
                   offset_col: str | None = None) -> str:

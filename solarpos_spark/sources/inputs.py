@@ -57,14 +57,6 @@ def _local_df(spark: SparkSession, pdf) -> DataFrame:
     return spark.createDataFrame(pdf)
 
 
-def coordinate_range_df(spark: SparkSession, start: float, end: float,
-                        step: float, *, name: str, lo: float, hi: float) -> DataFrame:
-    import pandas as pd
-
-    vals = coordinate_values(start, end, step, lo, hi)
-    return _local_df(spark, pd.DataFrame({name: pd.Series(vals, dtype="float64")}))
-
-
 def grid_df(spark: SparkSession, lat_range: tuple[float, float, float],
             lon_range: tuple[float, float, float]) -> DataFrame:
     """R1: every lat crossed with every lon, lat-major order.

@@ -212,12 +212,16 @@ def decode_position_arrow(df: DataFrame, *, algorithm: str = "spa",
     wants, and exactly what the reference's loop does in one pass
     (PositionCommand.java:107-135).
 
-    Values are bit-identical to the two-stage path (same kernels, and the
-    per-timestamp hoisting is a pure function of the timestamp, so batch
-    boundaries don't matter) — pinned by test_spark_layer fused-parity.
+    Values are bit-identical to the two-stage path: the same
+    ``resolve_delta_t`` (the codec's estimate sentinel decodes to NaN and
+    becomes the Espenak-Meeus estimate) and the same ``_compute_position``
+    dispatch, with every row flagged by ``algorithm`` and ``refraction`` —
+    pinned by test_spark_layer fused-parity.
     """
-    from ..kernels import grena3 as grena3_kernel
-    from ..kernels import spa as spa_kernel
+    from ..operators.position import _compute_position, resolve_delta_t
+
+    flag = ((codec.FLAG_GRENA3 if algorithm == "grena3" else 0)
+            | (0 if refraction else codec.FLAG_NO_REFRACTION))
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -226,16 +230,11 @@ def decode_position_arrow(df: DataFrame, *, algorithm: str = "spa",
                 continue
             flat, doc_ids, seq_index = slab
             f = codec.decode_records(flat)
-            press = f["pressure"] if refraction else None
-            temp = f["temperature"] if refraction else None
-            if algorithm == "grena3":
-                az, zen = grena3_kernel.solar_position(
-                    f["unix_sec"].astype(np.float64), f["lat"], f["lon"],
-                    f["delta_t"], press, temp)
-            else:
-                az, zen = spa_kernel.solar_position(
-                    f["unix_sec"].astype(np.float64), f["lat"], f["lon"],
-                    f["elevation"], f["delta_t"], press, temp)
+            az, zen = _compute_position(
+                f["unix_sec"].astype(np.float64), f["lat"], f["lon"],
+                f["elevation"], f["pressure"], f["temperature"],
+                resolve_delta_t(f["unix_sec"], f["delta_t"]),
+                np.full(len(seq_index), flag, dtype=np.int64))
             yield pa.RecordBatch.from_arrays(
                 [doc_ids, pa.array(seq_index), pa.array(f["lat"]),
                  pa.array(f["lon"]), pa.array(f["unix_sec"]),
@@ -245,13 +244,6 @@ def decode_position_arrow(df: DataFrame, *, algorithm: str = "spa",
             )
 
     return df.mapInArrow(run, schema=FUSED_POSITION_SCHEMA)
-
-
-def write_token_table(df: DataFrame, path: str, *, partitions: int | None = None) -> None:
-    """Materialize as parquet (Iceberg stand-in; see SURVEY.md §7 note —
-    no Iceberg runtime jars in this sandbox, the seam is this module)."""
-    w = df.repartition(partitions) if partitions else df
-    w.write.mode("overwrite").parquet(path)
 
 
 def read_token_table(spark: SparkSession, path: str) -> DataFrame:

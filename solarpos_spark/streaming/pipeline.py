@@ -146,15 +146,6 @@ def windowed_cms_counts(
     )
 
 
-def sliding_window_counts(decoded: DataFrame, *, duration: str = "1 hour",
-                          slide: str = "15 minutes") -> DataFrame:
-    return (
-        decoded.groupBy(F.window("event_time", duration, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .select(F.col("w.start").alias("window_start"), "n_rows")
-    )
-
-
 def doc_session_stats(decoded: DataFrame, *, gap: str = "30 minutes") -> DataFrame:
     """Session windows per doc_id: one coordinate sweep = one session."""
     return (

@@ -1,12 +1,21 @@
-"""Custom stateful streaming operator via applyInPandasWithState.
+"""Custom stateful streaming operators via applyInPandasWithState — the
+CEP operators that built-in windows and session_window cannot express.
 
-``sweep_progress`` tracks each doc_id's coordinate sweep across micro-batches
-and emits exactly one summary row per document when the sweep completes
-(all ``expected`` records seen) or when the group times out (processing-time
-timeout = the stream's "sweep abandoned" signal). This is the
-beyond-built-in-session-window custom CEP operator of the north_rule —
-arbitrary per-key state (seen-count, seq extent, event-time extent) with
-explicit timeout semantics, impossible to express with ``session_window``.
+- ``sweep_progress``: one summary row per doc_id when its coordinate sweep
+  completes (all ``expected`` records seen) or times out (processing-time
+  timeout = the stream's "sweep abandoned" signal).
+- ``first_n_per_key``: per-key admission quota in event-time order.
+- ``funnel_first_match``, ``funnel_absence``, ``funnel_chain_first``: the
+  follows-by patterns (A then B, A without B, A then B then C ...). All
+  three run ONE state machine, :func:`_make_chain`, built by one helper,
+  :func:`_follows_by`; they differ only in the type list, the output
+  columns and whether a closed head emits its chain or its failure.
+- ``windowed_priority_sample``: per-window top-k by priority.
+- ``streaming_zscore_anomalies``: per-key rolling z-score.
+
+The event-time operators buffer rows until the watermark makes them final,
+so their committed output equals the batch operator's under any
+micro-batch split of the same input.
 """
 
 from __future__ import annotations
@@ -204,8 +213,8 @@ def first_n_per_key(
     )
 
 
-#: chain state: one buffered event per array slot — (id, event usec,
-#: step-type index into the chain's type list)
+#: follows-by state: one buffered event per array slot — (id, event usec,
+#: index of the first pattern step of its type)
 CHAIN_STATE_SCHEMA = StructType([
     StructField("ids", ArrayType(LongType())),
     StructField("uss", ArrayType(LongType())),
@@ -213,14 +222,36 @@ CHAIN_STATE_SCHEMA = StructType([
 ])
 
 
-def _make_chain(types: list[str], within_us: int):
+def _make_chain(types: list[str], within_us: int, cols: list[str],
+                absent: bool = False):
+    """The follows-by machine behind funnel_first_match, funnel_absence
+    and funnel_chain_first: per key, buffer the pattern-type events
+    inside the rolling horizon ``(k-1)*within``; once the watermark
+    passes a head's horizon, walk its committed greedy chain (each
+    step's first successor in (us, id) order within ``within``) and
+    emit ``[key, *chain ids, gap]`` — or, with ``absent``, ``[key,
+    head id]`` when the chain failed.
+
+    Two-watermark (SPARK-40925) soundness: batch f late-filters inputs
+    with wm(<=f-2) but evicts and closes with wm(<=f-1), so rows can
+    arrive in the gap between the two. The output stays exact because
+    (a) heads close and events are evicted in batch g at wm(<=g-1),
+    which IS batch g+1's late-filter line: a row that survives a later
+    filter lies above it, so past the horizon of every head closed and
+    every event evicted there — it can neither join a closed head's
+    chain nor head a chain that needs an evicted event (links follow
+    their head); (b) inputs fold into the buffer BEFORE heads close and
+    events are evicted, so a gap row still sees what the same batch is
+    about to drop. So arrival order cannot change the committed set,
+    and the "no match by close" of ``absent`` is final, not best-effort.
+    """
     import bisect
 
     k = len(types)
-    tindex = {t: i for i, t in enumerate(types)}
+    # a type that repeats in the pattern is buffered once, under its
+    # first step; every step looks its candidates up by type
+    tindex = {t: types.index(t) for t in types}
     horizon = (k - 1) * within_us
-    cols = (["user_id"] + [f"step{i + 1}_id" for i in range(k)]
-            + ["gap_usec"])
 
     def run(key: tuple, pdfs: Iterator[pd.DataFrame],
             state: GroupState) -> Iterator[pd.DataFrame]:
@@ -248,15 +279,13 @@ def _make_chain(types: list[str], within_us: int):
             by_type.setdefault(tps[i], []).append((uss[i], ids[i]))
         out = []
         for i in order:
-            # a chain head is FINAL once the watermark passes its full
-            # horizon: every committed link lands at us <= head_us +
-            # (k-1)*within, and any later-arriving candidate would be
-            # late-filtered (the funnel_first_match alignment argument)
+            # a head is FINAL once the watermark passes its full horizon:
+            # every committed link lands at us <= head_us + (k-1)*within
             if tps[i] == 0 and wm_ms > (uss[i] + horizon) // 1000:
                 cur_us, cur_id = uss[i], ids[i]
                 chain = [ids[i]]
                 for step in range(1, k):
-                    cands = by_type.get(step, [])
+                    cands = by_type.get(tindex[types[step]], [])
                     j = bisect.bisect_right(cands, (cur_us, cur_id))
                     if j >= len(cands) or \
                             cands[j][0] > cur_us + within_us:
@@ -264,7 +293,10 @@ def _make_chain(types: list[str], within_us: int):
                         break
                     cur_us, cur_id = cands[j]
                     chain.append(cur_id)
-                if chain is not None:
+                if absent:
+                    if chain is None:
+                        out.append([user_id, ids[i]])
+                elif chain is not None:
                     out.append([user_id, *chain, cur_us - uss[i]])
         keep = [i for i in range(len(ids))
                 if wm_ms <= (uss[i] + horizon) // 1000]
@@ -283,6 +315,30 @@ def _make_chain(types: list[str], within_us: int):
     return run
 
 
+def _follows_by(events: DataFrame, types: list[str], within_seconds: int,
+                cols: list[str], absent: bool = False) -> DataFrame:
+    """``events`` restricted to the pattern types, grouped by user_id
+    through :func:`_make_chain`; every output column is a long.
+
+    Watermark caveat: Catalyst pushes the type restriction BELOW the
+    EventTimeWatermark node (into the scan), so rows of OTHER event types
+    do not advance the watermark through these operators — only pattern
+    event times drive closing. If the caller needs foreign types to
+    advance time (e.g. heartbeats), project them to a passthrough type
+    first.
+    """
+    return events.filter(events["event_type"].isin(*types)) \
+        .groupBy("user_id").applyInPandasWithState(
+            _make_chain(types, int(within_seconds) * 1_000_000, cols,
+                        absent),
+            outputStructType=StructType(
+                [StructField(c, LongType()) for c in cols]),
+            stateStructType=CHAIN_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
+
+
 def funnel_chain_first(
     events: DataFrame,
     types: list[str] | tuple[str, ...],
@@ -295,20 +351,14 @@ def funnel_chain_first(
     within the window, then THAT row's first ``types[2]`` successor,
     and so on, no backtracking. One output row per completed chain,
     emitted exactly when the event-time watermark passes the head's
-    full horizon ``head_us + (k-1)*within`` — by then every committed
-    link is immutable (a link-i candidate lands at most i*within past
-    the head, and anything arriving after the horizon is late-filtered
-    by the same eviction==next-late-filter alignment funnel_first_match
-    documents), so cross-batch out-of-order arrival cannot change the
-    committed set and batch == stream (pytest locks it under shuffled
-    delivery).
+    full horizon ``head_us + (k-1)*within``; by then every committed
+    link is immutable (:func:`_make_chain`), so batch == stream under
+    shuffled delivery (pytest locks it).
 
     State per key: the buffered chain-type events inside the rolling
-    horizon (id, us, step index — O(events per key per (k-1)*within)),
-    evicted as the watermark passes their own horizon; emission is
-    computed before eviction in the same invocation, so a closing head
-    still sees every candidate. EventTimeTimeout wakes idle keys when
-    their earliest buffered row's horizon expires.
+    horizon (O(events per key per (k-1)*within)), evicted as the
+    watermark passes their own horizon; EventTimeTimeout wakes idle
+    keys when their earliest buffered row's horizon expires.
 
     ``events`` must already carry an event-time watermark on ``ts``.
     Output: (user_id, step1_id ... stepk_id, gap_usec).
@@ -316,146 +366,10 @@ def funnel_chain_first(
     types = list(types)
     if len(types) < 2:
         raise ValueError("funnel_chain_first needs >= 2 step types")
-    k = len(types)
-    schema = StructType(
-        [StructField("user_id", LongType())]
-        + [StructField(f"step{i + 1}_id", LongType()) for i in range(k)]
-        + [StructField("gap_usec", LongType())])
-    filtered = events.filter(events["event_type"].isin(*types))
-    return filtered.groupBy("user_id").applyInPandasWithState(
-        _make_chain(types, int(within_seconds) * 1_000_000),
-        outputStructType=schema,
-        stateStructType=CHAIN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-FUNNEL_OUTPUT_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("a_event_id", LongType()),
-    StructField("b_event_id", LongType()),
-    StructField("gap_usec", LongType()),
-])
-
-#: parallel arrays: pending A's (id, us, best-B id or -1, best-B us) and
-#: retained B's (id, us) — a GroupState struct cannot hold rows, so the
-#: per-key collections are column-encoded
-FUNNEL_STATE_SCHEMA = StructType([
-    StructField("a_ids", ArrayType(LongType())),
-    StructField("a_uss", ArrayType(LongType())),
-    StructField("ab_ids", ArrayType(LongType())),
-    StructField("ab_uss", ArrayType(LongType())),
-    StructField("b_ids", ArrayType(LongType())),
-    StructField("b_uss", ArrayType(LongType())),
-])
-
-
-#: absence rows carry no B columns — the stream cannot know a LATE B at
-#: deadline time (it may not have arrived); batch sequence_pattern_absent
-#: reports it, the streaming cut honestly doesn't
-ABSENCE_OUTPUT_SCHEMA = StructType([
-    StructField("user_id", LongType()),
-    StructField("a_event_id", LongType()),
-])
-
-
-def _make_funnel(first_type: str, then_type: str, within_us: int,
-                 absent: bool = False):
-    def better(cur_id, cur_us, b_id, b_us, a_id, a_us):
-        """Is (b_us, b_id) a valid, lexicographically-smaller match?"""
-        if not (b_us > a_us or (b_us == a_us and b_id > a_id)):
-            return False
-        if b_us > a_us + within_us:
-            return False
-        if cur_id < 0:
-            return True
-        return (b_us, b_id) < (cur_us, cur_id)
-
-    def run(key: tuple, pdfs: Iterator[pd.DataFrame],
-            state: GroupState) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.exists:
-            a_ids, a_uss, ab_ids, ab_uss, b_ids, b_uss = \
-                [list(x) for x in state.get]
-        else:
-            a_ids, a_uss, ab_ids, ab_uss, b_ids, b_uss = \
-                [], [], [], [], [], []
-
-        new_a, new_b = [], []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            us = pdf["ts"].astype("int64") // 1000  # ns -> us
-            for eid, etype, eus in zip(pdf["event_id"], pdf["event_type"], us):
-                if etype == then_type:
-                    new_b.append((int(eid), int(eus)))
-                elif etype == first_type:
-                    new_a.append((int(eid), int(eus)))
-
-        # fold new B's into every pending A, then retain them
-        for b_id, b_us in new_b:
-            for i in range(len(a_ids)):
-                if better(ab_ids[i], ab_uss[i], b_id, b_us,
-                          a_ids[i], a_uss[i]):
-                    ab_ids[i], ab_uss[i] = b_id, b_us
-            b_ids.append(b_id)
-            b_uss.append(b_us)
-        # new A's scan the full retained-B set (includes this batch's B's)
-        for a_id, a_us in new_a:
-            best_id, best_us = -1, -1
-            for b_id, b_us in zip(b_ids, b_uss):
-                if better(best_id, best_us, b_id, b_us, a_id, a_us):
-                    best_id, best_us = b_id, b_us
-            a_ids.append(a_id)
-            a_uss.append(a_us)
-            ab_ids.append(best_id)
-            ab_uss.append(best_us)
-
-        # watermark-driven eviction: an A's window closes when the
-        # watermark passes a_us + within (no in-window B can still arrive
-        # — later rows are late-filtered); emit its first match, if any
-        wm_ms = state.getCurrentWatermarkMs()
-        out, keep = [], []
-        for i in range(len(a_ids)):
-            if wm_ms > (a_uss[i] + within_us) // 1000:
-                if absent:
-                    # negation: the window closed with NO in-window B —
-                    # final under the same two-watermark alignment (any
-                    # filter-surviving future B exceeds the close line
-                    # and hence the window end)
-                    if ab_ids[i] < 0:
-                        out.append({"user_id": user_id,
-                                    "a_event_id": a_ids[i]})
-                elif ab_ids[i] >= 0:
-                    out.append({"user_id": user_id,
-                                "a_event_id": a_ids[i],
-                                "b_event_id": ab_ids[i],
-                                "gap_usec": ab_uss[i] - a_uss[i]})
-            else:
-                keep.append(i)
-        a_ids = [a_ids[i] for i in keep]
-        a_uss = [a_uss[i] for i in keep]
-        ab_ids = [ab_ids[i] for i in keep]
-        ab_uss = [ab_uss[i] for i in keep]
-        # a retained B is dead once the watermark passes it: any future A
-        # that could match (a_us < b_us) would itself be late-filtered
-        kept_b = [(bi, bu) for bi, bu in zip(b_ids, b_uss)
-                  if bu // 1000 >= wm_ms]
-        b_ids = [b for b, _ in kept_b]
-        b_uss = [u for _, u in kept_b]
-
-        if a_ids or b_ids:
-            state.update((a_ids, a_uss, ab_ids, ab_uss, b_ids, b_uss))
-            if a_ids:  # wake when the earliest A-window closes
-                ts = min(u + within_us for u in a_uss) // 1000 + 1
-                state.setTimeoutTimestamp(max(ts, wm_ms + 1))
-        else:
-            state.remove()
-        if out:
-            yield pd.DataFrame(out)
-
-    return run
+    return _follows_by(
+        events, types, within_seconds,
+        ["user_id"] + [f"step{i + 1}_id" for i in range(len(types))]
+        + ["gap_usec"])
 
 
 def funnel_first_match(
@@ -468,48 +382,18 @@ def funnel_first_match(
     """TRUE first-match streaming funnel: one row per A event — its FIRST
     B (lexicographic (ts, id)) within the window — emitted exactly when
     the event-time watermark closes the window, so cross-batch
-    out-of-order arrival cannot change the answer. This is the stateful
+    out-of-order arrival cannot change the answer. The stateful
     complement to funnel_stream (which emits all pairs and defers the
-    rank-1 cut): custom per-key state = pending A's with their
-    best-so-far B plus the retained B's that future in-watermark A's
-    could still match, evicted as the watermark passes them. Pytest
-    proves batch parity: committed rows == relational.sequence_pattern
-    for the same input under multi-batch shuffled delivery.
+    rank-1 cut): the two-step case of the follows-by machine
+    (:func:`_make_chain`). Pytest proves batch parity: committed rows ==
+    relational.sequence_pattern for the same input under multi-batch
+    shuffled delivery, and through the SPARK-40925 watermark gap.
 
     ``events`` must already carry an event-time watermark on ``ts``.
-    State per key is O(in-flight windows); EventTimeTimeout wakes idle
-    keys exactly when their earliest window closes.
-
-    Two-watermark (SPARK-40925) soundness: batch f late-filters inputs
-    with wm(<=f-2) but evicts state with wm(<=f-1), so rows can arrive
-    in the gap between the two. This operator stays exact because (a)
-    eviction in batch g uses wm(<=g-1), which IS batch g+1's late-filter
-    threshold — any filter-surviving future A has a_us >= that line, and
-    every B it could match satisfies b_us >= a_us, so no such B is ever
-    evicted early; (b) within a batch, inputs fold into state BEFORE
-    eviction/window-close run, so a gap A still scans B's the same
-    batch's eviction is about to drop; (c) an A-window closed at
-    wm(<=f-1) can never be completed by a later B, whose time must
-    exceed that same line and hence the window end. The adversarial gap
-    test (test_streaming.py, watermark_gap_arrival) pins (a)+(b) with a
-    first-match B retained exactly on the eviction boundary.
-
-    Watermark caveat: Catalyst pushes the A/B type restriction BELOW the
-    EventTimeWatermark node (into the scan), so rows of OTHER event types
-    do not advance the watermark through this operator — only A/B event
-    times drive window closing. If the caller needs foreign types to
-    advance time (e.g. heartbeats), project them to a passthrough type
-    before this operator.
+    Output: (user_id, a_event_id, b_event_id, gap_usec).
     """
-    filtered = events.filter(
-        events["event_type"].isin(first_type, then_type))
-    return filtered.groupBy("user_id").applyInPandasWithState(
-        _make_funnel(first_type, then_type, int(within_seconds) * 1_000_000),
-        outputStructType=FUNNEL_OUTPUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    return _follows_by(events, [first_type, then_type], within_seconds,
+                       ["user_id", "a_event_id", "b_event_id", "gap_usec"])
 
 
 def funnel_absence(
@@ -523,31 +407,16 @@ def funnel_absence(
     whose window closed with NO B by the same key within
     ``within_seconds`` (unacked alert, abandoned checkout), emitted
     exactly when the event-time watermark passes the window end. The
-    stateful complement of relational.sequence_pattern_absent; SAME
-    state machine as funnel_first_match (pending A's with best-so-far
-    B, retained B's), only the emission predicate flips to
-    no-match-at-close.
-
-    Soundness inherits funnel_first_match's two-watermark alignment
-    verbatim, plus the absence-specific leg: a window closed at
-    wm(<=f-1) can never be falsified by a later B, because every
-    filter-surviving later row's event time exceeds that line and hence
-    the window end — so "no B by close" is final, not best-effort.
+    stateful complement of relational.sequence_pattern_absent: the SAME
+    machine as funnel_first_match with the emission predicate flipped
+    to no-match-at-close.
 
     Unlike the batch operator the stream cannot report the LATE B (it
     may not have arrived at deadline); output is (user_id, a_event_id).
     ``events`` must already carry an event-time watermark on ``ts``.
     """
-    filtered = events.filter(
-        events["event_type"].isin(first_type, then_type))
-    return filtered.groupBy("user_id").applyInPandasWithState(
-        _make_funnel(first_type, then_type,
-                     int(within_seconds) * 1_000_000, absent=True),
-        outputStructType=ABSENCE_OUTPUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    return _follows_by(events, [first_type, then_type], within_seconds,
+                       ["user_id", "a_event_id"], absent=True)
 
 
 #: windowed priority-sample state: the in-flight buffer for one window —
@@ -608,7 +477,7 @@ def _make_wsample(k: int, window_s: int):
         if wm_ms >= wend_ms:
             # window closed: emit the k smallest priorities (id
             # tiebreak) and drop all state. Finality argument as
-            # funnel_first/absence: eviction here uses wm(<=f-1), which
+            # _make_chain: eviction here uses wm(<=f-1), which
             # IS the late-filter threshold of batch f+1, so no
             # filter-surviving row of this window can arrive later.
             state.remove()

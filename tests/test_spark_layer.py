@@ -128,22 +128,38 @@ class TestTokenCodec:
 
     def test_fused_decode_position_bit_equal(self, spark):
         """decode_position_arrow (one Arrow pass) must be value-identical to
-        decode_tokens -> position (two stages) — same kernels, hoisting is a
-        pure function of the timestamp."""
+        decode_tokens -> position (two stages) — same ΔT resolution, same
+        kernels. Three docs carry the codec's "estimate ΔT" sentinel (one
+        mixed with a stored ΔT): both paths must use the Espenak-Meeus
+        estimate there, not NaN."""
         from pyspark.sql import functions as F
 
+        from solarpos_spark import codec
         from solarpos_spark.operators.position import position
 
-        t = tokens.generate_token_sequences(spark, 64, records_per_doc=4,
-                                            partitions=3)
+        recs = codec.encode_records(
+            lat=np.array([52.0, -33.9, 10.0, 10.0]),
+            lon=np.array([25.0, 18.4, 20.0, 20.0]),
+            unix_sec=np.array([1066392000, 1700000000, 1700000000,
+                               1700003600]),
+            delta_t=np.array([np.nan, np.nan, 69.0, np.nan]))
+        sentinel = spark.createDataFrame(
+            [("est-0", recs[0].tolist(), 10, "test"),
+             ("est-1", recs[1].tolist(), 10, "test"),
+             ("est-2", recs[2:].reshape(-1).tolist(), 20, "test")],
+            tokens.TOKEN_SCHEMA)
+        t = tokens.generate_token_sequences(
+            spark, 64, records_per_doc=4, partitions=3).unionByName(sentinel)
         fused = tokens.decode_position_arrow(t).select(
             "doc_id", "seq_index", "azimuth", "zenith")
+        assert fused.filter(F.isnan("azimuth") | F.isnan("zenith")
+                            | F.col("azimuth").isNull()).count() == 0
         two_stage = position(
             tokens.decode_tokens(t), algorithm="spa", ts_col="unix_sec",
             time_is_unix=True, show_inputs=False,
             passthrough=["doc_id", "seq_index"],
         ).select("doc_id", "seq_index", "azimuth", "zenith")
-        assert fused.count() == 256
+        assert fused.count() == 260
         assert fused.exceptAll(two_stage).count() == 0
         assert two_stage.exceptAll(fused).count() == 0
         # grena3 flavor too

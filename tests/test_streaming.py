@@ -962,6 +962,157 @@ class TestFunnelChain:
         assert want.exceptAll(got).count() == 0
 
 
+class MockGroupState:
+    """The GroupState one applyInPandasWithState call sees: the key's
+    stored value, the batch's eviction watermark and a fresh event-time
+    timeout (Spark forgets the old one unless the call sets it again)."""
+
+    def __init__(self, value, wm_ms):
+        self.value, self.wm_ms, self.timeout = value, wm_ms, None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+    def remove(self):
+        self.value = None
+
+    def getCurrentWatermarkMs(self):
+        return self.wm_ms
+
+    def setTimeoutTimestamp(self, ts):
+        assert ts >= self.wm_ms  # GroupState raises below the watermark
+        self.timeout = ts
+
+
+def replay_follows_by(run, batches, delay_ms):
+    """Feed ``batches`` (lists of (user, id, type, us) rows) to a
+    follows-by machine the way a watermarked applyInPandasWithState
+    does, plus the trailing no-data batch. Batch f drops rows at or
+    below the late-event watermark wm(<=f-2) and hands the machine the
+    eviction watermark wm(<=f-1) (SPARK-40925); keys without rows run
+    only when their timeout is below it; every delivered row, dropped
+    or not, advances the watermark. Returns (emitted rows, the rows
+    the machine kept, the final watermark)."""
+    import pandas as pd
+
+    store, out, kept = {}, [], []
+    late_wm = wm = 0
+    max_ms = None
+    for rows in [*batches, []]:
+        evict_wm = wm
+        live = [r for r in rows if r[3] > late_wm * 1000]
+        kept += live
+        for key in sorted({r[0] for r in live} | set(store)):
+            mine = [r for r in live if r[0] == key]
+            value, timeout = store.get(key, (None, None))
+            if not mine and (timeout is None or timeout >= evict_wm):
+                continue
+            pdfs = [pd.DataFrame({
+                "event_id": [r[1] for r in part],
+                "event_type": [r[2] for r in part],
+                "ts": pd.to_datetime([r[3] * 1000 for r in part])})
+                for part in (mine[::2], mine[1::2]) if part]
+            st = MockGroupState(value, evict_wm)
+            for pdf in run((key,), iter(pdfs), st):
+                out += [tuple(int(v) for v in r)
+                        for r in pdf.itertuples(index=False)]
+            if st.exists:
+                store[key] = (st.value, st.timeout)
+            else:
+                store.pop(key, None)
+        if rows:
+            top = max(r[3] // 1000 for r in rows)
+            max_ms = top if max_ms is None else max(max_ms, top)
+        late_wm, wm = evict_wm, max(wm, max_ms - delay_ms)
+    return out, kept, wm
+
+
+def follows_by_fixpoint(rows, types, within_us, absent, wm_ms):
+    """The batch answer, by brute force: each ``types[0]`` row whose
+    whole horizon ``(k-1)*within`` the watermark passed walks its
+    committed chain (first successor in (us, id) order per step)."""
+    horizon = (len(types) - 1) * within_us
+    out = []
+    for user in sorted({r[0] for r in rows}):
+        evs = sorted((r[3], r[1], r[2]) for r in rows if r[0] == user)
+        for us, eid, typ in evs:
+            if typ != types[0] or wm_ms <= (us + horizon) // 1000:
+                continue
+            cur, chain = (us, eid), [eid]
+            for t in types[1:]:
+                nxt = min((e[:2] for e in evs if e[2] == t and e[:2] > cur),
+                          default=None)
+                if nxt is None or nxt[0] > cur[0] + within_us:
+                    chain = None
+                    break
+                cur = nxt
+                chain.append(nxt[1])
+            if absent:
+                if chain is None:
+                    out.append((user, eid))
+            elif chain is not None:
+                out.append((user, *chain, cur[0] - us))
+    return out
+
+
+class TestFollowsByMachine:
+    @pytest.mark.parametrize("types,absent", [
+        (["error", "purchase"], False),
+        (["error", "purchase"], True),
+        (["view", "click", "purchase"], False),
+        (["view", "click", "view"], False),
+    ], ids=["first_match", "absence", "chain3", "chain3_repeated_type"])
+    def test_machine_equals_fixpoint_under_disorder(self, types, absent):
+        """The follows-by machine behind funnel_first_match,
+        funnel_absence and funnel_chain_first, driven without Spark
+        through random out-of-order multi-batch deliveries with late
+        drops: what it emits equals the brute-force batch answer over
+        the rows it kept, cut at the final watermark — no row missing,
+        none doubled. Times carry sub-millisecond parts and ties, so
+        the millisecond close test is exercised at its edge. A type may
+        repeat in the pattern, as in relational.sequence_pattern_chain."""
+        import random
+
+        from solarpos_spark.streaming.stateful import _make_chain
+
+        rng = random.Random(11)
+        cols = ["user_id", "a_event_id"] if absent else ["user_id"] + [
+            f"step{i + 1}_id" for i in range(len(types))] + ["gap_usec"]
+        t0 = 1_000_000_000
+        emitted = 0
+        for trial in range(250):
+            # a 3 ms grid makes heads' horizons meet batch watermarks
+            within_us = rng.choice([21_000, 51_000, 120_000])
+            delay_ms = rng.choice([0, 6, 42, 300])
+            n = rng.randrange(4, 40)
+            ids = rng.sample(range(1000), n)
+            rows = [(rng.randrange(2), ids[i], rng.choice(types),
+                     t0 + rng.randrange(100) * 3000
+                     + rng.choice([0, 0, rng.randrange(1000)]))
+                    for i in range(n)]
+            if rng.random() < 0.5:  # a far row closes most heads
+                rows.append((9, 1000, types[-1], t0 + 10_000_000))
+            rng.shuffle(rows)
+            cuts = sorted(rng.sample(range(1, len(rows)),
+                                     min(rng.randrange(1, 6), len(rows) - 1)))
+            batches = [rows[a:b] for a, b in
+                       zip([0, *cuts], [*cuts, len(rows)])]
+            run = _make_chain(types, within_us, cols, absent)
+            got, kept, wm = replay_follows_by(run, batches, delay_ms)
+            want = follows_by_fixpoint(kept, types, within_us, absent, wm)
+            assert sorted(got) == sorted(want), (trial, batches)
+            emitted += len(got)
+        assert emitted > 100
+
+
 class TestStreamingHll:
     def test_registers_match_batch_and_batching_invariant(
             self, spark, tmp_path):

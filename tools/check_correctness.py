@@ -5,6 +5,8 @@ oracle, comparing row count, column names, and an order-insensitive value
 hash. Each line ends with the Spark side's value hash, so the output of two
 checkouts can be diffed line by line. The session uses build_session()'s
 default cores (SPARK_GRAFT_CPUS, else every CPU).
+A name that is not a registry entry exits 2 before any work; otherwise the
+run ends with a ``checked=N failed=M`` line and exits 1 if M > 0.
 Usage:  python tools/check_correctness.py [sf_dir] [query ...]
 """
 
@@ -53,6 +55,12 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from solarpos_spark.plans.session import build_session
 
+    qs = entrymod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
+        return 2
+
     spark = build_session(shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -62,12 +70,12 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    failures = 0
+    checked = failures = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        checked += 1
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
@@ -103,6 +111,7 @@ def main() -> int:
                 print(f"   spark: {a[i]}")
                 print(f"  oracle: {b[i]}")
     spark.stop()
+    print(f"checked={checked} failed={failures}")
     return 1 if failures else 0
 
 
