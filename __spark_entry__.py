@@ -22,6 +22,9 @@ from solarpos_spark import oracle_sql as _osql
 from solarpos_spark.operators import (
     dedup, search, similarity, sketches, text, tokenops, urls, windows)
 from solarpos_spark.operators import graph as _graph
+from solarpos_spark.operators.hashing import (
+    fmix32_sql, hash_bucket_sql, poly31_band_sql, poly31_sql,
+    salted_poly_sql)
 from solarpos_spark.operators.position import position
 from solarpos_spark.operators.sunrise import sunrise
 from solarpos_spark.sources import inputs, tokens
@@ -70,6 +73,37 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+# --------------------------------------------------------------------------
+# oracle SQL fragments shared by several oracles (the hash family's SQL
+# twins live in solarpos_spark/operators/hashing.py)
+# --------------------------------------------------------------------------
+
+#: text.subword_token_count over ``text``: ceil(chars / 4) per whitespace
+#: word (at least 1) plus one token per punctuation char.
+_EST_TOKENS_SQL = r"""CAST(
+  list_sum(list_transform(string_split_regex(trim(text), '\s+'),
+           x -> greatest(1, CAST(ceil(length(x) / 4.0) AS BIGINT))))
+  + length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g'))
+  AS BIGINT)"""
+
+
+def _shingle_ctes(source: str) -> str:
+    """``w(doc_id, ws)`` and ``sh(doc_id, shingles)``: dedup.shingle_rows'
+    distinct word trigrams per doc of ``source(doc_id, text)``; a doc
+    shorter than 3 words is one shingle, its whole normalized text."""
+    return rf"""w AS (
+  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
+  FROM {source}),
+sh AS (
+  SELECT doc_id,
+    list_distinct(CASE WHEN len(ws) <= 2
+      THEN [array_to_string(ws, ' ')]
+      ELSE list_transform(range(1, len(ws) - 1),
+                          i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])
+      END) AS shingles
+  FROM w)"""
 
 
 # --------------------------------------------------------------------------
@@ -475,17 +509,7 @@ def _minhash_verified_oracle(threshold: float = 0.5) -> str:
     relation, jaccard filtered — mirroring minhash_verified_pairs."""
     return f"""
 WITH cand AS ({_minhash_oracle()}),
-w AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS ws
-  FROM documents),
-sh AS (
-  SELECT doc_id,
-    list_distinct(CASE WHEN len(ws) <= 2
-      THEN [array_to_string(ws, ' ')]
-      ELSE list_transform(range(1, len(ws) - 1),
-                          i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])
-      END) AS shingles
-  FROM w),
+{_shingle_ctes("documents")},
 ex AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS sg FROM sh),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.nsh AS na, b.nsh AS nb,
@@ -515,33 +539,7 @@ def _q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dedup_pipeline_oracle() -> str:
     """Recursive-CC + canonical keep over the LSH-verified pair oracle."""
-    return f"""
-WITH RECURSIVE vpairs AS ({_minhash_verified_oracle()}),
-und AS (
-  SELECT doc_a AS u, doc_b AS v FROM vpairs
-  UNION
-  SELECT doc_b AS u, doc_a AS v FROM vpairs
-),
-reach(n, r) AS (
-  SELECT u, u FROM und
-  UNION
-  SELECT und.v, reach.r FROM reach JOIN und ON und.u = reach.n
-),
-comp AS (SELECT n, min(r) AS c FROM reach GROUP BY n),
-clusters AS (
-  SELECT d.doc_id, coalesce(cp.c, d.doc_id) AS cluster_id
-  FROM documents d LEFT JOIN comp cp ON cp.n = d.doc_id
-),
-ranked AS (
-  SELECT c.cluster_id, c.doc_id,
-         row_number() OVER (PARTITION BY c.cluster_id
-                            ORDER BY length(d.text) DESC, c.doc_id ASC) AS rn,
-         count(*) OVER (PARTITION BY c.cluster_id) AS n_docs
-  FROM clusters c JOIN documents d ON d.doc_id = c.doc_id
-)
-SELECT cluster_id, doc_id AS keep_doc_id, CAST(n_docs AS BIGINT) AS n_docs
-FROM ranked WHERE rn = 1
-"""
+    return _dup_clusters_cte(_minhash_verified_oracle()) + _CANONICAL_SELECT
 
 
 def _q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -657,14 +655,10 @@ def _q_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sequence_pack(_docs(spark, sf_dir), capacity=256)
 
 
-_SEQUENCE_PACK_ORACLE = """
+_SEQUENCE_PACK_ORACLE = f"""
 WITH base AS (
   SELECT doc_id, source AS shard,
-         CAST(list_sum(list_transform(string_split_regex(trim(text), '\\s+'),
-                x -> greatest(1, CAST(ceil(length(x) / 4.0) AS BIGINT))))
-              + length(text)
-              - length(regexp_replace(text, '[.,!?;:]', '', 'g'))
-            AS BIGINT) AS n_tokens
+         {_EST_TOKENS_SQL} AS n_tokens
   FROM documents),
 placed AS (
   SELECT doc_id, shard, n_tokens,
@@ -737,15 +731,18 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivf_trained_cents_cte(n_centroids: int = 16, n_iter: int = 3,
                            seed: int = 11, dim: int = 64,
                            quant_bits: int = 20,
-                           with_corpus: bool = True) -> str:
-    """Training CTE chain ending in cents(cid, c, cn) — the bit-exact SQL
-    mirror of similarity.ivf_train_centroids. Init = K lowest Knuth-hash
-    ranks (the stratified_sample oracle's overflow-safe construction,
-    denom 2^32); each Lloyd round = argmax assignment + FIXED-POINT int64
-    sums (order-independent, so DuckDB and Spark agree bit-for-bit) +
-    one IEEE double division per mean. ``with_corpus=False`` omits the
-    leading corpus CTE so a composed oracle (ivfpq_topk) can provide a
-    corpus carrying BOTH this chain's (v, vn) and the PQ chains' fv."""
+                           with_corpus: bool = True, src: str = "corpus",
+                           prefix: str = "", out: str = "cents") -> str:
+    """Training CTE chain over ``src(vec_id, v)`` ending in
+    ``out(cid, c, cn)`` — the bit-exact SQL mirror of
+    similarity.ivf_train_centroids. Init = K lowest Knuth-hash ranks
+    (hash_bucket_sql, denom 2^32); each Lloyd round = argmax assignment +
+    FIXED-POINT int64 sums (order-independent, so DuckDB and Spark agree
+    bit-for-bit) + one IEEE double division per mean. ``prefix`` names
+    the chain's CTEs so several chains (the PQ subspace codebooks)
+    coexist in one WITH. ``with_corpus=False`` omits the leading corpus
+    CTE so a composed oracle (ivfpq_topk) can provide a corpus carrying
+    BOTH this chain's (v, vn) and the PQ chains' fv."""
     K = n_centroids
     S = f"{float(1 << quant_bits):.1f}"
 
@@ -761,103 +758,64 @@ def _ivf_trained_cents_cte(n_centroids: int = 16, n_iter: int = 3,
          sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS vn
   FROM embeddings),
 """ if with_corpus else ""
-    parts = [f"""{corpus_cte}rnk AS (
-  SELECT vec_id, v,
-         ((x % 65536) * 2654435761
-          + ((x // 65536) * 2654435761) % 4294967296 * 65536)
-         % 4294967296 AS r
-  FROM (SELECT vec_id, v,
-               ((vec_id % 4294967296 + 4294967296) % 4294967296 + {seed})
-               % 4294967296 AS x
-        FROM corpus)),
-c0 AS (
+    parts = [f"""{corpus_cte}{prefix}rnk AS (
+  SELECT vec_id, v, {hash_bucket_sql("vec_id", seed, 1 << 32)} AS r
+  FROM {src}),
+{prefix}c0 AS (
   SELECT row_number() OVER (ORDER BY r, vec_id) - 1 AS cid, v AS c
-  FROM rnk ORDER BY r, vec_id LIMIT {K})"""]
+  FROM {prefix}rnk ORDER BY r, vec_id LIMIT {K})"""]
     for it in range(1, n_iter + 1):
         p = it - 1
-        parts.append(f"""cl{p} AS (
+        parts.append(f"""{prefix}cl{p} AS (
   SELECT list(c ORDER BY cid) AS cl,
          list(sqrt(list_dot_product(c, c)) ORDER BY cid) AS cnl
-  FROM c{p}),
-a{it} AS (
+  FROM {prefix}c{p}),
+{prefix}a{it} AS (
   SELECT vec_id, v, list_indexof(sc, list_max(sc)) AS list_id
   FROM (SELECT vec_id, v,
                list_transform(range(1, {K + 1}),
                               j -> list_dot_product(v, cl[j]) / cnl[j]) AS sc
-        FROM corpus, cl{p})),
-s{it} AS (
+        FROM {src}, {prefix}cl{p})),
+{prefix}s{it} AS (
   SELECT list_id, count(*) AS cnt,
          {sums}
-  FROM a{it} GROUP BY list_id),
-c{it} AS (
+  FROM {prefix}a{it} GROUP BY list_id),
+{prefix}c{it} AS (
   SELECT p.cid, CASE WHEN s.cnt IS NULL THEN p.c ELSE {mean} END AS c
-  FROM c{p} p LEFT JOIN s{it} s ON s.list_id = p.cid + 1)""")
-    parts.append(f"""cents AS (
-  SELECT cid, c, sqrt(list_dot_product(c, c)) AS cn FROM c{n_iter})""")
+  FROM {prefix}c{p} p LEFT JOIN {prefix}s{it} s ON s.list_id = p.cid + 1)""")
+    parts.append(f"""{out} AS (
+  SELECT cid, c, sqrt(list_dot_product(c, c)) AS cn FROM {prefix}c{n_iter})""")
     return ",\n".join(parts)
 
 
-def _pq_sub_cents_cte(s: int, *, seed: int, lo: int, d_sub: int,
-                      K: int, n_iter: int) -> str:
-    """Per-subspace PQ codebook training chain ending in cents{s} — the
-    _ivf_trained_cents_cte construction over the sliced sub-vector, CTE
-    names prefixed so m chains coexist in one WITH."""
-    S = f"{float(1 << 20):.1f}"
-
-    def qt(d: int) -> str:
-        x = f"v[{d + 1}] * {S}"
-        return (f"CAST(CASE WHEN {x} < 0 THEN -floor(-({x}) + 0.5) "
-                f"ELSE floor({x} + 0.5) END AS BIGINT)")
-
-    sums = ",\n         ".join(f"sum({qt(d)}) AS s{d}" for d in range(d_sub))
-    mean = "[" + ", ".join(f"s.s{d} / ({S} * s.cnt)"
-                           for d in range(d_sub)) + "]"
-    p = f"q{s}"
-    parts = [f"""{p}corp AS (
-  SELECT vec_id, fv[{lo + 1}:{lo + d_sub}] AS v FROM corpus),
-{p}rnk AS (
-  SELECT vec_id, v,
-         ((x % 65536) * 2654435761
-          + ((x // 65536) * 2654435761) % 4294967296 * 65536)
-         % 4294967296 AS r
-  FROM (SELECT vec_id, v,
-               ((vec_id % 4294967296 + 4294967296) % 4294967296 + {seed})
-               % 4294967296 AS x
-        FROM {p}corp)),
-{p}c0 AS (
-  SELECT row_number() OVER (ORDER BY r, vec_id) - 1 AS cid, v AS c
-  FROM {p}rnk ORDER BY r, vec_id LIMIT {K})"""]
-    for it in range(1, n_iter + 1):
-        pr = it - 1
-        parts.append(f"""{p}cl{pr} AS (
-  SELECT list(c ORDER BY cid) AS cl,
-         list(sqrt(list_dot_product(c, c)) ORDER BY cid) AS cnl
-  FROM {p}c{pr}),
-{p}a{it} AS (
-  SELECT vec_id, v, list_indexof(sc, list_max(sc)) AS list_id
-  FROM (SELECT vec_id, v,
-               list_transform(range(1, {K + 1}),
+def _ivf_assigned_ctes(n_centroids: int = 16) -> str:
+    """``clist`` and ``assigned(vec_id, v, vn, list_id)``: each corpus
+    vector's argmax-cosine list (1-based) under the trained ``cents``."""
+    return f"""clist AS (
+  SELECT list(c ORDER BY cid) AS cl, list(cn ORDER BY cid) AS cnl
+  FROM cents),
+assigned AS (
+  SELECT vec_id, v, vn, list_indexof(sc, list_max(sc)) AS list_id
+  FROM (SELECT vec_id, v, vn,
+               list_transform(range(1, {n_centroids + 1}),
                               j -> list_dot_product(v, cl[j]) / cnl[j]) AS sc
-        FROM {p}corp, {p}cl{pr})),
-{p}s{it} AS (
-  SELECT list_id, count(*) AS cnt,
-         {sums}
-  FROM {p}a{it} GROUP BY list_id),
-{p}c{it} AS (
-  SELECT p.cid, CASE WHEN s.cnt IS NULL THEN p.c ELSE {mean} END AS c
-  FROM {p}c{pr} p LEFT JOIN {p}s{it} s ON s.list_id = p.cid + 1)""")
-    parts.append(f"""cents{s} AS (
-  SELECT cid, c, sqrt(list_dot_product(c, c)) AS cn FROM {p}c{n_iter})""")
-    return ",\n".join(parts)
+        FROM corpus, clist))"""
 
 
-def _pq_topk_oracle(*, dim: int = 64, m: int = 8, K: int = 16,
-                    n_iter: int = 2, seed: int = 11, k: int = 3,
-                    shortlist: int = 50) -> str:
+def _pq_codebook_ctes(*, dim: int, m: int, K: int, n_iter: int,
+                      seed: int) -> str:
+    """The m PQ subspace codebooks ``cents0..cents{m-1}`` (each the
+    _ivf_trained_cents_cte chain over its slice of ``corpus.fv``, seed
+    offset per subspace) and ``codes(vec_id, sub, code)``, the corpus
+    encoded as m codes per vector."""
     d_sub = dim // m
     chains = ",\n".join(
-        _pq_sub_cents_cte(s, seed=seed + s, lo=s * d_sub, d_sub=d_sub,
-                          K=K, n_iter=n_iter)
+        f"q{s}corp AS (\n  SELECT vec_id, fv[{s * d_sub + 1}:"
+        f"{(s + 1) * d_sub}] AS v FROM corpus),\n"
+        + _ivf_trained_cents_cte(n_centroids=K, n_iter=n_iter, seed=seed + s,
+                                 dim=d_sub, with_corpus=False,
+                                 src=f"q{s}corp", prefix=f"q{s}",
+                                 out=f"cents{s}")
         for s in range(m))
     encodes = "\nUNION ALL\n".join(f"""
   SELECT vec_id, {s} AS sub, list_indexof(sc, list_max(sc)) - 1 AS code
@@ -868,23 +826,35 @@ def _pq_topk_oracle(*, dim: int = 64, m: int = 8, K: int = 16,
              (SELECT list(c ORDER BY cid) AS cl,
                      list(sqrt(list_dot_product(c, c)) ORDER BY cid) AS cnl
               FROM cents{s}))""" for s in range(m))
+    return f"{chains},\ncodes AS ({encodes})"
+
+
+def _pq_parts_cte(*, dim: int, m: int) -> str:
+    """``parts``: each query's partial dot product and squared centroid
+    norm per (subspace, code) — the ADC lookup table."""
+    d_sub = dim // m
     partials = "\nUNION ALL\n".join(f"""
-  SELECT query_id, qn, qv, {s} AS sub, cid AS code,
+  SELECT query_id, qn, {s} AS sub, cid AS code,
          list_dot_product(qv[{s * d_sub + 1}:{(s + 1) * d_sub}], c)
            AS partial,
          cn * cn AS cn_sq
   FROM q, cents{s}""" for s in range(m))
+    return f"parts AS ({partials})"
+
+
+def _pq_topk_oracle(*, dim: int = 64, m: int = 8, K: int = 16,
+                    n_iter: int = 2, seed: int = 11, k: int = 3,
+                    shortlist: int = 50) -> str:
     return f"""
 WITH corpus AS (
   SELECT vec_id, embedding::DOUBLE[] AS fv,
          sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
            AS fn
   FROM embeddings),
-{chains},
-codes AS ({encodes}),
+{_pq_codebook_ctes(dim=dim, m=m, K=K, n_iter=n_iter, seed=seed)},
 q AS (SELECT vec_id AS query_id, fv AS qv, fn AS qn FROM corpus
       WHERE vec_id < 10),
-parts AS ({partials}),
+{_pq_parts_cte(dim=dim, m=m)},
 adc AS (
   SELECT query_id, qn, vec_id,
          round(list_sum(list(partial ORDER BY sub))
@@ -929,14 +899,7 @@ def _q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivf_topk_oracle() -> str:
     return f"""
 WITH {_ivf_trained_cents_cte()},
-clist AS (SELECT list(c ORDER BY cid) AS cl, list(cn ORDER BY cid) AS cnl
-          FROM cents),
-assigned AS (
-  SELECT vec_id, v, vn, list_indexof(sc, list_max(sc)) AS list_id
-  FROM (SELECT vec_id, v, vn,
-               list_transform(range(1, 17),
-                              j -> list_dot_product(v, cl[j]) / cnl[j]) AS sc
-        FROM corpus, clist)),
+{_ivf_assigned_ctes()},
 q AS (SELECT vec_id AS query_id, v AS qv, vn AS qn FROM corpus
       WHERE vec_id < 10),
 qscore AS (
@@ -997,30 +960,10 @@ def _ivfpq_topk_oracle(*, dim: int = 64, m: int = 8, K: int = 16,
                        n_coarse: int = 16, nprobe: int = 4,
                        n_iter_pq: int = 2, seed: int = 11, k: int = 3,
                        shortlist: int = 50) -> str:
-    """Composes _ivf_trained_cents_cte (coarse) + the m _pq_sub_cents_cte
-    chains over ONE corpus CTE carrying both column spellings (v/vn for
-    the coarse chain, fv for the PQ chains), then restricts the pq_topk
-    ADC to probed coarse lists before the refine cut."""
-    d_sub = dim // m
-    chains = ",\n".join(
-        _pq_sub_cents_cte(s, seed=seed + s, lo=s * d_sub, d_sub=d_sub,
-                          K=K, n_iter=n_iter_pq)
-        for s in range(m))
-    encodes = "\nUNION ALL\n".join(f"""
-  SELECT vec_id, {s} AS sub, list_indexof(sc, list_max(sc)) - 1 AS code
-  FROM (SELECT vec_id,
-               list_transform(range(1, {K + 1}),
-                              j -> list_dot_product(v, cl[j]) / cnl[j]) AS sc
-        FROM q{s}corp,
-             (SELECT list(c ORDER BY cid) AS cl,
-                     list(sqrt(list_dot_product(c, c)) ORDER BY cid) AS cnl
-              FROM cents{s}))""" for s in range(m))
-    partials = "\nUNION ALL\n".join(f"""
-  SELECT query_id, qn, {s} AS sub, cid AS code,
-         list_dot_product(qv[{s * d_sub + 1}:{(s + 1) * d_sub}], c)
-           AS partial,
-         cn * cn AS cn_sq
-  FROM q, cents{s}""" for s in range(m))
+    """Composes _ivf_trained_cents_cte (coarse) + _pq_codebook_ctes over
+    ONE corpus CTE carrying both column spellings (v/vn for the coarse
+    chain, fv for the PQ chains), then restricts the pq_topk ADC to
+    probed coarse lists before the refine cut."""
     return f"""
 WITH corpus AS (
   SELECT vec_id, embedding::DOUBLE[] AS v, embedding::DOUBLE[] AS fv,
@@ -1030,16 +973,8 @@ WITH corpus AS (
            AS fn
   FROM embeddings),
 {_ivf_trained_cents_cte(n_centroids=n_coarse, with_corpus=False)},
-{chains},
-clist AS (SELECT list(c ORDER BY cid) AS cl, list(cn ORDER BY cid) AS cnl
-          FROM cents),
-assigned AS (
-  SELECT vec_id, list_indexof(sc, list_max(sc)) AS list_id
-  FROM (SELECT vec_id,
-               list_transform(range(1, {n_coarse + 1}),
-                              j -> list_dot_product(v, cl[j]) / cnl[j]) AS sc
-        FROM corpus, clist)),
-codes AS ({encodes}),
+{_pq_codebook_ctes(dim=dim, m=m, K=K, n_iter=n_iter_pq, seed=seed)},
+{_ivf_assigned_ctes(n_coarse)},
 q AS (SELECT vec_id AS query_id, fv AS qv, fn AS qn FROM corpus
       WHERE vec_id < 10),
 qscore AS (
@@ -1052,7 +987,7 @@ probes AS (
                                      ORDER BY cs DESC, cid ASC) AS pr
         FROM qscore)
   WHERE pr <= {nprobe}),
-parts AS ({partials}),
+{_pq_parts_cte(dim=dim, m=m)},
 adc AS (
   SELECT p.query_id, p.qn, cd.vec_id,
          round(list_sum(list(partial ORDER BY cd.sub))
@@ -1099,14 +1034,7 @@ def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _semdedup_oracle(eps: float = 0.3) -> str:
     return f"""
 WITH {_ivf_trained_cents_cte()},
-clist AS (SELECT list(c ORDER BY cid) AS cl, list(cn ORDER BY cid) AS cnl
-          FROM cents),
-assigned AS (
-  SELECT vec_id, v, vn, list_indexof(sc, list_max(sc)) AS list_id
-  FROM (SELECT vec_id, v, vn,
-               list_transform(range(1, 17),
-                              j -> list_dot_product(v, cl[j]) / cnl[j]) AS sc
-        FROM corpus, clist)),
+{_ivf_assigned_ctes()},
 rm AS (
   SELECT DISTINCT b.vec_id
   FROM assigned a JOIN assigned b
@@ -1426,7 +1354,7 @@ def _q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.dsir_scores(_docs(spark, sf_dir), F.col("lang") == "de")
 
 
-_DSIR_SELECT_ORACLE = r"""
+_DSIR_SELECT_ORACLE = rf"""
 WITH w AS (
   SELECT doc_id, lang = 'de' AS tgt,
          string_split_regex(lower(trim(text)), '\s+') AS ws
@@ -1434,10 +1362,7 @@ WITH w AS (
 t AS (SELECT doc_id, tgt, unnest(ws) AS word FROM w),
 b AS (
   SELECT doc_id, tgt,
-         list_reduce(list_prepend(CAST(0 AS BIGINT),
-           list_transform(range(1, length(word) + 1),
-                          i -> CAST(ascii(substr(word, i, 1)) AS BIGINT))),
-           (acc, c) -> (acc * 31 + c) % 2147483647) % 1024 AS bucket
+         {poly31_sql("word")} % 1024 AS bucket
   FROM t),
 lam AS (
   SELECT bucket,
@@ -1613,15 +1538,10 @@ def _hll_oracle(src_cte: str, p: int, group: str = "") -> str:
     sel_g = f"{group}, " if group else ""
     gby_r = f"GROUP BY {group}, bucket" if group else "GROUP BY bucket"
     gby_a = f"GROUP BY {group}" if group else ""
-    fmix = sketches.fmix32_sql("h0")
-    poly = ("list_reduce(list_prepend(CAST(0 AS BIGINT), "
-            "list_transform(range(1, length(val) + 1), "
-            "i -> CAST(ascii(substr(val, i, 1)) AS BIGINT))), "
-            "(acc, c) -> (acc * 31 + c) % 2147483647)")
     return f"""
 WITH {src_cte},
-p0 AS (SELECT {sel_g}{poly} AS h0 FROM v),
-hx AS (SELECT {sel_g}{fmix} AS h FROM p0),
+p0 AS (SELECT {sel_g}{poly31_sql("val")} AS h0 FROM v),
+hx AS (SELECT {sel_g}{fmix32_sql("h0")} AS h FROM p0),
 r AS (
   SELECT {sel_g}h % {m} AS bucket,
          max(CASE WHEN (h >> {p}) = 0 THEN {wb1}
@@ -1688,15 +1608,10 @@ def _q_bottomk_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bottomk_cut_sql(src_cte: str, k: int) -> str:
-    poly = ("list_reduce(list_prepend(CAST(0 AS BIGINT), "
-            "list_transform(range(1, length(val) + 1), "
-            "i -> CAST(ascii(substr(val, i, 1)) AS BIGINT))), "
-            "(acc, c) -> (acc * 31 + c) % 2147483647)")
-    fmix = sketches.fmix32_sql("h0")
     return f"""{src_cte},
 d AS (SELECT DISTINCT val FROM v),
-p0 AS (SELECT val, {poly} AS h0 FROM d),
-hx AS (SELECT val, {fmix} AS hv FROM p0),
+p0 AS (SELECT val, {poly31_sql("val")} AS h0 FROM d),
+hx AS (SELECT val, {fmix32_sql("h0")} AS hv FROM p0),
 cut AS (SELECT val, hv FROM hx ORDER BY hv ASC, val ASC LIMIT {k})"""
 
 
@@ -1731,8 +1646,8 @@ def _bottomk_per_lang_oracle() -> str:
     return f"""
 WITH d AS (SELECT DISTINCT lang, CAST(doc_id AS VARCHAR) AS val
            FROM documents),
-p0 AS (SELECT lang, val, {_poly31_sql('val')} AS h0 FROM d),
-hx AS (SELECT lang, val, {sketches.fmix32_sql('h0')} AS hv FROM p0),
+p0 AS (SELECT lang, val, {poly31_sql('val')} AS h0 FROM d),
+hx AS (SELECT lang, val, {fmix32_sql('h0')} AS hv FROM p0),
 r AS (SELECT lang, val, hv,
       CAST(row_number() OVER (PARTITION BY lang
            ORDER BY hv ASC, val ASC) AS INT) AS rank
@@ -1764,36 +1679,23 @@ def _q_cms_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sketches.cms_estimate(table, top, "ngram", depth=4, width=512)
 
 
-def _poly31_sql(col: str) -> str:
-    return ("list_reduce(list_prepend(CAST(0 AS BIGINT), "
-            f"list_transform(range(1, length({col}) + 1), "
-            f"i -> CAST(ascii(substr({col}, i, 1)) AS BIGINT))), "
-            "(acc, c) -> (acc * 31 + c) % 2147483647)")
-
-
-def _cms_salt_sql(h: str, row: str) -> str:
-    """(a_row * h + b_row) mod P — dedup._salted_poly's universal family."""
-    return (f"((((2 * {row} + 1) * 2654435761) % 2147483647) * {h} "
-            f"+ (({row} * 40503 + 12345) % 2147483647)) % 2147483647")
-
-
 _CMS_TRIGRAMS_ORACLE = f"""
 WITH {_HLL_TRIGRAM_SRC},
 c AS (SELECT val, count(*) AS cnt FROM v GROUP BY val),
 top AS (SELECT val AS ngram, cnt AS true_cnt FROM c
         ORDER BY cnt DESC, val ASC LIMIT 20),
-p0 AS (SELECT {_poly31_sql('val')} AS h0 FROM v),
+p0 AS (SELECT {poly31_sql('val')} AS h0 FROM v),
 r0 AS (SELECT h0, unnest(range(0, 4)) AS row FROM p0),
-s0 AS (SELECT row, {_cms_salt_sql('h0', 'row')} AS h1 FROM r0),
-t AS (SELECT row, {sketches.fmix32_sql('h1')} % 512 AS bucket,
+s0 AS (SELECT row, {salted_poly_sql('h0', 'row')} AS h1 FROM r0),
+t AS (SELECT row, {fmix32_sql('h1')} % 512 AS bucket,
              count(*) AS cnt
       FROM s0 GROUP BY row, bucket),
-q0 AS (SELECT ngram, true_cnt, {_poly31_sql('ngram')} AS h0 FROM top),
+q0 AS (SELECT ngram, true_cnt, {poly31_sql('ngram')} AS h0 FROM top),
 q1 AS (SELECT ngram, true_cnt, h0, unnest(range(0, 4)) AS row FROM q0),
 q2 AS (SELECT ngram, true_cnt, row,
-              {_cms_salt_sql('h0', 'row')} AS h1 FROM q1),
+              {salted_poly_sql('h0', 'row')} AS h1 FROM q1),
 q3 AS (SELECT ngram, true_cnt, row,
-              {sketches.fmix32_sql('h1')} % 512 AS bucket FROM q2)
+              {fmix32_sql('h1')} % 512 AS bucket FROM q2)
 SELECT ngram, CAST(true_cnt AS BIGINT) AS true_cnt,
        CAST(min(coalesce(t.cnt, 0)) AS BIGINT) AS est_cnt
 FROM q3 LEFT JOIN t USING (row, bucket)
@@ -1895,17 +1797,14 @@ def _q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.perplexity_buckets(_docs(spark, sf_dir))
 
 
-_PERPLEXITY_BUCKETS_ORACLE = r"""
+_PERPLEXITY_BUCKETS_ORACLE = rf"""
 WITH w AS (
   SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
   FROM documents),
 t AS (SELECT doc_id, unnest(ws) AS word FROM w),
 b AS (
   SELECT doc_id,
-         list_reduce(list_prepend(CAST(0 AS BIGINT),
-           list_transform(range(1, length(word) + 1),
-                          i -> CAST(ascii(substr(word, i, 1)) AS BIGINT))),
-           (acc, c) -> (acc * 31 + c) % 2147483647) % 1024 AS bucket
+         {poly31_sql("word")} % 1024 AS bucket
   FROM t),
 cnt AS (SELECT bucket, count(*) AS c FROM b GROUP BY bucket),
 tot AS (SELECT count(*) AS R FROM b),
@@ -1933,17 +1832,14 @@ def _q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.quality_classifier(_docs(spark, sf_dir))
 
 
-_QUALITY_CLASSIFIER_ORACLE = r"""
+_QUALITY_CLASSIFIER_ORACLE = rf"""
 WITH w AS (
   SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ws
   FROM documents),
 t AS (SELECT doc_id, unnest(ws) AS word FROM w),
 h AS (
   SELECT doc_id,
-         list_reduce(list_prepend(CAST(0 AS BIGINT),
-           list_transform(range(1, length(word) + 1),
-                          i -> CAST(ascii(substr(word, i, 1)) AS BIGINT))),
-           (acc, c) -> (acc * 31 + c) % 2147483647) % 4096 AS bucket
+         {poly31_sql("word")} % 4096 AS bucket
   FROM t),
 s AS (
   SELECT doc_id, count(*) AS n_words,
@@ -1983,10 +1879,7 @@ def _perceptron_trained_oracle(n_buckets: int = 4096,
     misclassified), then per round t: score with w(t-1), take the
     y*score <= 0 set, fold the per-bucket delta, full-outer-merge into
     w(t). Mirrors text.train_quality_classifier int-for-int."""
-    poly = ("list_reduce(list_prepend(CAST(0 AS BIGINT), "
-            "list_transform(range(1, length(word) + 1), "
-            "i -> CAST(ascii(substr(word, i, 1)) AS BIGINT))), "
-            f"(acc, c) -> (acc * 31 + c) % 2147483647) % {n_buckets}")
+    poly = f"{poly31_sql('word')} % {n_buckets}"
     ctes = [
         ("d", r"SELECT doc_id, string_split_regex(lower(trim(text)), "
               r"'\s+') AS ws FROM documents"),
@@ -2589,7 +2482,7 @@ def _q_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curate(_docs(spark, sf_dir))
 
 
-_CURATE_ORACLE = """
+_CURATE_ORACLE = f"""
 WITH fp AS (
   SELECT doc_id, text,
          md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS f
@@ -2598,17 +2491,7 @@ WITH fp AS (
 keep1 AS (SELECT f, min(doc_id) AS doc_id FROM fp GROUP BY f),
 uniq AS (SELECT fp.doc_id, fp.text FROM fp JOIN keep1
          ON fp.f = keep1.f AND fp.doc_id = keep1.doc_id),
-w AS (SELECT doc_id, text,
-             string_split_regex(lower(trim(text)), '\\s+') AS lws FROM uniq),
-sh AS (
-  SELECT doc_id, text,
-    list_distinct(CASE WHEN len(lws) <= 2
-      THEN [array_to_string(lws, ' ')]
-      ELSE list_transform(range(1, len(lws) - 1),
-                          i -> lws[i] || ' ' || lws[i+1] || ' ' || lws[i+2])
-      END) AS shingles
-  FROM w
-),
+{_shingle_ctes("uniq")},
 ex AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS sg FROM sh),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.nsh AS na, b.nsh AS nb,
@@ -2633,11 +2516,7 @@ q AS (
                / len(string_split_regex(trim(text), '\\s+')), 6) AS stopword_ratio,
          round(length(text) * 1.0
                / len(string_split_regex(trim(text), '\\s+')), 6) AS avg_word_len,
-         CAST(list_sum(list_transform(string_split_regex(trim(text), '\\s+'),
-                x -> greatest(1, CAST(ceil(length(x) / 4.0) AS BIGINT))))
-              + length(text)
-              - length(regexp_replace(text, '[.,!?;:]', '', 'g'))
-            AS BIGINT) AS est_bpe_tokens
+         {_EST_TOKENS_SQL} AS est_bpe_tokens
   FROM pruned
 )
 SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
@@ -3079,24 +2958,14 @@ def _q_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CORPUS_SPLIT_ORACLE = """
-WITH h AS (
-  -- overflow-safe Knuth hash, mirroring curate.split_assign: 16-bit-halves
-  -- multiply mod 2^32 (max intermediate < 2^49 — never wraps int64)
-  SELECT doc_id,
-         ((doc_id % 4294967296 + 4294967296) % 4294967296 + 1)
-           % 4294967296 AS x
-  FROM documents),
-s AS (
+_CORPUS_SPLIT_ORACLE = f"""
+WITH s AS (
   SELECT doc_id,
          CASE WHEN b < 9800 THEN 'train'
               WHEN b < 9900 THEN 'val'
               ELSE 'test' END AS split
-  FROM (SELECT doc_id,
-               ((x % 65536) * 2654435761
-                + ((x // 65536) * 2654435761) % 4294967296 * 65536)
-               % 4294967296 % 10000 AS b
-        FROM h))
+  FROM (SELECT doc_id, {hash_bucket_sql("doc_id", 1)} AS b
+        FROM documents))
 SELECT split, count(*) AS n_docs, min(doc_id) AS min_doc,
        max(doc_id) AS max_doc
 FROM s GROUP BY split
@@ -3116,18 +2985,10 @@ def _q_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "shard", "pos")
 
 
-_SHUFFLE_SHARDS_ORACLE = """
-WITH h AS (
-  SELECT doc_id,
-         ((doc_id % 4294967296 + 4294967296) % 4294967296 + 5)
-           % 4294967296 AS x
-  FROM documents),
-k AS (
-  SELECT doc_id,
-         ((x % 65536) * 2654435761
-          + ((x // 65536) * 2654435761) % 4294967296 * 65536)
-         % 4294967296 AS key
-  FROM h)
+_SHUFFLE_SHARDS_ORACLE = f"""
+WITH k AS (
+  SELECT doc_id, {hash_bucket_sql("doc_id", 5, 1 << 32)} AS key
+  FROM documents)
 SELECT doc_id, CAST(key % 8 AS INT) AS shard,
        CAST(row_number() OVER (PARTITION BY key % 8
                                ORDER BY key, doc_id) - 1 AS BIGINT) AS pos
@@ -3152,18 +3013,10 @@ def _q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STRATIFIED_SAMPLE_ORACLE = """
-WITH h AS (
-  SELECT doc_id, lang,
-         ((doc_id % 4294967296 + 4294967296) % 4294967296 + 7)
-           % 4294967296 AS x
+_STRATIFIED_SAMPLE_ORACLE = f"""
+WITH b AS (
+  SELECT doc_id, lang, {hash_bucket_sql("doc_id", 7)} AS bucket
   FROM documents),
-b AS (
-  SELECT doc_id, lang,
-         ((x % 65536) * 2654435761
-          + ((x // 65536) * 2654435761) % 4294967296 * 65536)
-         % 4294967296 % 10000 AS bucket
-  FROM h),
 kept AS (
   SELECT doc_id, lang FROM b
   WHERE bucket < CASE lang WHEN 'en' THEN 2500 WHEN 'de' THEN 10000
@@ -3207,14 +3060,10 @@ def _q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         5000, default_weight=100)
 
 
-_MIXTURE_SAMPLE_ORACLE = r"""
+_MIXTURE_SAMPLE_ORACLE = f"""
 WITH base AS (
   SELECT doc_id, source,
-         CAST(list_sum(list_transform(string_split_regex(trim(text), '\s+'),
-                x -> greatest(1, CAST(ceil(length(x) / 4.0) AS BIGINT))))
-              + length(text)
-              - length(regexp_replace(text, '[.,!?;:]', '', 'g'))
-            AS BIGINT) AS n_tokens
+         {_EST_TOKENS_SQL} AS n_tokens
   FROM documents),
 tot AS (SELECT source, sum(n_tokens) AS tot FROM base GROUP BY source),
 r AS (
@@ -3224,17 +3073,9 @@ r AS (
                 WHEN 'src2' THEN 1000 ELSE 100 END)) // 10000)) // tot)
            AS BIGINT) AS rate
   FROM tot),
-h AS (
-  SELECT doc_id,
-         ((doc_id % 4294967296 + 4294967296) % 4294967296 + 11)
-           % 4294967296 AS x
-  FROM documents),
 b AS (
-  SELECT doc_id,
-         ((x % 65536) * 2654435761
-          + ((x // 65536) * 2654435761) % 4294967296 * 65536)
-         % 4294967296 % 10000 AS bucket
-  FROM h)
+  SELECT doc_id, {hash_bucket_sql("doc_id", 11)} AS bucket
+  FROM documents)
 SELECT base.doc_id, base.source, base.n_tokens, r.rate
 FROM base JOIN r USING (source) JOIN b ON b.doc_id = base.doc_id
 WHERE b.bucket < r.rate
@@ -3468,20 +3309,8 @@ def _twilight_oracle() -> str:
     )
 
 
-_NGRAM_JACCARD_ORACLE = """
-WITH w AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS ws
-  FROM documents
-),
-sh AS (
-  SELECT doc_id,
-    list_distinct(CASE WHEN len(ws) <= 2
-      THEN [array_to_string(ws, ' ')]
-      ELSE list_transform(range(1, len(ws) - 1),
-                          i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])
-      END) AS shingles
-  FROM w
-),
+_NGRAM_JACCARD_ORACLE = f"""
+WITH {_shingle_ctes("documents")},
 ex AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS sg FROM sh),
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.nsh AS na, b.nsh AS nb,
@@ -3563,51 +3392,20 @@ def _minhash_oracle(num_hashes: int = 32, bands: int = 8,
     hash_fn='poly31' — pure integer arithmetic, bit-identical in DuckDB.
     ``source`` names the (doc_id, text) relation — a table or an outer
     CTE (DuckDB scopes outer CTEs into nested WITH bodies)."""
-    P = 2147483647
     salted_mins = ", ".join(
-        f"min(({(2 * i + 1) * 2654435761 % P} * h + "
-        f"{(i * 40503 + 12345) % P}) % {P}) AS h{i}"
-        for i in range(num_hashes)
-    )
-    band_exprs = []
-    for b in range(bands):
-        acc = f"CAST({b} AS BIGINT)"
-        for r in range(rows_per_band):
-            acc = f"((({acc}) * 31 + h{b * rows_per_band + r} % {P}) % {P})"
-        band_exprs.append(f"{acc} AS band{b}")
-    bands_sql = ", ".join(band_exprs)
+        f"min({salted_poly_sql('h', i)}) AS h{i}" for i in range(num_hashes))
+    bands_sql = ", ".join(
+        poly31_band_sql([f"h{b * rows_per_band + r}"
+                         for r in range(rows_per_band)], b) + f" AS band{b}"
+        for b in range(bands))
     stacked = " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band, band{b} AS bucket FROM banded"
         for b in range(bands)
     )
     return f"""
-WITH w AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS ws
-  FROM {source}
-),
-sh AS (
-  SELECT doc_id,
-    list_distinct(CASE WHEN len(ws) <= 2
-      THEN [array_to_string(ws, ' ')]
-      ELSE list_transform(range(1, len(ws) - 1),
-                          i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])
-      END) AS shingles
-  FROM w
-),
+WITH {_shingle_ctes(source)},
 ex AS (SELECT doc_id, unnest(shingles) AS sg FROM sh),
--- length() = CHAR count: Spark's split(col,'') iterates chars and both
--- engines' ascii() return codepoints, so the polynomial matches for
--- non-ASCII too (strlen counts BYTES and would over-run substr with
--- ascii('')=0 tail terms)
-hashed AS (
-  SELECT doc_id,
-    list_reduce(
-      list_prepend(CAST(0 AS BIGINT),
-        list_transform(range(1, length(sg) + 1),
-                       i -> CAST(ascii(substr(sg, i, 1)) AS BIGINT))),
-      (acc, c) -> (acc * 31 + c) % {P}) AS h
-  FROM ex
-),
+hashed AS (SELECT doc_id, {poly31_sql("sg")} AS h FROM ex),
 sigs AS (SELECT doc_id, {salted_mins} FROM hashed GROUP BY doc_id),
 banded AS (SELECT doc_id, {bands_sql} FROM sigs),
 stacked AS ({stacked})
@@ -3620,14 +3418,6 @@ FROM stacked a JOIN stacked b
 def _simhash_oracle() -> str:
     """Mirror of dedup.simhash(hash_fn='poly31'): 62-bit fingerprint from
     two polynomial word hashes, sign-aggregated per bit."""
-    P = 2147483647
-
-    def poly(base: int) -> str:
-        return (f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-                f"list_transform(range(1, length(w) + 1), "
-                f"i -> CAST(ascii(substr(w, i, 1)) AS BIGINT))), "
-                f"(acc, c) -> (acc * {base} + c) % {P})")
-
     sums = ", ".join(
         f"sum(CASE WHEN ({'h1' if i < 31 else 'h2'} & {1 << (i % 31)}) <> 0 "
         f"THEN 1 ELSE -1 END) AS s{i}"
@@ -3644,7 +3434,8 @@ WITH ex AS (
   FROM documents
 ),
 hashed AS (
-  SELECT doc_id, {poly(31)} AS h1, {poly(131)} AS h2 FROM ex
+  SELECT doc_id, {poly31_sql("w")} AS h1, {poly31_sql("w", 131)} AS h2
+  FROM ex
 ),
 summed AS (SELECT doc_id, {sums} FROM hashed GROUP BY doc_id)
 SELECT doc_id, ({fingerprint}) AS simhash FROM summed
@@ -3685,13 +3476,15 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
 """
 
 
-#: shared recursive-CTE prelude: n-gram Jaccard pairs -> undirected edges ->
-#: min-reachable component per node -> cluster id per document (singletons
-#: keep their own id). The fixpoint ("component = min doc_id reachable") is
-#: exactly what dedup.connected_components converges to, independent of its
-#: iteration schedule.
-_DUP_CLUSTERS_CTE = f"""
-WITH RECURSIVE pairs AS ({_NGRAM_JACCARD_ORACLE}),
+def _dup_clusters_cte(pairs_sql: str) -> str:
+    """Recursive-CTE prelude: ``pairs(doc_a, doc_b)`` -> undirected edges
+    -> min-reachable component per node -> ``clusters(doc_id,
+    cluster_id)`` per document (singletons keep their own id). The
+    fixpoint ("component = min doc_id reachable") is exactly what
+    dedup.connected_components converges to, independent of its
+    iteration schedule."""
+    return f"""
+WITH RECURSIVE pairs AS ({pairs_sql}),
 und AS (
   SELECT doc_a AS u, doc_b AS v FROM pairs
   UNION
@@ -3709,11 +3502,10 @@ clusters AS (
 )
 """
 
-_DUP_CLUSTERS_ORACLE = _DUP_CLUSTERS_CTE + """
-SELECT doc_id, cluster_id FROM clusters
-"""
 
-_DEDUP_CANONICAL_ORACLE = _DUP_CLUSTERS_CTE + """
+#: dedup.canonical_docs over ``clusters``: one kept doc per cluster
+#: (longest text, doc_id tiebreak) and the cluster's size.
+_CANONICAL_SELECT = """
 , ranked AS (
   SELECT c.cluster_id, c.doc_id,
          row_number() OVER (PARTITION BY c.cluster_id
@@ -3725,10 +3517,17 @@ SELECT cluster_id, doc_id AS keep_doc_id, CAST(n_docs AS BIGINT) AS n_docs
 FROM ranked WHERE rn = 1
 """
 
+_DUP_CLUSTERS_ORACLE = _dup_clusters_cte(_NGRAM_JACCARD_ORACLE) + """
+SELECT doc_id, cluster_id FROM clusters
+"""
+_DEDUP_CANONICAL_ORACLE = (_dup_clusters_cte(_NGRAM_JACCARD_ORACLE)
+                           + _CANONICAL_SELECT)
 
-def _plane_literals(n_planes: int = 6, dim: int = 64, seed: int = 42) -> tuple[str, str]:
-    """(plane array literals, bucket-id expression) mirroring
-    similarity.hyperplane_buckets' deterministic seeded plane matrix."""
+
+def _bucketed_ctes(n_planes: int = 6, dim: int = 64, seed: int = 42) -> str:
+    """``p``, ``e`` and ``bucketed(vec_id, v, bucket)``: each embedding's
+    hyperplane bucket, mirroring similarity.hyperplane_buckets'
+    deterministic seeded plane matrix."""
     import numpy as np
 
     rng = np.random.default_rng(seed)
@@ -3741,17 +3540,16 @@ def _plane_literals(n_planes: int = 6, dim: int = 64, seed: int = 42) -> tuple[s
         f"THEN {1 << i} ELSE 0 END)"
         for i in range(n_planes)
     )
-    return plane_lits, bucket_terms
+    return f"""p AS (SELECT [{plane_lits}]::DOUBLE[][] AS planes),
+e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+bucketed AS (
+  SELECT vec_id, v, CAST(({bucket_terms}) AS BIGINT) AS bucket FROM e, p
+)"""
 
 
 def _near_dup_bucketed_oracle() -> str:
-    plane_lits, bucket_terms = _plane_literals()
     return f"""
-WITH p AS (SELECT [{plane_lits}]::DOUBLE[][] AS planes),
-e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-bucketed AS (
-  SELECT vec_id, v, ({bucket_terms}) AS bucket FROM e, p
-)
+WITH {_bucketed_ctes()}
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        round(list_dot_product(a.v, b.v)
              / (sqrt(list_dot_product(a.v, a.v))
@@ -3765,16 +3563,11 @@ WHERE round(list_dot_product(a.v, b.v)
 
 
 def _near_dup_multiprobe_oracle(multiprobe: int = 2) -> str:
-    plane_lits, bucket_terms = _plane_literals()
     probe_list = ", ".join(["bucket"]
                            + [f"xor(bucket, {1 << i})"
                               for i in range(multiprobe)])
     return f"""
-WITH p AS (SELECT [{plane_lits}]::DOUBLE[][] AS planes),
-e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-bucketed AS (
-  SELECT vec_id, v, ({bucket_terms}) AS bucket FROM e, p
-),
+WITH {_bucketed_ctes()},
 probed AS (
   SELECT vec_id, v, unnest([{probe_list}]) AS pb FROM bucketed
 )
@@ -3791,16 +3584,11 @@ WHERE round(list_dot_product(a.v, b.v)
 
 
 def _ann_multiprobe_oracle(multiprobe: int = 3) -> str:
-    plane_lits, bucket_terms = _plane_literals()
     probe_list = ", ".join(["bucket"]
                            + [f"xor(bucket, {1 << i})"
                               for i in range(multiprobe)])
     return f"""
-WITH p AS (SELECT [{plane_lits}]::DOUBLE[][] AS planes),
-e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-bucketed AS (
-  SELECT vec_id, v, CAST(({bucket_terms}) AS BIGINT) AS bucket FROM e, p
-),
+WITH {_bucketed_ctes()},
 q AS (
   SELECT vec_id AS query_id, v AS qvec,
          unnest([{probe_list}]) AS bucket
@@ -3823,13 +3611,8 @@ SELECT query_id, rank, neighbor_id, score FROM ranked WHERE rank <= 3
 
 
 def _ann_oracle() -> str:
-    plane_lits, bucket_terms = _plane_literals()
     return f"""
-WITH p AS (SELECT [{plane_lits}]::DOUBLE[][] AS planes),
-e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-bucketed AS (
-  SELECT vec_id, v, ({bucket_terms}) AS bucket FROM e, p
-),
+WITH {_bucketed_ctes()},
 q AS (SELECT vec_id AS query_id, v AS qvec, bucket FROM bucketed WHERE vec_id < 10),
 scored AS (
   SELECT q.query_id, c.vec_id AS neighbor_id,
@@ -4013,18 +3796,18 @@ v AS (
   SELECT (usec // 3600) * 3600 AS ws, CAST(u AS VARCHAR) AS val
   FROM v0
   WHERE (usec // 3600) * 3600 + 3600 <= (SELECT max(usec) FROM v0) - 3600),
-p0 AS (SELECT ws, {_poly31_sql('val')} AS h0 FROM v),
+p0 AS (SELECT ws, {poly31_sql('val')} AS h0 FROM v),
 r0 AS (SELECT ws, h0, unnest(range(0, 4)) AS row FROM p0),
-s0 AS (SELECT ws, row, {_cms_salt_sql('h0', 'row')} AS h1 FROM r0),
-t AS (SELECT ws, row, {sketches.fmix32_sql('h1')} % 64 AS bucket,
+s0 AS (SELECT ws, row, {salted_poly_sql('h0', 'row')} AS h1 FROM r0),
+t AS (SELECT ws, row, {fmix32_sql('h1')} % 64 AS bucket,
              count(*) AS cnt
       FROM s0 GROUP BY ws, row, bucket),
 q0 AS (SELECT unnest(range(0, 10)) AS "user"),
-q1 AS (SELECT "user", {_poly31_sql('CAST("user" AS VARCHAR)')} AS h0
+q1 AS (SELECT "user", {poly31_sql('CAST("user" AS VARCHAR)')} AS h0
        FROM q0),
 q2 AS (SELECT "user", h0, unnest(range(0, 4)) AS row FROM q1),
-q3 AS (SELECT "user", row, {_cms_salt_sql('h0', 'row')} AS h1 FROM q2),
-q4 AS (SELECT "user", row, {sketches.fmix32_sql('h1')} % 64 AS bucket
+q3 AS (SELECT "user", row, {salted_poly_sql('h0', 'row')} AS h1 FROM q2),
+q4 AS (SELECT "user", row, {fmix32_sql('h1')} % 64 AS bucket
        FROM q3),
 wsd AS (SELECT DISTINCT ws FROM t)
 SELECT wsd.ws, CAST("user" AS BIGINT) AS "user",
@@ -4647,7 +4430,7 @@ def _q_stream_curate_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "est_bpe_tokens")
 
 
-_STREAM_CURATE_ORACLE = """
+_STREAM_CURATE_ORACLE = f"""
 WITH q AS (
   SELECT doc_id, lang,
          length(text) AS n_chars,
@@ -4659,20 +4442,9 @@ WITH q AS (
          round(length(text) * 1.0
                / len(string_split_regex(trim(text), '\\s+')), 6)
            AS avg_word_len,
-         CAST(list_sum(list_transform(string_split_regex(trim(text), '\\s+'),
-                x -> greatest(1, CAST(ceil(length(x) / 4.0) AS BIGINT))))
-              + length(text)
-              - length(regexp_replace(text, '[.,!?;:]', '', 'g'))
-            AS BIGINT) AS est_bpe_tokens
+         {_EST_TOKENS_SQL} AS est_bpe_tokens
   FROM documents),
-b AS (
-  SELECT *,
-         (((((doc_id % 4294967296 + 4294967296) % 4294967296 + 7)
-            % 4294967296) % 65536) * 2654435761
-          + ((((doc_id % 4294967296 + 4294967296) % 4294967296 + 7)
-              % 4294967296) // 65536) * 2654435761 % 4294967296 * 65536)
-         % 4294967296 % 10000 AS bucket
-  FROM q)
+b AS (SELECT *, {hash_bucket_sql("doc_id", 7)} AS bucket FROM q)
 SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars,
        CAST(n_words AS BIGINT) AS n_words, stopword_ratio, est_bpe_tokens
 FROM b
@@ -5075,17 +4847,7 @@ uni AS (
   UNION ALL
   SELECT doc_id * 2 + 1 AS doc_id, text FROM probe),
 cand AS ({cand}),
-w AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS ws
-  FROM uni),
-sh AS (
-  SELECT doc_id,
-    list_distinct(CASE WHEN len(ws) <= 2
-      THEN [array_to_string(ws, ' ')]
-      ELSE list_transform(range(1, len(ws) - 1),
-                          i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])
-      END) AS shingles
-  FROM w),
+{_shingle_ctes("uni")},
 ex AS (SELECT doc_id, len(shingles) AS nsh, unnest(shingles) AS sg
        FROM sh),
 inter AS (

@@ -123,11 +123,3 @@ def decode_records(tokens: np.ndarray) -> dict[str, np.ndarray]:
         "temperature": t[:, 8] / SCALE_MILLI,
         "flags": t[:, 9].astype(np.int32),
     }
-
-
-def flatten_sequences(records: np.ndarray, seq_lengths: np.ndarray) -> list[np.ndarray]:
-    """Pack an (n, 10) record matrix into per-sequence flat token arrays."""
-    flat = records.reshape(-1)
-    bounds = np.cumsum(seq_lengths * TOKENS_PER_RECORD)
-    return np.split(flat, bounds[:-1])
-

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import dedup, text
+from .hashing import (check_hash_fn, fmix32, fmix32_sql, hash_bucket, id32,
+                      id32_sql)
 
 
 def curate(
@@ -58,6 +60,7 @@ def curate(
       ``hash_fn='poly31'`` keeps the whole composition SQL-oracle
       checkable.
     """
+    check_hash_fn(hash_fn)
     # 1. exact dedup
     norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
     with_fp = df.withColumn("__fp", F.md5(norm))
@@ -94,34 +97,6 @@ def curate(
         .select("doc_id", "n_chars", "n_words", "est_bpe_tokens",
                 "stopword_ratio")
     )
-
-
-_KNUTH = 2654435761  # Knuth multiplicative hash constant (2^32 / phi)
-
-
-def hash_bucket(id_col, seed: int = 1, denom: int = 10000):
-    """Deterministic bucket in [0, denom) from an int64 id.
-
-    Overflow-safe to the full int64 id range: the 32x32-bit multiply by the
-    Knuth constant is split into 16-bit halves mod 2^32 (max intermediate
-    < 2^49) and both reductions use pmod, so buckets never go negative —
-    the naive (id + seed) * K wraps past id ~3.47e9 (and throws under
-    spark.sql.ansi.enabled), silently skewing assignment. For smaller ids
-    the buckets are bit-identical to the naive form (the oracle SQL mirrors
-    this construction). Pure JVM integer arithmetic, engine-portable.
-    """
-    x = F.pmod(F.pmod(id_col.cast("long"), F.lit(2**32))
-               + F.lit(int(seed)), F.lit(2**32))
-    lo = F.pmod(x, F.lit(2**16))
-    # (x - lo) is a multiple of 2^16 below 2^32: the double division is
-    # exact (< 2^53), so the cast back to long is lossless
-    hi = ((x - lo) / F.lit(2**16)).cast("long")
-    prod = F.pmod(
-        lo * F.lit(_KNUTH)
-        + F.pmod(hi * F.lit(_KNUTH), F.lit(2**32)) * F.lit(2**16),
-        F.lit(2**32),
-    )
-    return F.pmod(prod, F.lit(denom))
 
 
 def stratified_sample(
@@ -399,11 +374,7 @@ def priority_expr(id_col, weight_long, *, seed: int = 1):
     windowed sampler (streaming/stateful.windowed_priority_sample), so
     both select the identical set. ``weight_long`` must be a positive
     int64 column (caller filters non-positive weights)."""
-    from .sketches import _fmix32
-
-    x = F.pmod(F.pmod(id_col.cast("long"), F.lit(2**32))
-               + F.lit(int(seed)), F.lit(2**32))
-    return ((_fmix32(x).cast("double") + F.lit(1.0))
+    return ((fmix32(id32(id_col, seed)).cast("double") + F.lit(1.0))
             / weight_long.cast("double"))
 
 
@@ -424,7 +395,7 @@ def priority_sample(
     for ``rand()``-keyed weighted reservoirs: re-running the job (or a
     task retry at 100 TB) selects the SAME sample.
 
-    The hash is the fmix32-avalanched id (sketches._fmix32 — the
+    The hash is the fmix32-avalanched id (hashing.fmix32 — the
     CLAUDE.md rule: bare arithmetic on similar ids clusters), +1 so the
     numerator lies in [1, 2^32]. Both operands are integers < 2^53, so
     the IEEE division is correctly rounded and IDENTICAL in any engine —
@@ -466,10 +437,7 @@ def priority_sample_sql(
     """DuckDB expression for the full-precision priority — generated
     from the same constants as :func:`priority_sample` (the fmix32_sql
     discipline) so query and oracle cannot drift."""
-    from .sketches import fmix32_sql
-
-    x = f"((({id_expr}) % 4294967296 + {int(seed)}) % 4294967296)"
-    return (f"((CAST({fmix32_sql(x)} AS DOUBLE) + 1.0) "
+    return (f"((CAST({fmix32_sql(id32_sql(id_expr, seed))} AS DOUBLE) + 1.0) "
             f"/ CAST({weight_expr} AS DOUBLE))")
 
 

@@ -8,15 +8,17 @@ Scale design (the 100 TB story):
   buckets; candidate pairs only within a bucket (the classic band trick).
 * SimHash — 64-bit sign-aggregated fingerprint; near-dups differ in few bits.
 All JVM-side expressions; the only Python boundary is the VECTORIZED
-poly31 Arrow hash (poly31_hash_arrow — batch numpy Horner, bit-identical
-to the expression fold, never row-at-a-time).
+poly31 Arrow hash (hashing.poly31_hash_arrow — batch numpy Horner, never
+row-at-a-time).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .hashing import (check_hash_fn, poly31_band, poly31_hash_arrow,
+                      salted_poly)
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -182,93 +184,6 @@ def ngram_jaccard_pairs(
     )
 
 
-#: 2^31 - 1 (Mersenne prime) — universal-hash modulus small enough that
-#: (a * h + b) stays inside int64, so the arithmetic is bit-identical in any
-#: engine (the property the DuckDB oracle relies on).
-POLY_P = 2147483647
-
-
-def poly31_hash(col: Column, base: int = 31) -> Column:
-    """Engine-portable string hash: left-fold (acc*base + charcode) mod P.
-
-    Pure integer arithmetic over code points — identical results in Spark
-    and DuckDB SQL, unlike xxhash64 (Spark-only). Used by the *_checkable
-    operator variants; production paths keep xxhash64 (cheaper, 64-bit).
-    """
-    codes = F.transform(F.split(col, ""), lambda c: F.ascii(c).cast("long"))
-    return F.aggregate(
-        codes, F.lit(0).cast("long"),
-        lambda acc, c: (acc * base + c) % POLY_P,
-    )
-
-
-def _poly31_batch(vals, base: int):
-    """Vectorized poly31 fold over a batch of strings (numpy int64).
-
-    Bit-identical to the expression form: left fold (acc*base + codepoint)
-    mod POLY_P — exact integer arithmetic, so vectorization cannot change a
-    single bit. Implemented as a column-at-a-time masked Horner loop over a
-    padded codepoint matrix: O(total_chars) numpy work, no per-row Python.
-    """
-    import numpy as np
-
-    n = len(vals)
-    lens = np.fromiter((len(x) for x in vals), count=n, dtype=np.int64)
-    maxlen = int(lens.max()) if n else 0
-    acc = np.zeros(n, dtype=np.int64)
-    if maxlen == 0:
-        return acc
-    # utf-32-le of the concatenation == concatenation of per-string
-    # codepoint arrays (no BOM); one encode for the whole batch
-    flat = np.frombuffer("".join(vals).encode("utf-32-le"), dtype=np.uint32)
-    padded = np.zeros((n, maxlen), dtype=np.int64)
-    mask = np.arange(maxlen) < lens[:, None]
-    padded[mask] = flat
-    for j in range(maxlen):
-        m = mask[:, j]
-        acc[m] = (acc[m] * base + padded[m, j]) % POLY_P
-    return acc
-
-
-def poly31_hash_arrow(col: Column, base: int = 31) -> Column:
-    """:func:`poly31_hash` computed in ONE vectorized Arrow batch pass.
-
-    The expression form is an interpreted higher-order fold (split per
-    char + per-element lambda eval — the repo's known slow path, CLAUDE.md
-    "interpreted poly31 chains"); this pandas UDF hands whole Arrow
-    batches to the numpy Horner loop (guide §4.2: vectorized native code
-    inside the Python boundary beats interpreted JVM row work). Same
-    integer arithmetic -> bit-identical hashes; pytest locks parity
-    (tests/test_dedup.py::test_poly31_arrow_parity). ASCII fast path: the
-    fold is over codepoints either way, so only the encode differs.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _p31(s: pd.Series) -> pd.Series:
-        import numpy as np
-
-        notnull = s.notna()
-        if notnull.all():
-            return pd.Series(_poly31_batch(s.to_numpy(), base),
-                             index=s.index)
-        out = np.zeros(len(s), dtype=object)
-        out[:] = None
-        vals = s[notnull]
-        if len(vals):
-            out[notnull.to_numpy()] = _poly31_batch(vals.to_numpy(), base)
-        return pd.Series(out, index=s.index)
-
-    return _p31(col)
-
-
-def _salted_poly(h: Column, i: int) -> Column:
-    """Universal-hash family over a base hash: (a_i*h + b_i) mod P."""
-    a = (2 * i + 1) * 2654435761 % POLY_P  # odd multipliers, Knuth constant
-    b = (i * 40503 + 12345) % POLY_P
-    return (F.lit(a) * h + F.lit(b)) % F.lit(POLY_P)
-
-
 def minhash_signatures(
     df: DataFrame, *, num_hashes: int = 32, n: int = 3, text_col: str = "text",
     hash_fn: str = "xxhash64",
@@ -280,15 +195,43 @@ def minhash_signatures(
     keyed by doc_id only). ``hash_fn='poly31'`` switches to the
     engine-portable universal-hash family (SQL-oracle checkable).
     """
+    check_hash_fn(hash_fn)
     ex = shingle_rows(df, n=n, text_col=text_col)
     if hash_fn == "poly31":
         ex = ex.withColumn("__h", poly31_hash_arrow(F.col("shingle")))
-        aggs = [F.min(_salted_poly(F.col("__h"), i)).alias(f"h{i}")
+        aggs = [F.min(salted_poly(F.col("__h"), i)).alias(f"h{i}")
                 for i in range(num_hashes)]
     else:
         aggs = [F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}")
                 for i in range(num_hashes)]
     return ex.groupBy("doc_id").agg(*aggs)
+
+
+def _band_buckets(signatures: DataFrame, bands: int, rows_per_band: int,
+                  hash_fn: str) -> DataFrame:
+    """(doc_id, band, bucket): one row per band, the bucket keyed on the
+    band's ``rows_per_band`` signature values, repartitioned on (band,
+    bucket) for the candidate self-join."""
+    check_hash_fn(hash_fn)
+    band_cols = []
+    for b in range(bands):
+        cols = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
+        key = (poly31_band(cols, b) if hash_fn == "poly31"
+               else F.xxhash64(*cols, F.lit(b)))
+        band_cols.append(key.alias(f"band{b}"))
+    banded = signatures.select("doc_id", *band_cols)
+    # explicit band-keyed partitioning — the simhash_near_dup_pairs
+    # rationale: without it the banded self-join runs on the coalesced
+    # 1-2-partition signature aggregate output
+    _P = signatures.sparkSession.sparkContext.defaultParallelism
+    return banded.select(
+        "doc_id",
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("bucket"))
+            for b in range(bands)
+        ])).alias("bb"),
+    ).select("doc_id", "bb.band", "bb.bucket") \
+     .repartition(_P, "band", "bucket")
 
 
 def lsh_candidate_pairs(
@@ -297,29 +240,7 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Band the signature into ``bands`` buckets; pairs sharing any band
     bucket are candidates. Output distinct (doc_a, doc_b)."""
-    band_cols = []
-    for b in range(bands):
-        cols = [F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-        if hash_fn == "poly31":
-            acc = F.lit(b).cast("long")
-            for c in cols:
-                acc = (acc * 31 + c % F.lit(POLY_P)) % F.lit(POLY_P)
-            band_cols.append(acc.alias(f"band{b}"))
-        else:
-            band_cols.append(F.xxhash64(*cols, F.lit(b)).alias(f"band{b}"))
-    banded = signatures.select("doc_id", *band_cols)
-    # explicit band-keyed partitioning — the simhash_near_dup_pairs
-    # rationale: without it the banded self-join runs on the coalesced
-    # 1-2-partition signature aggregate output
-    _P = signatures.sparkSession.sparkContext.defaultParallelism
-    stacked = banded.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("bucket"))
-            for b in range(bands)
-        ])).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket") \
-     .repartition(_P, "band", "bucket")
+    stacked = _band_buckets(signatures, bands, rows_per_band, hash_fn)
     a, b = stacked.alias("a"), stacked.alias("b")
     return (
         a.join(b, (F.col("a.band") == F.col("b.band"))
@@ -425,6 +346,7 @@ def simhash(df: DataFrame, *, text_col: str = "text",
     def _bit(i: int) -> int:
         return (1 << i) if i < 63 else -(1 << 63)
 
+    check_hash_fn(hash_fn)
     if hash_fn == "poly31":
         n_bits = 62
         ex = (ex.withColumn("h1", poly31_hash_arrow(F.col("w"), 31))
@@ -822,32 +744,10 @@ def cross_corpus_verified_pairs(
     sigs = minhash_signatures(u, num_hashes=num_hashes, n=n,
                               hash_fn=hash_fn)
     # band exactly as lsh_candidate_pairs, but pair across SIDES
-    band_cols = []
-    for b in range(bands):
-        cols = [F.col(f"h{b * rows_per_band + r}")
-                for r in range(rows_per_band)]
-        if hash_fn == "poly31":
-            acc = F.lit(b).cast("long")
-            for cc in cols:
-                acc = (acc * 31 + cc % F.lit(POLY_P)) % F.lit(POLY_P)
-            band_cols.append(acc.alias(f"band{b}"))
-        else:
-            band_cols.append(F.xxhash64(*cols, F.lit(b))
-                             .alias(f"band{b}"))
-    banded = sigs.select("doc_id", *band_cols)
-    _P = sigs.sparkSession.sparkContext.defaultParallelism
-    stacked = banded.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.col(f"band{b}").alias("bucket"))
-            for b in range(bands)
-        ])).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket") \
-     .repartition(_P, "band", "bucket")
-    a, b2 = stacked.alias("a"), stacked.alias("b")
+    stacked = _band_buckets(sigs, bands, rows_per_band, hash_fn)
+    a, b = stacked.alias("a"), stacked.alias("b")
     cand = (
-        a.join(b2, (F.col("a.band") == F.col("b.band"))
+        a.join(b, (F.col("a.band") == F.col("b.band"))
                & (F.col("a.bucket") == F.col("b.bucket"))
                & (F.col("a.doc_id") % 2 == 0)
                & (F.col("b.doc_id") % 2 == 1))

@@ -84,35 +84,17 @@ def brute_force_topk(
     )
 
 
-def quantize_embeddings(
-    df: DataFrame,
-    dim: int,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """int8 scalar quantization: per-vector symmetric scale
-    ``scale = max|x| / 127``, codes ``clamp(floor(x/scale + 0.5), ±127)``
-    — the standard 4x memory/bandwidth reduction for a corpus-scale
-    vector scan (at rest the codes column stores as byte; kept as long
-    here for engine-portable arithmetic). A zero vector quantizes to all
-    zeros (scale 0 guarded element-wise).
+def _quant_exprs(vec: Column, dim: int) -> tuple[Column, Column]:
+    """(codes, scale) expressions for int8 symmetric quantization:
+    per-vector ``scale = max|x| / 127``, codes
+    ``clamp(floor(x/scale + 0.5), ±127)`` as long; a zero vector codes to
+    all zeros (scale 0 guarded element-wise).
 
     CSE note: ``scale`` is fed through ``array_repeat`` in ARGUMENT
     position so the max-abs fold evaluates once per row; referencing it
     inside the lambda would inline the fold per element (interpreted
     higher-order exprs get no CSE — the dedup.shingle_rows trap),
-    turning an O(dim) pass into O(dim^2).
-
-    Output: (id_col, qvec array<long>, scale double).
-    """
-    codes, scale = _quant_exprs(F.col(vec_col), dim)
-    return df.select(
-        F.col(id_col), codes.alias("qvec"), scale.alias("scale"))
-
-
-def _quant_exprs(vec: Column, dim: int) -> tuple[Column, Column]:
-    """(codes, scale) expressions for int8 symmetric quantization."""
+    turning an O(dim) pass into O(dim^2)."""
     v = F.transform(vec, lambda x: x.cast("double"))
     scale = F.array_max(F.transform(v, F.abs)) / F.lit(127.0)
     codes = F.zip_with(
@@ -528,7 +510,7 @@ def ivf_train_centroids(
     trained codebook bit-reproducible in SQL (the gate oracle re-derives
     the full training, not just the search):
     * init — the K vectors with the lowest overflow-safe Knuth hash of
-      (vec_id + seed) (curate.hash_bucket, denom 2^32 — the repo's
+      (vec_id + seed) (hashing.hash_bucket, denom 2^32 — the repo's
       engine-portable seeded RNG), ties by vec_id: a seeded pseudo-random
       sample, collected driver-side like faiss's train sample;
     * assignment — argmax_j dot(v, c_j)/||c_j||, first index on FP ties
@@ -544,7 +526,7 @@ def ivf_train_centroids(
 
     Returns the (cid, vec, norm) list ivf_topk takes via ``centroids=``.
     """
-    from .curate import hash_bucket
+    from .hashing import hash_bucket
 
     # iterative reuse: n_iter+1 full passes hit the same relation — persist
     # once, release on exit (the standard Lloyd's shape; at corpus scale
@@ -780,7 +762,7 @@ def pq_train(
     if dim % m:
         raise ValueError(f"dim={dim} not divisible by m={m}")
     d_sub = dim // m
-    from .curate import hash_bucket
+    from .hashing import hash_bucket
 
     parts = [corpus.select(
         F.lit(s).alias("sub"), F.col(id_col).alias("_id"),
@@ -1371,9 +1353,9 @@ def rp_signs(in_dim: int, out_dim: int, *, seed: int = 1) -> list[list[int]]:
     density 1/3: fmix32(i*out_dim + j + seed) mod 6 -> 0:+1, 1:-1,
     else 0 (Achlioptas 2003, JCSS — E[s]=0, Var preserved under the
     sqrt(3/out_dim) scale). Generated driver-side from the same fmix32
-    constants as the engine hashes (sketches.py_fmix32), so the Spark
+    constants as the engine hashes (hashing.py_fmix32), so the Spark
     expression chain and the SQL oracle derive from ONE table."""
-    from .sketches import py_fmix32
+    from .hashing import py_fmix32
 
     out: list[list[int]] = []
     for i in range(in_dim):
@@ -1496,7 +1478,8 @@ def rp_topk(
     # chains into the join's per-PAIR projection — re-evaluating the whole
     # projection once per candidate instead of once per vector, and (when
     # the fused region also contains the cosine fold) overflowing janino's
-    # 64 KB method limit into interpreted fallback (the NOTES_r5 ERROR).
+    # 64 KB method limit into interpreted fallback (which Spark logs as
+    # an ERROR).
     # Generate blocks CollapseProject (the cms_table discipline), so the
     # chains run exactly once per row and the join stage codegen stays
     # small. Norms are hoisted below the join (one per vector, not per

@@ -45,60 +45,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import poly31_hash_arrow
+from .hashing import (check_hash_fn, fmix32, poly31_hash_arrow,
+                      salted_poly)
 
 #: small-m bias constants (Flajolet et al. 2007, §4); m >= 128 uses the
 #: closed form 0.7213 / (1 + 1.079 / m).
 _ALPHA = {16: 0.673, 32: 0.697, 64: 0.709}
 
-_FMIX_C1 = 0x85EBCA6B
-_FMIX_C2 = 0xC2B2AE35
-
 
 def _alpha(m: int) -> float:
     return _ALPHA.get(m, 0.7213 / (1.0 + 1.079 / m))
-
-
-def _mul32(a: Column, b: int) -> Column:
-    """``a * b mod 2^32`` without int64 overflow (a < 2^32, b < 2^32).
-
-    Split a into 16-bit halves: ``al*b < 2^48`` and ``ah*b < 2^48`` both
-    fit int64 exactly (same technique as curate.hash_bucket's Knuth
-    multiply)."""
-    al = a % F.lit(65536)
-    ah = F.shiftrightunsigned(a, 16)
-    return (al * F.lit(b)
-            + F.shiftleft((ah * F.lit(b)) % F.lit(65536), 16)) % F.lit(1 << 32)
-
-
-def _fmix32(h: Column) -> Column:
-    """murmur3 fmix32 avalanche finalizer — engine-portable int64 ops."""
-    h = h.bitwiseXOR(F.shiftrightunsigned(h, 16))
-    h = _mul32(h, _FMIX_C1)
-    h = h.bitwiseXOR(F.shiftrightunsigned(h, 13))
-    h = _mul32(h, _FMIX_C2)
-    return h.bitwiseXOR(F.shiftrightunsigned(h, 16))
-
-
-def fmix32_sql(expr: str) -> str:
-    """DuckDB SQL for ``_fmix32(poly31(expr))`` — generated from the same
-    constants so query and oracle cannot drift. ``expr`` must be a
-    nonnegative BIGINT expression < 2^32."""
-    def mul32(a: str, b: int) -> str:
-        return (f"((({a}) % 65536) * {b} + "
-                f"((((({a}) >> 16) * {b}) % 65536) << 16)) % 4294967296")
-    h1 = f"(xor({expr}, ({expr}) >> 16))"
-    h2 = f"({mul32(h1, _FMIX_C1)})"
-    h3 = f"(xor({h2}, ({h2}) >> 13))"
-    h4 = f"({mul32(h3, _FMIX_C2)})"
-    return f"xor({h4}, ({h4}) >> 16)"
-
-
-def hash_width(hash_fn: str) -> int:
-    """Bit width W of the HLL hash slice (32 for both supported fns)."""
-    if hash_fn not in ("poly31", "xxhash64"):
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    return 32
 
 
 def hll_registers(
@@ -121,7 +77,7 @@ def hll_registers(
         raise ValueError(f"p={p} outside [4, 18]")
     hashed = df.select(
         *group_cols, hll_hash(F.col(col), hash_fn=hash_fn).alias("_h"))
-    bucket, rank = hll_bucket_rank(F.col("_h"), p=p, hash_fn=hash_fn)
+    bucket, rank = hll_bucket_rank(F.col("_h"), p=p)
     return (
         hashed.select(
             *group_cols, bucket.alias("bucket"), rank.alias("_rank"))
@@ -132,20 +88,19 @@ def hll_registers(
 
 def hll_hash(col: Column, *, hash_fn: str = "poly31") -> Column:
     """The W=32 HLL hash of a value column (hashed via its string form)."""
+    check_hash_fn(hash_fn)
     if hash_fn == "poly31":
         # fmix32 avalanche over the portable polynomial hash — see module
         # docstring for why the finalizer is load-bearing.
-        return _fmix32(poly31_hash_arrow(col.cast("string")))
+        return fmix32(poly31_hash_arrow(col.cast("string")))
     # top 32 bits of xxhash64: unsigned shift keeps the slice nonneg
     return F.shiftrightunsigned(F.xxhash64(col.cast("string")), 32)
 
 
-def hll_bucket_rank(
-    h: Column, *, p: int, hash_fn: str = "poly31",
-) -> tuple[Column, Column]:
-    """(bucket, rank) of a precomputed hll_hash — shared by the batch
+def hll_bucket_rank(h: Column, *, p: int) -> tuple[Column, Column]:
+    """(bucket, rank) of a precomputed W=32 hll_hash — shared by the batch
     register build and the streaming windowed register maintenance."""
-    w_bits = hash_width(hash_fn) - p
+    w_bits = 32 - p
     w = F.shiftrightunsigned(h, p)
     rank = (
         F.when(w == 0, F.lit(w_bits + 1))
@@ -174,7 +129,6 @@ def hll_estimate(
     *,
     p: int = 12,
     group_cols: tuple[str, ...] = (),
-    hash_fn: str = "poly31",
 ) -> DataFrame:
     """Cardinality estimate per group from a register relation.
 
@@ -186,7 +140,6 @@ def hll_estimate(
     both order-independent; ``est_distinct`` rounds to 3 decimals.
     """
     m = 1 << p
-    W = hash_width(hash_fn)
     # alpha * m^2 * 2^32 folded into ONE double literal (repr-stable): the
     # raw estimate is a single exact-int division both engines share
     num = _alpha(m) * m * m * float(1 << 32)
@@ -198,7 +151,7 @@ def hll_estimate(
     n_zero = F.lit(m) - F.col("n_set")
     s32 = n_zero * F.lit(1 << 32) + F.col("_ssum")
     raw = F.lit(num) / s32.cast("double")
-    two_w = float(1 << W)
+    two_w = float(1 << 32)
     est = (
         F.when((raw <= F.lit(2.5 * m)) & (n_zero > 0),
                F.lit(float(m)) * F.log(F.lit(float(m)) / n_zero.cast("double")))
@@ -236,7 +189,7 @@ def cms_table(
     row in a projection BELOW the Generate (the depth-fold explode cannot
     re-evaluate it — a Generate is not a Project, so CollapseProject stops
     there), each of the ``depth`` rows salts it with an independent
-    universal hash ((a_i*h + b_i) mod P, the dedup._salted_poly family)
+    universal hash ((a_i*h + b_i) mod P, hashing.salted_poly)
     finalized by fmix32. The shuffle carries at most ``depth * width``
     rows per input partition (map-side partial sum) — frequency estimates
     over 100 TB cost a metadata-sized exchange.
@@ -264,8 +217,7 @@ def _cms_coords(df: DataFrame, col: str, keep: list[str],
     production path; ``'poly31'`` is the SQL-replayable chain (base fold
     below the Generate, universal salt + fmix32 per depth row). Table
     build and probes must agree."""
-    from .dedup import POLY_P
-
+    check_hash_fn(hash_fn)
     idx = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row")
     if hash_fn == "xxhash64":
         rows = df.select(*dict.fromkeys([*keep, col]), idx)
@@ -275,9 +227,7 @@ def _cms_coords(df: DataFrame, col: str, keep: list[str],
     hashed = df.select(
         *keep, poly31_hash_arrow(F.col(col).cast("string")).alias("_h"))
     rows = hashed.select(*keep, "_h", idx)
-    a = ((2 * F.col("row") + 1) * F.lit(2654435761)) % F.lit(POLY_P)
-    b = (F.col("row") * F.lit(40503) + F.lit(12345)) % F.lit(POLY_P)
-    bucket = _fmix32((a * F.col("_h") + b) % F.lit(POLY_P)) % F.lit(width)
+    bucket = fmix32(salted_poly(F.col("_h"), F.col("row"))) % F.lit(width)
     return rows.select(*keep, "row", bucket.alias("bucket"))
 
 
@@ -396,17 +346,4 @@ def hll_cardinality(
     """One-shot grouped distinct-count estimate (registers + estimate)."""
     regs = hll_registers(df, col, p=p, group_cols=group_cols,
                          hash_fn=hash_fn)
-    return hll_estimate(regs, p=p, group_cols=group_cols, hash_fn=hash_fn)
-
-
-def py_fmix32(h: int) -> int:
-    """Driver-side replica of :func:`_fmix32` (same constants) for
-    generating deterministic literal tables (e.g. similarity's sparse
-    random-projection signs) that the SQL oracles re-derive."""
-    h &= 0xFFFFFFFF
-    h ^= h >> 16
-    h = (h * _FMIX_C1) & 0xFFFFFFFF
-    h ^= h >> 13
-    h = (h * _FMIX_C2) & 0xFFFFFFFF
-    h ^= h >> 16
-    return h
+    return hll_estimate(regs, p=p, group_cols=group_cols)

@@ -12,6 +12,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .hashing import (POLY_P, check_hash_fn, fmix32, poly31_hash_arrow,
+                      salted_poly)
+
 STOPWORDS_EN = ("the", "a", "of", "and", "to", "in", "is")
 STOPWORDS_DE = ("der", "die", "das", "und", "zu", "ist", "ein")
 STOPWORDS_FR = ("le", "la", "de", "et", "un", "est", "les")
@@ -315,16 +318,6 @@ def contamination_screen(
     )
 
 
-def _bloom_positions(h_col: str, i_col: str, m_bits: int):
-    """k-th Bloom position from a poly31 base hash column (portable)."""
-    from .dedup import POLY_P
-    from .sketches import _fmix32
-
-    a = ((2 * F.col(i_col) + 1) * F.lit(2654435761)) % F.lit(POLY_P)
-    b = (F.col(i_col) * F.lit(40503) + F.lit(12345)) % F.lit(POLY_P)
-    return _fmix32((a * F.col(h_col) + b) % F.lit(POLY_P)) % F.lit(m_bits)
-
-
 def _bloom_hashed(df: DataFrame, col: str, keep: list[str],
                   m_bits: int, k: int, hash_fn: str) -> DataFrame:
     """(keep..., pos) — the k Bloom positions of df.col, one row each.
@@ -333,8 +326,7 @@ def _bloom_hashed(df: DataFrame, col: str, keep: list[str],
     string feeds the hash ONCE per k-row, no Python/interpreted work.
     poly31: the engine-portable chain (base fold below the Generate,
     universal salt + fmix32 per k) for SQL-replayable paths."""
-    from .dedup import poly31_hash_arrow
-
+    check_hash_fn(hash_fn)
     idx = F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("_i")
     if hash_fn == "xxhash64":
         rows = df.select(*dict.fromkeys([*keep, col]), idx)
@@ -343,8 +335,8 @@ def _bloom_hashed(df: DataFrame, col: str, keep: list[str],
     hashed = df.select(
         *keep, poly31_hash_arrow(F.col(col).cast("string")).alias("_h"))
     rows = hashed.select(*keep, "_h", idx)
-    return rows.select(
-        *keep, _bloom_positions("_h", "_i", m_bits).alias("pos"))
+    pos = fmix32(salted_poly(F.col("_h"), F.col("_i"))) % F.lit(m_bits)
+    return rows.select(*keep, pos.alias("pos"))
 
 
 #: entity decode order matters: &amp; LAST, or '&amp;lt;' would double-decode
@@ -583,7 +575,7 @@ def quality_classifier(
     equi-join on bucket, one partial-agg shuffle keyed by doc_id.
     Output: (doc_id, n_words, score, prob, label).
     """
-    from .dedup import POLY_P, poly31_hash_arrow, spread_input
+    from .dedup import spread_input
 
     spark = df.sparkSession
     if weights is None:
@@ -631,7 +623,7 @@ def _hashed_bag(df: DataFrame, label: Column, *, n_buckets: int,
     the start: deriving it here instead of joining a label relation
     later keeps the training loop free of tb-vs-derived-from-tb
     self-joins (see train_quality_classifier's plan note)."""
-    from .dedup import poly31_hash_arrow, spread_input
+    from .dedup import spread_input
 
     docs = spread_input(df.select(
         "doc_id",
@@ -797,7 +789,7 @@ def quality_classifier_trained(
 def _dsir_buckets(df: DataFrame, target: Column, *, n_buckets: int,
                   text_col: str) -> DataFrame:
     """(doc_id, _tgt, bucket) token rows — shared fit/score derivation."""
-    from .dedup import poly31_hash_arrow, spread_input
+    from .dedup import spread_input
 
     docs = spread_input(df.select("doc_id", text_col, target.alias("_tgt")))
     tok = docs.select(

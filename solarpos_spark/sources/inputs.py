@@ -287,20 +287,6 @@ def time_series_zoned_df(
     )
 
 
-def with_zone_override(df: DataFrame, *, ts_col: str, from_zone: str,
-                       to_zone: str) -> DataFrame:
-    """`--timezone` override semantics: KEEP the wall-clock time, reinterpret
-    it in the new zone (DateTimeIterator.java:59-63:
-    ``ZonedDateTime.of(zdt.toLocalDate(), zdt.toLocalTime(), overrideTz)``).
-
-    JVM-side and DST-aware: from_utc_timestamp renders the instant as its
-    wall time in ``from_zone``; to_utc_timestamp reads that wall time as
-    ``to_zone`` local and returns the new instant.
-    """
-    wall = F.from_utc_timestamp(F.col(ts_col), from_zone)
-    return df.withColumn(ts_col, F.to_utc_timestamp(wall, to_zone))
-
-
 def grid_times_df(grid: DataFrame, times: DataFrame,
                   parallelism: int | None = None) -> DataFrame:
     """R2: time x coords cartesian, time-major order (time outer loop,

@@ -6,11 +6,16 @@ util/DateTimeIterator.java:235-238) is decoded per micro-batch, position and
 sunrise rows are derived with the same vectorized kernels as the batch path,
 and CEP operators run on event time:
 
-* tumbling/sliding windows bucketing by observation hour,
-* session windows per doc_id (a doc's coordinate sweep = one session),
+* watermark-bounded exact dedup of re-delivered records,
+* tumbling windows by observation hour: row counts, HLL registers and
+  count-min counters per window,
 * a stateful stream-stream join aligning each position row with its
   same-day sunrise row (equi-key + event-time range, watermark-bounded),
-* an exactly-once sink (idempotent per-epoch parquet partitions).
+* a stateless curation filter and a stream-stream event funnel.
+
+Session windows are ``F.session_window`` (operators/windows.py), the
+follows-by machines live in streaming/stateful.py and the exactly-once
+sink in sinks/exactly_once.py.
 
 Row values are identical to the batch path by construction — the UDFs are
 shared — so the batch oracles in __spark_entry__.py pin streaming
@@ -108,7 +113,7 @@ def hourly_distinct_registers(
     from ..operators.sketches import hll_bucket_rank, hll_hash
 
     h = hll_hash(F.col(value_col), hash_fn=hash_fn)
-    bucket, rank = hll_bucket_rank(F.col("_h"), p=p, hash_fn=hash_fn)
+    bucket, rank = hll_bucket_rank(F.col("_h"), p=p)
     return (
         decoded.select("event_time", h.alias("_h"))
         .select("event_time", bucket.alias("bucket"), rank.alias("_rank"))
@@ -143,21 +148,6 @@ def windowed_cms_counts(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("w.start").alias("window_start"), "row", "bucket",
                 "cnt")
-    )
-
-
-def doc_session_stats(decoded: DataFrame, *, gap: str = "30 minutes") -> DataFrame:
-    """Session windows per doc_id: one coordinate sweep = one session."""
-    return (
-        decoded.groupBy(
-            F.session_window("event_time", gap).alias("w"), F.col("doc_id")
-        )
-        .agg(F.count(F.lit(1)).alias("n_records"),
-             F.min("seq_index").alias("first_seq"),
-             F.max("seq_index").alias("last_seq"))
-        .select("doc_id", F.col("w.start").alias("session_start"),
-                F.col("w.end").alias("session_end"), "n_records",
-                "first_seq", "last_seq")
     )
 
 
@@ -226,14 +216,14 @@ def curated_doc_stream(
 
     Every stage is a pure projection/filter built from the SAME expression
     builders as the batch operators (text.text_quality features,
-    curate.hash_bucket sampling), so committed rows are bit-identical to
+    hashing.hash_bucket sampling), so committed rows are bit-identical to
     the batch plan over the same input — which is exactly what the gate
     entry hash-checks. No state, no watermark: a quality filter commits a
     doc the micro-batch it arrives, at any file/batch ordering. (The
     stateful stages of batch curate — exact/near dedup — need keyed state
     on a stream; the exact-dedup analogue is deduped_stream.)
     """
-    from ..operators.curate import hash_bucket
+    from ..operators.hashing import hash_bucket
     from ..operators.text import (STOPWORDS_EN, _stopword_hits,
                                   subword_token_count, words_col)
 

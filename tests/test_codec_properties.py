@@ -63,17 +63,3 @@ def test_double_encode_is_fixed_point(lat, lon, usec):
         elevation=d1["elevation"], pressure=d1["pressure"],
         temperature=d1["temperature"])
     assert np.array_equal(r1, r2)
-
-
-@settings(max_examples=50, deadline=None)
-@given(st.lists(st.tuples(lat_s, lon_s, usec_s), min_size=1, max_size=20))
-def test_flatten_preserves_record_boundaries(rows):
-    lats = np.array([r[0] for r in rows])
-    lons = np.array([r[1] for r in rows])
-    usecs = np.array([r[2] for r in rows])
-    recs = codec.encode_records(lat=lats, lon=lons, unix_sec=usecs)
-    seqs = codec.flatten_sequences(recs, np.array([len(rows)]))
-    assert len(seqs) == 1
-    back = codec.decode_records(
-        np.asarray(seqs[0]).reshape(-1, codec.TOKENS_PER_RECORD))
-    assert np.array_equal(back["unix_sec"], usecs)

@@ -1122,7 +1122,7 @@ class TestQualityClassifier:
             assert r["label"] == ("keep" if r["score"] >= 0 else "drop")
 
     def test_custom_weight_table_swaps_in(self, spark):
-        from solarpos_spark.operators.dedup import POLY_P
+        from solarpos_spark.operators.hashing import POLY_P
         from solarpos_spark.operators.text import quality_classifier
 
         # the default table reproduced explicitly must give identical output
@@ -1146,10 +1146,10 @@ class TestQualityClassifier:
             [(1, "alpha beta"), (2, "beta beta")],
             "doc_id long, text string")
         # a table holding ONLY alpha's bucket: beta scores 0 everywhere
-        from solarpos_spark.operators.dedup import poly31_hash
+        from solarpos_spark.operators.hashing import poly31_hash_arrow
         wt = df.sparkSession.createDataFrame(
             [("alpha",)], "word string").select(
-            (poly31_hash(F.col("word")) % 4096).alias("bucket"),
+            (poly31_hash_arrow(F.col("word")) % 4096).alias("bucket"),
             F.lit(7).alias("wt"))
         out = {r["doc_id"]: r
                for r in quality_classifier(df, weights=wt).collect()}
@@ -1484,10 +1484,17 @@ class TestQuantizedTopk:
         return spark.createDataFrame(
             rows, "vec_id long, embedding array<float>")
 
-    def test_quantize_roundtrip_bounded_error(self, spark, emb):
-        from solarpos_spark.operators.similarity import quantize_embeddings
+    @staticmethod
+    def _quantize(df, dim):
+        """(vec_id, qvec, scale) through the int8 quantization that
+        quantized_topk applies to the corpus."""
+        from solarpos_spark.operators.similarity import _quant_exprs
 
-        out = quantize_embeddings(emb, 64).collect()
+        codes, scale = _quant_exprs(F.col("embedding"), dim)
+        return df.select("vec_id", codes.alias("qvec"), scale.alias("scale"))
+
+    def test_quantize_roundtrip_bounded_error(self, spark, emb):
+        out = self._quantize(emb, 64).collect()
         src = {r.vec_id: r.embedding for r in emb.collect()}
         for r in out:
             assert all(-127 <= c <= 127 for c in r.qvec)
@@ -1496,11 +1503,9 @@ class TestQuantizedTopk:
                 assert abs(c * r.scale - x) <= r.scale / 2 + 1e-12
 
     def test_zero_vector_quantizes_to_zero(self, spark):
-        from solarpos_spark.operators.similarity import quantize_embeddings
-
         df = spark.createDataFrame([(1, [0.0] * 8)],
                                    "vec_id long, embedding array<float>")
-        r = quantize_embeddings(df, 8).collect()[0]
+        r = self._quantize(df, 8).collect()[0]
         assert r.qvec == [0] * 8 and r.scale == 0.0
 
     def test_finds_planted_twin_and_recall(self, spark, emb):
@@ -2224,12 +2229,20 @@ class TestR6OptimizationEquivalence:
     forms they replaced (unrolled folds, arrow poly31, narrow n-grams)."""
 
     def test_poly31_arrow_parity(self, spark):
-        """poly31_hash_arrow == poly31_hash expression fold, including
-        empty strings, nulls, BMP + astral unicode and both bases."""
+        """poly31_hash_arrow == a per-char Python fold over code points,
+        including empty strings, nulls, BMP + astral unicode and both
+        bases."""
         from pyspark.sql import functions as F
 
-        from solarpos_spark.operators.dedup import (poly31_hash,
-                                                    poly31_hash_arrow)
+        from solarpos_spark.operators.hashing import POLY_P, poly31_hash_arrow
+
+        def ref(s, base):
+            if s is None:
+                return None
+            acc = 0
+            for ch in s:
+                acc = (acc * base + ord(ch)) % POLY_P
+            return acc
 
         data = [("",), ("a",), ("hello world",), ("Ünïcødé tëxt",),
                 ("中文 字符",), ("emoji 😀 astral 𝔘",), ("  sp  ",),
@@ -2237,10 +2250,9 @@ class TestR6OptimizationEquivalence:
         df = spark.createDataFrame(data, "s string")
         for base in (31, 131):
             rows = df.select(
-                poly31_hash(F.col("s"), base).alias("e"),
-                poly31_hash_arrow(F.col("s"), base).alias("a")).collect()
+                "s", poly31_hash_arrow(F.col("s"), base).alias("a")).collect()
             for r in rows:
-                assert r["e"] == r["a"], (base, r)
+                assert r["a"] == ref(r["s"], base), (base, r)
 
     def test_narrow_shingles_equal_window_form(self, spark):
         """shingle_rows / ngram_occurrences narrow rewrites reproduce the

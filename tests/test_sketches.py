@@ -368,3 +368,62 @@ class TestCountMinXxhash:
         doubled = sketches.cms_estimate(merged, df.distinct(), "val",
                                         width=128, hash_fn="xxhash64")
         assert all(r.est_cnt >= 2 * true[r.val] for r in doubled.collect())
+
+
+def _hash_fn_operators():
+    from solarpos_spark.operators import curate, dedup, text
+    from solarpos_spark.streaming import pipeline
+
+    return {
+        "hll_hash": lambda df, fn: sketches.hll_hash(F.col("val"), hash_fn=fn),
+        "hll_registers": lambda df, fn: sketches.hll_registers(
+            df, "val", hash_fn=fn),
+        "hll_cardinality": lambda df, fn: sketches.hll_cardinality(
+            df, "val", hash_fn=fn),
+        "cms_table": lambda df, fn: sketches.cms_table(df, "val", hash_fn=fn),
+        "cms_estimate": lambda df, fn: sketches.cms_estimate(
+            sketches.cms_table(df, "val"), df, "val", hash_fn=fn),
+        "bottom_k": lambda df, fn: sketches.bottom_k(df, "val", hash_fn=fn),
+        "minhash_signatures": lambda df, fn: dedup.minhash_signatures(
+            df, hash_fn=fn),
+        "lsh_candidate_pairs": lambda df, fn: dedup.lsh_candidate_pairs(
+            dedup.minhash_signatures(df), hash_fn=fn),
+        "minhash_verified_pairs": lambda df, fn: dedup.minhash_verified_pairs(
+            df, hash_fn=fn),
+        "cross_corpus_verified_pairs":
+            lambda df, fn: dedup.cross_corpus_verified_pairs(
+                df, df, hash_fn=fn),
+        "simhash": lambda df, fn: dedup.simhash(df, hash_fn=fn),
+        "bloom_bits": lambda df, fn: text.bloom_bits(df, "val", hash_fn=fn),
+        "decontaminate_ngrams": lambda df, fn: text.decontaminate_ngrams(
+            df, df, hash_fn=fn),
+        "curate": lambda df, fn: curate.curate(df, hash_fn=fn),
+        "hourly_distinct_registers":
+            lambda df, fn: pipeline.hourly_distinct_registers(
+                df, "val", hash_fn=fn),
+        "windowed_cms_counts": lambda df, fn: pipeline.windowed_cms_counts(
+            df, "val", hash_fn=fn),
+    }
+
+
+class TestHashFnCheck:
+    """Every operator that takes ``hash_fn`` rejects an unknown one while
+    the plan is built (no action runs), instead of falling back to
+    whichever hash its own branch defaults to."""
+
+    @pytest.fixture(scope="class")
+    def docs(self, spark):
+        return spark.range(50).select(
+            F.col("id").alias("doc_id"),
+            F.concat_ws(" ", F.lit("w"), F.col("id"), F.lit("x y z"))
+             .alias("text"),
+            F.concat(F.lit("v"), F.col("id")).alias("val"),
+            F.timestamp_seconds(F.col("id") * 60).alias("event_time"))
+
+    @pytest.mark.parametrize("op", sorted(_hash_fn_operators()))
+    def test_unknown_hash_fn_rejected(self, docs, op):
+        build = _hash_fn_operators()[op]
+        with pytest.raises(ValueError, match="unknown hash_fn 'xxhash'"):
+            build(docs, "xxhash")
+        for fn in ("poly31", "xxhash64"):
+            build(docs, fn)  # both accepted values still plan

@@ -336,29 +336,6 @@ class TestWindowsAndLateData:
         # watermark (append semantics), so the parity is non-vacuous
         assert 0 < len(a) < span_h + 1
 
-    def test_session_windows_stream_match_batch(self, spark, tmp_path):
-        src = str(tmp_path / "tok")
-        make_token_files(spark, src, n_docs=40, files=4)
-        stream = tokens.read_token_stream(spark, src, max_files_per_trigger=2)
-        dec = pipeline.decoded_stream(stream, watermark="1 hour")
-        sess = pipeline.doc_session_stats(dec)
-        q = (sess.writeStream.outputMode("complete")
-             .format("memory").queryName("sessions")
-             .trigger(availableNow=True).start())
-        drain(q)
-        got = spark.table("sessions")
-        # batch equivalent over the same decoded rows
-        batch = tokens.decode_tokens(spark.read.parquet(src)).withColumn(
-            "event_time", F.timestamp_seconds("unix_sec"))
-        want = (batch.groupBy(F.session_window("event_time", "30 minutes")
-                              .alias("w"), "doc_id")
-                .agg(F.count(F.lit(1)).alias("n_records"))
-                .select("doc_id", F.col("w.start").alias("session_start"),
-                        "n_records"))
-        gk = got.select("doc_id", "session_start", "n_records")
-        assert gk.exceptAll(want).count() == 0
-        assert want.exceptAll(gk).count() == 0
-
     def test_append_session_merges_across_batches_and_cuts(
             self, spark, tmp_path):
         """APPEND-mode session windows (the stream_session_committed gate

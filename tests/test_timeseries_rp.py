@@ -12,7 +12,7 @@ from solarpos_spark.operators.relational import (
     resample_fill, transition_matrix)
 from solarpos_spark.operators.similarity import (
     random_project, rp_signs, rp_sql_proj, rp_topk)
-from solarpos_spark.operators.sketches import py_fmix32
+from solarpos_spark.operators.hashing import py_fmix32
 
 
 def _ev(spark, rows):
@@ -79,10 +79,10 @@ class TestResampleFill:
 
 class TestRandomProjection:
     def test_py_fmix32_matches_engine(self, spark):
-        from solarpos_spark.operators.sketches import _fmix32
+        from solarpos_spark.operators.hashing import fmix32
 
         df = spark.range(100).select(
-            _fmix32(F.col("id")).alias("h"), "id")
+            fmix32(F.col("id")).alias("h"), "id")
         for r in df.collect():
             assert r.h == py_fmix32(r.id)
 

@@ -2,14 +2,13 @@
 
 Replicates the reference's zone handling (util/DateTimeIterator.java:43-91):
 series start at *local* midnight under a real ZoneId, steps are exact
-instants (ZonedDateTime.plus(Duration)), the per-row UTC offset flips across
-DST transitions, and `--timezone` overrides keep wall time
-(DateTimeIterator.java:59-63).
+instants (ZonedDateTime.plus(Duration)) and the per-row UTC offset flips
+across DST transitions.
 """
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
+from datetime import datetime
 from zoneinfo import ZoneInfo
 
 import pytest
@@ -94,29 +93,3 @@ class TestZonedSeries:
         assert len(rows) == 1
         assert rows[0]["unix_sec"] == int(
             datetime(2024, 6, 15, tzinfo=ZoneInfo(BERLIN)).timestamp())
-
-
-class TestZoneOverride:
-    def test_keeps_wall_time(self, spark):
-        """--timezone override: wall clock is preserved, instant shifts
-        (DateTimeIterator.java:59-63)."""
-        # instant whose UTC wall time is 2024-06-15T10:00:00
-        base = int(datetime(2024, 6, 15, 10, tzinfo=timezone.utc).timestamp())
-        df = spark.range(1).select(F.timestamp_seconds(F.lit(base)).alias("ts"))
-        out = inputs.with_zone_override(df, ts_col="ts", from_zone="UTC",
-                                        to_zone="America/New_York")
-        got = out.select(F.unix_timestamp("ts").alias("u")).collect()[0]["u"]
-        # wall 10:00 read as EDT (-04:00) -> instant 14:00Z
-        assert got == base + 4 * 3600
-
-    def test_override_is_dst_aware(self, spark):
-        jan = int(datetime(2024, 1, 15, 10, tzinfo=timezone.utc).timestamp())
-        jul = int(datetime(2024, 7, 15, 10, tzinfo=timezone.utc).timestamp())
-        df = spark.createDataFrame([(jan,), (jul,)], "u long").select(
-            F.timestamp_seconds(F.col("u")).alias("ts"), "u")
-        out = inputs.with_zone_override(df, ts_col="ts", from_zone="UTC",
-                                        to_zone=BERLIN)
-        got = {r["u"]: r["shift"] for r in out.select(
-            "u", (F.unix_timestamp("ts") - F.col("u")).alias("shift")).collect()}
-        assert got[jan] == -3600   # CET  +01:00
-        assert got[jul] == -7200   # CEST +02:00

@@ -2,9 +2,11 @@
 
 Runs every __spark_entry__ query at the given sf_dir on Spark AND its DuckDB
 oracle, comparing row count, column names, and an order-insensitive value
-hash. Each line ends with the Spark side's value hash, so the output of two
-checkouts can be diffed line by line. The session uses build_session()'s
-default cores (SPARK_GRAFT_CPUS, else every CPU).
+hash. Each line ends with ``oracle=`` (the first 12 hex digits of the
+sha256 of the oracle SQL with whitespace runs collapsed) and the Spark
+side's ``value=`` hash, so a diff of two checkouts' output separates "the
+oracle text changed" from "the values changed". The session uses
+build_session()'s default cores (SPARK_GRAFT_CPUS, else every CPU).
 A name that is not a registry entry exits 2 before any work; otherwise the
 run ends with a ``checked=N failed=M`` line and exits 1 if M > 0.
 Usage:  python tools/check_correctness.py [sf_dir] [query ...]
@@ -33,6 +35,12 @@ def value_hash(df: pd.DataFrame) -> str:
         h.update(r.encode())
         h.update(b"\n")
     return h.hexdigest()[:16]
+
+
+def oracle_digest(sql: str | None) -> str:
+    if sql is None:
+        return "none"
+    return hashlib.sha256(" ".join(sql.split()).encode()).hexdigest()[:12]
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -76,6 +84,7 @@ def main() -> int:
         if only and name not in only:
             continue
         checked += 1
+        digest = oracle_digest(oracles.get(name))
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
@@ -84,7 +93,7 @@ def main() -> int:
             continue
         if name not in oracles:
             print(f"{name}: rows={len(sdf)} (rows-only, no oracle) "
-                  f"value={value_hash(normalize(sdf))}")
+                  f"oracle={digest} value={value_hash(normalize(sdf))}")
             continue
         try:
             odf = con.sql(oracles[name]).df()
@@ -101,7 +110,7 @@ def main() -> int:
         if status == "FAIL":
             failures += 1
         print(f"{name}: {status} rows={len(s_n)}/{len(o_n)} cols={ok_cols} "
-              f"hash={ok_hash} value={s_hash}")
+              f"hash={ok_hash} oracle={digest} value={s_hash}")
         if not ok_hash and ok_rows and ok_cols and len(s_n) > 0:
             key = sorted(s_n.columns)
             a = s_n[key].astype(str).agg("|".join, axis=1).sort_values().reset_index(drop=True)
