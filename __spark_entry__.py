@@ -713,24 +713,21 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-k (similarity.ivf_topk): data-dependent coarse
     quantization with a TRAINED codebook — deterministic distributed
     k-means (similarity.ivf_train_centroids: seeded Knuth-hash init,
-    fixed-point Lloyd rounds as relational stages), corpus assignment a
-    zero-shuffle literal projection, search touches nprobe/n_centroids of
-    the corpus. The oracle re-derives the full training in SQL."""
+    fixed-point Lloyd rounds, each one Arrow assignment-and-sum stage),
+    corpus assignment a zero-shuffle Arrow pass, search touches
+    nprobe/n_centroids of the corpus. The oracle re-derives the full
+    training in SQL. ``ivf_topk_arrow`` names the same entry: the
+    expression assignment it once compared against is gone."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 10)
-    # train with the Arrow assignment (bit-identical to the expr path —
-    # pytest locks training parity; 64-dim interpreted HOF scoring per
-    # Lloyd round is the expr path's cost, not its semantics). The entry
-    # still exercises the EXPRESSION search path.
     cents = similarity.ivf_train_centroids(emb, n_centroids=16, n_iter=3,
-                                           seed=11, assign="arrow")
+                                           seed=11)
     return similarity.ivf_topk(emb, q, k=3, n_centroids=16, nprobe=4,
                                centroids=cents)
 
 
 def _ivf_trained_cents_cte(n_centroids: int = 16, n_iter: int = 3,
                            seed: int = 11, dim: int = 64,
-                           quant_bits: int = 20,
                            with_corpus: bool = True, src: str = "corpus",
                            prefix: str = "", out: str = "cents") -> str:
     """Training CTE chain over ``src(vec_id, v)`` ending in
@@ -744,7 +741,7 @@ def _ivf_trained_cents_cte(n_centroids: int = 16, n_iter: int = 3,
     CTE so a composed oracle (ivfpq_topk) can provide a corpus carrying
     BOTH this chain's (v, vn) and the PQ chains' fv."""
     K = n_centroids
-    S = f"{float(1 << quant_bits):.1f}"
+    S = f"{float(1 << 20):.1f}"
 
     def qt(d: int) -> str:
         x = f"v[{d + 1}] * {S}"
@@ -927,19 +924,6 @@ FROM ranked WHERE rank <= 3
 """
 
 
-def _q_ivf_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same trained-codebook IVF search with the vectorized fold-ordered
-    Arrow assignment in BOTH training and search
-    (similarity.ivf_assign_arrow) — shares the expression path's oracle
-    verbatim, which PROVES the two implementations are bit-identical."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 10)
-    cents = similarity.ivf_train_centroids(emb, n_centroids=16, n_iter=3,
-                                           seed=11, assign="arrow")
-    return similarity.ivf_topk(emb, q, k=3, n_centroids=16, nprobe=4,
-                               centroids=cents, assign="arrow")
-
-
 def _q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ composed ANN (similarity.ivfpq_topk — the faiss IndexIVFPQ
     shape): the coarse codebook restricts the scan to nprobe/16 of the
@@ -1027,7 +1011,7 @@ def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-cluster pruning end-to-end."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cents = similarity.ivf_train_centroids(emb, n_centroids=16, n_iter=3,
-                                           seed=11, assign="arrow")
+                                           seed=11)
     return similarity.semdedup(emb, eps=0.3, centroids=cents)
 
 
@@ -5462,7 +5446,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_near_dup_multiprobe": _q_embedding_near_dup_multiprobe,
         "ann_topk": _q_ann_topk,
         "ivf_topk": _q_ivf_topk,
-        "ivf_topk_arrow": _q_ivf_topk_arrow,
+        "ivf_topk_arrow": _q_ivf_topk,
         "pq_topk": _q_pq_topk,
         "ivfpq_topk": _q_ivfpq_topk,
         "semdedup": _q_semdedup,

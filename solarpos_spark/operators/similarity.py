@@ -4,11 +4,16 @@ Baseline: brute-force cosine top-k — broadcast the (small) query set, score
 JVM-side with zip_with/aggregate (no Python). Scale path: LSH-bucketed ANN —
 random-hyperplane signs bucket vectors so candidate scoring touches only
 same-bucket pairs (the shuffle is keyed by bucket, never all-pairs).
+Codebook family (IVF, PQ, IVF-PQ, SemDeDup): every corpus-side codebook
+assignment is one fold-ordered numpy argmax in an Arrow stage
+(_fold_argmax) and every codebook trains in one fixed-point Lloyd loop
+(_lloyd); queries score the codebooks relationally.
 """
 
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
@@ -45,6 +50,43 @@ def cosine(a: Column, b: Column) -> Column:
 # pair pays a single fold. Same double arithmetic -> bit-identical scores.
 
 
+def _query_vecs(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(query_id, qvec, _qn): the query side of the top-k operators."""
+    return queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
+        _norm(F.col(vec_col)).alias("_qn"))
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, rank, neighbor_id, score): the k best rows per query by
+    score desc, neighbor id asc — a total order, so FP ties are stable
+    across engines."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("neighbor_id").asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "rank", "neighbor_id", "score"))
+
+
+def _rerank(corpus: DataFrame, q: DataFrame, short: DataFrame, k: int, *,
+            id_col: str, vec_col: str) -> DataFrame:
+    """Exact-cosine top-k over a (query_id, neighbor_id) shortlist — the
+    refine stage of the two-stage operators (brute_force_topk
+    arithmetic). ``q`` is _query_vecs; the shortlist and queries are
+    broadcast, so full corpus vectors never shuffle."""
+    cvecs = corpus.select(F.col(id_col).alias("neighbor_id"),
+                          F.col(vec_col).alias("cvec"),
+                          _norm(F.col(vec_col)).alias("_cn"))
+    exact = (
+        cvecs.join(F.broadcast(short), "neighbor_id")
+        .join(F.broadcast(q), "query_id")
+        .select("query_id", "neighbor_id",
+                F.round(_dot(F.col("qvec"), F.col("cvec"))
+                        / (F.col("_qn") * F.col("_cn")), 6).alias("score"))
+    )
+    return _top_k(exact, k)
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -58,10 +100,7 @@ def brute_force_topk(
     Output: (query_id, rank, neighbor_id, score). Deterministic: ordered by
     rounded score desc, neighbor id asc — FP-tie stable across engines.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("_qn"),
-    )
+    q = _query_vecs(queries, id_col, vec_col)
     c = spread_input(corpus, key=id_col).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"),
         _norm(F.col(vec_col)).alias("_cn"),
@@ -74,14 +113,7 @@ def brute_force_topk(
             F.round(dot / (F.col("_qn") * F.col("_cn")), 6).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "score")
-    )
+    return _top_k(scored, k)
 
 
 def _quant_exprs(vec: Column, dim: int) -> tuple[Column, Column]:
@@ -155,24 +187,8 @@ def quantized_topk(
     short = (scored.withColumn("_srank", F.row_number().over(ws))
              .filter(F.col("_srank") <= shortlist)
              .select("query_id", "neighbor_id"))
-    cvecs = corpus.select(F.col(id_col).alias("neighbor_id"),
-                          F.col(vec_col).alias("cvec"),
-                          _norm(F.col(vec_col)).alias("_cn"))
-    qvecs = queries.select(F.col(id_col).alias("query_id"),
-                           F.col(vec_col).alias("qvec2"),
-                           _norm(F.col(vec_col)).alias("_qn"))
-    exact = (
-        cvecs.join(F.broadcast(short), "neighbor_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .select("query_id", "neighbor_id",
-                F.round(_dot(F.col("qvec2"), F.col("cvec"))
-                        / (F.col("_qn") * F.col("_cn")), 6).alias("score"))
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc())
-    return (exact.withColumn("rank", F.row_number().over(wk))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id", "score"))
+    return _rerank(corpus, _query_vecs(queries, id_col, vec_col), short, k,
+                   id_col=id_col, vec_col=vec_col)
 
 
 def hyperplane_buckets(
@@ -250,11 +266,7 @@ def ann_topk(
                 F.round(_dot(F.col("qvec"), F.col("cvec"))
                         / (F.col("_qn") * F.col("_cn")), 6).alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id", "score"))
+    return _top_k(scored, k)
 
 
 def _round6_boundary(threshold: float) -> tuple[float, bool]:
@@ -485,109 +497,6 @@ def _fold_norm(vec: list[float]) -> float:
     return math.sqrt(acc)
 
 
-def ivf_train_centroids(
-    corpus: DataFrame,
-    *,
-    n_centroids: int = 16,
-    n_iter: int = 3,
-    seed: int = 11,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    quant_bits: int = 20,
-    assign: str = "expr",
-) -> list[tuple[int, list[float], float]]:
-    """Deterministic distributed k-means codebook (Lloyd's algorithm) —
-    the trained replacement for ivf_centroids' lowest-id seed sample.
-
-    faiss-style split: per round, assignment (literal-codebook argmax —
-    the same zero-shuffle projection the search path uses; ``assign=
-    'arrow'`` switches to the vectorized bit-identical ivf_assign_arrow)
-    and the per-list update sums run as distributed relational stages;
-    only the K x (dim+1) sum table crosses to the driver each round, so
-    training scans the corpus without ever collecting it.
-
-    Every step is engine-portable and order-independent, which makes the
-    trained codebook bit-reproducible in SQL (the gate oracle re-derives
-    the full training, not just the search):
-    * init — the K vectors with the lowest overflow-safe Knuth hash of
-      (vec_id + seed) (hashing.hash_bucket, denom 2^32 — the repo's
-      engine-portable seeded RNG), ties by vec_id: a seeded pseudo-random
-      sample, collected driver-side like faiss's train sample;
-    * assignment — argmax_j dot(v, c_j)/||c_j||, first index on FP ties
-      (array_position == SQL list_indexof), the exact search-path rule;
-    * update — per-(list, dim) means accumulated as FIXED-POINT int64
-      sums of sign*floor(|x * 2^quant_bits| + 0.5): integer addition is
-      exact and commutative, so the sum is identical under any shuffle
-      fetch order and any engine — the float-accumulation order-
-      dependence that makes naive distributed k-means nondeterministic
-      never arises. The mean s / (2^quant_bits * count) is then a single
-      IEEE double division on both sides. Empty lists keep their
-      previous centroid.
-
-    Returns the (cid, vec, norm) list ivf_topk takes via ``centroids=``.
-    """
-    from .hashing import hash_bucket
-
-    # iterative reuse: n_iter+1 full passes hit the same relation — persist
-    # once, release on exit (the standard Lloyd's shape; at corpus scale
-    # the caller passes a training SAMPLE, faiss-style, so this is bounded)
-    corpus = spread_input(corpus.select(id_col, vec_col), key=id_col).persist()
-    seeds = (corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-             .withColumn("_r", hash_bucket(F.col("_id"), seed=seed,
-                                           denom=2**32))
-             .orderBy("_r", "_id")
-             .limit(n_centroids)
-             .collect())
-    cents = [(cid, [float(x) for x in r["_v"]], _fold_norm([float(x) for x in r["_v"]]))
-             for cid, r in enumerate(seeds)]
-    dim = len(cents[0][1])
-    scale = float(1 << quant_bits)
-
-    def _q(d: int) -> Column:
-        x = F.element_at(F.col("_v"), d + 1).cast("double") * F.lit(scale)
-        return F.when(x < 0, -F.floor(-x + F.lit(0.5))) \
-                .otherwise(F.floor(x + F.lit(0.5))).cast("long")
-
-    for _ in range(n_iter):
-        if assign == "arrow":
-            # fused assignment + partial fixed-point sums in one Arrow
-            # stage; the tiny (list, dim) shuffle replaces a full-vector
-            # Arrow roundtrip and a 64-aggregate codegen plan per round
-            part = ivf_update_sums_arrow(corpus, cents,
-                                         quant_bits=quant_bits,
-                                         id_col=id_col, vec_col=vec_col)
-            rows = (part.groupBy("list_id", "d")
-                    .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
-                    .collect())
-            by_list = {}
-            for r in rows:
-                ent = by_list.setdefault(int(r["list_id"]),
-                                         {"cnt": int(r["c"])})
-                ent[f"s{int(r['d'])}"] = int(r["s"])
-        else:
-            pinned = _pinned_scores(corpus, cents, vec_col,
-                                    [F.col(vec_col).alias("_v")])
-            assigned = pinned.select(
-                "_v", _argmax_sc().alias("list_id"))
-            sums = assigned.groupBy("list_id").agg(
-                F.count(F.lit(1)).alias("cnt"),
-                *[F.sum(_q(d)).alias(f"s{d}") for d in range(dim)],
-            ).collect()
-            by_list = {int(r["list_id"]): r for r in sums}
-        nxt = []
-        for cid, vec, nrm in cents:
-            r = by_list.get(cid + 1)
-            if r is None:            # empty list: keep the previous centroid
-                nxt.append((cid, vec, nrm))
-                continue
-            denom = scale * float(r["cnt"])
-            nv = [r[f"s{d}"] / denom for d in range(dim)]
-            nxt.append((cid, nv, _fold_norm(nv)))
-        cents = nxt
-    corpus.unpersist()
-    return cents
-
-
 def ivf_centroids(
     corpus: DataFrame,
     *,
@@ -599,53 +508,262 @@ def ivf_centroids(
     lowest ids, collected driver-side with their norms — the cheap
     fallback when no training pass is wanted (ivf_train_centroids is the
     production k-means trainer; pytest shows it beats this codebook on
-    recall@k for out-of-codebook queries). The norm uses the same
-    left-fold double accumulation as _norm so SQL mirrors bit-match.
+    recall@k for out-of-codebook queries).
     """
     rows = (corpus.filter(F.col(id_col) < n_centroids)
             .select(id_col, vec_col).collect())
     out = []
     for r in sorted(rows, key=lambda r: r[0]):
         vec = [float(x) for x in r[1]]
-        acc = 0.0
-        for x in vec:
-            acc += x * x
-        out.append((int(r[0]), vec, math.sqrt(acc)))
+        out.append((int(r[0]), vec, _fold_norm(vec)))
     return out
 
 
-def _pinned_scores(df: DataFrame, cents, vec_col: str, keep) -> DataFrame:
-    """``df.select(*keep, explode(array(scores)) AS _sc)`` — the K
-    codebook-score folds PINNED below a Generate. The argmax consumer
-    (``array_position(sc, array_max(sc))``) references the scores array
-    twice; without the Generate, CollapseProject inlines the K folds into
-    both references, and interpreted lambdas get no common-subexpression
-    elimination. Generate blocks CollapseProject (the shingle_rows
-    discipline), so the folds evaluate once per row and the argmax reads
-    a bound column."""
-    scores = _centroid_scores(F.col(vec_col), cents)
-    return df.select(*keep, F.explode(F.array(scores)).alias("_sc"))
+# --------------------------------------------------------------------------
+# codebook assignment and training: ONE fold-ordered numpy argmax serves
+# IVF (one codebook over the whole vector), PQ (m codebooks over
+# consecutive dim/m slices), IVF-PQ and SemDeDup, and ONE fixed-point
+# Lloyd loop trains every codebook. A literal-codebook higher-order fold
+# in SQL computes the same bits but is 1.5-5x slower per stage and
+# overflows janino's 64 KB method limit inside a Generate.
+
+_QSCALE = float(1 << 20)  # fixed-point scale of the Lloyd update sums
 
 
-def _argmax_sc() -> Column:
-    """1-based argmax over the pinned score column (first index on FP
-    ties — the list_indexof rule)."""
-    return F.array_position(F.col("_sc"), F.array_max(F.col("_sc")))
+def _book_arrays(book) -> tuple[np.ndarray, np.ndarray]:
+    """(K x d centroid matrix, K norms) of a (cid, vec, norm) codebook."""
+    return (np.array([c for _, c, _ in book], dtype=np.float64),
+            np.array([cn for _, _, cn in book], dtype=np.float64))
 
 
-def _centroid_scores(vec: Column, cents) -> Column:
-    """Array of dot(vec, c_j)/||c_j|| against the literal codebook.
+def _fold_argmax(v: np.ndarray, books) -> np.ndarray:
+    """0-based codes (n x m): row i's code in subspace s is the first
+    argmax_j of dot(v_i[s], c_j) / ||c_j|| over ``books[s]`` (a
+    _book_arrays pair), v_i[s] being the s-th of m consecutive dim/m
+    slices of row i.
 
-    Deliberately the HOF fold form, NOT an unrolled chain: K*dim unrolled
-    terms inside the _pinned_scores Generate exceed janino's 64 KB
-    per-method limit (Generate codegen cannot split its generator
-    expression) and the whole stage falls back to interpreted — measured
-    SLOWER than the interpreted fold it replaced. The fold runs once per
-    corpus row; the pair stages are where the time is."""
-    return F.array(*[
-        _dot(vec, F.array(*[F.lit(v) for v in c])) / F.lit(cn)
-        for _, c, cn in cents
-    ])
+    The dot accumulates in _dot's left-fold order (acc += v_j * c_j for
+    ascending j, one IEEE multiply and one IEEE add per step), so every
+    score is bit-identical to SQL list_dot_product(v, c) / cn, and
+    np.argmax's first-max rule is list_indexof(sc, list_max(sc)) — the
+    DuckDB oracles replay each assignment exactly."""
+    m = len(books)
+    d_sub = v.shape[1] // m
+    codes = np.empty((v.shape[0], m), dtype=np.int64)
+    for s, (cmat, cnorm) in enumerate(books):
+        sub = v[:, s * d_sub:(s + 1) * d_sub]
+        scores = np.zeros((v.shape[0], cmat.shape[0]))
+        for j in range(d_sub):
+            scores += sub[:, j:j + 1] * cmat[:, j]
+        scores /= cnorm
+        codes[:, s] = np.argmax(scores, axis=1)
+    return codes
+
+
+def _map_vectors(df: DataFrame, fn, schema: str, *, dim: int, id_col: str,
+                 vec_col: str) -> DataFrame:
+    """``df.select(id_col, vec_col).mapInArrow``: each non-empty batch
+    decodes to (ids, vec, v) — the id and embedding Arrow columns and the
+    embeddings as an n x dim float64 matrix (float -> double is exact,
+    like Spark's cast) — and the stage emits ``fn(ids, vec, v)``."""
+    from collections.abc import Iterator
+
+    import pyarrow as pa
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            ids, vec = batch.column(0), batch.column(1)
+            offs = vec.offsets.to_numpy(zero_copy_only=False)
+            if not ((offs[1:] - offs[:-1]) == dim).all():
+                raise ValueError("ragged embedding lengths")
+            flat = vec.values.to_numpy(zero_copy_only=False)
+            v = flat[offs[0]:offs[-1]].astype(np.float64).reshape(-1, dim)
+            yield fn(ids, vec, v)
+
+    return df.select(id_col, vec_col).mapInArrow(run, schema)
+
+
+def _lloyd(
+    corpus: DataFrame,
+    *,
+    m: int,
+    n_centroids: int,
+    n_iter: int,
+    seed: int,
+    id_col: str,
+    vec_col: str,
+) -> list[list[tuple[int, list[float], float]]]:
+    """m codebooks, one per consecutive dim/m slice, trained together by
+    deterministic distributed k-means (Lloyd's algorithm). Each holds
+    min(n_centroids, rows) (cid, vec, norm) entries.
+
+    Every step is engine-portable and order-independent, so the trained
+    codebooks are bit-reproducible in SQL (the gate oracles re-derive
+    the full training, not just the search):
+    * init — per subspace s, the vectors with the lowest overflow-safe
+      Knuth hash of (vec_id + seed + s) (hashing.hash_bucket, denom
+      2^32 — the repo's engine-portable seeded RNG), ties by vec_id: a
+      seeded pseudo-random sample, collected driver-side like faiss's
+      train sample;
+    * assignment — _fold_argmax, the search path's own rule;
+    * update — per-(list, dim) means accumulated as FIXED-POINT int64
+      sums of sign*floor(|x * 2^20| + 0.5): integer addition is exact
+      and commutative, so the sum is identical under any batching,
+      shuffle fetch order and engine — the float-accumulation order
+      dependence that makes naive distributed k-means nondeterministic
+      never arises. The mean s / (2^20 * count) is then a single IEEE
+      double division on both sides. Empty lists keep their previous
+      centroid.
+
+    One Arrow stage per round assigns every slice and emits only its
+    batch's partial (sub, cid, d, s, c) sums (c repeats the per-list
+    count on every d row); the small (sub, cid, d) aggregate is all that
+    crosses to the driver, so training scans the corpus without
+    collecting it. At corpus scale the caller passes a training sample,
+    faiss-style.
+    """
+    import pyarrow as pa
+
+    from .hashing import hash_bucket
+
+    # n_iter + 1 passes hit the same relation: persist once, release on
+    # exit
+    corpus = spread_input(corpus.select(id_col, vec_col),
+                          key=id_col).persist()
+    # one orderBy + limit per subspace: at m = 1 the whole query is a
+    # TakeOrderedAndProject (per-partition top-K, merged on the driver,
+    # no exchange); a row_number window costs an extra shuffle stage
+    seeds = reduce(DataFrame.unionAll, [
+        corpus.select(F.lit(s).alias("sub"), id_col, vec_col,
+                      hash_bucket(F.col(id_col), seed=seed + s,
+                                  denom=2**32).alias("_r"))
+        .orderBy("_r", id_col).limit(n_centroids) for s in range(m)]).collect()
+    dim = len(seeds[0][vec_col])
+    if dim % m:
+        raise ValueError(f"dim={dim} not divisible by m={m}")
+    d_sub = dim // m
+    books: list[list[tuple[int, list[float], float]]] = \
+        [[] for _ in range(m)]
+    for r in sorted(seeds, key=lambda r: (r["sub"], r["_r"], r[id_col])):
+        s = int(r["sub"])
+        v = [float(x) for x in r[vec_col][s * d_sub:(s + 1) * d_sub]]
+        books[s].append((len(books[s]), v, _fold_norm(v)))
+
+    for _ in range(n_iter):
+        arrays = [_book_arrays(b) for b in books]
+
+        def sums(ids, vec, v):
+            codes = _fold_argmax(v, arrays)
+            xs = v * _QSCALE
+            q = np.where(xs < 0, -np.floor(-xs + 0.5),
+                         np.floor(xs + 0.5)).astype(np.int64)
+            parts = []
+            for s, (cmat, _) in enumerate(arrays):
+                tot = np.zeros((cmat.shape[0], d_sub), dtype=np.int64)
+                np.add.at(tot, codes[:, s], q[:, s * d_sub:(s + 1) * d_sub])
+                cnt = np.bincount(codes[:, s], minlength=cmat.shape[0])
+                hit = np.nonzero(cnt)[0]
+                parts.append((
+                    np.full(hit.size * d_sub, s, dtype=np.int32),
+                    np.repeat(hit, d_sub),
+                    np.tile(np.arange(d_sub, dtype=np.int32), hit.size),
+                    tot[hit].ravel(), np.repeat(cnt[hit], d_sub)))
+            return pa.RecordBatch.from_arrays(
+                [pa.array(np.concatenate(c)) for c in zip(*parts)],
+                names=["sub", "cid", "d", "s", "c"])
+
+        rows = (_map_vectors(corpus, sums,
+                             "sub int, cid long, d int, s long, c long",
+                             dim=dim, id_col=id_col, vec_col=vec_col)
+                .groupBy("sub", "cid", "d")
+                .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
+                .collect())
+        acc: dict[tuple[int, int], tuple[int, list[int]]] = {}
+        for r in rows:
+            _, tot = acc.setdefault((r["sub"], r["cid"]),
+                                    (r["c"], [0] * d_sub))
+            tot[r["d"]] = r["s"]
+        for s in range(m):
+            nxt = []
+            for cid, vec, nrm in books[s]:
+                ent = acc.get((s, cid))
+                if ent is None:       # empty list: keep the previous centroid
+                    nxt.append((cid, vec, nrm))
+                    continue
+                denom = _QSCALE * float(ent[0])
+                nv = [x / denom for x in ent[1]]
+                nxt.append((cid, nv, _fold_norm(nv)))
+            books[s] = nxt
+    corpus.unpersist()
+    return books
+
+
+def ivf_train_centroids(
+    corpus: DataFrame,
+    *,
+    n_centroids: int = 16,
+    n_iter: int = 3,
+    seed: int = 11,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> list[tuple[int, list[float], float]]:
+    """Deterministic distributed k-means IVF codebook — the trained
+    replacement for ivf_centroids' lowest-id sample: _lloyd with one
+    codebook over the whole vector. Returns the (cid, vec, norm) list
+    ivf_topk takes via ``centroids=``."""
+    return _lloyd(corpus, m=1, n_centroids=n_centroids, n_iter=n_iter,
+                  seed=seed, id_col=id_col, vec_col=vec_col)[0]
+
+
+def ivf_assign(
+    corpus: DataFrame,
+    centroids,
+    *,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(neighbor_id, cvec, _cn, list_id): every corpus vector with its
+    norm (_norm's fold order) and its 1-based IVF list under
+    ``centroids`` — _fold_argmax at m = 1, one Arrow pass, no shuffle."""
+    import pyarrow as pa
+
+    book = [_book_arrays(centroids)]
+
+    def assign(ids, vec, v):
+        return pa.RecordBatch.from_arrays(
+            [ids, vec, pa.array(_fold_norms(v)),
+             pa.array(_fold_argmax(v, book)[:, 0] + 1)],
+            names=["neighbor_id", "cvec", "_cn", "list_id"])
+
+    t = dict(corpus.dtypes)
+    return _map_vectors(
+        corpus, assign,
+        f"neighbor_id {t[id_col]}, cvec {t[vec_col]}, _cn double, "
+        "list_id long",
+        dim=book[0][0].shape[1], id_col=id_col, vec_col=vec_col)
+
+
+def _probe_sets(q: DataFrame, centroids, nprobe: int) -> DataFrame:
+    """(query_id, qvec, _qn, list_id): each query's ``nprobe`` best
+    1-based lists by dot(q, c)/||c||, lower cid on ties. The codebook
+    is ranked relationally against the tiny query side."""
+    import pandas as pd
+
+    cdf = q.sparkSession.createDataFrame(pd.DataFrame(
+        {"cid": [c[0] for c in centroids],
+         "cvec_c": [c[1] for c in centroids],
+         "cn_c": [c[2] for c in centroids]}))
+    qscored = q.crossJoin(F.broadcast(cdf)).select(
+        "query_id", "qvec", "_qn", "cid",
+        (_dot(F.col("qvec"), F.col("cvec_c")) / F.col("cn_c")).alias("_cs"))
+    wq = Window.partitionBy("query_id").orderBy(
+        F.col("_cs").desc(), F.col("cid").asc())
+    return (qscored.withColumn("_pr", F.row_number().over(wq))
+            .filter(F.col("_pr") <= nprobe)
+            .select("query_id", "qvec", "_qn",
+                    (F.col("cid") + 1).alias("list_id")))
 
 
 def ivf_topk(
@@ -658,18 +776,16 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids=None,
-    assign: str = "expr",
 ) -> DataFrame:
     """IVF approximate top-k: coarse-quantize the corpus into centroid
     lists, search only the ``nprobe`` lists nearest each query.
 
     The complement of the hyperplane-LSH path (ann_topk): data-dependent
     partitioning instead of data-oblivious, the recall dial is nprobe
-    instead of n_planes. Corpus-side assignment is a ZERO-SHUFFLE literal
-    projection (argmax over the literal codebook scores — first index wins
-    FP ties, same rule as SQL list_indexof); only the (tiny) query side
-    derives its probe set relationally. The candidate join shuffles the
-    corpus once, keyed by list_id — at 10^9 vectors the fraction scanned is
+    instead of n_planes. Corpus-side assignment is one zero-shuffle
+    Arrow pass (ivf_assign); only the (tiny) query side derives its probe
+    set relationally. The candidate join shuffles the corpus once, keyed
+    by list_id — at 10^9 vectors the fraction scanned is
     nprobe/n_centroids, the IVF contract.
 
     Output: (query_id, rank, neighbor_id, score), deterministic ties.
@@ -678,45 +794,9 @@ def ivf_topk(
     if centroids is None:
         centroids = ivf_centroids(corpus, n_centroids=n_centroids,
                                   id_col=id_col, vec_col=vec_col)
-    if assign == "arrow":
-        # vectorized fold-ordered assignment — bit-identical values (see
-        # ivf_assign_arrow); the scale path for the per-vector O(K*dim) work
-        assigned = ivf_assign_arrow(corpus, centroids,
-                                    id_col=id_col, vec_col=vec_col)
-    else:
-        pinned = _pinned_scores(
-            corpus, centroids, vec_col,
-            [F.col(id_col).alias("neighbor_id"),
-             F.col(vec_col).alias("cvec")])
-        # 1-based argmax, first occurrence on ties (matches list_indexof)
-        assigned = pinned.select(
-            "neighbor_id", "cvec",
-            _norm(F.col("cvec")).alias("_cn"),
-            _argmax_sc().alias("list_id"),
-        )
-    # query probe sets: rank the codebook relationally (tiny side)
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    cdf = spark.createDataFrame(pd.DataFrame(
-        {"cid": [c[0] for c in centroids],
-         "cvec_c": [c[1] for c in centroids],
-         "cn_c": [c[2] for c in centroids]}))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("_qn"),
-    )
-    qscored = q.crossJoin(F.broadcast(cdf)).select(
-        "query_id", "qvec", "_qn", "cid",
-        (_dot(F.col("qvec"), F.col("cvec_c"))
-         / F.col("cn_c")).alias("_cs"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("_cs").desc(), F.col("cid").asc())
-    probes = (qscored.withColumn("_pr", F.row_number().over(wq))
-              .filter(F.col("_pr") <= nprobe)
-              .select("query_id", "qvec", "_qn",
-                      (F.col("cid") + 1).alias("list_id")))
+    assigned = ivf_assign(corpus, centroids, id_col=id_col, vec_col=vec_col)
+    probes = _probe_sets(_query_vecs(queries, id_col, vec_col), centroids,
+                         nprobe)
     scored = (
         assigned.join(F.broadcast(probes),
                       (assigned.list_id == probes.list_id)
@@ -725,11 +805,7 @@ def ivf_topk(
                 F.round(_dot(F.col("qvec"), F.col("cvec"))
                         / (F.col("_qn") * F.col("_cn")), 6).alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id", "score"))
+    return _top_k(scored, k)
 
 
 def pq_train(
@@ -745,111 +821,43 @@ def pq_train(
 ) -> list[list[tuple[int, list[float], float]]]:
     """Product-quantization codebooks (Jégou et al. 2011): the vector
     splits into ``m`` subspaces of dim/m and each subspace gets its own
-    ``n_centroids``-entry codebook from the SAME deterministic
-    fixed-point Lloyd arithmetic as ivf_train_centroids (Knuth-hash init
-    with a seed offset per subspace, literal-codebook argmax assignment,
-    int64 quantized update sums) — so the full training replays
-    bit-exactly in SQL, codebooks and all.
-
-    All m codebooks train TOGETHER: the sub-vector relation unions the m
-    slices (m x rows, dim/m wide — same total bytes as one corpus pass),
-    assignment is one projection whose argmax expression CASEs on the
-    sub column, and a single (sub, list)-keyed fixed-point sum table
-    crosses to the driver per round. One distributed pass per Lloyd
-    round for every codebook — not m sequential trainings (24 -> 3 jobs
-    at m=8, n_iter=2; the shape a 100 TB training sample wants). At
-    corpus scale the caller trains on a sample, faiss-style."""
+    codebook — _lloyd with m codebooks (subspace s seeds with seed + s),
+    so the full training replays bit-exactly in SQL, codebooks and all.
+    All m train TOGETHER: one distributed pass per Lloyd round for every
+    codebook, not m sequential trainings."""
     if dim % m:
         raise ValueError(f"dim={dim} not divisible by m={m}")
-    d_sub = dim // m
-    from .hashing import hash_bucket
-
-    parts = [corpus.select(
-        F.lit(s).alias("sub"), F.col(id_col).alias("_id"),
-        F.expr(f"slice({vec_col}, {s * d_sub + 1}, {d_sub})").alias("_v"),
-        hash_bucket(F.col(id_col), seed=seed + s,
-                    denom=2**32).alias("_r")) for s in range(m)]
-    subs = parts[0]
-    for p in parts[1:]:
-        subs = subs.unionAll(p)
-    subs = subs.persist()
-    wk = Window.partitionBy("sub").orderBy("_r", "_id")
-    seed_rows = (subs.withColumn("_rk", F.row_number().over(wk))
-                 .filter(F.col("_rk") <= n_centroids)
-                 .select("sub", "_rk", "_v").collect())
-    books: list[list[tuple[int, list[float], float]]] = \
-        [[None] * n_centroids for _ in range(m)]  # type: ignore[list-item]
-    for r in seed_rows:
-        v = [float(x) for x in r["_v"]]
-        books[int(r["sub"])][int(r["_rk"]) - 1] = (
-            int(r["_rk"]) - 1, v, _fold_norm(v))
-    scale = float(1 << 20)
-
-    def _q(d: int) -> Column:
-        x = F.element_at(F.col("_v"), d + 1).cast("double") * F.lit(scale)
-        return F.when(x < 0, -F.floor(-x + F.lit(0.5))) \
-                .otherwise(F.floor(x + F.lit(0.5))).cast("long")
-
-    for _ in range(n_iter):
-        # relational argmax against the broadcast codebook RELATION: a
-        # literal-expression codebook (the ivf path) stacks m*K
-        # interpreted dot-folds into one tree and Catalyst
-        # analysis/codegen time dwarfs the data at small K*dim — the
-        # join+rank form keeps the plan O(1) in m*K. row_number over
-        # (score desc, cid asc) == array_position-of-max (first index on
-        # FP ties): same doubles, same tie rule, bit-identical codebooks
-        # (the gate oracle re-derives training and still hash-matches).
-        assigned = _pq_assign(subs, books)
-        sums = assigned.groupBy("sub", "list_id").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            *[F.sum(_q(d)).alias(f"s{d}") for d in range(d_sub)]).collect()
-        by_key = {(int(r["sub"]), int(r["list_id"])): r for r in sums}
-        for s in range(m):
-            nxt = []
-            for cid, vec, nrm in books[s]:
-                r = by_key.get((s, cid + 1))
-                if r is None:        # empty list: keep previous centroid
-                    nxt.append((cid, vec, nrm))
-                    continue
-                denom = scale * float(r["cnt"])
-                nxt.append((cid, [r[f"s{d}"] / denom
-                                  for d in range(d_sub)], 0.0))
-            books[s] = [(cid, nv, _fold_norm(nv)) for cid, nv, _ in nxt]
-        # recompute norms only for updated entries is equivalent: _fold_norm
-        # of an unchanged vec reproduces the stored norm bit-for-bit
-    subs.unpersist()
-    return books
+    return _lloyd(corpus, m=m, n_centroids=n_centroids, n_iter=n_iter,
+                  seed=seed, id_col=id_col, vec_col=vec_col)
 
 
-def _pq_assign(subs: DataFrame,
-               books: list[list[tuple[int, list[float], float]]]) -> DataFrame:
-    """(sub, _v, list_id) — argmax dot(v, c)/||c|| per (sub, row) via a
-    broadcast codebook join + struct-max aggregate (1-based list_id,
-    lowest cid on FP ties: the array_position rule).
+def _encode(corpus: DataFrame, books, *, dim: int, id_col: str,
+            vec_col: str, centroids=None) -> DataFrame:
+    """(id_col, sub, code) — m rows per vector, code the _fold_argmax
+    over the m PQ ``books`` — plus the 1-based coarse ``list_id`` under
+    ``centroids`` when given; one Arrow pass."""
+    import pyarrow as pa
 
-    r6: ``max(struct(_sc, -cid))`` replaces the rank-1 window — struct
-    comparison is lexicographic, so the max picks the highest score and,
-    on exact FP ties, the highest -cid == LOWEST cid: the identical tie
-    rule, but as a hash aggregate with map-side partial combine (the K
-    scored rows per (sub, row) collapse before the exchange) instead of
-    a full exchange + sort of the K-times-larger scored relation per
-    Lloyd round (guide §2.3). ``_v`` is constant within the group
-    (first() is deterministic here)."""
-    spark = subs.sparkSession
-    cb = spark.createDataFrame(
-        [(s, cid, [float(x) for x in c], float(cn))
-         for s, book in enumerate(books) for (cid, c, cn) in book],
-        "sub int, cid int, c array<double>, cn double")
-    scored = subs.join(F.broadcast(cb), "sub").select(
-        "sub", "_id", "_v", "cid",
-        (_dot(F.col("_v"), F.col("c")) / F.col("cn")).alias("_sc"))
-    best = scored.groupBy("sub", "_id").agg(
-        F.first("_v").alias("_v"),
-        F.max(F.struct(F.col("_sc").alias("_s"),
-                       (-F.col("cid")).alias("_nc"))).alias("_m"))
-    return best.select(
-        "sub", "_id", "_v",
-        (-F.col("_m._nc") + 1).alias("list_id"))
+    pq = [_book_arrays(b) for b in books]
+    coarse = None if centroids is None else [_book_arrays(centroids)]
+    m = len(pq)
+    names = [id_col, "sub", "code"] + ([] if coarse is None else ["list_id"])
+
+    def encode(ids, vec, v):
+        n = v.shape[0]
+        cols = [ids.take(pa.array(np.repeat(np.arange(n), m))),
+                pa.array(np.tile(np.arange(m, dtype=np.int32), n)),
+                pa.array(_fold_argmax(v, pq).ravel().astype(np.int32))]
+        if coarse is not None:
+            cols.append(pa.array(
+                np.repeat(_fold_argmax(v, coarse)[:, 0] + 1, m)))
+        return pa.RecordBatch.from_arrays(cols, names=names)
+
+    schema = f"{id_col} {dict(corpus.dtypes)[id_col]}, sub int, code int"
+    if coarse is not None:
+        schema += ", list_id long"
+    return _map_vectors(corpus, encode, schema, dim=dim, id_col=id_col,
+                        vec_col=vec_col)
 
 
 def pq_encode(
@@ -862,21 +870,48 @@ def pq_encode(
 ) -> DataFrame:
     """PQ codes as a relation: (id_col, sub, code) — m rows per vector,
     log2(n_centroids)*m bits of storage at rest. Assignment per subspace
-    is the trainer's own rule (argmax dot/||c||, lowest cid on ties) via
-    the same broadcast-codebook join (_pq_assign), so encode == the
-    final training assignment and the plan stays O(1) in m*K."""
-    m = len(books)
-    d_sub = dim // m
-    parts = [corpus.select(
-        F.lit(s).alias("sub"), F.col(id_col).alias("_id"),
-        F.expr(f"slice({vec_col}, {s * d_sub + 1}, {d_sub})").alias("_v"))
-        for s in range(m)]
-    subs = parts[0]
-    for p in parts[1:]:
-        subs = subs.unionAll(p)
-    return _pq_assign(subs, books).select(
-        F.col("_id").alias(id_col), "sub",
-        (F.col("list_id") - 1).cast("int").alias("code"))
+    is the trainer's own rule (_fold_argmax), so encode == the final
+    training assignment."""
+    return _encode(corpus, books, dim=dim, id_col=id_col, vec_col=vec_col)
+
+
+def _adc_table(q: DataFrame, books, d_sub: int) -> DataFrame:
+    """(query_id, _qn, sub, code, partial, cn_sq): each query's partial
+    dot product and squared centroid norm per (subspace, code) — the
+    ADC lookup table, m * n_centroids rows per query."""
+    cb = q.sparkSession.createDataFrame(
+        [(s, cid, [float(x) for x in c], float(cn))
+         for s, book in enumerate(books) for (cid, c, cn) in book],
+        "sub int, code int, c array<double>, cn double")
+    return q.crossJoin(F.broadcast(cb)).select(
+        "query_id", "_qn", "sub", "code",
+        _dot(F.expr(f"slice(qvec, sub * {d_sub} + 1, {d_sub})"),
+             F.col("c")).alias("partial"),
+        (F.col("cn") * F.col("cn")).alias("cn_sq"))
+
+
+def _adc_topk(cand: DataFrame, q: DataFrame, corpus: DataFrame, *, k: int,
+              shortlist: int | None, id_col: str,
+              vec_col: str) -> DataFrame:
+    """Top-k from ADC candidates (query_id, _qn, id_col, sub, partial,
+    cn_sq): score = cosine against the reconstructed vector, both sums
+    folded over the sub-sorted struct list (a deterministic order under
+    any shuffle); ``shortlist=N`` re-ranks the ADC top-N on exact
+    cosine (_rerank)."""
+    agg = cand.groupBy("query_id", "_qn", F.col(id_col)).agg(
+        F.array_sort(F.collect_list(
+            F.struct("sub", "partial", "cn_sq"))).alias("_ps"))
+    dsum = F.aggregate(F.col("_ps"), F.lit(0.0),
+                       lambda acc, x: acc + x["partial"])
+    nsq = F.aggregate(F.col("_ps"), F.lit(0.0),
+                      lambda acc, x: acc + x["cn_sq"])
+    scored = agg.select(
+        "query_id", F.col(id_col).alias("neighbor_id"),
+        F.round(dsum / (F.col("_qn") * F.sqrt(nsq)), 6).alias("score"))
+    if shortlist is None:
+        return _top_k(scored, k)
+    short = _top_k(scored, shortlist).select("query_id", "neighbor_id")
+    return _rerank(corpus, q, short, k, id_col=id_col, vec_col=vec_col)
 
 
 def pq_topk(
@@ -921,58 +956,14 @@ def pq_topk(
         books = pq_train(corpus, dim=dim, m=m, n_centroids=n_centroids,
                          n_iter=n_iter, seed=seed, id_col=id_col,
                          vec_col=vec_col)
-    d_sub = dim // m
     codes = pq_encode(corpus, books, dim=dim, id_col=id_col,
                       vec_col=vec_col)
-    spark = corpus.sparkSession
-    cb = spark.createDataFrame(
-        [(s, cid, [float(x) for x in c], float(cn))
-         for s, book in enumerate(books) for (cid, c, cn) in book],
-        "sub int, code int, c array<double>, cn double")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("_qn"))
-    parts = q.crossJoin(F.broadcast(cb)).select(
-        "query_id", "_qn", "sub", "code",
-        _dot(F.expr(f"slice(qvec, sub * {d_sub} + 1, {d_sub})"),
-             F.col("c")).alias("partial"),
-        (F.col("cn") * F.col("cn")).alias("cn_sq"))
-    joined = codes.join(F.broadcast(parts), ["sub", "code"]) \
+    q = _query_vecs(queries, id_col, vec_col)
+    cand = codes.join(F.broadcast(_adc_table(q, books, dim // m)),
+                      ["sub", "code"]) \
         .filter(F.col(id_col) != F.col("query_id"))
-    agg = joined.groupBy("query_id", "_qn", F.col(id_col)).agg(
-        F.array_sort(F.collect_list(
-            F.struct("sub", "partial", "cn_sq"))).alias("_ps"))
-    dsum = F.aggregate(F.col("_ps"), F.lit(0.0),
-                       lambda acc, x: acc + x["partial"])
-    nsq = F.aggregate(F.col("_ps"), F.lit(0.0),
-                      lambda acc, x: acc + x["cn_sq"])
-    scored = agg.select(
-        "query_id", F.col(id_col).alias("neighbor_id"),
-        F.round(dsum / (F.col("_qn") * F.sqrt(nsq)), 6).alias("score"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc())
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    if shortlist is None:
-        return (ranked.filter(F.col("rank") <= k)
-                .select("query_id", "rank", "neighbor_id", "score"))
-    short = (ranked.filter(F.col("rank") <= shortlist)
-             .select("query_id", "neighbor_id"))
-    cvecs = corpus.select(F.col(id_col).alias("neighbor_id"),
-                          F.col(vec_col).alias("cvec"),
-                          _norm(F.col(vec_col)).alias("_cn"))
-    qvecs = q.select("query_id", F.col("qvec").alias("qvec2"), "_qn")
-    exact = (
-        cvecs.join(F.broadcast(short), "neighbor_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .select("query_id", "neighbor_id",
-                F.round(_dot(F.col("qvec2"), F.col("cvec"))
-                        / (F.col("_qn") * F.col("_cn")), 6).alias("score"))
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc())
-    return (exact.withColumn("rank", F.row_number().over(wk))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id", "score"))
+    return _adc_topk(cand, q, corpus, k=k, shortlist=shortlist,
+                     id_col=id_col, vec_col=vec_col)
 
 
 def semdedup(
@@ -985,7 +976,6 @@ def semdedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids=None,
-    assign: str = "expr",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
     web-scale through semantic deduplication"): k-means-cluster the
@@ -1001,11 +991,10 @@ def semdedup(
     at 10^9 embeddings size lists to ~corpus/n_centroids ≈ 10^4-10^5).
     Reuses the deterministic trained codebook (ivf_train_centroids — same
     seed/rounds as the IVF gate entries, so the SQL oracle re-derives the
-    identical clustering), the zero-shuffle literal-codebook assignment
-    (``assign='arrow'`` for the vectorized bit-identical path), and the
-    norms are computed below the join so each pair pays one fold.
-    The self-join's explicit repartition on list_id materializes the
-    assignment exchange once for both sides.
+    identical clustering) and the zero-shuffle Arrow assignment
+    (ivf_assign), which also computes each vector's norm once.
+    The explicit repartition on list_id materializes the assignment
+    exchange once for both consumers.
 
     Output: (vec_id, list_id, kept) — kept=false marks removed near-dups.
     """
@@ -1013,20 +1002,8 @@ def semdedup(
     if centroids is None:
         centroids = ivf_train_centroids(
             corpus, n_centroids=n_centroids, n_iter=n_iter, seed=seed,
-            id_col=id_col, vec_col=vec_col, assign=assign)
-    if assign == "arrow":
-        assigned = ivf_assign_arrow(corpus, centroids,
-                                    id_col=id_col, vec_col=vec_col)
-    else:
-        pinned = _pinned_scores(
-            corpus, centroids, vec_col,
-            [F.col(id_col).alias("neighbor_id"),
-             F.col(vec_col).alias("cvec")])
-        assigned = pinned.select(
-            "neighbor_id", "cvec",
-            _norm(F.col("cvec")).alias("_cn"),
-            _argmax_sc().alias("list_id"),
-        )
+            id_col=id_col, vec_col=vec_col)
+    assigned = ivf_assign(corpus, centroids, id_col=id_col, vec_col=vec_col)
     # GROUPED within-list pairwise (r6 — the embedding_near_duplicates
     # rationale): each assigned vector moves into its list group ONCE
     # (the explicit repartition below), and the Σ|list|² scoring runs as
@@ -1055,146 +1032,6 @@ def semdedup(
     )
 
 
-def ivf_assign_arrow(
-    corpus: DataFrame,
-    centroids,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Vectorized centroid assignment (mapInArrow), bit-identical to the
-    expression path.
-
-    The interpreted higher-order fold costs ~80 us per 64-dim vector —
-    fine at bench scale, the dominant term at 10^9 vectors. This stage
-    computes the same scores with numpy, preserving EXACT float semantics
-    by accumulating in the same left-fold order (for ascending j:
-    acc += v[:, j] * c[j], then divide by ||c||; norm likewise
-    acc += v[:, j]^2 then sqrt). Each numpy += performs the identical
-    sequence of double roundings as the interpreted lambda and SQL
-    list_dot_product, so argmax (np.argmax = first max index =
-    array_position/list_indexof tie rule) and every downstream hash agree
-    bit-for-bit — proven by the shared DuckDB oracle on the gate entry.
-
-    Output: (neighbor_id, cvec, _cn, list_id) — the same relation the
-    expression path feeds the candidate join.
-    """
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-
-    cmat = np.array([c for _, c, _ in centroids], dtype=np.float64)
-    cnorm = np.array([cn for _, _, cn in centroids], dtype=np.float64)
-    n_cent, dim = cmat.shape
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            names = batch.schema.names
-            ids = batch.column(names.index(id_col))
-            vec = batch.column(names.index(vec_col))
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            flat = vec.values.to_numpy(zero_copy_only=False).astype(np.float64)
-            offs = vec.offsets.to_numpy(zero_copy_only=False)
-            if not ((offs[1:] - offs[:-1]) == dim).all():
-                raise ValueError("ragged embedding lengths")
-            v = flat[offs[0]:offs[-1]].reshape(-1, dim)
-            scores = np.zeros((v.shape[0], n_cent))
-            nrm = np.zeros(v.shape[0])
-            for j in range(dim):       # fold order: ascending j, += per step
-                scores += v[:, j:j + 1] * cmat[:, j]
-                nrm += v[:, j] * v[:, j]
-            scores /= cnorm
-            list_id = np.argmax(scores, axis=1) + 1   # first-max, 1-based
-            yield pa.RecordBatch.from_arrays(
-                [ids, vec, pa.array(np.sqrt(nrm)),
-                 pa.array(list_id.astype(np.int64))],
-                names=["neighbor_id", "cvec", "_cn", "list_id"],
-            )
-
-    vt = dict(corpus.dtypes)[vec_col]
-    return corpus.select(id_col, vec_col).mapInArrow(
-        run,
-        schema=f"neighbor_id long, cvec {vt}, _cn double, list_id long")
-
-
-def ivf_update_sums_arrow(
-    corpus: DataFrame,
-    centroids,
-    *,
-    quant_bits: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Fused Lloyd-round update: assignment + per-list FIXED-POINT sums in
-    ONE Arrow stage.
-
-    The separate-stage form (ivf_assign_arrow -> 64 JVM `sum(_q(d))`
-    aggregates) ships every vector back through Arrow and compiles a
-    64-aggregate codegen plan per round — ~1.3 s/round of pure overhead at
-    toy scale. Here each batch emits only its partial (list_id, d, s, c)
-    table (<= lists x dim rows per batch): scores use the SAME ascending-j
-    += fold as ivf_assign_arrow (bit-identical argmax), quantization is
-    the same sign*floor(|x*2^q| + 0.5) as the expression path's `_q`
-    (identical float64 op sequence), and int64 partial sums are EXACT, so
-    the final groupBy sum equals the expression path's result under any
-    batching or shuffle order — locked by the expr/arrow training-parity
-    pytest.
-
-    Output: (list_id, d, s, c) — c repeats the batch's per-list count on
-    every dim row, so the summed count can be read at any d.
-    """
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-
-    cmat = np.array([c for _, c, _ in centroids], dtype=np.float64)
-    cnorm = np.array([cn for _, _, cn in centroids], dtype=np.float64)
-    n_cent, dim = cmat.shape
-    scale = float(1 << quant_bits)
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            names = batch.schema.names
-            vec = batch.column(names.index(vec_col))
-            if isinstance(vec, pa.ChunkedArray):
-                vec = vec.combine_chunks()
-            flat = vec.values.to_numpy(zero_copy_only=False).astype(np.float64)
-            offs = vec.offsets.to_numpy(zero_copy_only=False)
-            if not ((offs[1:] - offs[:-1]) == dim).all():
-                raise ValueError("ragged embedding lengths")
-            v = flat[offs[0]:offs[-1]].reshape(-1, dim)
-            scores = np.zeros((v.shape[0], n_cent))
-            for j in range(dim):       # fold order: ascending j, += per step
-                scores += v[:, j:j + 1] * cmat[:, j]
-            scores /= cnorm
-            list_id = np.argmax(scores, axis=1) + 1   # first-max, 1-based
-            xs = v * scale
-            q = np.where(xs < 0, -np.floor(-xs + 0.5),
-                         np.floor(xs + 0.5)).astype(np.int64)
-            lids, ds, ss, cs = [], [], [], []
-            for lid in np.unique(list_id):
-                mask = list_id == lid
-                s = q[mask].sum(axis=0, dtype=np.int64)
-                c = int(mask.sum())
-                lids.extend([int(lid)] * dim)
-                ds.extend(range(dim))
-                ss.extend(int(x) for x in s)
-                cs.extend([c] * dim)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(lids, pa.int64()), pa.array(ds, pa.int32()),
-                 pa.array(ss, pa.int64()), pa.array(cs, pa.int64())],
-                names=["list_id", "d", "s", "c"],
-            )
-
-    return corpus.select(id_col, vec_col).mapInArrow(
-        run, schema="list_id long, d int, s long, c long")
-
-
 def ivfpq_index(
     corpus: DataFrame,
     centroids,
@@ -1206,18 +1043,11 @@ def ivfpq_index(
 ) -> DataFrame:
     """Build the IVF-PQ index relation: (id, sub, code, list_id) — m rows
     per vector, the table a production deployment writes ONCE (partitioned
-    by list_id) and every search reads. Coarse assignment is the
-    zero-shuffle literal-codebook argmax (ivf_topk's rule); PQ codes come
-    from pq_encode; one id-keyed join glues them — the only shuffle here,
-    paid at index-build time, never per query."""
-    assigned = _pinned_scores(
-        spread_input(corpus, key=id_col), centroids, vec_col,
-        [F.col(id_col).alias("_aid")]).select(
-        "_aid", _argmax_sc().alias("list_id"))
-    return (pq_encode(corpus, books, dim=dim, id_col=id_col,
-                      vec_col=vec_col)
-            .join(assigned, F.col(id_col) == F.col("_aid"))
-            .select(id_col, "sub", "code", "list_id"))
+    by list_id) and every search reads. One zero-shuffle Arrow pass
+    computes both the coarse list (ivf_topk's rule) and the PQ codes
+    (pq_encode's rule)."""
+    return _encode(spread_input(corpus, key=id_col), books, dim=dim,
+                   id_col=id_col, vec_col=vec_col, centroids=centroids)
 
 
 def ivfpq_topk(
@@ -1251,15 +1081,12 @@ def ivfpq_topk(
     Index build (one-time, amortized at scale — see ivfpq_index; pass a
     prebuilt/stored relation via ``index=`` and the search plan contains
     NO sort-merge join at all, a pytest-locked shape). Search: query probe
-    sets and per-query
-    (sub, code) -> partial-dot ADC tables are both tiny broadcast
-    relations; candidates = code rows whose list_id is probed (broadcast
-    hash join — the corpus never shuffles), scored by the sub-sorted
-    deterministic ADC fold (pq_topk's rule, bit-stable under any shuffle
-    order). ``shortlist=N`` adds the exact-cosine refine over retained
-    float vectors, exactly pq_topk's stage.
+    sets (ivf_topk's) and per-query (sub, code) -> partial-dot ADC tables
+    (pq_topk's) are both tiny broadcast relations; candidates = code rows
+    whose list_id is probed (broadcast hash join — the corpus never
+    shuffles), scored and optionally refined exactly as in pq_topk.
 
-    Both codebooks are the deterministic fixed-point Lloyd trainers
+    Both codebooks come from the deterministic fixed-point Lloyd trainer
     (ivf_train_centroids / pq_train), so the full pipeline — two
     trainings, encode, probes, ADC, refine — replays bit-exactly in the
     gate oracle. Output: (query_id, rank, neighbor_id, score).
@@ -1267,82 +1094,21 @@ def ivfpq_topk(
     if centroids is None:
         centroids = ivf_train_centroids(
             corpus, n_centroids=n_coarse, n_iter=n_iter_coarse, seed=seed,
-            id_col=id_col, vec_col=vec_col, assign="arrow")
+            id_col=id_col, vec_col=vec_col)
     if books is None:
         books = pq_train(corpus, dim=dim, m=m, n_centroids=n_codes,
                          n_iter=n_iter_pq, seed=seed, id_col=id_col,
                          vec_col=vec_col)
-    d_sub = dim // m
     codes = index if index is not None else ivfpq_index(
         corpus, centroids, books, dim=dim, id_col=id_col, vec_col=vec_col)
-
-    spark = corpus.sparkSession
-    import pandas as pd
-
-    cdf = spark.createDataFrame(pd.DataFrame(
-        {"cid": [c[0] for c in centroids],
-         "cvec_c": [c[1] for c in centroids],
-         "cn_c": [c[2] for c in centroids]}))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("_qn"))
-    qscored = q.crossJoin(F.broadcast(cdf)).select(
-        "query_id", "cid",
-        (_dot(F.col("qvec"), F.col("cvec_c"))
-         / F.col("cn_c")).alias("_cs"))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("_cs").desc(), F.col("cid").asc())
-    probes = (qscored.withColumn("_pr", F.row_number().over(wq))
-              .filter(F.col("_pr") <= nprobe)
-              .select("query_id", (F.col("cid") + 1).alias("list_id")))
-
-    cb = spark.createDataFrame(
-        [(s, cid, [float(x) for x in c], float(cn))
-         for s, book in enumerate(books) for (cid, c, cn) in book],
-        "sub int, code int, c array<double>, cn double")
-    parts = q.crossJoin(F.broadcast(cb)).select(
-        "query_id", "_qn", "sub", "code",
-        _dot(F.expr(f"slice(qvec, sub * {d_sub} + 1, {d_sub})"),
-             F.col("c")).alias("partial"),
-        (F.col("cn") * F.col("cn")).alias("cn_sq"))
-
+    q = _query_vecs(queries, id_col, vec_col)
+    probes = _probe_sets(q, centroids, nprobe).select("query_id", "list_id")
     cand = (codes.join(F.broadcast(probes), "list_id")
             .filter(F.col(id_col) != F.col("query_id"))
-            .join(F.broadcast(parts), ["query_id", "sub", "code"]))
-    agg = cand.groupBy("query_id", "_qn", F.col(id_col)).agg(
-        F.array_sort(F.collect_list(
-            F.struct("sub", "partial", "cn_sq"))).alias("_ps"))
-    dsum = F.aggregate(F.col("_ps"), F.lit(0.0),
-                       lambda acc, x: acc + x["partial"])
-    nsq = F.aggregate(F.col("_ps"), F.lit(0.0),
-                      lambda acc, x: acc + x["cn_sq"])
-    scored = agg.select(
-        "query_id", F.col(id_col).alias("neighbor_id"),
-        F.round(dsum / (F.col("_qn") * F.sqrt(nsq)), 6).alias("score"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc())
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    if shortlist is None:
-        return (ranked.filter(F.col("rank") <= k)
-                .select("query_id", "rank", "neighbor_id", "score"))
-    short = (ranked.filter(F.col("rank") <= shortlist)
-             .select("query_id", "neighbor_id"))
-    cvecs = corpus.select(F.col(id_col).alias("neighbor_id"),
-                          F.col(vec_col).alias("cvec"),
-                          _norm(F.col(vec_col)).alias("_cn"))
-    qvecs = q.select("query_id", F.col("qvec").alias("qvec2"), "_qn")
-    exact = (
-        cvecs.join(F.broadcast(short), "neighbor_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .select("query_id", "neighbor_id",
-                F.round(_dot(F.col("qvec2"), F.col("cvec"))
-                        / (F.col("_qn") * F.col("_cn")), 6).alias("score"))
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc())
-    return (exact.withColumn("rank", F.row_number().over(wk))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id", "score"))
+            .join(F.broadcast(_adc_table(q, books, dim // m)),
+                  ["query_id", "sub", "code"]))
+    return _adc_topk(cand, q, corpus, k=k, shortlist=shortlist,
+                     id_col=id_col, vec_col=vec_col)
 
 
 # --------------------------------------------------------------------------
@@ -1509,24 +1275,8 @@ def rp_topk(
     short = (scored.withColumn("_srank", F.row_number().over(ws))
              .filter(F.col("_srank") <= shortlist)
              .select("query_id", "neighbor_id"))
-    cvecs = corpus.select(F.col(id_col).alias("neighbor_id"),
-                          F.col(vec_col).alias("cvec"),
-                          _norm(F.col(vec_col)).alias("_cn"))
-    qvecs = queries.select(F.col(id_col).alias("query_id"),
-                           F.col(vec_col).alias("qvec2"),
-                           _norm(F.col(vec_col)).alias("_qn"))
-    exact = (
-        cvecs.join(F.broadcast(short), "neighbor_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .select("query_id", "neighbor_id",
-                F.round(_dot(F.col("qvec2"), F.col("cvec"))
-                        / (F.col("_qn") * F.col("_cn")), 6).alias("score"))
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc())
-    return (exact.withColumn("rank", F.row_number().over(wk))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id", "score"))
+    return _rerank(corpus, _query_vecs(queries, id_col, vec_col), short, k,
+                   id_col=id_col, vec_col=vec_col)
 
 
 # --------------------------------------------------------------------------

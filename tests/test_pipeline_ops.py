@@ -7,6 +7,8 @@ exact duplicates / perturbed copies explicitly where needed.
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -678,10 +680,8 @@ class TestIVF:
         out = similarity.ivf_topk(emb, emb.filter(F.col("vec_id") < 4),
                                   k=50, n_centroids=8, nprobe=1)
         cents = similarity.ivf_centroids(emb, n_centroids=8)
-        scores = similarity._centroid_scores(F.col("embedding"), cents)
-        assigned = emb.select(
-            F.col("vec_id"),
-            F.array_position(scores, F.array_max(scores)).alias("list_id"))
+        assigned = similarity.ivf_assign(emb, cents).select(
+            F.col("neighbor_id").alias("vec_id"), "list_id")
         joined = (out.join(assigned.withColumnRenamed("vec_id", "neighbor_id"),
                            "neighbor_id")
                   .join(assigned.withColumnRenamed("vec_id", "query_id")
@@ -773,29 +773,123 @@ class TestContaminationScreen:
         assert out[3]["matched"] == "broadcast join"
 
 
-class TestIVFArrow:
-    def test_arrow_assignment_bit_parity(self, emb, spark):
-        q = emb.filter(F.col("vec_id") < 6)
-        a = similarity.ivf_topk(emb, q, k=4, n_centroids=8, nprobe=3) \
-            .orderBy("query_id", "rank").collect()
-        b = similarity.ivf_topk(emb, q, k=4, n_centroids=8, nprobe=3,
-                                assign="arrow") \
-            .orderBy("query_id", "rank").collect()
-        assert [tuple(r) for r in a] == [tuple(r) for r in b]
+_M32 = 1 << 32
+
+
+def _ref_norm(v):
+    acc = 0.0
+    for x in v:
+        acc += x * x
+    return math.sqrt(acc)
+
+
+def _ref_argmax(v, book, norms):
+    """First j maximizing the left-fold dot(v, c_j) / ||c_j||."""
+    best, arg = None, 0
+    for j, (c, cn) in enumerate(zip(book, norms)):
+        acc = 0.0
+        for x, y in zip(v, c):
+            acc += x * y
+        if best is None or acc / cn > best:
+            best, arg = acc / cn, j
+    return arg
+
+
+def _ref_fixed(x):
+    xs = x * float(1 << 20)
+    return -math.floor(-xs + 0.5) if xs < 0 else math.floor(xs + 0.5)
+
+
+def _ref_lloyd(rows, *, m, k, n_iter, seed):
+    """Plain-Python k-means over m consecutive slices: per slice s, init
+    = the k lowest Knuth ranks of (id + seed + s) (ties by id), then
+    n_iter rounds of first-max assignment and fixed-point mean update
+    (empty lists keep their centroid). Returns m lists of vectors."""
+    d = len(rows[0][1]) // m
+    books = []
+    for s in range(m):
+        sub = [(i, v[s * d:(s + 1) * d]) for i, v in rows]
+        sub.sort(key=lambda r: (((r[0] % _M32 + seed + s) % _M32)
+                                * 2654435761 % _M32, r[0]))
+        book = [v for _, v in sub[:k]]
+        for _ in range(n_iter):
+            norms = [_ref_norm(c) for c in book]
+            tot = {}
+            for _, v in sub:
+                ent = tot.setdefault(_ref_argmax(v, book, norms),
+                                     [0, [0] * d])
+                ent[0] += 1
+                ent[1] = [a + _ref_fixed(x) for a, x in zip(ent[1], v)]
+            book = [[a / (float(1 << 20) * tot[j][0]) for a in tot[j][1]]
+                    if j in tot else c for j, c in enumerate(book)]
+        books.append(book)
+    return books
+
+
+class TestCodebookReference:
+    """The one codebook assignment (_fold_argmax) and Lloyd trainer
+    against a plain-Python reference, bit for bit."""
+
+    @pytest.fixture(scope="class")
+    def rows(self, emb):
+        return [(r["vec_id"], [float(x) for x in r["embedding"]])
+                for r in emb.collect()]
+
+    @staticmethod
+    def _with_norms(book):
+        return [(j, c, _ref_norm(c)) for j, c in enumerate(book)]
+
+    def test_ivf_training_and_assignment(self, emb, rows):
+        cents = similarity.ivf_train_centroids(emb, n_centroids=8, n_iter=2,
+                                               seed=11)
+        ref = _ref_lloyd(rows, m=1, k=8, n_iter=2, seed=11)[0]
+        assert cents == self._with_norms(ref)
+        norms = [cn for _, _, cn in cents]
+        got = {r["neighbor_id"]: (r["list_id"], r["_cn"])
+               for r in similarity.ivf_assign(emb, cents).collect()}
+        assert got == {i: (_ref_argmax(v, ref, norms) + 1, _ref_norm(v))
+                       for i, v in rows}
+
+    def test_pq_training_and_encode(self, emb, rows):
+        books = similarity.pq_train(emb, dim=64, m=8, n_centroids=8,
+                                    n_iter=2, seed=11)
+        ref = _ref_lloyd(rows, m=8, k=8, n_iter=2, seed=11)
+        assert books == [self._with_norms(b) for b in ref]
+        got = {(r["vec_id"], r["sub"]): r["code"]
+               for r in similarity.pq_encode(emb, books, dim=64).collect()}
+        norms = [[_ref_norm(c) for c in b] for b in ref]
+        assert got == {(i, s): _ref_argmax(v[s * 8:(s + 1) * 8], ref[s],
+                                           norms[s])
+                       for i, v in rows for s in range(8)}
+
+    def test_fewer_rows_than_centroids(self, spark):
+        """A 5-vector corpus trains 5-entry codebooks (IVF and each PQ
+        subspace) and encodes against them."""
+        df = spark.createDataFrame(
+            [(i, [float(i + 1), float(i % 2), 1.0, -float(i)])
+             for i in range(5)], "vec_id long, embedding array<float>")
+        cents = similarity.ivf_train_centroids(df, n_centroids=8)
+        books = similarity.pq_train(df, dim=4, m=2, n_centroids=8)
+        assert [c[0] for c in cents] == list(range(5))
+        assert [[c[0] for c in b] for b in books] == [list(range(5))] * 2
+        lists = [r["list_id"] for r in
+                 similarity.ivf_assign(df, cents).collect()]
+        assert len(lists) == 5 and all(1 <= x <= 5 for x in lists)
+        codes = [r["code"] for r in
+                 similarity.pq_encode(df, books, dim=4).collect()]
+        assert len(codes) == 10 and all(0 <= x < 5 for x in codes)
 
 
 class TestIVFTraining:
-    def test_trained_codebook_deterministic_and_assign_parity(self, emb):
-        """Same codebook bit-for-bit on repeat runs AND between the
-        expression and Arrow assignment paths (the fixed-point Lloyd sums
-        are order-independent integers; the mean is one IEEE division)."""
+    def test_trained_codebook_deterministic(self, emb):
+        """Same codebook bit-for-bit on repeat runs and under a different
+        partitioning (the fixed-point Lloyd sums are order-independent
+        integers; the mean is one IEEE division)."""
         a = similarity.ivf_train_centroids(emb, n_centroids=8, n_iter=2,
                                            seed=11)
-        b = similarity.ivf_train_centroids(emb, n_centroids=8, n_iter=2,
-                                           seed=11)
-        c = similarity.ivf_train_centroids(emb, n_centroids=8, n_iter=2,
-                                           seed=11, assign="arrow")
-        assert a == b == c
+        b = similarity.ivf_train_centroids(emb.repartition(7),
+                                           n_centroids=8, n_iter=2, seed=11)
+        assert a == b
 
     def test_recall_improves_over_lowest_id_codebook(self, emb):
         """k-means training must beat the lowest-id seed codebook on
@@ -1254,18 +1348,6 @@ class TestSemDeDup:
         assert out[3]["kept"] and out[4]["kept"]
         assert out[3]["list_id"] != out[4]["list_id"]
 
-    def test_arrow_matches_expr(self, spark, emb):
-        from solarpos_spark.operators.similarity import (ivf_train_centroids,
-                                                         semdedup)
-
-        cents = ivf_train_centroids(emb, n_centroids=8, n_iter=2, seed=11)
-        a = sorted(map(tuple,
-                       semdedup(emb, eps=0.3, centroids=cents).collect()))
-        b = sorted(map(tuple, semdedup(emb, eps=0.3, centroids=cents,
-                                       assign="arrow").collect()))
-        assert a == b and len(a) > 0
-        assert any(not r[2] for r in a)  # the planted near-dups are removed
-
 
 class TestDsirScores:
     def test_target_docs_score_higher(self, spark):
@@ -1641,7 +1723,7 @@ class TestIvfPq:
     def test_search_over_stored_index_never_shuffles_corpus(self, spark,
                                                             emb, tmp_path):
         """Plan shape: with the index prebuilt (the production deployment
-        stores it once — ivfpq_index's id-keyed glue join is index-BUILD
+        stores it once — ivfpq_index's Arrow encode pass is index-BUILD
         cost), the SEARCH plan joins the code relation only against
         broadcast sides (probes, per-query ADC table): no SortMergeJoin,
         no exchange of the scanned index anywhere."""
