@@ -414,6 +414,42 @@ class TestStreamStreamJoin:
         assert rocks.exceptAll(hdfs).count() == 0
         assert hdfs.exceptAll(rocks).count() == 0
 
+    def test_resume_keeps_checkpoint_partition_count(self, spark, tmp_path):
+        """A join checkpointed under 8 shuffle partitions resumes under 8
+        after the session's count moves to 4 (Spark pins it in the
+        checkpoint): every record is committed exactly once and none is
+        dropped by the watermark."""
+        src, out, ckpt = (str(tmp_path / d) for d in ("tok", "out", "ckpt"))
+        key = "spark.sql.shuffle.partitions"
+
+        def drain_slice(i, partitions):
+            tokens.generate_token_sequences(
+                spark, 10, records_per_doc=4, ts_lo=T0 + i * 3600,
+                ts_hi=T0 + (i + 1) * 3600, doc_prefix=f"doc{i}-",
+                partitions=1).write.mode("append").parquet(src)
+            spark.conf.set(key, str(partitions))
+            stream = tokens.read_token_stream(spark, src,
+                                              max_files_per_trigger=1)
+            q = exactly_once_parquet_sink(
+                pipeline.position_sunrise_join(
+                    pipeline.decoded_stream(stream, watermark="1 hour")),
+                out, ckpt, trigger_available_now=True)
+            drain(q)
+            return [op for p in q.recentProgress if p.numInputRows > 0
+                    for op in p.stateOperators]
+
+        before = spark.conf.get(key)
+        try:
+            ops = drain_slice(0, 8) + drain_slice(1, 4)
+        finally:
+            spark.conf.set(key, before)
+        assert len(ops) == 2  # one data batch per slice
+        assert [op.numShufflePartitions for op in ops] == [8, 8]
+        assert sum(op.numRowsDroppedByWatermark for op in ops) == 0
+        got = spark.read.parquet(out)
+        assert got.count() == 80  # 2 slices x 10 docs x 4 records
+        assert got.select("doc_id", "seq_index").distinct().count() == 80
+
     def test_twilight_join_matches_batch(self, spark, tmp_path):
         """The six twilight horizons ride through the stateful join and are
         value-equal to the batch sunrise operator over the same input."""
