@@ -34,18 +34,8 @@ from solarpos_spark.streaming.replay import (
     commit_available_now, ordered_file_stream, time_slices)
 
 # --------------------------------------------------------------------------
-# shared input derivations (must match the SQL constants below exactly)
+# shared input derivations: _astro_df (Spark) and its SQL twin _astro_sql
 # --------------------------------------------------------------------------
-
-_ASTRO_BASE_SQL = """
-SELECT event_id,
-       ((event_id * 37) % 14400) / 100.0 - 72.0 AS lat,
-       ((event_id * 73) % 36000) / 100.0 - 180.0 AS lon,
-       CAST(floor(epoch(ts)) AS BIGINT) AS usec,
-       0.0 AS elevation, 1013.0 AS pressure, 15.0 AS temperature,
-       69.0 AS delta_t
-FROM events
-"""
 
 
 def _astro_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -64,6 +54,33 @@ def _astro_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(15.0).alias("temperature"),
         F.lit(69.0).alias("delta_t"),
     )
+
+
+def _astro_sql(limit: int | None = None, *, quantized: bool = False,
+               delta_t: str = "69.0") -> str:
+    """DuckDB twin of :func:`_astro_df` over ``event_id < limit``, plus
+    ``day0`` (0h UT of the day of ``usec``, the sunrise oracles' input).
+    ``quantized`` rounds lat/lon half away from zero at 1e-5 and divides
+    back, as the codec does (decode_records); ``delta_t`` is an SQL
+    expression over the event row."""
+    def coord(c: str) -> str:
+        if not quantized:
+            return c
+        return (f"(CASE WHEN {c} >= 0 THEN floor({c}*100000.0 + 0.5) "
+                f"ELSE -floor(-({c})*100000.0 + 0.5) END) / 100000.0")
+
+    where = "" if limit is None else f" WHERE event_id < {limit}"
+    return f"""
+SELECT event_id, {coord('lat0')} AS lat, {coord('lon0')} AS lon, usec,
+       CAST(floor(usec / 86400) * 86400 AS BIGINT) AS day0,
+       0.0 AS elevation, 1013.0 AS pressure, 15.0 AS temperature,
+       {delta_t} AS delta_t
+FROM (SELECT event_id, ts,
+             ((event_id * 37) % 14400) / 100.0 - 72.0 AS lat0,
+             ((event_id * 73) % 36000) / 100.0 - 180.0 AS lon0,
+             CAST(floor(epoch(ts)) AS BIGINT) AS usec
+      FROM events{where})
+"""
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -161,10 +178,8 @@ def _astro_token_df(spark: SparkSession, sf_dir: str,
     return src.mapInPandas(enc, schema=tokens.TOKEN_SCHEMA)
 
 
-def _q_tokens_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Codec bijection: derive tuples -> encode -> decode -> emit fields."""
-    tok = _astro_token_df(spark, sf_dir)
-    dec = tokens.decode_tokens(tok)
+def _decoded_fields(dec: DataFrame) -> DataFrame:
+    """Decoded token records as the fields _DECODED_FIELDS_ORACLE checks."""
     return dec.select(
         F.col("doc_id").cast("long").alias("event_id"),
         F.round("lat", 5).alias("lat"), F.round("lon", 5).alias("lon"),
@@ -172,6 +187,19 @@ def _q_tokens_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("delta_t", 3).alias("delta_t"),
         F.round("pressure", 3).alias("pressure"),
     )
+
+
+#: the _astro_token_df inputs after the codec round trip, at output precision
+_DECODED_FIELDS_ORACLE = f"""
+SELECT event_id, round(lat, 5) AS lat, round(lon, 5) AS lon, usec,
+       delta_t, pressure
+FROM ({_astro_sql(20000)})
+"""
+
+
+def _q_tokens_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Codec bijection: derive tuples -> encode -> decode -> emit fields."""
+    return _decoded_fields(tokens.decode_tokens(_astro_token_df(spark, sf_dir)))
 
 
 def _token_rel_df(spark: SparkSession, sf_dir: str,
@@ -298,7 +326,7 @@ def _q_time_series_zoned(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     from solarpos_spark.sinks.formatters import format_timestamp
 
-    t = inputs.time_series_zoned_df(spark, 2024, zone="Europe/Berlin")
+    t = inputs.time_series_df(spark, 2024, zone="Europe/Berlin")
     return t.select(
         "unix_sec",
         F.col("offset_sec").cast("long").alias("offset_sec"),
@@ -404,18 +432,10 @@ def _q_position_deltat_estimated(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _position_deltat_estimated_oracle() -> str:
     """Espenak-Meeus 2005-2050 branch mirrored with the kernel's exact
     Horner ordering (deltat.py poly()), then fed through the SPA SQL."""
-    base = """
-SELECT event_id,
-       ((event_id * 37) % 14400) / 100.0 - 72.0 AS lat,
-       ((event_id * 73) % 36000) / 100.0 - 180.0 AS lon,
-       CAST(floor(epoch(ts)) AS BIGINT) AS usec,
-       0.0 AS elevation, 1013.0 AS pressure, 15.0 AS temperature,
-       ((0.005589 * ((year(ts) + (month(ts) - 0.5) / 12.0) - 2000.0)
+    base = _astro_sql(5000, delta_t="""(
+        (0.005589 * ((year(ts) + (month(ts) - 0.5) / 12.0) - 2000.0)
          + 0.32217) * ((year(ts) + (month(ts) - 0.5) / 12.0) - 2000.0)
-        + 62.92) AS delta_t
-FROM events
-WHERE event_id < 5000
-"""
+        + 62.92)""")
     inner = _osql.spa_sql(base)
     return (
         "SELECT event_id, round(delta_t, 6) AS delta_t_used, azimuth, zenith "
@@ -2578,7 +2598,7 @@ def _geohash_oracle(precision_bits: int = 8) -> str:
         for b in range(precision_bits)
     )
     return f"""
-WITH base AS ({_ASTRO_BASE_SQL})
+WITH base AS ({_astro_sql()})
 SELECT ({interleave}) AS cell, count(*) AS n_rows
 FROM base GROUP BY 1
 """
@@ -2605,8 +2625,7 @@ FROM ({inner})
 
 
 def _csv_lines_oracle() -> str:
-    base = _ASTRO_BASE_SQL.rstrip() + "\nWHERE event_id < 3000"
-    inner = _osql.spa_sql(base, round_digits=12)
+    inner = _osql.spa_sql(_astro_sql(3000), round_digits=12)
     return _CSV_LINES_ORACLE_TMPL.format(inner=inner)
 
 
@@ -3254,19 +3273,8 @@ GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """
 
 
-_SUNRISE_BASE_SQL = """
-SELECT event_id,
-       ((event_id * 37) % 14400) / 100.0 - 72.0 AS lat,
-       ((event_id * 73) % 36000) / 100.0 - 180.0 AS lon,
-       CAST(floor(CAST(floor(epoch(ts)) AS BIGINT) / 86400) * 86400 AS BIGINT) AS day0,
-       69.0 AS delta_t
-FROM events
-WHERE event_id < {limit}
-"""
-
-
 def _sunrise_oracle() -> str:
-    inner = _osql.sunrise_sql(_SUNRISE_BASE_SQL.format(limit=2000))
+    inner = _osql.sunrise_sql(_astro_sql(2000))
     return (
         "SELECT event_id, round(lat,5) AS lat, round(lon,5) AS lon, type, "
         "sunrise_usec, transit_usec, sunset_usec FROM (" + inner + ")"
@@ -3274,7 +3282,7 @@ def _sunrise_oracle() -> str:
 
 
 def _twilight_oracle() -> str:
-    base = _SUNRISE_BASE_SQL.format(limit=500)
+    base = _astro_sql(500)
     parts = []
     for name, hz in (("civil", -6.0), ("nautical", -12.0),
                      ("astronomical", -18.0)):
@@ -3672,13 +3680,7 @@ def _q_stream_dedup_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ded = sp.deduped_stream(sp.decoded_stream(stream, watermark="3650 days"))
     out = ded.select("doc_id", "seq_index", "lat", "lon", "unix_sec",
                      "delta_t", "pressure")
-    return commit_available_now(out, out_dir, ckpt).select(
-        F.col("doc_id").cast("long").alias("event_id"),
-        F.round("lat", 5).alias("lat"), F.round("lon", 5).alias("lon"),
-        F.col("unix_sec").alias("usec"),
-        F.round("delta_t", 3).alias("delta_t"),
-        F.round("pressure", 3).alias("pressure"),
-    )
+    return _decoded_fields(commit_available_now(out, out_dir, ckpt))
 
 
 def _q_stream_window_committed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3844,11 +3846,9 @@ def _q_stream_window_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_WINDOW_MULTIBATCH_ORACLE = """
+_STREAM_WINDOW_MULTIBATCH_ORACLE = f"""
 WITH b AS (
-  SELECT event_id, CAST(floor(epoch(ts)) AS BIGINT) AS usec,
-         round(round(((event_id * 37) % 14400) / 100.0 - 72.0, 5), 5) AS lat
-  FROM events WHERE event_id < 20000),
+  SELECT event_id, usec, round(lat, 5) AS lat FROM ({_astro_sql(20000)})),
 bounds AS (SELECT min(usec) AS tmin, max(usec) AS tmax FROM b),
 r AS (
   SELECT b.*,
@@ -4439,29 +4439,8 @@ WHERE n_words >= 20 AND stopword_ratio >= 0.02 AND avg_word_len <= 12.0
 """
 
 
-def _quantized_astro_base(limit: int, *, with_day0: bool = False) -> str:
-    """Codec-quantized derived-input base SQL: round-half-away-from-zero at
-    1e-5 then the same double division decode_records performs."""
-    def q(c: str) -> str:
-        return (f"(CASE WHEN {c} >= 0 THEN floor({c}*100000.0 + 0.5) "
-                f"ELSE -floor(-({c})*100000.0 + 0.5) END) / 100000.0")
-
-    day0 = (", CAST(floor(usec / 86400) * 86400 AS BIGINT) AS day0"
-            if with_day0 else "")
-    return f"""
-    SELECT event_id, {q('lat0')} AS lat, {q('lon0')} AS lon, usec,
-           0.0 AS elevation, 1013.0 AS pressure, 15.0 AS temperature,
-           69.0 AS delta_t{day0}
-    FROM (SELECT event_id,
-                 ((event_id * 37) % 14400) / 100.0 - 72.0 AS lat0,
-                 ((event_id * 73) % 36000) / 100.0 - 180.0 AS lon0,
-                 CAST(floor(epoch(ts)) AS BIGINT) AS usec
-          FROM events WHERE event_id < {limit})
-    """
-
-
 def _stream_join_oracle() -> str:
-    base = _quantized_astro_base(4000, with_day0=True)
+    base = _astro_sql(4000, quantized=True)
     pos = _osql.spa_sql(base)
     sr = _osql.sunrise_sql(base)
     return f"""
@@ -4476,21 +4455,9 @@ FROM pos p JOIN sr s ON p.event_id = s.event_id
 """
 
 
-_STREAM_DEDUP_ORACLE = """
-SELECT event_id,
-       round(round(((event_id * 37) % 14400) / 100.0 - 72.0, 5), 5) AS lat,
-       round(round(((event_id * 73) % 36000) / 100.0 - 180.0, 5), 5) AS lon,
-       CAST(floor(epoch(ts)) AS BIGINT) AS usec,
-       69.0 AS delta_t, 1013.0 AS pressure
-FROM events
-WHERE event_id < 20000
-"""
-
-_STREAM_WINDOW_ORACLE = """
+_STREAM_WINDOW_ORACLE = f"""
 WITH b AS (
-  SELECT CAST(floor(epoch(ts)) AS BIGINT) AS usec,
-         round(round(((event_id * 37) % 14400) / 100.0 - 72.0, 5), 5) AS lat
-  FROM events WHERE event_id < 20000),
+  SELECT usec, round(lat, 5) AS lat FROM ({_astro_sql(20000)})),
 w AS (
   SELECT (usec // 3600) * 3600 AS ws, count(*) AS n_rows,
          min(lat) AS min_lat, max(lat) AS max_lat
@@ -4502,7 +4469,7 @@ WHERE ws + 3600 <= (SELECT max(usec) FROM b) - 3600
 
 
 def _stream_pos_oracle() -> str:
-    inner = _osql.spa_sql(_quantized_astro_base(20000))
+    inner = _osql.spa_sql(_astro_sql(20000, quantized=True))
     return (f"SELECT event_id, round(lat,5) AS lat, round(lon,5) AS lon, "
             f"azimuth, zenith FROM ({inner})")
 
@@ -5575,7 +5542,7 @@ def _pos_oracle(*, refraction: bool = True, elevation_angle: bool = False,
                 grena: bool = False) -> str:
     gen = _osql.grena3_sql if grena else _osql.spa_sql
     kw = {} if grena else {"refraction": refraction}
-    inner = gen(_ASTRO_BASE_SQL, **kw)
+    inner = gen(_astro_sql(), **kw)
     val = ("round(90.0 - zenith, 5) AS elevation_angle" if elevation_angle
            else "zenith")
     return (
@@ -5664,15 +5631,7 @@ def oracle_sql() -> dict[str, str]:
         "position_grena3": _pos_oracle(grena=True),
         "position_no_refraction": _pos_oracle(refraction=False),
         "elevation_angle": _pos_oracle(elevation_angle=True),
-        "tokens_roundtrip": """
-            SELECT event_id,
-                   round(round(((event_id * 37) % 14400) / 100.0 - 72.0, 5), 5) AS lat,
-                   round(round(((event_id * 73) % 36000) / 100.0 - 180.0, 5), 5) AS lon,
-                   CAST(floor(epoch(ts)) AS BIGINT) AS usec,
-                   69.0 AS delta_t, 1013.0 AS pressure
-            FROM events
-            WHERE event_id < 20000
-        """,
+        "tokens_roundtrip": _DECODED_FIELDS_ORACLE,
         "token_decontaminate": _TOKEN_DECONTAMINATE_ORACLE,
         "token_novelty": _TOKEN_NOVELTY_ORACLE,
         "coord_grid": """
@@ -5797,7 +5756,7 @@ def oracle_sql() -> dict[str, str]:
         "sessionize": _SESSIONIZE_ORACLE,
         "orders_cube": _ORDERS_CUBE_ORACLE,
         "stream_position_committed": _stream_pos_oracle(),
-        "stream_dedup_committed": _STREAM_DEDUP_ORACLE,
+        "stream_dedup_committed": _DECODED_FIELDS_ORACLE,
         "stream_curate_committed": _STREAM_CURATE_ORACLE,
         "stream_url_blocklist_committed": _STREAM_URL_BLOCKLIST_ORACLE,
         "stream_window_committed": _STREAM_WINDOW_ORACLE,

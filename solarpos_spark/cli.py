@@ -213,8 +213,8 @@ def _make_plan(spark, tokens: list[str], ns) -> tuple:
     step_sec = 86400 if command == "sunrise" else _parse_step(ns.step)
     delta_t = float(ns.deltat) if ns.deltat != "NaN" else math.nan
 
-    # position needs explicit times in time files (TIME_REQUIRED precision);
-    # sunrise is date-sufficient (DateTimeIterator.TimePrecision)
+    # position needs explicit times in time and paired files (TIME_REQUIRED
+    # precision); sunrise is date-sufficient (DateTimeIterator.TimePrecision)
     kw = dict(step_sec=step_sec, delta_t=delta_t,
               require_time=(command == "position"),
               # keep generation-order ordinals through the plan so _render
@@ -326,36 +326,29 @@ def main(argv: list[str] | None = None, spark=None, out=None) -> int:
             spark.sparkContext.setLogLevel("ERROR")
         try:
             plan, command = _make_plan(spark, ns.inputs, ns)
+            from pyspark.sql import functions as F
+
             from .operators.position import position
             from .operators.sunrise import sunrise
 
-            show = ns.show_inputs  # None -> the plan's auto rule
+            # an explicit --show-inputs / --no-show-inputs beats the plan's
+            # auto rule (Main.shouldShowInputs, Main.java:137-141)
+            show = (ns.show_inputs if ns.show_inputs is not None
+                    else plan.show_inputs)
+            keep = [c for c in ("offset_sec", "_ord_t", "_ord_c")
+                    if c in plan.df.columns]
             if command == "position":
-                base = plan.df
-                if "elevation" not in base.columns:
-                    from pyspark.sql import functions as F
-
-                    base = (base.withColumn("elevation", F.lit(ns.elevation))
-                            .withColumn("pressure", F.lit(ns.pressure))
-                            .withColumn("temperature", F.lit(ns.temperature)))
-                from .sources.inputs import InputPlan
-
-                plan = InputPlan(base, plan.mode, plan.show_inputs)
-                res = position(plan, algorithm=ns.algorithm,
+                base = plan.df.withColumns({
+                    "elevation": F.lit(ns.elevation),
+                    "pressure": F.lit(ns.pressure),
+                    "temperature": F.lit(ns.temperature)})
+                res = position(base, algorithm=ns.algorithm,
                                refraction=ns.refraction,
                                elevation_angle=ns.elevation_angle,
-                               show_inputs=show,
-                               passthrough=[
-                                   c for c in
-                                   ("offset_sec", "_ord_t", "_ord_c")
-                                   if c in base.columns])
+                               show_inputs=show, passthrough=keep)
             else:
-                res = sunrise(plan, twilight=ns.twilight, show_inputs=show,
-                              offset_col="offset_sec",
-                              passthrough=[
-                                  c for c in
-                                  ("offset_sec", "_ord_t", "_ord_c")
-                                  if c in plan.df.columns])
+                res = sunrise(plan.df, twilight=ns.twilight, show_inputs=show,
+                              offset_col="offset_sec", passthrough=keep)
             n_rows = _render(res, command, ns, out)
             if ns.perf:
                 # PerformanceTracker.printStats format (stderr)

@@ -15,6 +15,9 @@ partitioning. Batches are sized by
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -22,13 +25,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from ..codec import FLAG_GRENA3, FLAG_NO_REFRACTION
 from ..kernels import deltat as deltat_kernel
 from ..kernels import grena3 as grena3_kernel
 from ..kernels import spa as spa_kernel
-
-ALGORITHM_SPA = "spa"
-ALGORITHM_GRENA3 = "grena3"
 
 _POSITION_SCHEMA = StructType([
     StructField("azimuth", DoubleType()),
@@ -40,47 +39,14 @@ _POSITION_SCHEMA = StructType([
     StructField("delta_t_res", DoubleType()),
 ])
 
-
-def _compute_position(
-    unix_sec: np.ndarray,
-    lat: np.ndarray,
-    lon: np.ndarray,
-    elevation: np.ndarray,
-    pressure: np.ndarray,
-    temperature: np.ndarray,
-    delta_t: np.ndarray,
-    flags: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Dispatch on per-row flags; each algorithm subset is one vector call.
-
-    A subset that is the whole batch (always so for the sweep and the
-    stream) takes the columns as they are instead of boolean-indexed copies.
-    """
-    az = np.empty_like(lat)
-    zen = np.empty_like(lat)
-    grena_mask = (flags & FLAG_GRENA3) != 0
-    norefr_mask = (flags & FLAG_NO_REFRACTION) != 0
-    for alg_mask, fn in ((~grena_mask, _spa_call), (grena_mask, _grena_call)):
-        for refr in (True, False):
-            m = alg_mask & (norefr_mask != refr)
-            if not np.any(m):
-                continue
-            if np.all(m):
-                m = slice(None)
-            a, z = fn(unix_sec[m], lat[m], lon[m], elevation[m],
-                      pressure[m] if refr else None,
-                      temperature[m] if refr else None, delta_t[m])
-            az[m] = a
-            zen[m] = z
-    return az, zen
-
-
-def _spa_call(ts, lat, lon, elev, press, temp, dt):
-    return spa_kernel.solar_position(ts, lat, lon, elev, dt, press, temp)
-
-
-def _grena_call(ts, lat, lon, elev, press, temp, dt):
-    return grena3_kernel.solar_position(ts, lat, lon, dt, press, temp)
+#: --algorithm name -> kernel taking (unix_sec, lat, lon, elevation,
+#: delta_t, pressure, temperature); Grena3 takes no elevation
+#: (PositionCommand.java:284-297)
+_KERNELS = {
+    "spa": spa_kernel.solar_position,
+    "grena3": lambda ts, lat, lon, elev, dt, press, temp:
+        grena3_kernel.solar_position(ts, lat, lon, dt, press, temp),
+}
 
 
 def resolve_delta_t(unix_sec: np.ndarray, delta_t: np.ndarray) -> np.ndarray:
@@ -99,34 +65,93 @@ def resolve_delta_t(unix_sec: np.ndarray, delta_t: np.ndarray) -> np.ndarray:
     return out
 
 
-@pandas_udf(_POSITION_SCHEMA)
-def position_udf(
-    unix_sec: pd.Series, lat: pd.Series, lon: pd.Series, elevation: pd.Series,
-    pressure: pd.Series, temperature: pd.Series, delta_t: pd.Series,
-    flags: pd.Series,
-) -> pd.DataFrame:
-    ts = unix_sec.to_numpy(dtype=np.int64)
-    dt = resolve_delta_t(ts, delta_t.to_numpy(dtype=np.float64))
-    az, zen = _compute_position(
-        ts.astype(np.float64),
-        lat.to_numpy(dtype=np.float64),
-        lon.to_numpy(dtype=np.float64),
-        elevation.to_numpy(dtype=np.float64),
-        pressure.to_numpy(dtype=np.float64),
-        temperature.to_numpy(dtype=np.float64),
-        dt,
-        flags.to_numpy(dtype=np.int64),
-    )
-    return pd.DataFrame({"azimuth": az, "zenith": zen, "delta_t_res": dt})
+def position_kernel(algorithm: str, refraction: bool) -> Callable:
+    """The one kernel dispatch of the position UDF and the fused token path:
+    ``(unix_sec int64, lat, lon, elevation, pressure, temperature, delta_t)
+    -> (azimuth, zenith, deltaT used)`` over whole numpy columns. Without
+    refraction the kernel gets no pressure/temperature. Raises ValueError
+    for an algorithm other than ``spa`` or ``grena3``."""
+    if algorithm not in _KERNELS:
+        raise ValueError(f"unknown algorithm {algorithm!r} (spa|grena3)")
+    kernel = _KERNELS[algorithm]
+
+    def run(unix_sec, lat, lon, elevation, pressure, temperature, delta_t):
+        dt = resolve_delta_t(unix_sec, delta_t)
+        az, zen = kernel(unix_sec.astype(np.float64), lat, lon, elevation, dt,
+                         pressure if refraction else None,
+                         temperature if refraction else None)
+        return az, zen, dt
+
+    return run
+
+
+def _position_udf(algorithm: str, refraction: bool):
+    """The position UDF of one (algorithm, refraction) key, built on first
+    use and kept as a module attribute: a UDF caches its JVM function, and
+    a rebuilt session resets that cache on module attributes only
+    (perfbench/run.py ``_forget_jvm_udfs``)."""
+    name = f"_udf_{algorithm}_{'refraction' if refraction else 'no_refraction'}"
+    if name not in globals():
+        kernel = position_kernel(algorithm, refraction)
+
+        @pandas_udf(_POSITION_SCHEMA)
+        def udf(unix_sec: pd.Series, lat: pd.Series, lon: pd.Series,
+                elevation: pd.Series, pressure: pd.Series,
+                temperature: pd.Series, delta_t: pd.Series) -> pd.DataFrame:
+            az, zen, dt = kernel(
+                unix_sec.to_numpy(dtype=np.int64),
+                lat.to_numpy(dtype=np.float64),
+                lon.to_numpy(dtype=np.float64),
+                elevation.to_numpy(dtype=np.float64),
+                pressure.to_numpy(dtype=np.float64),
+                temperature.to_numpy(dtype=np.float64),
+                delta_t.to_numpy(dtype=np.float64))
+            return pd.DataFrame({"azimuth": az, "zenith": zen,
+                                 "delta_t_res": dt})
+
+        globals()[name] = udf
+    return globals()[name]
+
+
+class BoundInputs(NamedTuple):
+    """What position() and sunrise() read from their input DataFrame."""
+
+    #: ``get(name, default, dtype="double")``: the column cast to ``dtype``
+    #: when present, else the literal default (PositionCommand.java:39-57)
+    get: Callable[..., Column]
+    #: the input instant in unix seconds
+    unix: Column
+    #: the input instant as a timestamp (the ``dateTime`` output field)
+    date_time: Column
+    #: passthrough columns, emitted first
+    keep: list[Column]
+
+
+def bind_inputs(df: DataFrame, ts_col: str, time_is_unix: bool,
+                passthrough: list[str] | None) -> BoundInputs:
+    """``ts_col`` holds a timestamp, or unix seconds when ``time_is_unix``.
+    ``passthrough=None`` keeps ``doc_id``/``seq_index`` when present."""
+    cols = set(df.columns)
+
+    def get(name: str | None, default, dtype: str = "double") -> Column:
+        return (F.col(name) if name in cols else F.lit(default)).cast(dtype)
+
+    ts = F.col(ts_col)
+    unix = ts.cast("long") if time_is_unix else F.unix_timestamp(ts)
+    keep = (passthrough if passthrough is not None
+            else [c for c in ("doc_id", "seq_index") if c in cols])
+    return BoundInputs(get, unix,
+                       F.timestamp_seconds(unix) if time_is_unix else ts,
+                       [F.col(c) for c in keep])
 
 
 def position(
     df: DataFrame,
     *,
-    algorithm: str = ALGORITHM_SPA,
+    algorithm: str = "spa",
     refraction: bool = True,
     elevation_angle: bool = False,
-    show_inputs: bool | None = None,
+    show_inputs: bool = True,
     ts_col: str = "ts",
     time_is_unix: bool = False,
     passthrough: list[str] | None = None,
@@ -134,62 +159,32 @@ def position(
     """Position operator with the reference's flag-driven projection.
 
     Expects columns ``lat, lon, <ts_col>`` and optionally
-    ``elevation, pressure, temperature, delta_t, flags`` (defaulted like
+    ``elevation, pressure, temperature, delta_t`` (defaulted like
     PositionCommand.java:39-57 when absent). Output column set follows
     PositionCommand.java:149-201: [inputs...,] dateTime, deltaT, azimuth,
-    zenith|elevation-angle — pressure/temperature dropped w/o refraction.
-
-    ``df`` may be an :class:`~solarpos_spark.sources.inputs.InputPlan`
-    (the unified dispatch facade): with ``show_inputs=None`` the plan's
-    mode-derived auto rule applies — files and multi-valued inputs show
-    input columns, a single point at a single instant does not
-    (Main.shouldShowInputs, Main.java:137-141). A bare DataFrame with
-    ``show_inputs=None`` defaults to True (the engine's typical
-    multi-valued case).
+    zenith|elevation-angle — pressure/temperature dropped w/o refraction,
+    inputs and deltaT only with ``show_inputs`` (the CLI applies the
+    reference's auto rule, Main.java:137-141). ``algorithm`` is ``spa`` or
+    ``grena3``; any other name raises ValueError here.
     """
-    from ..sources.inputs import InputPlan
+    udf = _position_udf(algorithm, refraction)
+    b = bind_inputs(df, ts_col, time_is_unix, passthrough)
+    elevation = b.get("elevation", 0.0)
+    pressure = b.get("pressure", 1013.0)
+    temperature = b.get("temperature", 15.0)
+    out = df.withColumn("__pos", udf(
+        b.unix, F.col("lat").cast("double"), F.col("lon").cast("double"),
+        elevation, pressure, temperature, b.get("delta_t", 0.0)))
 
-    if isinstance(df, InputPlan):
-        if show_inputs is None:
-            show_inputs = df.show_inputs
-        df = df.df
-    cols = dict.fromkeys(df.columns)
-    get = lambda name, default: (F.col(name) if name in cols else F.lit(default))
-
-    base_flags = (FLAG_GRENA3 if algorithm == ALGORITHM_GRENA3 else 0) | (
-        0 if refraction else FLAG_NO_REFRACTION
-    )
-    flags_col = (
-        F.col("flags") if "flags" in cols and algorithm == "auto"
-        else F.lit(base_flags)
-    )
-    unix = F.col(ts_col).cast("long") if time_is_unix else F.unix_timestamp(F.col(ts_col))
-
-    pos = position_udf(
-        unix,
-        F.col("lat").cast("double"),
-        F.col("lon").cast("double"),
-        get("elevation", 0.0).cast("double"),
-        get("pressure", 1013.0).cast("double"),
-        get("temperature", 15.0).cast("double"),
-        get("delta_t", 0.0).cast("double"),
-        flags_col.cast("long"),
-    )
-    out = df.withColumn("__pos", pos)
-
-    # InputPlan carries the reference's auto show-inputs rule (resolved
-    # above); a bare DataFrame defaults to showing inputs
-    show = show_inputs if show_inputs is not None else True
     proj: list[Column] = []
-    if show:
+    if show_inputs:
         proj += [F.col("lat").alias("latitude"), F.col("lon").alias("longitude"),
-                 get("elevation", 0.0).cast("double").alias("elevation")]
+                 elevation.alias("elevation")]
         if refraction:
-            proj += [get("pressure", 1013.0).cast("double").alias("pressure"),
-                     get("temperature", 15.0).cast("double").alias("temperature")]
-    proj.append(
-        (F.timestamp_seconds(unix) if time_is_unix else F.col(ts_col)).alias("dateTime"))
-    if show:
+            proj += [pressure.alias("pressure"),
+                     temperature.alias("temperature")]
+    proj.append(b.date_time.alias("dateTime"))
+    if show_inputs:
         # deltaT appears only with inputs (PositionCommand.java:184-199:
         # the non-show field set is dateTime, azimuth, zenith)
         proj.append(F.col("__pos.delta_t_res").alias("deltaT"))
@@ -198,6 +193,4 @@ def position(
         proj.append((F.lit(90.0) - F.col("__pos.zenith")).alias("elevation-angle"))
     else:
         proj.append(F.col("__pos.zenith").alias("zenith"))
-    keep = (passthrough if passthrough is not None
-            else [c for c in ("doc_id", "seq_index") if c in cols])
-    return out.select(*[F.col(c) for c in keep], *proj)
+    return out.select(*b.keep, *proj)

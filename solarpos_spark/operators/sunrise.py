@@ -19,7 +19,7 @@ from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType)
 
 from ..kernels import sunrise as k
-from .position import resolve_delta_t
+from .position import bind_inputs, resolve_delta_t
 
 _TYPE_NAMES = np.array(["NORMAL", "ALL_DAY", "ALL_NIGHT"])
 
@@ -32,13 +32,11 @@ _BASIC_FIELDS = [
     # the reference's PositionData.deltaT echo — Main.java:214-216)
     StructField("delta_t_res", DoubleType()),
 ]
-_TWILIGHT_FIELDS = _BASIC_FIELDS + [
+_TWILIGHT_FIELDS = [
     StructField(n, LongType())
     for n in ("civil_start", "civil_end", "nautical_start", "nautical_end",
               "astronomical_start", "astronomical_end")
 ]
-_BASIC_SCHEMA = StructType(_BASIC_FIELDS)
-_TWILIGHT_SCHEMA = StructType(_TWILIGHT_FIELDS)
 
 
 def _nullable_seconds(day0: np.ndarray, sec: np.ndarray) -> pd.arrays.IntegerArray:
@@ -71,27 +69,30 @@ def _solve(day0_unix: np.ndarray, lat: np.ndarray, lon: np.ndarray,
     return out
 
 
-@pandas_udf(_BASIC_SCHEMA)
-def sunrise_udf(day0: pd.Series, lat: pd.Series, lon: pd.Series,
+def _sunrise_udf(twilight: bool):
+    """The sunrise UDF of one twilight key, built on first use and kept as
+    a module attribute (see position._position_udf)."""
+    name = f"_udf_{'twilight' if twilight else 'basic'}"
+    if name not in globals():
+        schema = StructType(_BASIC_FIELDS + (_TWILIGHT_FIELDS if twilight else []))
+
+        @pandas_udf(schema)
+        def udf(day0: pd.Series, lat: pd.Series, lon: pd.Series,
                 delta_t: pd.Series) -> pd.DataFrame:
-    d0 = day0.to_numpy(dtype=np.int64)
-    dt = resolve_delta_t(d0, delta_t.to_numpy(dtype=np.float64))
-    return _solve(d0, lat.to_numpy(np.float64), lon.to_numpy(np.float64), dt, False)
+            d0 = day0.to_numpy(dtype=np.int64)
+            dt = resolve_delta_t(d0, delta_t.to_numpy(dtype=np.float64))
+            return _solve(d0, lat.to_numpy(np.float64),
+                          lon.to_numpy(np.float64), dt, twilight)
 
-
-@pandas_udf(_TWILIGHT_SCHEMA)
-def sunrise_twilight_udf(day0: pd.Series, lat: pd.Series, lon: pd.Series,
-                         delta_t: pd.Series) -> pd.DataFrame:
-    d0 = day0.to_numpy(dtype=np.int64)
-    dt = resolve_delta_t(d0, delta_t.to_numpy(dtype=np.float64))
-    return _solve(d0, lat.to_numpy(np.float64), lon.to_numpy(np.float64), dt, True)
+        globals()[name] = udf
+    return globals()[name]
 
 
 def sunrise(
     df: DataFrame,
     *,
     twilight: bool = False,
-    show_inputs: bool | None = None,
+    show_inputs: bool = True,
     ts_col: str = "ts",
     time_is_unix: bool = False,
     offset_col: str | None = None,
@@ -99,33 +100,20 @@ def sunrise(
 ) -> DataFrame:
     """Sunrise operator. The input instant is resolved to its local calendar
     date (via ``offset_col`` seconds if given, else UTC), mirroring the
-    reference's zone handling (util/DateTimeIterator.java:59-63).
-
-    Accepts an InputPlan like :func:`position`; ``show_inputs=None`` then
-    applies the reference's auto rule (Main.java:137-141)."""
-    from ..sources.inputs import InputPlan
-
-    if isinstance(df, InputPlan):
-        if show_inputs is None:
-            show_inputs = df.show_inputs
-        df = df.df
-    if show_inputs is None:
-        show_inputs = True
-    cols = dict.fromkeys(df.columns)
-    get = lambda name, default: (F.col(name) if name in cols else F.lit(default))
-    unix = F.col(ts_col).cast("long") if time_is_unix else F.unix_timestamp(F.col(ts_col))
-    off = F.col(offset_col).cast("long") if offset_col and offset_col in cols else F.lit(0)
+    reference's zone handling (util/DateTimeIterator.java:59-63). Inputs
+    and deltaT are shown only with ``show_inputs`` (the CLI applies the
+    reference's auto rule, Main.java:137-141)."""
+    b = bind_inputs(df, ts_col, time_is_unix, passthrough)
+    off = b.get(offset_col, 0, "long")
     # anchor = the INSTANT of the local date's midnight (wall midnight minus
     # the zone offset), not 0h UT of that date: the reference's library runs
     # A.2 from the zoned midnight instant, which shifts late events (astro
     # dusk) by ~0.1 s — derived by bisecting SunriseTest.java:57-64 goldens
     # (all 13 match only with this anchor; see kernels/sunrise.py docstring)
-    day0 = (F.floor((unix + off) / 86400) * 86400 - off).cast("long")
-
-    udf = sunrise_twilight_udf if twilight else sunrise_udf
-    res = udf(day0, F.col("lat").cast("double"), F.col("lon").cast("double"),
-              get("delta_t", 0.0).cast("double"))
-    out = df.withColumn("__sr", res)
+    day0 = (F.floor((b.unix + off) / 86400) * 86400 - off).cast("long")
+    out = df.withColumn("__sr", _sunrise_udf(twilight)(
+        day0, F.col("lat").cast("double"), F.col("lon").cast("double"),
+        b.get("delta_t", 0.0)))
 
     # field set + ordering = SunriseCommand.getFieldNames
     # (SunriseCommand.java:134-160): inputs only when shown, type always,
@@ -134,8 +122,7 @@ def sunrise(
     if show_inputs:
         proj += [
             F.col("lat").alias("latitude"), F.col("lon").alias("longitude"),
-            (F.timestamp_seconds(unix) if time_is_unix
-             else F.col(ts_col)).alias("dateTime"),
+            b.date_time.alias("dateTime"),
             F.col("__sr.delta_t_res").alias("deltaT"),
         ]
     proj.append(F.col("__sr.type").alias("type"))
@@ -145,6 +132,4 @@ def sunrise(
         if twilight else ("sunrise", "transit", "sunset"))
     for name in event_order:
         proj.append(F.timestamp_seconds(F.col(f"__sr.{name}")).alias(name))
-    keep = (passthrough if passthrough is not None
-            else [c for c in ("doc_id", "seq_index") if c in cols])
-    return out.select(*[F.col(c) for c in keep], *proj)
+    return out.select(*b.keep, *proj)

@@ -92,21 +92,17 @@ def build_session(
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager")
     )
-    # Streaming state store seam: the stateful operators (stream-stream
-    # join, funnel x3, quota, priority sampler, z-score) hold per-key
-    # state that the default HDFS-backed store keeps ON-HEAP — at 100x
-    # state volume that is executor GC pressure and restart latency.
-    # RocksDB (bundled) moves state off-heap with incremental
-    # checkpointing. The stream-stream join commits the same rows under
-    # it (tests/test_streaming.py TestStreamStreamJoin). At bench size it
-    # costs more per micro-batch: `stream_join` ran at 685-784 rows/s
-    # against ~990 with the default store (4 cores), and RocksDB forks
-    # ~340 `rm`s per run. Off by default.
-    if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
-        b = b.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider")
+    # Streaming state store: the stateful operators (stream-stream join,
+    # funnel x3, quota, priority sampler, z-score) hold per-key state that
+    # the default HDFS-backed store keeps ON-HEAP — at 100x state volume
+    # that is executor GC pressure and restart latency. RocksDB (bundled)
+    # moves state off-heap with incremental checkpointing; choose it with
+    # extra_conf={"spark.sql.streaming.stateStore.providerClass":
+    # "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"}.
+    # The stream-stream join commits the same rows under it
+    # (tests/test_streaming.py TestStreamStreamJoin). At bench size it costs
+    # more per micro-batch: `stream_join` ran at 685-784 rows/s against ~990
+    # with the default store (4 cores), and RocksDB forks ~340 `rm`s per run.
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

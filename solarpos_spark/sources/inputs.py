@@ -18,7 +18,10 @@ crossJoin of two broadcast-size DataFrames.
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
+import re
+from dataclasses import dataclass
+from datetime import date, datetime, timedelta, timezone
+from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,13 +53,6 @@ def coordinate_values(start: float, end: float, step: float,
     return vals
 
 
-def _local_df(spark: SparkSession, pdf) -> DataFrame:
-    """Arrow-backed local relation: materializes as a JVM LocalTableScan, so
-    no Python worker round-trip happens at execution time (a plain
-    createDataFrame(list) scan re-enters Python per task)."""
-    return spark.createDataFrame(pdf)
-
-
 def grid_df(spark: SparkSession, lat_range: tuple[float, float, float],
             lon_range: tuple[float, float, float]) -> DataFrame:
     """R1: every lat crossed with every lon, lat-major order.
@@ -64,77 +60,26 @@ def grid_df(spark: SparkSession, lat_range: tuple[float, float, float],
     The crossJoin of two driver-built axes is broadcast by Catalyst
     (BroadcastNestedLoopJoin); ``__ord`` columns reconstruct generation
     order deterministically under any parallelism (GeographicSweepTest.java:39-44).
+    Each axis is an Arrow-backed local relation: a JVM LocalTableScan, so no
+    Python worker round-trip happens at execution time.
     """
     import pandas as pd
 
     lats = coordinate_values(*lat_range, lo=-90.0, hi=90.0)
     lons = coordinate_values(*lon_range, lo=-180.0, hi=180.0)
-    lat_df = _local_df(spark, pd.DataFrame({
+    lat_df = spark.createDataFrame(pd.DataFrame({
         "lat_ord": pd.Series(range(len(lats)), dtype="int64"),
         "lat": pd.Series(lats, dtype="float64"),
     }))
-    lon_df = _local_df(spark, pd.DataFrame({
+    lon_df = spark.createDataFrame(pd.DataFrame({
         "lon_ord": pd.Series(range(len(lons)), dtype="int64"),
         "lon": pd.Series(lons, dtype="float64"),
     }))
     return lat_df.crossJoin(lon_df)
 
 
-def _partial_date_bounds(year: int, month: int | None, day: int | None) -> tuple[int, int]:
-    """[start, end) unix seconds for a year / year-month / date partial."""
-    if month is None:
-        s = datetime(year, 1, 1, tzinfo=timezone.utc)
-        e = datetime(year + 1, 1, 1, tzinfo=timezone.utc)
-    elif day is None:
-        s = datetime(year, month, 1, tzinfo=timezone.utc)
-        ny, nm = (year + 1, 1) if month == 12 else (year, month + 1)
-        e = datetime(ny, nm, 1, tzinfo=timezone.utc)
-    else:
-        s = datetime(year, month, day, tzinfo=timezone.utc)
-        e = datetime(year, month, day, tzinfo=timezone.utc)
-        return int(s.timestamp()), int(e.timestamp()) + 86400
-    return int(s.timestamp()), int(e.timestamp())
-
-
-def time_series_df(
-    spark: SparkSession,
-    year: int,
-    month: int | None = None,
-    day: int | None = None,
-    *,
-    step_sec: int = 3600,
-    offset_sec: int = 0,
-) -> DataFrame:
-    """S2: partitioned integer range -> timestamps, fully JVM-side.
-
-    Partial date semantics per util/DateTimeIterator.java:68-91: start at
-    local midnight, step until the period boundary (exclusive); a plain date
-    with step >= 1 day yields the single midnight row.
-    """
-    if not (MIN_TIME_STEP <= step_sec <= MAX_TIME_STEP):
-        raise ValueError(f"step {step_sec}s outside [{MIN_TIME_STEP}, {MAX_TIME_STEP}]")
-    start_utc, end_utc = _partial_date_bounds(year, month, day)
-    start = start_utc - offset_sec  # local midnight as UTC instant
-    end = end_utc - offset_sec
-    if day is not None and step_sec >= 86400:
-        end = start + 1  # single midnight row
-    n = (end - 1 - start) // step_sec + 1
-    # spark.range is already distributed and the arithmetic is pure-integer
-    # (exact — unlike the FP coordinate axes), so a partitioned range beats a
-    # single-task sequence+explode and needs no repartition downstream.
-    return (
-        spark.range(n)
-        .select((F.lit(start) + F.col("id") * step_sec).alias("unix_sec"))
-        .select(
-            F.timestamp_seconds(F.col("unix_sec")).alias("ts"),
-            F.col("unix_sec"),
-            F.lit(offset_sec).alias("offset_sec"),
-        )
-    )
-
-
 # --------------------------------------------------------------------------
-# S2 zoned variant: DST-aware ZoneId semantics
+# S2 time series: DST-aware ZoneId semantics
 # --------------------------------------------------------------------------
 
 #: sampling stride for transition discovery — real tzdata never has two
@@ -146,13 +91,8 @@ def tzinfo_of(zone: str):
     """tzinfo for an IANA ZoneId OR a fixed offset, like java's ZoneId.of:
     accepts ``Europe/Berlin``, ``UTC``, ``Z``, ``+01:00``, ``-0330``,
     ``+05`` (SunriseTest.java:57-64 passes bare offsets as --timezone)."""
-    import re
-    from datetime import timedelta
-    from datetime import timezone as _tz
-    from zoneinfo import ZoneInfo
-
     if zone in ("Z", "z"):
-        return _tz.utc
+        return timezone.utc
     # ZoneId.of also accepts UTC/GMT/UT-prefixed offsets ("UTC+01:00")
     pm = re.fullmatch(r"(?:UTC|GMT|UT)([+-].+)", zone)
     if pm:
@@ -161,19 +101,17 @@ def tzinfo_of(zone: str):
     if m:
         secs = (int(m.group(2)) * 3600 + int(m.group(3) or 0) * 60
                 + int(m.group(4) or 0))
-        return _tz((1 if m.group(1) == "+" else -1) * timedelta(seconds=secs))
+        return timezone((1 if m.group(1) == "+" else -1) * timedelta(seconds=secs))
     return ZoneInfo(zone)
 
 
 def _utc_offset(zinfo, unix_sec: int) -> int:
-    from datetime import datetime, timezone
-
     dt = datetime.fromtimestamp(unix_sec, tz=timezone.utc).astimezone(zinfo)
     return int(dt.utcoffset().total_seconds())
 
 
 def zone_transitions(zone: str, start_unix: int, end_unix: int) -> list[tuple[int, int]]:
-    """UTC-offset intervals of an IANA zone over [start, end).
+    """UTC-offset intervals of a zone over [start, end).
 
     Returns ``[(instant, offset_sec), ...]`` where each instant is the first
     second the offset applies (the first entry is ``start_unix``). Computed
@@ -223,19 +161,17 @@ def local_midnight_unix(year: int, month: int, day: int, zone: str) -> int:
     Java's shift-forward-by-gap-length), in an overlap the earlier offset
     wins (DateTimeIterator.java:70-91 start-of-period construction).
     """
-    from datetime import datetime
-
     return int(datetime(year, month, day, tzinfo=tzinfo_of(zone)).timestamp())
 
 
 def zoned_partial_bounds(year: int, month: int | None, day: int | None,
                          zone: str) -> tuple[int, int]:
-    """[start, end) instants for a year / year-month / date partial in a real
-    ZoneId. The end bound is the local midnight starting the next period —
-    the reference's loop predicate (`i.getYear() == year` etc. in LOCAL time,
-    DateTimeIterator.java:70-91) reduces to `instant < end` because the step
-    is instant-based (ZonedDateTime.plus(Duration)) and tzdata has no
-    transitions at period boundaries."""
+    """[start, end) instants for a year / year-month / date partial in a
+    ZoneId or fixed offset. The end bound is the local midnight starting the
+    next period — the reference's loop predicate (`i.getYear() == year` etc.
+    in LOCAL time, DateTimeIterator.java:70-91) reduces to `instant < end`
+    because the step is instant-based (ZonedDateTime.plus(Duration)) and
+    tzdata has no transitions at period boundaries."""
     if month is None:
         return (local_midnight_unix(year, 1, 1, zone),
                 local_midnight_unix(year + 1, 1, 1, zone))
@@ -243,14 +179,12 @@ def zoned_partial_bounds(year: int, month: int | None, day: int | None,
         ny, nm = (year + 1, 1) if month == 12 else (year, month + 1)
         return (local_midnight_unix(year, month, 1, zone),
                 local_midnight_unix(ny, nm, 1, zone))
-    from datetime import date, timedelta
-
     nxt = date(year, month, day) + timedelta(days=1)
     return (local_midnight_unix(year, month, day, zone),
             local_midnight_unix(nxt.year, nxt.month, nxt.day, zone))
 
 
-def time_series_zoned_df(
+def time_series_df(
     spark: SparkSession,
     year: int,
     month: int | None = None,
@@ -259,14 +193,17 @@ def time_series_zoned_df(
     step_sec: int = 3600,
     zone: str = "UTC",
 ) -> DataFrame:
-    """S2 with full DST-aware ZoneId semantics (the reference's default path,
-    util/DateTimeIterator.java:43-91): starts at *local* midnight in ``zone``,
-    steps by exact instants (ZonedDateTime.plus(Duration) is instant
-    arithmetic), ends when the local period is left, and carries a per-row
-    ``offset_sec`` that flips across DST transitions.
+    """S2: a year / year-month / date partial as a series of instants, with
+    the reference's ZoneId semantics (util/DateTimeIterator.java:43-91) for
+    an IANA zone and a fixed offset (``"+01:00"``) alike: starts at *local*
+    midnight in ``zone``, steps by exact instants (ZonedDateTime.plus(Duration)
+    is instant arithmetic), ends when the local period is left, and carries
+    a per-row ``offset_sec`` that flips across DST transitions. A date with
+    a step of a day or more yields the single midnight row.
 
-    Same output shape as :func:`time_series_df` (ts, unix_sec, offset_sec);
-    the fixed-offset variant remains for explicit numeric offsets.
+    Columns ``ts, unix_sec, offset_sec``. ``spark.range`` is already
+    distributed and the arithmetic is pure-integer (exact, unlike the FP
+    coordinate axes), so the series needs no repartition downstream.
     """
     if not (MIN_TIME_STEP <= step_sec <= MAX_TIME_STEP):
         raise ValueError(f"step {step_sec}s outside [{MIN_TIME_STEP}, {MAX_TIME_STEP}]")
@@ -317,84 +254,102 @@ def _text_lines(spark: SparkSession, path: str) -> DataFrame:
         import pandas as pd
 
         raw = sys.stdin.read().splitlines()
-        return _local_df(spark, pd.DataFrame({"value": pd.Series(raw, dtype="object")})) \
+        return spark.createDataFrame(pd.DataFrame({"value": pd.Series(raw, dtype="object")})) \
             if raw else spark.createDataFrame([], "value string")
     return spark.read.text(path)
 
 
+#: timestamp formats of time lines and paired lines, tried in order
+#: (util/DateTimeIterator.java:93-143). Java parsing consumes the whole text,
+#: so each format accepts only its own shape.
+_TIME_FORMATS = (
+    "yyyy-MM-dd'T'HH:mm:ssXXX",
+    "yyyy-MM-dd'T'HH:mm:ss.SSSXXX",
+    "yyyy-MM-dd'T'HH:mm:ss",
+    "yyyy-MM-dd'T'HH:mmXXX",
+    "yyyy-MM-dd'T'HH:mm",
+    "yyyy-MM-dd HH:mm:ss",
+    "yyyy-MM-dd",
+)
+
+
+def _read_lines(spark: SparkSession, path: str, *, coords: bool, time: bool,
+                require_time: bool, strict: bool, with_ord: bool,
+                error: str) -> DataFrame:
+    """The one reader of the S3/S4/S5 text modes. ``path="-"`` reads stdin.
+
+    Lines are trimmed; blank lines and ``#`` comments are skipped
+    (util/DateTimeIterator.java:203-213). ``coords`` reads ``lat lon`` from
+    the first two space/comma-separated fields; ``time`` reads a timestamp
+    from the whole line, or from the third field after coordinates, plus its
+    display offset. A line is bad when its field count is wrong, a
+    coordinate is not a number, the time parses under none of
+    ``_TIME_FORMATS``, or ``require_time`` (position's TIME_REQUIRED
+    precision, DateTimeIterator.TimePrecision) meets a date without a time.
+    ``strict`` aborts on a bad line with ``"<error>: <line>"``, like the
+    reference's parse exceptions; otherwise bad lines are dropped.
+    ``with_ord`` keeps ``_ord``, the scan-order line ordinal
+    (``monotonically_increasing_id`` over the raw lines: (split, row)
+    lexicographic = file order), so callers can reproduce the reference's
+    line-order output under any later repartitioning.
+    """
+    lines = (
+        _text_lines(spark, path)
+        .select(F.monotonically_increasing_id().alias("_ord"),
+                F.trim(F.col("value")).alias("line"))
+        .filter((F.col("line") != "") & ~F.col("line").startswith("#"))
+    )
+    parts = F.split(F.col("line"), r"[,\s]+")
+    cols, bad = [], F.lit(False)
+    if coords:
+        lat = F.element_at(parts, 1).cast("double")
+        lon = F.element_at(parts, 2).cast("double")
+        cols += [lat.alias("lat"), lon.alias("lon")]
+        bad = (F.size(parts) != (3 if time else 2)) | lat.isNull() | lon.isNull()
+    if time:
+        text = F.element_at(parts, 3) if coords else F.col("line")
+        ts = F.coalesce(*(F.try_to_timestamp(text, F.lit(f))
+                          for f in _TIME_FORMATS))
+        cols += [ts.alias("ts"), _line_offset_col(text)]
+        bad = (bad | ts.isNull()
+               | (F.lit(require_time) & text.rlike(r"^\d{4}-\d{2}-\d{2}$")))
+    names = (["lat", "lon"] if coords else []) + (["ts", "offset_sec"] if time else [])
+    out = lines.select("_ord", "line", *cols, bad.alias("_bad"))
+    if strict:
+        out = out.filter(F.when(~F.col("_bad"), F.lit(True)).otherwise(
+            F.raise_error(F.concat(F.lit(f"{error}: "), F.col("line")))))
+    else:
+        out = out.filter(~F.col("_bad"))
+    return out.select(*names, *(["_ord"] if with_ord else []))
+
+
 def coords_from_text(spark: SparkSession, path: str, *,
                      strict: bool = True, with_ord: bool = False) -> DataFrame:
-    """S3: lines ``lat lon`` (space/comma separated), # comments + blanks
-    skipped (util/DateTimeIterator.java:203-213). ``path="-"`` reads stdin.
-
-    ``strict=True`` aborts on malformed lines (wrong arity / non-numeric)
-    like the reference's parseCoordinateLine; False drops them.
-    ``with_ord=True`` adds ``_ord`` — the scan-order line ordinal
-    (``monotonically_increasing_id`` over the raw lines: (split, row)
-    lexicographic = file order) so callers can reproduce the reference's
-    line-order output deterministically under any later repartitioning.
-    """
-    lines = _text_lines(spark, path).withColumn(
-        "_ord", F.monotonically_increasing_id())
-    cleaned = (
-        lines.select("_ord", F.trim(F.col("value")).alias("line"))
-        .filter((F.col("line") != "") & ~F.col("line").startswith("#"))
-        .select("_ord", "line", F.split(F.col("line"), r"[,\s]+").alias("parts"))
-    )
-    out = cleaned.select(
-        "_ord", "line",
-        F.element_at("parts", 1).cast("double").alias("lat"),
-        F.element_at("parts", 2).cast("double").alias("lon"),
-        F.size("parts").alias("_arity"),
-    )
-    bad = (F.col("_arity") != 2) | F.col("lat").isNull() | F.col("lon").isNull()
-    if strict:
-        guard = F.when(~bad, F.lit(True)).otherwise(F.raise_error(
-            F.concat(F.lit("invalid coordinate line: "), F.col("line"))))
-        out = out.filter(guard)
-    else:
-        out = out.filter(~bad)
-    return out.select("lat", "lon", *(["_ord"] if with_ord else []))
+    """S3: lines ``lat lon`` -> ``lat, lon`` (see :func:`_read_lines`)."""
+    return _read_lines(spark, path, coords=True, time=False,
+                       require_time=False, strict=strict, with_ord=with_ord,
+                       error="invalid coordinate line")
 
 
 def times_from_text(spark: SparkSession, path: str, *,
                     require_time: bool = False,
                     strict: bool = True, with_ord: bool = False) -> DataFrame:
-    """S4: one timestamp per line, multi-format fallback parse
-    (util/DateTimeIterator.java:93-143).
+    """S4: one timestamp per line -> ``ts, offset_sec`` (see
+    :func:`_read_lines`)."""
+    return _read_lines(spark, path, coords=False, time=True,
+                       require_time=require_time, strict=strict,
+                       with_ord=with_ord, error="unusable time line")
 
-    ``require_time=True`` = the reference's TIME_REQUIRED precision
-    (position needs an explicit time; date-only lines abort,
-    DateTimeIterator.TimePrecision). ``strict=True`` aborts on unparseable
-    lines like the reference's parse exception; False drops them.
-    ``path="-"`` reads stdin.
-    """
-    lines = _text_lines(spark, path).withColumn(
-        "_ord", F.monotonically_increasing_id())
-    cleaned = (
-        lines.select("_ord", F.trim(F.col("value")).alias("line"))
-        .filter((F.col("line") != "") & ~F.col("line").startswith("#"))
-    )
-    ts = F.coalesce(
-        F.try_to_timestamp(F.col("line"), F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-        F.try_to_timestamp(F.col("line"), F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")),
-        F.try_to_timestamp(F.col("line"), F.lit("yyyy-MM-dd'T'HH:mm:ss")),
-        F.try_to_timestamp(F.col("line"), F.lit("yyyy-MM-dd'T'HH:mmXXX")),
-        F.try_to_timestamp(F.col("line"), F.lit("yyyy-MM-dd'T'HH:mm")),
-        F.try_to_timestamp(F.col("line"), F.lit("yyyy-MM-dd HH:mm:ss")),
-        F.try_to_timestamp(F.col("line"), F.lit("yyyy-MM-dd")),
-    )
-    out = cleaned.select("_ord", "line", ts.alias("ts"))
-    date_only = F.col("line").rlike(r"^\d{4}-\d{2}-\d{2}$")
-    bad = F.col("ts").isNull() | (F.lit(require_time) & date_only)
-    if strict:
-        guard = F.when(~bad, F.lit(True)).otherwise(F.raise_error(
-            F.concat(F.lit("unusable time line: "), F.col("line"))))
-        out = out.filter(guard)
-    else:
-        out = out.filter(~bad)
-    return out.select("ts", _line_offset_col(F.col("line")),
-                      *(["_ord"] if with_ord else []))
+
+def paired_from_text(spark: SparkSession, path: str, *,
+                     require_time: bool = False,
+                     strict: bool = True, with_ord: bool = False) -> DataFrame:
+    """S5: lines ``lat lon datetime`` -> 1:1 ``lat, lon, ts, offset_sec``
+    records, no cartesian expansion (util/DateTimeIterator.java:150-190;
+    see :func:`_read_lines`)."""
+    return _read_lines(spark, path, coords=True, time=True,
+                       require_time=require_time, strict=strict,
+                       with_ord=with_ord, error="invalid paired data line")
 
 
 def _line_offset_col(line) -> "F.Column":
@@ -409,62 +364,18 @@ def _line_offset_col(line) -> "F.Column":
     return F.when(sign == "-", -secs).otherwise(secs).alias("offset_sec")
 
 
-def paired_from_text(spark: SparkSession, path: str, *,
-                     strict: bool = True, with_ord: bool = False) -> DataFrame:
-    """S5: lines ``lat lon datetime`` -> 1:1 records, no cartesian expansion
-    (util/DateTimeIterator.java:150-190). ``path="-"`` reads stdin.
-
-    ``strict=True`` aborts on malformed lines like the reference's
-    parsePairedDataLine (arity != 3 / bad numbers / bad time); False drops.
-    """
-    lines = _text_lines(spark, path).withColumn(
-        "_ord", F.monotonically_increasing_id())
-    cleaned = (
-        lines.select("_ord", F.trim(F.col("value")).alias("line"))
-        .filter((F.col("line") != "") & ~F.col("line").startswith("#"))
-        .select("_ord", "line", F.split(F.col("line"), r"[,\s]+").alias("p"))
-    )
-    ts = F.coalesce(
-        F.try_to_timestamp(F.element_at("p", 3), F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-        F.try_to_timestamp(F.element_at("p", 3), F.lit("yyyy-MM-dd'T'HH:mm:ss")),
-        F.try_to_timestamp(F.element_at("p", 3), F.lit("yyyy-MM-dd'T'HH:mmXXX")),
-        F.try_to_timestamp(F.element_at("p", 3), F.lit("yyyy-MM-dd'T'HH:mm")),
-        F.try_to_timestamp(F.element_at("p", 3), F.lit("yyyy-MM-dd")),
-    )
-    out = cleaned.select(
-        "_ord", "line",
-        F.element_at("p", 1).cast("double").alias("lat"),
-        F.element_at("p", 2).cast("double").alias("lon"),
-        ts.alias("ts"),
-        F.size("p").alias("_arity"),
-        F.element_at("p", 3).alias("_t3"),
-    )
-    bad = ((F.col("_arity") != 3) | F.col("lat").isNull()
-           | F.col("lon").isNull() | F.col("ts").isNull())
-    if strict:
-        guard = F.when(~bad, F.lit(True)).otherwise(F.raise_error(
-            F.concat(F.lit("invalid paired data line: "), F.col("line"))))
-        out = out.filter(guard)
-    else:
-        out = out.filter(~bad)
-    return out.select("lat", "lon", "ts", _line_offset_col(F.col("_t3")),
-                      *(["_ord"] if with_ord else []))
-
-
 # --------------------------------------------------------------------------
 # S7 unified input-mode dispatch (InputMode.java:17-195, Main.java:180-200)
 # --------------------------------------------------------------------------
-
-from dataclasses import dataclass  # noqa: E402
 
 
 @dataclass(frozen=True)
 class InputPlan:
     """One of the reference's four sealed input modes, resolved to a
     DataFrame plus the mode-derived show-inputs default
-    (InputMode.shouldShowInputs; Main.shouldShowInputs lets an explicit
-    --show-inputs / --no-show-inputs override it, which maps to passing
-    show_inputs=True/False to position()/sunrise())."""
+    (InputMode.shouldShowInputs). The caller passes ``show_inputs`` to
+    position()/sunrise(); the CLI lets an explicit --show-inputs /
+    --no-show-inputs override it (Main.shouldShowInputs)."""
 
     df: DataFrame
     mode: str  # 'ranges' | 'coord_file' | 'time_file' | 'paired'
@@ -491,12 +402,10 @@ def _times_for_partial(spark: SparkSession, time, *, step_sec: int,
     """
     if isinstance(time, tuple):
         parts = tuple(time) + (None, None)
-        t = time_series_zoned_df(spark, parts[0], parts[1], parts[2],
-                                 step_sec=step_sec, zone=zone)
+        t = time_series_df(spark, parts[0], parts[1], parts[2],
+                           step_sec=step_sec, zone=zone)
         return t, True
     if isinstance(time, str):
-        from datetime import datetime
-
         unix = int(datetime.fromisoformat(time).timestamp())
     else:
         unix = int(time)
@@ -555,41 +464,39 @@ def make_input_plan(
         return InputPlan(df, mode, show)
 
     if paired_file is not None:
-        p = paired_from_text(spark, paired_file, with_ord=keep_ord)
+        p = paired_from_text(spark, paired_file, require_time=require_time,
+                             with_ord=keep_ord)
         if keep_ord:
             p = (p.withColumnRenamed("_ord", "_ord_t")
                  .withColumn("_ord_c", F.lit(0)))
         return _plan(p, "paired", True)
 
-    def _ord_t(times: DataFrame) -> DataFrame:
-        # series/instant rows are keyed by their unix second (monotone in
-        # generation order); file rows carry their line ordinal already
-        if not keep_ord:
-            return times
-        if "_ord" in times.columns:
-            return times.withColumnRenamed("_ord", "_ord_t")
-        return times.withColumn("_ord_t", F.col("unix_sec"))
+    # (times with ts/unix_sec/offset_sec, hasMultipleTimes); with keep_ord,
+    # file rows carry their line ordinal as _ord_t and series/instant rows
+    # their unix second (monotone in generation order)
+    if time_file is not None:
+        times = times_from_text(spark, time_file, require_time=require_time,
+                                with_ord=keep_ord).select(
+            "ts", F.unix_timestamp("ts").alias("unix_sec"), "offset_sec",
+            *([F.col("_ord").alias("_ord_t")] if keep_ord else []))
+        multi_times = True
+    else:
+        times, multi_times = _times_for_partial(
+            spark, time, step_sec=step_sec, zone=zone,
+            instant_offset_sec=instant_offset_sec)
+        if keep_ord:
+            times = times.withColumn("_ord_t", F.col("unix_sec"))
 
     if coord_file is not None:
+        # a coordinate file x a time file is the combination the reference's
+        # usage text advertises (`solarpos @coords.txt @times.txt position`,
+        # Main.java:25), though its DateTimeConverter silently swallows the
+        # time file into a dummy `now` (DateTimeConverter.java:104-107); we
+        # implement what the example documents instead
         coords = coords_from_text(spark, coord_file, with_ord=keep_ord)
         if keep_ord:
             coords = coords.withColumnRenamed("_ord", "_ord_c")
-        if time_file is not None:
-            # coordinate file x time file cartesian. The reference's usage
-            # text advertises `solarpos @coords.txt @times.txt position`
-            # (Main.java:25) but its DateTimeConverter silently swallows the
-            # time file into a dummy `now` (DateTimeConverter.java:104-107)
-            # — we implement what the example documents instead.
-            times = times_from_text(spark, time_file,
-                                    require_time=require_time,
-                                    with_ord=keep_ord).select(
-                "ts", F.unix_timestamp("ts").alias("unix_sec"),
-                "offset_sec", *(["_ord"] if keep_ord else []))
-        else:
-            times, _multi = _times_for_partial(
-                spark, time, step_sec=step_sec, zone=zone,
-                instant_offset_sec=instant_offset_sec)
-        return _plan(_ord_t(times).crossJoin(coords), "coord_file", True)
+        return _plan(times.crossJoin(coords), "coord_file", True)
 
     lat_r = _as_range(lat)
     lon_r = _as_range(lon)
@@ -600,20 +507,9 @@ def make_input_plan(
             "_ord_c",
             F.col("lat_ord") * F.lit(2**32) + F.col("lon_ord"))
     grid = grid.drop("lat_ord", "lon_ord")
-
-    if time_file is not None:
-        times = times_from_text(spark, time_file,
-                                require_time=require_time,
-                                with_ord=keep_ord).select(
-            "ts", F.unix_timestamp("ts").alias("unix_sec"), "offset_sec",
-            *(["_ord"] if keep_ord else []))
-        return _plan(grid_times_df(grid, _ord_t(times)), "time_file", True)
-
-    times, multi_times = _times_for_partial(
-        spark, time, step_sec=step_sec, zone=zone,
-        instant_offset_sec=instant_offset_sec)
     multi = (lat_r[0] != lat_r[1]) or (lon_r[0] != lon_r[1]) or multi_times
-    return _plan(grid_times_df(grid, _ord_t(times)), "ranges", multi)
+    return _plan(grid_times_df(grid, times),
+                 "ranges" if time_file is None else "time_file", multi)
 
 
 def validate_decoded(df: DataFrame, *, strict: bool = True) -> DataFrame:

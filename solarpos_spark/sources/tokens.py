@@ -212,16 +212,14 @@ def decode_position_arrow(df: DataFrame, *, algorithm: str = "spa",
     wants, and exactly what the reference's loop does in one pass
     (PositionCommand.java:107-135).
 
-    Values are bit-identical to the two-stage path: the same
-    ``resolve_delta_t`` (the codec's estimate sentinel decodes to NaN and
-    becomes the Espenak-Meeus estimate) and the same ``_compute_position``
-    dispatch, with every row flagged by ``algorithm`` and ``refraction`` —
-    pinned by test_spark_layer fused-parity.
+    Values are bit-identical to the two-stage path: both call
+    ``position_kernel`` (the codec's estimate sentinel decodes to NaN and
+    becomes the Espenak-Meeus estimate) — pinned by test_spark_layer
+    fused-parity. An unknown ``algorithm`` raises ValueError here.
     """
-    from ..operators.position import _compute_position, resolve_delta_t
+    from ..operators.position import position_kernel
 
-    flag = ((codec.FLAG_GRENA3 if algorithm == "grena3" else 0)
-            | (0 if refraction else codec.FLAG_NO_REFRACTION))
+    kernel = position_kernel(algorithm, refraction)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -230,11 +228,9 @@ def decode_position_arrow(df: DataFrame, *, algorithm: str = "spa",
                 continue
             flat, doc_ids, seq_index = slab
             f = codec.decode_records(flat)
-            az, zen = _compute_position(
-                f["unix_sec"].astype(np.float64), f["lat"], f["lon"],
-                f["elevation"], f["pressure"], f["temperature"],
-                resolve_delta_t(f["unix_sec"], f["delta_t"]),
-                np.full(len(seq_index), flag, dtype=np.int64))
+            az, zen, _ = kernel(f["unix_sec"], f["lat"], f["lon"],
+                                f["elevation"], f["pressure"],
+                                f["temperature"], f["delta_t"])
             yield pa.RecordBatch.from_arrays(
                 [doc_ids, pa.array(seq_index), pa.array(f["lat"]),
                  pa.array(f["lon"]), pa.array(f["unix_sec"]),

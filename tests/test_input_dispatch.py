@@ -116,6 +116,42 @@ class TestTimePrecision:
                         out=io.StringIO())
         assert code == 0
 
+    def test_paired_require_time_rejects_date_only(self, spark, tmp_path):
+        # paired lines follow the same TIME_REQUIRED rule as time files
+        # (DateTimeIterator.java:150-190): position rejects a date without
+        # a time, sunrise takes it as midnight
+        from solarpos_spark import cli
+        import io
+
+        pf = _write(tmp_path, "paired.txt", "52.0 13.0 2024-01-01\n")
+        with pytest.raises(Exception, match="invalid paired data line"):
+            inputs.make_input_plan(spark, paired_file=pf,
+                                   require_time=True).df.collect()
+        assert cli.main([f"@{pf}", "position"], spark=spark,
+                        out=io.StringIO()) != 0
+        assert cli.main([f"@{pf}", "sunrise"], spark=spark,
+                        out=io.StringIO()) == 0
+
+    def test_paired_fractional_seconds(self, spark, tmp_path):
+        # a paired line takes every time-file format, fractional seconds
+        # included, and parses to the same instant and display offset as
+        # the same text in a time file
+        stamps = ["2024-01-01T07:30:15.250+01:00", "2024-01-01T07:30:15+01:00",
+                  "2024-01-01T07:30:15", "2024-01-01T07:30-05:30",
+                  "2024-01-01T07:30", "2024-01-01", "2024-01-01T07:30:15Z"]
+        pf = _write(tmp_path, "paired.txt",
+                    "".join(f"52.0 13.0 {t}\n" for t in stamps))
+        tf = _write(tmp_path, "times.txt", "".join(f"{t}\n" for t in stamps))
+        paired = inputs.paired_from_text(spark, pf, with_ord=True) \
+            .orderBy("_ord").collect()
+        times = inputs.times_from_text(spark, tf, with_ord=True) \
+            .orderBy("_ord").collect()
+        assert [(r["ts"], r["offset_sec"]) for r in paired] == [
+            (r["ts"], r["offset_sec"]) for r in times]
+        assert len(paired) == len(stamps)
+        assert paired[0]["offset_sec"] == 3600
+        assert paired[0]["ts"].microsecond == 250000
+
 
 class TestReferenceColumnSets:
     """The four shapes drive position()/sunrise() defaults to the
@@ -125,7 +161,7 @@ class TestReferenceColumnSets:
         plan = inputs.make_input_plan(spark, lat=52.0, lon=25.0,
                                       time="2003-10-17T12:00:00+00:00",
                                       delta_t=69.0)
-        out = position(plan, algorithm="spa")
+        out = position(plan.df, algorithm="spa", show_inputs=plan.show_inputs)
         # PositionTest csvDefaultHasHeaders: "dateTime,azimuth,zenith" +
         # "2003-10-17T12:00:00Z,211.20726,65.92499"
         assert out.columns == ["dateTime", "azimuth", "zenith"]
@@ -136,7 +172,7 @@ class TestReferenceColumnSets:
     def test_position_show_with_refraction(self, spark):
         plan = inputs.make_input_plan(spark, lat=(52.0, 53.0, 1.0), lon=25.0,
                                       time="2003-10-17T12:00:00+00:00")
-        out = position(plan, algorithm="spa")
+        out = position(plan.df, algorithm="spa", show_inputs=plan.show_inputs)
         assert out.columns == [
             "latitude", "longitude", "elevation", "pressure", "temperature",
             "dateTime", "deltaT", "azimuth", "zenith"]
@@ -144,33 +180,57 @@ class TestReferenceColumnSets:
     def test_position_show_no_refraction(self, spark):
         plan = inputs.make_input_plan(spark, lat=(52.0, 53.0, 1.0), lon=25.0,
                                       time="2003-10-17T12:00:00+00:00")
-        out = position(plan, refraction=False)
+        out = position(plan.df, refraction=False,
+                       show_inputs=plan.show_inputs)
         assert out.columns == [
             "latitude", "longitude", "elevation", "dateTime", "deltaT",
             "azimuth", "zenith"]
 
     def test_position_explicit_flag_overrides_mode(self, spark):
         # --show-inputs / --no-show-inputs beat the auto rule
-        # (Main.java:137-141)
-        single = inputs.make_input_plan(spark, lat=52.0, lon=25.0,
-                                        time="2003-10-17T12:00:00+00:00")
-        multi = inputs.make_input_plan(spark, lat=(52.0, 53.0, 1.0), lon=25.0,
-                                       time="2003-10-17T12:00:00+00:00")
-        assert "latitude" in position(single, show_inputs=True).columns
-        assert position(multi, show_inputs=False).columns == [
-            "dateTime", "azimuth", "zenith"]
+        # (Main.java:137-141), which the CLI applies
+        import io
+
+        from solarpos_spark import cli
+
+        def header(*argv):
+            out = io.StringIO()
+            assert cli.main([*argv, "--format=csv", "position"], spark=spark,
+                            out=out) == 0
+            return out.getvalue().splitlines()[0]
+
+        assert header("52.0", "25.0", "2003-10-17T12:00:00Z") == \
+            "dateTime,azimuth,zenith"
+        assert header("52.0", "25.0", "2003-10-17T12:00:00Z",
+                      "--show-inputs").startswith("latitude,longitude,")
+        assert header("52.0:53.0:1.0", "25.0", "2003-10-17T12:00:00Z") \
+            .startswith("latitude,longitude,")
+        assert header("52.0:53.0:1.0", "25.0", "2003-10-17T12:00:00Z",
+                      "--no-show-inputs") == "dateTime,azimuth,zenith"
+
+    def test_unknown_algorithm_raises(self, spark):
+        # a misspelt algorithm fails when the plan is built
+        from solarpos_spark.sources import tokens
+
+        plan = inputs.make_input_plan(spark, lat=52.0, lon=25.0,
+                                      time="2003-10-17T12:00:00+00:00")
+        with pytest.raises(ValueError, match="unknown algorithm"):
+            position(plan.df, algorithm="Grena3")
+        tok = tokens.generate_token_sequences(spark, 1)
+        with pytest.raises(ValueError, match="unknown algorithm"):
+            tokens.decode_position_arrow(tok, algorithm="auto")
 
     def test_sunrise_no_show(self, spark):
         plan = inputs.make_input_plan(spark, lat=52.0, lon=25.0,
                                       time="2022-10-17T12:00:00+00:00")
-        out = sunrise(plan)
+        out = sunrise(plan.df, show_inputs=plan.show_inputs)
         # SunriseCommand.getFieldNames(showInput=False, twilight=False)
         assert out.columns == ["type", "sunrise", "transit", "sunset"]
 
     def test_sunrise_show_twilight_chronological(self, spark):
         plan = inputs.make_input_plan(spark, lat=(52.0, 53.0, 1.0), lon=25.0,
                                       time="2022-10-17T12:00:00+00:00")
-        out = sunrise(plan, twilight=True)
+        out = sunrise(plan.df, twilight=True, show_inputs=plan.show_inputs)
         assert out.columns == [
             "latitude", "longitude", "dateTime", "deltaT", "type",
             "astronomical_start", "nautical_start", "civil_start",

@@ -81,11 +81,15 @@ class TestTimeSeries:
             inputs.time_series_df(spark, 2024, step_sec=999999)
 
     def test_timezone_offset_shifts_start(self, spark):
-        # zone-aware series: local midnight for +01:00 is 23:00Z prior day
-        t = inputs.time_series_df(spark, 2024, 3, 15, step_sec=86400,
-                                  offset_sec=3600)
-        assert t.collect()[0]["unix_sec"] == int(
-            datetime(2024, 3, 14, 23, tzinfo=timezone.utc).timestamp())
+        # fixed-offset zones: local midnight for +01:00 is 23:00Z the day
+        # before, for -05:30 05:30Z the same day; every row carries the offset
+        for zone, start, off in (
+                ("+01:00", datetime(2024, 3, 14, 23, tzinfo=timezone.utc), 3600),
+                ("-05:30", datetime(2024, 3, 15, 5, 30, tzinfo=timezone.utc), -19800)):
+            rows = inputs.time_series_df(spark, 2024, 3, 15, step_sec=86400,
+                                         zone=zone).collect()
+            assert [(r["unix_sec"], r["offset_sec"]) for r in rows] == [
+                (int(start.timestamp()), off)], zone
 
 
 class TestTokenCodec:

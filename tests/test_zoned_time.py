@@ -1,4 +1,4 @@
-"""DST-aware ZoneId time-series semantics (S2 zoned variant).
+"""DST-aware ZoneId time-series semantics (S2).
 
 Replicates the reference's zone handling (util/DateTimeIterator.java:43-91):
 series start at *local* midnight under a real ZoneId, steps are exact
@@ -8,7 +8,7 @@ across DST transitions.
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import datetime, timezone
 from zoneinfo import ZoneInfo
 
 import pytest
@@ -40,10 +40,25 @@ class TestZoneTransitions:
         trans = inputs.zone_transitions("Etc/GMT-5", 0, 365 * 86400)
         assert trans == [(0, 5 * 3600)]
 
+    @pytest.mark.parametrize("zone,off", [("UTC", 0), ("+01:00", 3600),
+                                          ("-05:30", -19800)])
+    def test_fixed_offset_bounds(self, zone, off):
+        """A fixed offset moves the UTC period bounds by the offset at year,
+        month and day grain: local midnight = UTC midnight - offset."""
+        def utc(*ymd):
+            return int(datetime(*ymd, tzinfo=timezone.utc).timestamp())
+
+        for part, start, end in (
+                ((2024, None, None), utc(2024, 1, 1), utc(2025, 1, 1)),
+                ((2024, 2, None), utc(2024, 2, 1), utc(2024, 3, 1)),
+                ((2024, 12, 31), utc(2024, 12, 31), utc(2025, 1, 1))):
+            assert inputs.zoned_partial_bounds(*part, zone) == (
+                start - off, end - off), (zone, part)
+
 
 class TestZonedSeries:
     def test_berlin_year_hourly(self, spark):
-        df = inputs.time_series_zoned_df(spark, 2024, zone=BERLIN)
+        df = inputs.time_series_df(spark, 2024, zone=BERLIN)
         rows = df.orderBy("unix_sec").collect()
         # leap year, equal offsets at both boundaries -> exactly 366*24 rows
         assert len(rows) == 8784
@@ -62,15 +77,14 @@ class TestZonedSeries:
     @pytest.mark.parametrize("zone", [BERLIN, "America/New_York"])
     def test_offsets_match_jvm_tzdata(self, spark, zone):
         """zoneinfo-derived transition literals == the JVM's own tzdata."""
-        df = inputs.time_series_zoned_df(spark, 2024, zone=zone)
+        df = inputs.time_series_df(spark, 2024, zone=zone)
         assert df.filter(_jvm_offset(zone) != F.col("offset_sec")).count() == 0
 
     def test_midnight_dst_gap_day(self, spark):
         """America/Santiago 2024-09-08: clocks jump 00:00->01:00, so the
         'local midnight' start resolves forward (Java ZonedDateTime.of gap
         rule) and the 23-hour day yields 23 hourly rows."""
-        df = inputs.time_series_zoned_df(spark, 2024, 9, 8,
-                                         zone="America/Santiago")
+        df = inputs.time_series_df(spark, 2024, 9, 8, zone="America/Santiago")
         rows = df.orderBy("unix_sec").collect()
         assert len(rows) == 23
         first = datetime.fromtimestamp(rows[0]["unix_sec"],
@@ -78,17 +92,9 @@ class TestZonedSeries:
         assert (first.hour, first.minute) == (1, 0)  # gap-resolved start
         assert rows[0]["offset_sec"] == -3 * 3600
 
-    def test_utc_zone_matches_fixed_offset_variant(self, spark):
-        zoned = inputs.time_series_zoned_df(spark, 2003, step_sec=7200,
-                                            zone="UTC")
-        fixed = inputs.time_series_df(spark, 2003, step_sec=7200)
-        assert zoned.select("unix_sec", "offset_sec").exceptAll(
-            fixed.select("unix_sec", "offset_sec")).count() == 0
-        assert zoned.count() == fixed.count() == 4380
-
     def test_single_date_large_step_single_row(self, spark):
-        df = inputs.time_series_zoned_df(spark, 2024, 6, 15, step_sec=86400,
-                                         zone=BERLIN)
+        df = inputs.time_series_df(spark, 2024, 6, 15, step_sec=86400,
+                                   zone=BERLIN)
         rows = df.collect()
         assert len(rows) == 1
         assert rows[0]["unix_sec"] == int(
