@@ -529,6 +529,28 @@ def _time_dependent_parts_block(unix_sec: np.ndarray, delta_t: np.ndarray) -> Sp
     return SpaTimeDependent(alpha=alpha, delta=delta, nu=nu, r=r)
 
 
+def _instant_terms(td: SpaTimeDependent) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """sin δ, cos δ and sin ξ: the location half's terms that depend on the
+    instant only."""
+    delta_rad = td.delta * DEG
+    xi = 8.794 / (3600.0 * td.r)  # equatorial horizontal parallax, eq. 33
+    return np.sin(delta_rad), np.cos(delta_rad), np.sin(xi * DEG)
+
+
+def _location_terms(lat: np.ndarray, elevation: np.ndarray
+                    ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """sin φ, cos φ, x and y (eq. 34-36): the location half's terms that
+    depend on (latitude, elevation) only."""
+    phi = lat * DEG
+    sin_phi = np.sin(phi)
+    cos_phi = np.cos(phi)
+    u = np.arctan(0.99664719 * np.tan(phi))
+    elev_ratio = elevation / 6378140.0
+    x = np.cos(u) + elev_ratio * cos_phi
+    y = 0.99664719 * np.sin(u) + elev_ratio * sin_phi
+    return sin_phi, cos_phi, x, y
+
+
 def position_from_time_dependent(
     td: SpaTimeDependent,
     lat: np.ndarray,
@@ -536,38 +558,48 @@ def position_from_time_dependent(
     elevation: np.ndarray,
     pressure: np.ndarray | None = None,
     temperature: np.ndarray | None = None,
+    *,
+    inverse: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Location-dependent half of SPA (eq. 32-44): returns (azimuth, zenith).
 
     ``pressure``/``temperature`` of None disables the refraction correction
     (reference ``--no-refraction``, PositionCommand.java:67-73,210-213).
+
+    Without ``inverse``, ``td`` is row-aligned. With it, ``td`` holds one
+    entry per unique instant and ``inverse`` maps each row onto its entry:
+    the terms that depend on the instant only are then computed per instant,
+    those on (lat, elevation) only per unique pair, and both are gathered.
+    The results are elementwise ufuncs of the same operands, so the output
+    bits equal the row-aligned call's.
     """
     lat = np.asarray(lat, dtype=np.float64)
     lon = np.asarray(lon, dtype=np.float64)
     elevation = np.broadcast_to(np.asarray(elevation, dtype=np.float64), lat.shape)
 
-    phi = lat * DEG
-    sin_phi = np.sin(phi)
-    cos_phi = np.cos(phi)
-    delta_rad = td.delta * DEG
-    cos_delta = np.cos(delta_rad)
+    if inverse is None:
+        sin_phi, cos_phi, x, y = _location_terms(lat, elevation)
+        sin_delta, cos_delta, sin_xi = _instant_terms(td)
+        nu, alpha = td.nu, td.alpha
+    else:
+        # keyed on the bit patterns, so -0.0 and 0.0 stay apart (sin keeps
+        # the sign of a zero)
+        u_lat, u_elev, loc = _unique_pairs(lat.view(np.int64), elevation.view(np.int64))
+        sin_phi, cos_phi, x, y = (
+            v[loc] for v in _location_terms(u_lat.view(np.float64), u_elev.view(np.float64)))
+        sin_delta, cos_delta, sin_xi = (v[inverse] for v in _instant_terms(td))
+        nu, alpha = td.nu[inverse], td.alpha[inverse]
 
-    h = limit_degrees(td.nu + lon - td.alpha)  # observer local hour angle, eq. 32
+    h = limit_degrees(nu + lon - alpha)  # observer local hour angle, eq. 32
     h_rad = h * DEG
     cos_h = np.cos(h_rad)
 
-    xi = 8.794 / (3600.0 * td.r)  # equatorial horizontal parallax, eq. 33
-    sin_xi = np.sin(xi * DEG)
-    u = np.arctan(0.99664719 * np.tan(phi))
-    elev_ratio = elevation / 6378140.0
-    x = np.cos(u) + elev_ratio * cos_phi
-    y = 0.99664719 * np.sin(u) + elev_ratio * sin_phi
     x_sin_xi = x * sin_xi
     denom = cos_delta - x_sin_xi * cos_h  # shared by eq. 37 and 39
 
     dalpha_rad = np.arctan2(-x_sin_xi * np.sin(h_rad), denom)  # parallax in RA, eq. 37
     delta_prime = np.arctan2(
-        (np.sin(delta_rad) - y * sin_xi) * np.cos(dalpha_rad), denom,
+        (sin_delta - y * sin_xi) * np.cos(dalpha_rad), denom,
     )  # topocentric declination, eq. 39
     h_prime_rad = h_rad - dalpha_rad  # topocentric local hour angle, eq. 40
     cos_h_prime = np.cos(h_prime_rad)
@@ -613,7 +645,8 @@ def _unique_pairs(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray,
     inverse`` of ``np.unique(np.stack([a, b], 1), axis=0,
     return_inverse=True)``, but with a 1-D ``lexsort`` instead of a sort
     over a structured-dtype view: at 64k rows ~50x cheaper on a sweep
-    batch (few instants, already in order), ~5x with every pair distinct.
+    batch (few instants, each a run of grid rows), ~5x with every pair
+    distinct.
     -0.0 and 0.0 are one key, as in ``np.unique``.
     """
     order = np.lexsort((b, a))
@@ -636,27 +669,22 @@ def solar_position(
     pressure: np.ndarray | float | None = None,
     temperature: np.ndarray | float | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Full SPA for row-aligned arrays, hoisting time-dependent terms.
+    """Full SPA for row-aligned arrays, hoisting on both axes.
 
     Rows sharing a (unix_sec, delta_t) pair compute the expensive series once
-    (reference optimization at PositionCommand.java:115-122).
+    (reference optimization at PositionCommand.java:115-122), and the
+    location half's per-instant and per-(lat, elevation) terms once per
+    unique key (``position_from_time_dependent(inverse=)``).
     """
     unix_sec = np.asarray(unix_sec, dtype=np.float64)
     n = unix_sec.shape[0]
     delta_t = np.broadcast_to(np.asarray(delta_t, dtype=np.float64), (n,))
     u_ts, u_dt, inverse = _unique_pairs(unix_sec, delta_t)
     td_u = time_dependent_parts(u_ts, u_dt)
-    td = SpaTimeDependent(
-        alpha=td_u.alpha[inverse],
-        delta=td_u.delta[inverse],
-        nu=td_u.nu[inverse],
-        r=td_u.r[inverse],
-    )
     lat = np.broadcast_to(np.asarray(lat, dtype=np.float64), (n,))
     lon = np.broadcast_to(np.asarray(lon, dtype=np.float64), (n,))
     elevation = np.broadcast_to(np.asarray(elevation, dtype=np.float64), (n,))
     if pressure is None or temperature is None:
-        return position_from_time_dependent(td, lat, lon, elevation)
-    pressure = np.broadcast_to(np.asarray(pressure, dtype=np.float64), (n,))
-    temperature = np.broadcast_to(np.asarray(temperature, dtype=np.float64), (n,))
-    return position_from_time_dependent(td, lat, lon, elevation, pressure, temperature)
+        pressure = temperature = None
+    return position_from_time_dependent(td_u, lat, lon, elevation, pressure, temperature,
+                                        inverse=inverse)

@@ -1,9 +1,16 @@
-"""Solar-position operator — Arrow-vectorized pandas UDFs over the kernels.
+"""Solar-position operator — an Arrow UDF over the kernels.
 
 Spark-side equivalent of the reference's position command
 (/root/reference/src/main/java/net/e175/klaus/solarpos/PositionCommand.java):
 a 1:1 row map (R3/R5) computing ``struct(azimuth, zenith)`` from
 (time, lat, lon, elevation, pressure, temperature, deltaT).
+
+The UDF takes pyarrow arrays and returns one ``StructArray``; no pandas. An
+optional input the DataFrame lacks (elevation, pressure, temperature,
+deltaT) is not shipped as a literal column: its default is a Python scalar
+bound inside the UDF, so only real columns cross the Arrow boundary (4 on
+the grid sweep instead of 7). The projection of those defaults for
+``show_inputs`` stays on the JVM.
 
 The reference's key physical optimization — computing SPA time-dependent
 terms once per unique timestamp (PositionCommand.java:228-257) — happens
@@ -19,10 +26,10 @@ from collections.abc import Callable
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..kernels import deltat as deltat_kernel
@@ -39,6 +46,11 @@ _POSITION_SCHEMA = StructType([
     StructField("delta_t_res", DoubleType()),
 ])
 
+#: optional inputs and their defaults when the DataFrame lacks them
+#: (PositionCommand.java:39-57)
+DEFAULTS = {"elevation": 0.0, "pressure": 1013.0, "temperature": 15.0,
+            "delta_t": 0.0}
+
 #: --algorithm name -> kernel taking (unix_sec, lat, lon, elevation,
 #: delta_t, pressure, temperature); Grena3 takes no elevation
 #: (PositionCommand.java:284-297)
@@ -49,8 +61,10 @@ _KERNELS = {
 }
 
 
-def resolve_delta_t(unix_sec: np.ndarray, delta_t: np.ndarray) -> np.ndarray:
-    """NaN deltaT -> Espenak-Meeus estimate from the date (Main.java:214-216)."""
+def resolve_delta_t(unix_sec: np.ndarray, delta_t: np.ndarray | float) -> np.ndarray:
+    """NaN deltaT -> Espenak-Meeus estimate from the date (Main.java:214-216).
+    A scalar ``delta_t`` stands for every row; the result is one per row."""
+    delta_t = np.broadcast_to(np.asarray(delta_t, dtype=np.float64), unix_sec.shape)
     nanm = np.isnan(delta_t)
     if not np.any(nanm):
         return delta_t
@@ -68,9 +82,10 @@ def resolve_delta_t(unix_sec: np.ndarray, delta_t: np.ndarray) -> np.ndarray:
 def position_kernel(algorithm: str, refraction: bool) -> Callable:
     """The one kernel dispatch of the position UDF and the fused token path:
     ``(unix_sec int64, lat, lon, elevation, pressure, temperature, delta_t)
-    -> (azimuth, zenith, deltaT used)`` over whole numpy columns. Without
-    refraction the kernel gets no pressure/temperature. Raises ValueError
-    for an algorithm other than ``spa`` or ``grena3``."""
+    -> (azimuth, zenith, deltaT used)`` over whole numpy columns; the four
+    optional inputs may also be scalars. Without refraction the kernel gets
+    no pressure/temperature. Raises ValueError for an algorithm other than
+    ``spa`` or ``grena3``."""
     if algorithm not in _KERNELS:
         raise ValueError(f"unknown algorithm {algorithm!r} (spa|grena3)")
     kernel = _KERNELS[algorithm]
@@ -85,29 +100,34 @@ def position_kernel(algorithm: str, refraction: bool) -> Callable:
     return run
 
 
-def _position_udf(algorithm: str, refraction: bool):
-    """The position UDF of one (algorithm, refraction) key, built on first
-    use and kept as a module attribute: a UDF caches its JVM function, and
-    a rebuilt session resets that cache on module attributes only
-    (perfbench/run.py ``_forget_jvm_udfs``)."""
-    name = f"_udf_{algorithm}_{'refraction' if refraction else 'no_refraction'}"
+def to_numpy(a: pa.Array) -> np.ndarray:
+    """An Arrow UDF argument as numpy (zero-copy without nulls; a null
+    double reads as NaN)."""
+    return a.to_numpy(zero_copy_only=False)
+
+
+def _position_udf(algorithm: str, refraction: bool, shipped: tuple[str, ...]):
+    """The position UDF of one (algorithm, refraction, shipped optional
+    inputs) key, built on first use and kept as a module attribute: a UDF
+    caches its JVM function, and a rebuilt session resets that cache on
+    module attributes only (perfbench/run.py ``_forget_jvm_udfs``). It
+    takes ``(unix_sec, lat, lon, *shipped)``; every other optional input
+    is its default."""
+    name = "_udf_" + "_".join(
+        (algorithm, "refraction" if refraction else "no_refraction") + shipped)
     if name not in globals():
         kernel = position_kernel(algorithm, refraction)
+        bound = {n: v for n, v in DEFAULTS.items() if n not in shipped}
 
-        @pandas_udf(_POSITION_SCHEMA)
-        def udf(unix_sec: pd.Series, lat: pd.Series, lon: pd.Series,
-                elevation: pd.Series, pressure: pd.Series,
-                temperature: pd.Series, delta_t: pd.Series) -> pd.DataFrame:
+        @arrow_udf(_POSITION_SCHEMA)
+        def udf(unix_sec: pa.Array, lat: pa.Array, lon: pa.Array,
+                *optional: pa.Array) -> pa.Array:
             az, zen, dt = kernel(
-                unix_sec.to_numpy(dtype=np.int64),
-                lat.to_numpy(dtype=np.float64),
-                lon.to_numpy(dtype=np.float64),
-                elevation.to_numpy(dtype=np.float64),
-                pressure.to_numpy(dtype=np.float64),
-                temperature.to_numpy(dtype=np.float64),
-                delta_t.to_numpy(dtype=np.float64))
-            return pd.DataFrame({"azimuth": az, "zenith": zen,
-                                 "delta_t_res": dt})
+                to_numpy(unix_sec), to_numpy(lat), to_numpy(lon), **bound,
+                **{n: to_numpy(c) for n, c in zip(shipped, optional)})
+            return pa.StructArray.from_arrays(
+                [pa.array(az), pa.array(zen), pa.array(dt)],
+                names=_POSITION_SCHEMA.names)
 
         globals()[name] = udf
     return globals()[name]
@@ -167,14 +187,17 @@ def position(
     reference's auto rule, Main.java:137-141). ``algorithm`` is ``spa`` or
     ``grena3``; any other name raises ValueError here.
     """
-    udf = _position_udf(algorithm, refraction)
+    # the optional inputs the UDF receives; the others are bound in Python
+    shipped = tuple(n for n in (DEFAULTS if refraction else ("elevation", "delta_t"))
+                    if n in df.columns)
+    udf = _position_udf(algorithm, refraction, shipped)
     b = bind_inputs(df, ts_col, time_is_unix, passthrough)
-    elevation = b.get("elevation", 0.0)
-    pressure = b.get("pressure", 1013.0)
-    temperature = b.get("temperature", 15.0)
     out = df.withColumn("__pos", udf(
         b.unix, F.col("lat").cast("double"), F.col("lon").cast("double"),
-        elevation, pressure, temperature, b.get("delta_t", 0.0)))
+        *(b.get(n, DEFAULTS[n]) for n in shipped)))
+    elevation = b.get("elevation", DEFAULTS["elevation"])
+    pressure = b.get("pressure", DEFAULTS["pressure"])
+    temperature = b.get("temperature", DEFAULTS["temperature"])
 
     proj: list[Column] = []
     if show_inputs:

@@ -1,4 +1,4 @@
-"""Sunrise/transit/set operator — Arrow-vectorized pandas UDF.
+"""Sunrise/transit/set operator — an Arrow UDF over the kernel.
 
 Spark-side equivalent of the reference's sunrise command
 (/root/reference/src/main/java/net/e175/klaus/solarpos/SunriseCommand.java):
@@ -6,22 +6,27 @@ day-resolution solver (fixed 1-day step, SunriseCommand.java:84), type
 classification NORMAL|ALL_DAY|ALL_NIGHT with nullable event times
 (SunriseCommand.java:176-196), optional civil/nautical/astronomical
 twilights (--twilight, SunriseCommand.java:143-155).
+
+The UDF takes pyarrow arrays and returns one ``StructArray``; event times
+are int64 arrays whose validity mask marks the events that do not happen.
+Like the position UDF, it ships deltaT only when the DataFrame has it and
+binds the default as a Python scalar otherwise.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType)
 
 from ..kernels import sunrise as k
-from .position import bind_inputs, resolve_delta_t
+from .position import DEFAULTS, bind_inputs, resolve_delta_t, to_numpy
 
-_TYPE_NAMES = np.array(["NORMAL", "ALL_DAY", "ALL_NIGHT"])
+_TYPE_NAMES = pa.array(["NORMAL", "ALL_DAY", "ALL_NIGHT"])
 
 _BASIC_FIELDS = [
     StructField("type", StringType()),
@@ -39,50 +44,51 @@ _TWILIGHT_FIELDS = [
 ]
 
 
-def _nullable_seconds(day0: np.ndarray, sec: np.ndarray) -> pd.arrays.IntegerArray:
-    """day0 + seconds-of-day -> nullable int64 unix seconds (truncated,
-    matching the reference's second-resolution output TimeFormats.java:21)."""
+def _nullable_seconds(day0: np.ndarray, sec: np.ndarray) -> pa.Array:
+    """day0 + seconds-of-day -> int64 unix seconds, null where ``sec`` is
+    NaN (truncated, matching the reference's second-resolution output
+    TimeFormats.java:21)."""
     mask = np.isnan(sec)
     vals = (day0 + np.floor(np.where(mask, 0.0, sec))).astype(np.int64)
-    return pd.arrays.IntegerArray(vals, mask)
+    return pa.array(vals, mask=mask)
 
 
 def _solve(day0_unix: np.ndarray, lat: np.ndarray, lon: np.ndarray,
-           delta_t: np.ndarray, twilight: bool) -> pd.DataFrame:
+           delta_t: np.ndarray, twilight: bool) -> pa.StructArray:
     horizons = [k.HORIZON_SUNRISE_SUNSET]
     if twilight:
         horizons += [k.HORIZON_CIVIL, k.HORIZON_NAUTICAL, k.HORIZON_ASTRONOMICAL]
     r = k.sunrise_transit_set(day0_unix.astype(np.float64), lat, lon, delta_t,
                               np.array(horizons))
-    out = pd.DataFrame({
-        "type": _TYPE_NAMES[r.kind[:, 0]],
-        "transit": pd.array((day0_unix + np.floor(r.transit)).astype(np.int64),
-                            dtype="Int64"),
+    cols = {
+        "type": _TYPE_NAMES.take(r.kind[:, 0]),
+        "transit": pa.array((day0_unix + np.floor(r.transit)).astype(np.int64)),
         "sunrise": _nullable_seconds(day0_unix, r.sunrise[:, 0]),
         "sunset": _nullable_seconds(day0_unix, r.sunset[:, 0]),
-        "delta_t_res": delta_t,
-    })
+        "delta_t_res": pa.array(delta_t),
+    }
     if twilight:
         for j, name in ((1, "civil"), (2, "nautical"), (3, "astronomical")):
-            out[f"{name}_start"] = _nullable_seconds(day0_unix, r.sunrise[:, j])
-            out[f"{name}_end"] = _nullable_seconds(day0_unix, r.sunset[:, j])
-    return out
+            cols[f"{name}_start"] = _nullable_seconds(day0_unix, r.sunrise[:, j])
+            cols[f"{name}_end"] = _nullable_seconds(day0_unix, r.sunset[:, j])
+    return pa.StructArray.from_arrays(list(cols.values()), names=list(cols))
 
 
-def _sunrise_udf(twilight: bool):
-    """The sunrise UDF of one twilight key, built on first use and kept as
-    a module attribute (see position._position_udf)."""
-    name = f"_udf_{'twilight' if twilight else 'basic'}"
+def _sunrise_udf(twilight: bool, shipped: tuple[str, ...]):
+    """The sunrise UDF of one (twilight, shipped deltaT) key, built on first
+    use and kept as a module attribute (see position._position_udf). It
+    takes ``(day0, lat, lon[, delta_t])``."""
+    name = "_udf_" + "_".join(("twilight" if twilight else "basic",) + shipped)
     if name not in globals():
         schema = StructType(_BASIC_FIELDS + (_TWILIGHT_FIELDS if twilight else []))
 
-        @pandas_udf(schema)
-        def udf(day0: pd.Series, lat: pd.Series, lon: pd.Series,
-                delta_t: pd.Series) -> pd.DataFrame:
-            d0 = day0.to_numpy(dtype=np.int64)
-            dt = resolve_delta_t(d0, delta_t.to_numpy(dtype=np.float64))
-            return _solve(d0, lat.to_numpy(np.float64),
-                          lon.to_numpy(np.float64), dt, twilight)
+        @arrow_udf(schema)
+        def udf(day0: pa.Array, lat: pa.Array, lon: pa.Array,
+                *optional: pa.Array) -> pa.Array:
+            d0 = to_numpy(day0)
+            dt = resolve_delta_t(
+                d0, to_numpy(optional[0]) if shipped else DEFAULTS["delta_t"])
+            return _solve(d0, to_numpy(lat), to_numpy(lon), dt, twilight)
 
         globals()[name] = udf
     return globals()[name]
@@ -111,9 +117,10 @@ def sunrise(
     # dusk) by ~0.1 s — derived by bisecting SunriseTest.java:57-64 goldens
     # (all 13 match only with this anchor; see kernels/sunrise.py docstring)
     day0 = (F.floor((b.unix + off) / 86400) * 86400 - off).cast("long")
-    out = df.withColumn("__sr", _sunrise_udf(twilight)(
+    shipped = ("delta_t",) if "delta_t" in df.columns else ()
+    out = df.withColumn("__sr", _sunrise_udf(twilight, shipped)(
         day0, F.col("lat").cast("double"), F.col("lon").cast("double"),
-        b.get("delta_t", 0.0)))
+        *(b.get(n, DEFAULTS[n]) for n in shipped)))
 
     # field set + ordering = SunriseCommand.getFieldNames
     # (SunriseCommand.java:134-160): inputs only when shown, type always,

@@ -354,11 +354,12 @@ def paired_from_text(spark: SparkSession, path: str, *,
 
 def _line_offset_col(line) -> "F.Column":
     """Display offset (seconds) from a timestamp string's trailing
-    ``+HH:MM``/``+HHMM`` (the reference keeps each parsed line's zone and
-    prints event times in it; Z / naive lines render as UTC)."""
-    sign = F.regexp_extract(line, r"([+-])\d{2}:?\d{2}$", 1)
-    hh = F.regexp_extract(line, r"[+-](\d{2}):?\d{2}$", 1)
-    mm = F.regexp_extract(line, r"[+-]\d{2}:?(\d{2})$", 1)
+    ``+HH:MM``, the one offset form ``_TIME_FORMATS`` parses (the reference
+    keeps each parsed line's zone and prints event times in it; Z / naive
+    lines render as UTC)."""
+    sign = F.regexp_extract(line, r"([+-])\d{2}:\d{2}$", 1)
+    hh = F.regexp_extract(line, r"[+-](\d{2}):\d{2}$", 1)
+    mm = F.regexp_extract(line, r"[+-]\d{2}:(\d{2})$", 1)
     secs = (F.coalesce(F.nullif(hh, F.lit("")), F.lit("0")).cast("int") * 3600
             + F.coalesce(F.nullif(mm, F.lit("")), F.lit("0")).cast("int") * 60)
     return F.when(sign == "-", -secs).otherwise(secs).alias("offset_sec")

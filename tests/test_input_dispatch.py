@@ -138,7 +138,8 @@ class TestTimePrecision:
         # the same text in a time file
         stamps = ["2024-01-01T07:30:15.250+01:00", "2024-01-01T07:30:15+01:00",
                   "2024-01-01T07:30:15", "2024-01-01T07:30-05:30",
-                  "2024-01-01T07:30", "2024-01-01", "2024-01-01T07:30:15Z"]
+                  "2024-01-01T07:30", "2024-01-01", "2024-01-01T07:30:15Z",
+                  "2024-06-01T23:59:59-03:30"]
         pf = _write(tmp_path, "paired.txt",
                     "".join(f"52.0 13.0 {t}\n" for t in stamps))
         tf = _write(tmp_path, "times.txt", "".join(f"{t}\n" for t in stamps))
@@ -151,6 +152,18 @@ class TestTimePrecision:
         assert len(paired) == len(stamps)
         assert paired[0]["offset_sec"] == 3600
         assert paired[0]["ts"].microsecond == 250000
+        assert paired[3]["offset_sec"] == -19800
+        assert paired[7]["offset_sec"] == -12600
+
+    def test_colon_less_offset_aborts(self, spark, tmp_path):
+        # no time format takes a colon-less +HHMM offset, so such a line is
+        # an unparseable line, never a line whose offset gets read
+        tf = _write(tmp_path, "times.txt", "2024-06-01T23:59:59-0330\n")
+        with pytest.raises(Exception, match="unusable time line"):
+            inputs.times_from_text(spark, tf).collect()
+        pf = _write(tmp_path, "paired.txt", "52.0,13.0 2024-06-01T23:59:59-0330\n")
+        with pytest.raises(Exception, match="invalid paired data line"):
+            inputs.paired_from_text(spark, pf).collect()
 
 
 class TestReferenceColumnSets:

@@ -202,6 +202,48 @@ class TestHoist:
         assert zen_p.tobytes() == zen[perm].tobytes()
 
 
+class TestTwoAxisHoist:
+    """The location half with ``inverse=`` (per-instant and per-(lat,
+    elevation) terms computed once and gathered) against the same call on
+    row-aligned time-dependent terms: identical bits."""
+
+    @staticmethod
+    def _sweep_batch():
+        # 5-degree grid (the equator row as -0.0 and 0.0, which sin tells
+        # apart) x 37 hourly instants, two elevations: every (lat,
+        # elevation) pair repeats on each instant
+        lats = np.concatenate([np.arange(-60.0, 61.0, 5.0), arr(-0.0)])
+        grid_lat, grid_lon = (g.ravel() for g in np.meshgrid(lats, np.arange(-180.0, 180.0, 5.0)))
+        k = grid_lat.shape[0]
+        t = np.repeat(1.7e9 + 3600.0 * np.arange(37), k)
+        lat, lon = np.tile(grid_lat, 37), np.tile(grid_lon, 37)
+        elev = np.tile(np.where(np.arange(k) % 2 == 0, 0.0, 1500.0), 37)
+        return t, np.full(t.shape, 69.0), lat, lon, elev
+
+    @staticmethod
+    def _distinct_batch(n: int = 20_000):
+        rng = np.random.default_rng(11)
+        return (rng.uniform(1e9, 2e9, n), rng.uniform(0.0, 100.0, n),
+                rng.uniform(-89.0, 89.0, n), rng.uniform(-180.0, 180.0, n),
+                rng.uniform(0.0, 4000.0, n))
+
+    @pytest.mark.parametrize("shape", ["sweep", "distinct"])
+    @pytest.mark.parametrize("refraction", [True, False])
+    def test_hoisted_location_half_equals_per_row(self, shape, refraction):
+        t, dt, lat, lon, elev = self._sweep_batch() if shape == "sweep" \
+            else self._distinct_batch()
+        press, temp = (np.full(t.shape, 990.0), np.full(t.shape, 21.0)) \
+            if refraction else (None, None)
+        u_ts, u_dt, inverse = spa._unique_pairs(t, dt)
+        td_u = spa.time_dependent_parts(u_ts, u_dt)
+        az, zen = spa.position_from_time_dependent(
+            td_u, lat, lon, elev, press, temp, inverse=inverse)
+        az_r, zen_r = spa.position_from_time_dependent(
+            spa.SpaTimeDependent(*(f[inverse] for f in td_u)),
+            lat, lon, elev, press, temp)
+        assert az.tobytes() == az_r.tobytes() and zen.tobytes() == zen_r.tobytes()
+
+
 class TestGrena3:
     def test_golden(self):
         # PositionTest.java:78-79 — the golden is the CLI's %.5f output

@@ -241,6 +241,100 @@ class TestPositionOperator:
         assert out.count() == 25 * 4
 
 
+_OPTIONAL = ("elevation", "pressure", "temperature", "delta_t")
+
+
+def _udf_arg_counts(df):
+    """Argument count of each UDF in the executed plan's ArrowEvalPython
+    node (the columns shipped to the Python worker)."""
+    df.collect()
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        if node.nodeName() == "ArrowEvalPython":
+            udfs = node.udfs()
+            return [udfs.apply(i).children().size() for i in range(udfs.size())]
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    raise AssertionError("no ArrowEvalPython node")
+
+
+class TestPositionUdf:
+    """The Arrow UDF ships only the optional inputs the DataFrame has and
+    binds the others' defaults in Python; its output equals the kernel's
+    on the same numpy columns, whatever is shipped."""
+
+    @pytest.fixture(scope="class")
+    def rows(self):
+        rng = np.random.default_rng(5)
+        n = 40
+        cols = {
+            "row": np.arange(n),
+            "unix": 1_500_000_000 + 3600 * rng.integers(0, 8, n),
+            "lat": rng.uniform(-70.0, 70.0, n),
+            "lon": rng.uniform(-180.0, 180.0, n),
+            "elevation": rng.uniform(0.0, 3000.0, n),
+            "pressure": rng.uniform(700.0, 1050.0, n),
+            "temperature": rng.uniform(-20.0, 40.0, n),
+            "delta_t": rng.uniform(60.0, 70.0, n),
+        }
+        cols["delta_t"][3] = np.nan  # the Espenak-Meeus estimate path
+        return cols
+
+    @pytest.mark.parametrize("algorithm", ["spa", "grena3"])
+    @pytest.mark.parametrize("refraction", [True, False])
+    def test_udf_equals_kernel_for_every_shipped_set(self, spark, rows,
+                                                     algorithm, refraction):
+        from itertools import combinations
+
+        from solarpos_spark.operators.position import DEFAULTS, position_kernel
+
+        n = rows["row"].shape[0]
+        # one partition, so the UDF sees the kernel's batch: the SPA series
+        # of an instant may differ in the last bit with the instants batched
+        # with it (ROADMAP item 6)
+        full = spark.createDataFrame(
+            [tuple(v.item() for v in r) for r in zip(*rows.values())],
+            "row long, unix long, lat double, lon double, elevation double, "
+            "pressure double, temperature double, delta_t double").coalesce(1)
+        subsets = [s for k in range(5) for s in combinations(_OPTIONAL, k)]
+        assert len(subsets) == 16
+        union = None
+        for case, present in enumerate(subsets):
+            df = full.drop(*(c for c in _OPTIONAL if c not in present)) \
+                .withColumn("case", F.lit(case))
+            out = position(df, algorithm=algorithm, refraction=refraction,
+                           ts_col="unix", time_is_unix=True,
+                           passthrough=["case", "row"])
+            union = out if union is None else union.unionByName(out)
+        got = {}
+        for r in union.collect():
+            got.setdefault(r["case"], []).append(r)
+        kernel = position_kernel(algorithm, refraction)
+        for case, present in enumerate(subsets):
+            given = {c: rows[c] if c in present else np.full(n, DEFAULTS[c])
+                     for c in _OPTIONAL}
+            az, zen, dt = kernel(rows["unix"], rows["lat"], rows["lon"], **given)
+            rs = sorted(got[case], key=lambda r: r["row"])
+            for name, want in (("azimuth", az), ("zenith", zen), ("deltaT", dt)):
+                assert np.array([r[name] for r in rs]).tobytes() == want.tobytes(), \
+                    (present, name)
+
+    def test_literal_inputs_are_not_shipped(self, spark):
+        df = ts_df(spark, 52.0, 25.0, "2022-10-17 12:00:00")
+        assert set(df.columns) & set(_OPTIONAL) == {"delta_t"}
+        assert _udf_arg_counts(position(df)) == [4]
+        assert _udf_arg_counts(sunrise(df)) == [4]
+        full = df.withColumn("elevation", F.lit(10.0)) \
+            .withColumn("pressure", F.lit(1000.0)).withColumn("temperature", F.lit(5.0))
+        assert _udf_arg_counts(position(full)) == [7]
+        # without refraction pressure and temperature are not inputs
+        assert _udf_arg_counts(position(full, refraction=False)) == [5]
+        assert _udf_arg_counts(sunrise(full.drop("delta_t"))) == [3]
+
+
 class TestSunriseOperator:
     def test_golden_through_spark(self, spark):
         df = ts_df(spark, 52.0, 25.0, "2022-10-17 12:00:00")
